@@ -149,6 +149,21 @@ object Pipeline {
           "before compacting.")
   }
 
+  private def stashOf(dest: HPath): HPath =
+    new HPath(dest.getParent, "." + dest.getName + ".__old")
+
+  /** Undo a swap interrupted between its two renames: when `dest` is
+    * missing and its stash sibling exists, the stash holds the last
+    * committed generation, so it is renamed back. Called from the store's
+    * write paths, under the quiesce contract below.
+    */
+  private[graft] def restoreInterruptedSwap(fs: FileSystem,
+                                            dest: HPath): Unit = {
+    val old = stashOf(dest)
+    if (!fs.exists(dest) && fs.exists(old))
+      require(fs.rename(old, dest), s"restore of stashed $dest failed")
+  }
+
   /** Crash-safe full-table replacement via tmp-write + rename.
     *
     * Concurrency contract: writers must be QUIESCED for the duration —
@@ -172,7 +187,8 @@ object Pipeline {
     // tmp write and the swap can never surface a half table (or a phantom
     // `run=<tag>.__tmp` partition under an appended root) to readers
     val tmp = new HPath(dest.getParent, "." + dest.getName + ".__tmp")
-    val old = new HPath(dest.getParent, "." + dest.getName + ".__old")
+    val old = stashOf(dest)
+    restoreInterruptedSwap(fs, dest)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (fs.exists(old)) fs.delete(old, true)
     val beforeWrite = listDataFiles(fs, dest)

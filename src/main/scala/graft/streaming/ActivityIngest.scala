@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,12 +28,7 @@ object ActivityIngest {
 
   def start(events: DataFrame, activityDir: String,
             checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, activityDir, epoch)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(events, checkpointDir)(ingestBatch(_, activityDir, _))
 
   def ingestBatch(batch: DataFrame, activityDir: String,
                   epochId: Long): Unit = {
@@ -57,19 +52,18 @@ object ActivityIngest {
     * (day, epoch) — the replay collapse, which is exact.
     */
   def compactKeys(spark: SparkSession, activityDir: String,
-                  numFiles: Int = 8): Unit = {
-    val t = spark.read.parquet(activityDir)
-    val keys = t.filter(col("user_id").isNotNull)
-      .groupBy(col("day"), col("user_id"))
-      .agg(min(col("epoch_id")).as("epoch_id"))
-      .withColumn("n_events", lit(null).cast("long"))
-      .select(col("day"), col("user_id"), col("n_events"), col("epoch_id"))
-    val counts = t.filter(col("user_id").isNull)
-      .dropDuplicates("day", "epoch_id")
-      .select(col("day"), col("user_id"), col("n_events"), col("epoch_id"))
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      keys.unionByName(counts).repartition(numFiles), activityDir)
-  }
+                  numFiles: Int = 8): Unit =
+    Stores.rewrite(spark, activityDir) { t =>
+      val keys = t.filter(col("user_id").isNotNull)
+        .groupBy(col("day"), col("user_id"))
+        .agg(min(col("epoch_id")).as("epoch_id"))
+        .withColumn("n_events", lit(null).cast("long"))
+        .select(col("day"), col("user_id"), col("n_events"), col("epoch_id"))
+      val counts = t.filter(col("user_id").isNull)
+        .dropDuplicates("day", "epoch_id")
+        .select(col("day"), col("user_id"), col("n_events"), col("epoch_id"))
+      keys.unionByName(counts).repartition(numFiles)
+    }
 
   /** The running daily-active series — bit-for-bit
     * [[graft.ops.EventOps.dailyActive]] over everything ingested.

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -35,12 +35,8 @@ object BasketIngest {
   def start(rows: DataFrame, basketCol: String, itemCol: String,
       storeDir: String, checkpointDir: String,
       maxBasketSize: Int = 100000): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, basketCol, itemCol, storeDir, epoch, maxBasketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(rows, checkpointDir)(
+      ingestBatch(_, basketCol, itemCol, storeDir, _, maxBasketSize))
 
   def ingestBatch(batch: DataFrame, basketCol: String, itemCol: String,
       storeDir: String, epochId: Long,
@@ -96,14 +92,9 @@ object BasketIngest {
     */
   def compact(spark: SparkSession, storeDir: String,
       numFiles: Int = 4): Unit = {
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(s"$storeDir/supports")
-        .dropDuplicates("epoch_id", "item").repartition(numFiles),
-      s"$storeDir/supports")
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(s"$storeDir/pairs")
-        .dropDuplicates("epoch_id", "item_a", "item_b")
-        .repartition(numFiles),
-      s"$storeDir/pairs")
+    Stores.compactDedup(spark, s"$storeDir/supports",
+      Seq("epoch_id", "item"), numFiles)
+    Stores.compactDedup(spark, s"$storeDir/pairs",
+      Seq("epoch_id", "item_a", "item_b"), numFiles)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.CountMin
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -28,12 +28,8 @@ object CountMinIngest {
   def start(rows: DataFrame, keyCol: String, sketchDir: String,
       checkpointDir: String, width: Int = CountMin.DefaultWidth,
       depth: Int = CountMin.DefaultDepth): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, keyCol, sketchDir, epoch, width, depth)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(rows, checkpointDir)(
+      ingestBatch(_, keyCol, sketchDir, _, width, depth))
 
   def ingestBatch(batch: DataFrame, keyCol: String, sketchDir: String,
       epochId: Long, width: Int = CountMin.DefaultWidth,
@@ -64,7 +60,5 @@ object CountMinIngest {
     * ingest contract.
     */
   def compact(spark: SparkSession, sketchDir: String): Unit =
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(sketchDir)
-        .dropDuplicates("epoch_id", "row_i", "bucket"), sketchDir)
+    Stores.compactDedup(spark, sketchDir, Seq("epoch_id", "row_i", "bucket"))
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -18,11 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * pass over its own documents — no corpus state, no shuffle of text,
   * no growth in per-batch cost as the released corpus accumulates.
   *
-  * Delivery contract: `foreachBatch` is at-least-once for plain-file
-  * sinks — a retried batch can append its clean rows and audit rows
-  * twice. Both tables are keyed by document id (dedup on read or a
-  * transactional sink upgrades to exactly-once without logic changes),
-  * mirroring [[NearDupIngest]]'s contract.
+  * Replay ([[Stores]] has the delivery contract): both tables are keyed
+  * by document id, so readers dedup them on read.
   */
 object DeconIngest {
 
@@ -51,19 +48,16 @@ object DeconIngest {
             idCol: String = "doc_id", textCol: String = "text",
             n: Int = 8): StreamingQuery = {
     // fail BEFORE the stream starts, not lazily inside the first batch's
-    // foreachBatch thread where the error surfaces as an opaque query
+    // micro-batch thread where the error surfaces as an opaque query
     // termination
     require(Stores.hasParquet(docs.sparkSession, benchIndexDir),
       s"benchmark gram index not found at $benchIndexDir — build it with " +
         "DeconIngest.writeBenchIndex before starting the stream " +
         "(decontamination without a benchmark would silently release everything)")
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, benchIndexDir, cleanDir, flaggedDir, idCol,
-          textCol, n)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, benchIndexDir, cleanDir, flaggedDir, idCol,
+        textCol, n)
+    }
   }
 
 
@@ -116,13 +110,10 @@ object DeconIngest {
     require(Stores.hasParquet(vecs.sparkSession, benchIndexDir),
       s"benchmark embedding index not found at $benchIndexDir — build it " +
         "with DeconIngest.writeBenchEmbIndex before starting the stream")
-    vecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestEmbeddingBatch(batch, benchIndexDir, cleanDir, flaggedDir,
-          threshold)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(vecs, checkpointDir) { (batch, _) =>
+      ingestEmbeddingBatch(batch, benchIndexDir, cleanDir, flaggedDir,
+        threshold)
+    }
   }
 
   /** One embedding-decon step (also directly usable from a batch
@@ -148,10 +139,7 @@ object DeconIngest {
     */
   def compactBenchEmbIndex(spark: SparkSession, indexDir: String,
                            numFiles: Int): Unit =
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(indexDir).dropDuplicates("vec_id")
-        .repartition(numFiles),
-      indexDir)
+    Stores.compactDedup(spark, indexDir, Seq("vec_id"), numFiles)
 
   /** Compact the append-grown gram index (thousands of micro-appends →
     * `numFiles`), collapsing accumulated duplicate grams in the same
@@ -160,7 +148,5 @@ object DeconIngest {
     */
   def compactBenchIndex(spark: SparkSession, indexDir: String,
                         numFiles: Int): Unit =
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(indexDir).distinct().repartition(numFiles),
-      indexDir)
+    Stores.compactDedup(spark, indexDir, Seq("s"), numFiles)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.HeavyHitters
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -36,12 +36,8 @@ object HeavyHittersIngest {
 
   def start(rows: DataFrame, keyCol: String, k: Int, sketchDir: String,
             totalsDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, keyCol, k, sketchDir, totalsDir, epoch)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(rows, checkpointDir)(
+      ingestBatch(_, keyCol, k, sketchDir, totalsDir, _))
 
   def ingestBatch(batch: DataFrame, keyCol: String, k: Int,
                   sketchDir: String, totalsDir: String,
@@ -87,11 +83,7 @@ object HeavyHittersIngest {
     */
   def compact(spark: SparkSession, sketchDir: String,
               totalsDir: String): Unit = {
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(sketchDir).dropDuplicates("epoch_id", "key"),
-      sketchDir)
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(totalsDir).dropDuplicates("epoch_id"),
-      totalsDir)
+    Stores.compactDedup(spark, sketchDir, Seq("epoch_id", "key"))
+    Stores.compactDedup(spark, totalsDir, Seq("epoch_id"))
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,22 +17,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * cells, occupancy skew says so and a retrain + reassign is an offline
   * decision), which is how IVF deployments actually run.
   *
-  * Delivery contract: at-least-once — assignment is deterministic
-  * (frozen codebook, id-ordered ties), so a replayed vector appends a
-  * bit-identical index row and [[index]] dedups on vec_id. Purge drops
-  * a vector from the stored index through the atomic swap;
-  * re-ingesting a copy later is indistinguishable from a first ingest.
+  * Replay ([[Stores]] has the delivery contract): assignment is
+  * deterministic (frozen codebook, id-ordered ties), so a replayed
+  * vector appends a bit-identical index row and [[index]] dedups on
+  * vec_id. Purge drops a vector from the stored index through the
+  * atomic swap; re-ingesting a copy later is indistinguishable from a
+  * first ingest.
   */
 object IvfIngest {
 
   def start(vectors: DataFrame, codebookDir: String, indexDir: String,
             checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, codebookDir, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(vectors, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, codebookDir, indexDir)
+    }
 
   /** Freeze a trained codebook `(vec_id, embedding)` as the
     * deployment's quantizer (atomic overwrite — a crash mid-write never
@@ -54,12 +52,11 @@ object IvfIngest {
     require(Stores.hasParquet(spark, codebookDir),
       s"IvfIngest: no frozen codebook at $codebookDir — call " +
         "freezeCodebook(trainedCentroids, dir) before ingesting")
-    val recs = batch.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    recs.count() // materialize before the store append below
-    Similarity.ivfAssign(recs, spark.read.parquet(codebookDir))
-      .write.mode("append").parquet(indexDir)
-    recs.unpersist()
+    Stores.materialized(batch.select(col("vec_id"), col("embedding"))) {
+      recs =>
+        Similarity.ivfAssign(recs, spark.read.parquet(codebookDir))
+          .write.mode("append").parquet(indexDir)
+    }
   }
 
   /** The accumulated assignment index, replay-deduped — row-identical
@@ -86,8 +83,11 @@ object IvfIngest {
     * piles into a few cells), degrading probe selectivity long before
     * recall collapses.
     */
-  def balanceAudit(spark: SparkSession, indexDir: String): DataFrame = {
-    val occ = index(spark, indexDir)
+  def balanceAudit(spark: SparkSession, indexDir: String): DataFrame =
+    occupancy(index(spark, indexDir))
+
+  private def occupancy(index: DataFrame): DataFrame = {
+    val occ = index
       .groupBy(col("centroid_id")).agg(count(lit(1)).as("n_vectors"))
     val tot = occ.agg(sum(col("n_vectors")).as("__n"),
       count(lit(1)).as("__cells"), max(col("n_vectors")).as("__max"))
@@ -107,22 +107,14 @@ object IvfIngest {
     graft.pipeline.Pipeline.purgeIds(spark, indexDir, vecIds,
       Seq("vec_id"))
 
-  /** Store hygiene (the family-wide compact face): rewrite the index to
-    * its read-side fixpoint — one row per vec_id — through the atomic
-    * swap. The store grows only by replayed deliveries (assignment is
-    * deterministic, so duplicates are bit-identical and [[index]]
-    * dedups them on read), so compaction here is file/size hygiene for
-    * long-running at-least-once deployments, not a correctness
-    * dependency; QUIESCED reads before and after a compact see the
-    * same relation. Quiesce contract: stop the ingest first — rows a
-    * live writer appends during the rewrite belong to the old
-    * generation and would be deleted with it; `atomicOverwrite`'s
-    * swap-time guard detects such appends and aborts the swap loudly
-    * ([[Stores.compactDedup]]).
+  /** Rewrite the index to its read-side fixpoint — one row per vec_id
+    * ([[Stores.compactDedup]]). The store grows only by replayed
+    * deliveries (assignment is deterministic, so duplicates are
+    * bit-identical and [[index]] dedups them on read), so compaction
+    * here is file/size hygiene, not a correctness dependency.
     */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      index(spark, indexDir), indexDir)
+    Stores.compactDedup(spark, indexDir, Seq("vec_id"))
 
   /** The retrain half of the drift loop — [[balanceAudit]] is the
     * SIGNAL (runaway occupancy skew says the frozen quantizer no
@@ -162,21 +154,22 @@ object IvfIngest {
               maxIters: Int = 10, minSkew: Double = 0.0): Boolean = {
     require(Stores.hasParquet(spark, codebookDir),
       s"IvfIngest.retrain: no frozen codebook at $codebookDir")
-    if (!Stores.hasParquet(spark, indexDir)) return false
-    // a store of empty parquet files (empty micro-batches) must gate
-    // off too: max over zero cells is null, and retraining from zero
-    // vectors would freeze an EMPTY codebook over the real one
-    val skewRow = balanceAudit(spark, indexDir)
-      .agg(max(col("skew_ratio"))).head()
+    val codebook = spark.read.parquet(codebookDir)
+    val stored = Stores.read(indexDir, Similarity.ivfAssign(codebook, codebook))
+      .dropDuplicates("vec_id")
+    // a never-written store, or one of empty parquet files (empty
+    // micro-batches), gates off: max over zero cells is null, and
+    // retraining from zero vectors would freeze an EMPTY codebook over
+    // the real one
+    val skewRow = occupancy(stored).agg(max(col("skew_ratio"))).head()
     if (skewRow.isNullAt(0)) return false
     if (skewRow.getDouble(0) < minSkew) return false
     // eager snapshot: both swaps below invalidate the stored files, so
     // the training relation must be materialized with its lineage cut
     // before either runs
-    val vecs = index(spark, indexDir)
-      .select(col("vec_id"), col("embedding"))
+    val vecs = stored.select(col("vec_id"), col("embedding"))
       .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val k = spark.read.parquet(codebookDir).count().toInt
+    val k = codebook.count().toInt
     // k seeds spread evenly over the id order: quantile cutpoints at
     // the BUCKET MIDPOINTS (i+0.5)/k from a sketch aggregate, then the
     // first vector at or past each cutpoint — two linear passes, no

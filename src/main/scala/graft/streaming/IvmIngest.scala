@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Ivm
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -32,12 +32,8 @@ object IvmIngest {
 
   def start(rows: DataFrame, groupCols: Seq[String], valueCol: String,
       viewDir: String, checkpointDir: String): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, groupCols, valueCol, viewDir, epoch)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(rows, checkpointDir)(
+      ingestBatch(_, groupCols, valueCol, viewDir, _))
 
   def ingestBatch(batch: DataFrame, groupCols: Seq[String], valueCol: String,
       viewDir: String, epochId: Long): Unit =
@@ -60,9 +56,5 @@ object IvmIngest {
     */
   def compact(spark: SparkSession, viewDir: String,
       groupCols: Seq[String], numFiles: Int = 4): Unit =
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(viewDir)
-        .dropDuplicates("epoch_id" +: groupCols)
-        .repartition(numFiles),
-      viewDir)
+    Stores.compactDedup(spark, viewDir, "epoch_id" +: groupCols, numFiles)
 }

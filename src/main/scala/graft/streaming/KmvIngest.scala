@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Kmv
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -31,12 +31,9 @@ object KmvIngest {
 
   def start(rows: DataFrame, sliceCol: String, keyCol: String,
       sketchDir: String, checkpointDir: String, k: Int): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, sliceCol, keyCol, sketchDir, k)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(rows, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, sliceCol, keyCol, sketchDir, k)
+    }
 
   def ingestBatch(batch: DataFrame, sliceCol: String, keyCol: String,
       sketchDir: String, k: Int): Unit =

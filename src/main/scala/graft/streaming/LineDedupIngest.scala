@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.TextAnalysis
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -31,18 +31,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * cost grows only with the index's distinct-line count, compacted by
   * [[compactLineIndex]].
   *
-  * Delivery contract: `foreachBatch` is at-least-once for plain-file
-  * sinks — a retried batch re-appends its partials and clean rows.
-  * Index appends are IDEMPOTENT under that replay: partials are keyed
-  * by the foreachBatch epoch, a retried epoch re-derives byte-identical
-  * (epoch_id, line, n_docs) rows, and every read path ([[readLineIndex]])
-  * collapses duplicate (epoch_id, line) rows before summing — so a
-  * replay never inflates a line's count past the batch-exact frequency.
-  * The release table is keyed by document id (dedup on read or a
-  * transactional sink upgrades to exactly-once for the clean rows);
-  * [[republish]] over the raw archive then reproduces the batch operator
-  * exactly — the same contract family as [[NearDupIngest]] /
-  * [[DeconIngest]].
+  * Replay ([[Stores]] has the delivery contract): index appends are
+  * IDEMPOTENT — partials are keyed by the micro-batch epoch, a retried
+  * epoch re-derives byte-identical (epoch_id, line, n_docs) rows, and
+  * every read path ([[readLineIndex]]) collapses duplicate
+  * (epoch_id, line) rows before summing — so a replay never inflates a
+  * line's count past the batch-exact frequency. The release table is
+  * keyed by document id; [[republish]] over the raw archive then
+  * reproduces the batch operator exactly.
   */
 object LineDedupIngest {
 
@@ -74,13 +70,8 @@ object LineDedupIngest {
             checkpointDir: String, minDocs: Long,
             idCol: String = "doc_id", textCol: String = "text")
       : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epochId: Long) =>
-        ingestBatch(batch, indexDir, cleanDir, minDocs, idCol, textCol,
-          epochId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir)(
+      ingestBatch(_, indexDir, cleanDir, minDocs, idCol, textCol, _))
 
   /** One ingest step (also directly usable from a batch scheduler):
     * contribute the batch's counts under its epoch, clean it against the

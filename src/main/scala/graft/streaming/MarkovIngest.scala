@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -39,12 +39,7 @@ object MarkovIngest {
 
   def start(events: DataFrame, storeDir: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, storeDir, epoch)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(events, checkpointDir)(ingestBatch(_, storeDir, _))
 
   /** `batch` needs (user_id, event_id, event_type, ts). */
   def ingestBatch(batch: DataFrame, storeDir: String, epochId: Long): Unit = {
@@ -118,14 +113,9 @@ object MarkovIngest {
     * documented here rather than silently assumed.
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(s"$storeDir/trans")
-        .dropDuplicates("epoch_id", "from_type", "to_type"),
-      s"$storeDir/trans")
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(s"$storeDir/edges")
-        .dropDuplicates("epoch_id", "user_id"),
-      s"$storeDir/edges")
+    Stores.compactDedup(spark, s"$storeDir/trans",
+      Seq("epoch_id", "from_type", "to_type"))
+    Stores.compactDedup(spark, s"$storeDir/edges", Seq("epoch_id", "user_id"))
   }
 
   /** The contract audit: per user, every pair of CONSECUTIVE epochs

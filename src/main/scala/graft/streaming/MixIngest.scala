@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming face of EPOCH-AWARE mixture sampling
@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch from a reference corpus ([[graft.ops.Dedup.temperatureMixEpochRates]])
   * and persisted; each document micro-batch joins the re-read
   * (domain-count-sized, broadcast) rates and appends its epoch-exploded
-  * copies to the mixed corpus — the `foreachBatch`-vs-stored-artifact
+  * copies to the mixed corpus — the batch-vs-stored-artifact
   * shape of [[NearDupIngest]] / [[DeconIngest]] / [[ScoringIngest]].
   *
   * Per-document copy count is a pure function of (group pct, md5(id)) —
@@ -19,9 +19,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Re-mixing under new rates just overwrites `ratesDir`; the next batch
   * picks the new mixture up, no stream restart.
   *
-  * Delivery contract: at-least-once, same as the other ingest faces —
-  * replays append duplicate (id, epoch) rows; the sink is an
-  * append-grown table whose readers dedup by (id, epoch) when exactness
+  * Replay ([[Stores]] has the delivery contract): replays append
+  * duplicate (id, epoch) rows, which readers dedup when exactness
   * matters.
   */
 object MixIngest {
@@ -29,12 +28,9 @@ object MixIngest {
   def start(docs: DataFrame, ratesDir: String, outDir: String,
             checkpointDir: String, idCol: String = "doc_id",
             groupCol: String = "source"): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, ratesDir, outDir, idCol, groupCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, ratesDir, outDir, idCol, groupCol)
+    }
 
   def ingestBatch(batch: DataFrame, ratesDir: String, outDir: String,
                   idCol: String, groupCol: String): Unit = {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -10,23 +10,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * PERSISTENT band-index table (plus batch-internal), then appended to
   * that index — so the near-dup candidate set grows with the corpus while
   * every batch pays only O(batch x bucket density), never a corpus
-  * self-join. This is `foreachBatch` driving
+  * self-join. This is [[Stores.probeAndAppend]] driving
   * [[graft.ops.Dedup.incrementalLshCandidates]]'s join shape with the
   * index side read from storage instead of recomputed.
   *
-  * State posture: there is NO Spark streaming state at all — the index is
-  * an ordinary parquet table (at production scale: bucketed by `sig`, on
-  * a transactional table format), so state is storage-bounded, survives
-  * restarts, and is shared by the batch operators
-  * ([[graft.ops.Dedup.bandIndex]] produces the identical relation).
-  *
-  * Delivery contract: `foreachBatch` is at-least-once for plain-file
-  * sinks — a retried batch can append its band rows and pairs twice.
-  * Candidate pairs are a SET (downstream verification dedups via
+  * The index is [[graft.ops.Dedup.bandIndex]]'s relation (at production
+  * scale: bucketed by `sig`); the store contract is in [[Stores]]. Replay:
+  * candidate pairs are a SET (downstream verification dedups via
   * `distinct`, as [[graft.ops.Dedup.jaccardVerify]] already does), and
   * duplicate index rows only produce duplicate candidates, never wrong
-  * ones; a transactional sink upgrades this to exactly-once without
-  * touching the logic.
+  * ones.
   */
 object NearDupIngest {
 
@@ -43,13 +36,10 @@ object NearDupIngest {
             numHashes: Int = 16, bands: Int = 4,
             textCol: String = "text", k: Int = 3,
             maxBucketSize: Int = 0): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, indexDir, pairsDir, idCol, numHashes, bands,
-          textCol, k, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, indexDir, pairsDir, idCol, numHashes, bands,
+        textCol, k, maxBucketSize)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler): band
     * the batch, join new-vs-index and new-vs-new, append pairs, append
@@ -57,19 +47,12 @@ object NearDupIngest {
     */
   def ingestBatch(batch: DataFrame, indexDir: String, pairsDir: String,
                   idCol: String, numHashes: Int, bands: Int,
-                  textCol: String, k: Int, maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val bNew = Dedup.bandIndex(batch, idCol, numHashes, bands, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    Dedup.incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
-      .write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
-  }
+                  textCol: String, k: Int, maxBucketSize: Int = 0): Unit =
+    Stores.probeAndAppend(
+        Dedup.bandIndex(batch, idCol, numHashes, bands, textCol, k),
+        indexDir, pairsDir) { (bOld, bNew) =>
+      Dedup.incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
+    }
 
   /** Right-to-be-forgotten purge across a near-dup deployment's
     * persisted stores: drop every index row, pair row and stored
@@ -102,31 +85,15 @@ object NearDupIngest {
     * table into `numFiles` files behind [[graft.pipeline.Pipeline]]'s
     * atomic swap (write to a dot-prefixed temp sibling — invisible to
     * readers — then rename), so a crash mid-compaction never surfaces a
-    * half table. Returns (parquet files before, after).
-    *
-    * Concurrency contract: rows appended between the read and the swap
-    * would be lost — run this from the ingest's own thread between
-    * micro-batches (foreachBatch is serial per query) or in a
-    * maintenance window, exactly like any non-transactional table
-    * format. A table format with snapshot isolation removes the caveat
-    * without changing the call.
+    * half table ([[graft.pipeline.Pipeline.compact]]; run it only while
+    * the ingest is stopped, per [[Stores]]). Returns (parquet files
+    * before, after).
     */
   def compactTable(spark: org.apache.spark.sql.SparkSession, dir: String,
                    numFiles: Int): (Int, Int) = {
-    def nFiles = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    }
-    val before = nFiles
-    if (before > 0) {
-      // the source files stay in place while the temp sibling is written,
-      // so the read plan underneath the overwrite stays valid
-      graft.pipeline.Pipeline.atomicOverwrite(spark,
-        spark.read.parquet(dir).repartition(numFiles), dir)
-    }
-    (before, nFiles)
+    val before = Stores.parquetFiles(spark, dir)
+    if (before > 0) graft.pipeline.Pipeline.compact(spark, dir, numFiles)
+    (before, Stores.parquetFiles(spark, dir))
   }
 
 
@@ -145,46 +112,35 @@ object NearDupIngest {
                     numHashes: Int = 16, bands: Int = 4,
                     textCol: String = "text", k: Int = 3,
                     maxBucketSize: Int = 0): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestVerifiedBatch(batch, indexDir, docsDir, verifiedDir, threshold,
-          idCol, numHashes, bands, textCol, k, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestVerifiedBatch(batch, indexDir, docsDir, verifiedDir, threshold,
+        idCol, numHashes, bands, textCol, k, maxBucketSize)
+    }
 
   def ingestVerifiedBatch(batch: DataFrame, indexDir: String, docsDir: String,
                           verifiedDir: String, threshold: Double,
                           idCol: String, numHashes: Int, bands: Int,
                           textCol: String, k: Int,
                           maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
     val batchDocs = batch.select(col(idCol), col(textCol))
-    val bNew = Dedup.bandIndex(batchDocs, idCol, numHashes, bands, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val cand = Dedup.incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
-    // the verification corpus = stored docs + this batch (not yet written);
-    // jaccardVerify semi-joins it down to candidate members before the
-    // shingle explode, so this union is never scanned in full
-    val store =
-      if (Stores.hasParquet(spark, docsDir))
-        spark.read.parquet(docsDir).unionByName(batchDocs)
-      else batchDocs
-    Dedup.jaccardVerify(store, cand, idCol, k, threshold, textCol)
-      .write.mode("append").parquet(verifiedDir)
-    batchDocs.write.mode("append").parquet(docsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
-    spark.catalog.clearCache() // release jaccardVerify's internal persists
+    // documents land before the index, so every indexed id has its text
+    try Stores.probeAndAppend(
+        Dedup.bandIndex(batchDocs, idCol, numHashes, bands, textCol, k),
+        indexDir, verifiedDir, batchDocs -> docsDir) { (bOld, bNew) =>
+      val cand = Dedup.incrementalLshCandidatesIndexed(bOld, bNew,
+        maxBucketSize)
+      // the verification corpus = stored docs + this batch (not yet
+      // written); jaccardVerify semi-joins it down to candidate members
+      // before the shingle explode, so this union is never scanned in full
+      val store = Stores.read(docsDir, batchDocs).unionByName(batchDocs)
+      Dedup.jaccardVerify(store, cand, idCol, k, threshold, textCol)
+    }
+    finally batch.sparkSession.catalog.clearCache() // jaccardVerify's persists
   }
 
   // ---- SimHash family ----------------------------------------------------
 
-  /** Streaming SimHash near-dup ingestion — same foreachBatch-vs-index
+  /** Streaming SimHash near-dup ingestion — same batch-vs-index
     * shape as [[start]], for the Hamming sketch family. The persisted
     * index rows ([[graft.ops.Dedup.simhashBandIndex]]) carry the full
     * sketch halves, so the batch-vs-index join emits VERIFIED pairs
@@ -194,30 +150,20 @@ object NearDupIngest {
                    checkpointDir: String, idCol: String = "doc_id",
                    textCol: String = "text", maxHamming: Int = 3,
                    maxBucketSize: Int = 0): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestSimhashBatch(batch, indexDir, pairsDir, idCol, textCol,
-          maxHamming, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestSimhashBatch(batch, indexDir, pairsDir, idCol, textCol,
+        maxHamming, maxBucketSize)
+    }
 
   def ingestSimhashBatch(batch: DataFrame, indexDir: String, pairsDir: String,
                          idCol: String, textCol: String, maxHamming: Int,
-                         maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val bNew = Dedup.simhashBandIndex(Dedup.simhash(batch, idCol, textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val pairs = Dedup.incrementalSimhashPairsIndexed(bOld, bNew,
-      maxHamming, maxBucketSize)
-    pairs.write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
-  }
+                         maxBucketSize: Int = 0): Unit =
+    Stores.probeAndAppend(
+        Dedup.simhashBandIndex(Dedup.simhash(batch, idCol, textCol)),
+        indexDir, pairsDir) { (bOld, bNew) =>
+      Dedup.incrementalSimhashPairsIndexed(bOld, bNew, maxHamming,
+        maxBucketSize)
+    }
 
   // ---- Embedding family --------------------------------------------------
 
@@ -230,31 +176,20 @@ object NearDupIngest {
                      checkpointDir: String, planes: Int, dim: Int,
                      threshold: Double,
                      maxBucketSize: Int = 0): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestEmbeddingBatch(batch, indexDir, pairsDir, planes, dim,
-          threshold, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(vecs, checkpointDir) { (batch, _) =>
+      ingestEmbeddingBatch(batch, indexDir, pairsDir, planes, dim,
+        threshold, maxBucketSize)
+    }
 
   def ingestEmbeddingBatch(batch: DataFrame, indexDir: String,
                            pairsDir: String, planes: Int, dim: Int,
                            threshold: Double,
-                           maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val bNew = Similarity.srpIndex(batch, planes, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count()
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val pairs = Similarity.incrementalSrpNearDupIndexed(bOld, bNew,
-      threshold, maxBucketSize)
-    pairs.write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
-  }
+                           maxBucketSize: Int = 0): Unit =
+    Stores.probeAndAppend(Similarity.srpIndex(batch, planes, dim),
+        indexDir, pairsDir) { (bOld, bNew) =>
+      Similarity.incrementalSrpNearDupIndexed(bOld, bNew, threshold,
+        maxBucketSize)
+    }
 
   // ---- Semantic (SemDeDup) family ------------------------------------
 
@@ -264,7 +199,7 @@ object NearDupIngest {
     * [[graft.ops.Similarity.semanticIndex]] was built with —
     * [[graft.ops.Similarity.kmeansTrain]] on the seed corpus, stored
     * alongside the index), cosine-verified against the index within its
-    * cell, and appended to it. Same foreachBatch-vs-index shape as
+    * cell, and appended to it. Same batch-vs-index shape as
     * [[startEmbedding]], with a learned data-dependent bucketer instead
     * of SRP hyperplanes: cell assignment is deterministic per row GIVEN
     * the codebook, which is why the codebook must stay frozen across
@@ -276,29 +211,18 @@ object NearDupIngest {
                     checkpointDir: String, codebook: DataFrame,
                     threshold: Double,
                     maxBucketSize: Int = 0): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestSemanticBatch(batch, indexDir, pairsDir, codebook, threshold,
-          maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(vecs, checkpointDir) { (batch, _) =>
+      ingestSemanticBatch(batch, indexDir, pairsDir, codebook, threshold,
+        maxBucketSize)
+    }
 
   def ingestSemanticBatch(batch: DataFrame, indexDir: String,
                           pairsDir: String, codebook: DataFrame,
                           threshold: Double,
-                          maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val bNew = Similarity.semanticIndex(batch, codebook)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count()
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val pairs = Similarity.incrementalSrpNearDupIndexed(bOld, bNew,
-      threshold, maxBucketSize)
-    pairs.write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
-  }
+                          maxBucketSize: Int = 0): Unit =
+    Stores.probeAndAppend(Similarity.semanticIndex(batch, codebook),
+        indexDir, pairsDir) { (bOld, bNew) =>
+      Similarity.incrementalSrpNearDupIndexed(bOld, bNew, threshold,
+        maxBucketSize)
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * asymmetric containment verify — [[graft.ops.Dedup.anchorCandidatePairs]]
   * composed with [[graft.ops.Dedup.containmentPairs]]): the last dedup
   * family without an `*Ingest` counterpart before r17. Same
-  * foreachBatch-vs-persistent-store shape as [[SetSimIngest]], with one
+  * batch-vs-persistent-store shape as [[SetSimIngest]], with one
   * structural upgrade: the bottom-k ANCHOR relation is itself the
   * persisted index. A document's anchors are a pure per-document
   * artifact (bottom-`nAnchors` shingle hashes — they never change once
@@ -26,9 +26,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * of the two arrived. So [[pairs]] equals the batch composition over
   * everything ingested (QuoteIngestSpec pins stream-vs-batch parity).
   *
-  * Delivery contract: at-least-once. A replayed document appends
-  * duplicate anchor and text rows; duplicate anchors only duplicate
-  * candidates (killed by the per-batch distinct and the read-side pair
+  * Replay ([[Stores]] has the delivery contract): a replayed document
+  * appends duplicate anchor and text rows; duplicate anchors only
+  * duplicate candidates (killed by the per-batch distinct and the read-side pair
   * dedup), the (id, id) self-pair dies on id inequality, and the
   * verify reads texts through dropDuplicates(doc_id) so a redelivered
   * text can never double-count shingle sets (the SetSimIngest replay
@@ -45,60 +45,49 @@ object QuoteIngest {
             pairsDir: String, checkpointDir: String, idCol: String,
             textCol: String, nAnchors: Int, threshold: Double, k: Int = 3,
             maxBucketSize: Int = 0): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, anchorDir, docsDir, pairsDir, idCol, textCol,
-          nAnchors, threshold, k, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, anchorDir, docsDir, pairsDir, idCol, textCol,
+        nAnchors, threshold, k, maxBucketSize)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler). */
   def ingestBatch(batch: DataFrame, anchorDir: String, docsDir: String,
                   pairsDir: String, idCol: String, textCol: String,
                   nAnchors: Int, threshold: Double, k: Int = 3,
-                  maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val recs = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .persist(sl)
-    recs.count() // materialize before the store reads below can race it
-    val newAnchors = Dedup.docAnchors(recs, "doc_id", nAnchors, "text", k)
-      .persist(sl)
-    newAnchors.count()
-    // replay-dedup the store read (ADVICE r17): under at-least-once
-    // replay the anchor store holds duplicate (ah, doc_id) rows, which
-    // would inflate capBucketsPaired's bucket counts — a bucket
-    // genuinely under maxBucketSize could be dropped after a replay,
-    // silently losing pairs relative to the documented batch parity.
-    val oldAnchors =
-      (if (Stores.hasParquet(spark, anchorDir)) spark.read.parquet(anchorDir)
-       else newAnchors.limit(0)).dropDuplicates("ah", "doc_id")
-    val (nA, oA) = Dedup.capBucketsPaired(newAnchors, oldAnchors,
-      Seq("ah"), maxBucketSize, "QuoteIngest")
-    val cross = nA.select(col("ah"), col("doc_id").as("na"))
-      .join(oA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
-    val self = nA.select(col("ah"), col("doc_id").as("na"))
-      .join(nA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
-      .filter(col("na") < col("nb"))
-    val cand = cross.unionByName(self)
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .distinct()
-    val oldDocs =
-      if (Stores.hasParquet(spark, docsDir)) spark.read.parquet(docsDir)
-      else recs.limit(0)
-    // one text per id even under replay — duplicate rows would inflate
-    // nothing (shingle sets are per-id distinct) but cost double work
-    val allDocs = oldDocs.unionByName(recs).dropDuplicates("doc_id")
-    Dedup.containmentPairs(allDocs, cand, "doc_id", k, threshold, "text")
-      .write.mode("append").parquet(pairsDir)
-    newAnchors.write.mode("append").parquet(anchorDir)
-    recs.write.mode("append").parquet(docsDir)
-    newAnchors.unpersist()
-    recs.unpersist()
-  }
+                  maxBucketSize: Int = 0): Unit =
+    Stores.materialized(batch.select(col(idCol).as("doc_id"),
+        col(textCol).as("text"))) { recs =>
+      Stores.materialized(Dedup.docAnchors(recs, "doc_id", nAnchors, "text",
+          k)) { newAnchors =>
+        // replay-dedup the store read (ADVICE r17): under at-least-once
+        // replay the anchor store holds duplicate (ah, doc_id) rows, which
+        // would inflate capBucketsPaired's bucket counts — a bucket
+        // genuinely under maxBucketSize could be dropped after a replay,
+        // silently losing pairs relative to the documented batch parity.
+        val oldAnchors = Stores.read(anchorDir, newAnchors)
+          .dropDuplicates("ah", "doc_id")
+        val (nA, oA) = Dedup.capBucketsPaired(newAnchors, oldAnchors,
+          Seq("ah"), maxBucketSize, "QuoteIngest")
+        val cross = nA.select(col("ah"), col("doc_id").as("na"))
+          .join(oA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
+        val self = nA.select(col("ah"), col("doc_id").as("na"))
+          .join(nA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
+          .filter(col("na") < col("nb"))
+        val cand = cross.unionByName(self)
+          .select(least(col("na"), col("nb")).as("doc_a"),
+            greatest(col("na"), col("nb")).as("doc_b"))
+          .filter(col("doc_a") =!= col("doc_b"))
+          .distinct()
+        // one text per id even under replay — duplicate rows would inflate
+        // nothing (shingle sets are per-id distinct) but cost double work
+        val allDocs = Stores.read(docsDir, recs).unionByName(recs)
+          .dropDuplicates("doc_id")
+        Dedup.containmentPairs(allDocs, cand, "doc_id", k, threshold, "text")
+          .write.mode("append").parquet(pairsDir)
+        newAnchors.write.mode("append").parquet(anchorDir)
+        recs.write.mode("append").parquet(docsDir)
+      }
+    }
 
   /** The accumulated verified containment pairs, replay-deduped —
     * equal to the batch `containmentPairs(docs, anchorCandidatePairs(

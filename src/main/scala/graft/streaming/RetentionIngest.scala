@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -38,12 +38,8 @@ object RetentionIngest {
 
   def start(events: DataFrame, stateDir: String, checkpointDir: String,
             cohortType: String = "signup"): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, stateDir, epoch, cohortType)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(events, checkpointDir)(
+      ingestBatch(_, stateDir, _, cohortType))
 
   def ingestBatch(batch: DataFrame, stateDir: String, epochId: Long,
                   cohortType: String = "signup"): Unit = {
@@ -69,16 +65,14 @@ object RetentionIngest {
     * are idempotent; there is no count partial to undercount).
     */
   def compact(spark: SparkSession, stateDir: String,
-              numFiles: Int = 8): Unit = {
-    val t = spark.read.parquet(stateDir)
-    val merged = t.groupBy(col("kind"), col("user_id"), col("day"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        min(col("epoch_id")).as("epoch_id"))
-      .select(col("user_id"), col("day"), col("lo"), col("hi"),
-        col("kind"), col("epoch_id"))
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      merged.repartition(numFiles), stateDir)
-  }
+              numFiles: Int = 8): Unit =
+    Stores.rewrite(spark, stateDir)(
+      _.groupBy(col("kind"), col("user_id"), col("day"))
+        .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
+          min(col("epoch_id")).as("epoch_id"))
+        .select(col("user_id"), col("day"), col("lo"), col("hi"),
+          col("kind"), col("epoch_id"))
+        .repartition(numFiles))
 
   /** The running retention triangle — bit-for-bit
     * [[graft.ops.EventOps.retention]] over everything ingested: merge

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.QualityModel
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * against a PERSISTED (feature, w) weight relation, every (doc_id,
   * score, pred) is appended to an audit directory, and documents at or
   * above `minScore` are appended to the kept corpus — the
-  * `foreachBatch`-vs-stored-model shape of [[NearDupIngest]] and
+  * batch-vs-stored-model shape of [[NearDupIngest]] and
   * [[DeconIngest]], completing the family symmetry (train once in
   * batch, serve forever on the stream).
   *
@@ -20,11 +20,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * no stream restart. Per-doc scores are independent, so stream
   * results equal batch scoring of the union exactly (spec-pinned).
   *
-  * Delivery contract: at-least-once, same as the other ingest faces —
-  * replays append duplicate (doc_id, score) rows; both sinks are
-  * append-grown tables whose readers dedup by id when exactness
-  * matters. Score rows are stamped with the micro-batch `epoch_id` at
-  * write time: when an at-least-once replay spans a weights retrain
+  * Replay ([[Stores]] has the delivery contract): replays append
+  * duplicate (doc_id, score) rows, which readers dedup by id. Score
+  * rows are stamped with the micro-batch `epoch_id` at write time: when an at-least-once replay spans a weights retrain
   * the store holds two genuinely different (doc_id, score) rows, and
   * the epoch stamp is what lets [[compact]] keep one DETERMINISTICALLY
   * (min-provenance — the [[WindowCountsIngest.compact]] convention)
@@ -36,29 +34,23 @@ object ScoringIngest {
             keptDir: String, checkpointDir: String, dim: Int = 64,
             minScore: Double = 0.5, idCol: String = "doc_id",
             textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, weightsDir, scoresDir, keptDir, dim, minScore,
-          idCol, textCol, epoch)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir)(ingestBatch(_, weightsDir, scoresDir,
+      keptDir, dim, minScore, idCol, textCol, _))
 
   def ingestBatch(batch: DataFrame, weightsDir: String, scoresDir: String,
                   keptDir: String, dim: Int, minScore: Double,
                   idCol: String, textCol: String,
                   epoch: Long = 0L): Unit = {
-    val spark = batch.sparkSession
-    val w = spark.read.parquet(weightsDir)
-    val scored = QualityModel.scoreHashedLogReg(batch, idCol, textCol, w, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count() // one materialization for the two sinks
-    scored.withColumn("epoch_id", lit(epoch))
-      .write.mode("append").parquet(scoresDir)
-    batch.join(scored.filter(col("score") >= minScore).select(col(idCol)),
-        Seq(idCol), "left_semi")
-      .write.mode("append").parquet(keptDir)
-    scored.unpersist()
+    val w = batch.sparkSession.read.parquet(weightsDir)
+    // one materialization for the two sinks
+    Stores.materialized(QualityModel.scoreHashedLogReg(batch, idCol,
+        textCol, w, dim)) { scored =>
+      scored.withColumn("epoch_id", lit(epoch))
+        .write.mode("append").parquet(scoresDir)
+      batch.join(scored.filter(col("score") >= minScore).select(col(idCol)),
+          Seq(idCol), "left_semi")
+        .write.mode("append").parquet(keptDir)
+    }
   }
 
   /** Per-doc score relation, replay-deduped the way [[compact]]
@@ -110,20 +102,19 @@ object ScoringIngest {
   def compact(spark: org.apache.spark.sql.SparkSession, scoresDir: String,
               keptDir: String, idCol: String = "doc_id",
               minScore: Double = 0.5): Unit = {
-    if (Stores.hasParquet(spark, scoresDir)) {
-      // snapshot the surviving rows BEFORE the swap invalidates the
-      // files the plan reads
-      val surviving = dedupScores(spark.read.parquet(scoresDir), idCol)
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      graft.pipeline.Pipeline.atomicOverwrite(spark, surviving, scoresDir)
-      if (Stores.hasParquet(spark, keptDir)) {
-        val kept = spark.read.parquet(keptDir).dropDuplicates(idCol)
-          .join(surviving.filter(col("score") >= minScore)
-            .select(col(idCol)), Seq(idCol), "left_semi")
-        graft.pipeline.Pipeline.atomicOverwrite(spark, kept, keptDir)
-      }
-    } else Stores.compactDedup(spark, keptDir, Seq(idCol))
+    // snapshot the surviving rows BEFORE the swap invalidates the files
+    // the plan reads
+    val scored = Stores.rewrite(spark, scoresDir) { raw =>
+      dedupScores(raw, idCol).localCheckpoint(true,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    }
+    Stores.rewrite(spark, keptDir) { kept =>
+      val once = kept.dropDuplicates(idCol)
+      if (!scored) once
+      else once.join(scores(spark, scoresDir, idCol)
+        .filter(col("score") >= minScore).select(col(idCol)),
+        Seq(idCol), "left_semi")
+    }
   }
 
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -32,7 +32,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * supporting a pattern supports it forever), so late data can only
   * MISS support, never fabricate it.
   *
-  * Delivery contract: at-least-once. Store updates are per-key maxima
+  * Replay: store updates are per-key maxima
   * (idempotent under replay); a replayed event never sees its own
   * marker (queries order before markers on equal (tsec, event_id), and
   * the stored summary carries the event id precisely so the tie is
@@ -45,13 +45,10 @@ object SeqPatternIngest {
   def start(events: DataFrame, lastDir: String, valid2Dir: String,
             supp2Dir: String, supp3Dir: String, checkpointDir: String,
             maxGapSeconds: Long): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, lastDir, valid2Dir, supp2Dir, supp3Dir,
-          maxGapSeconds)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(events, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, lastDir, valid2Dir, supp2Dir, supp3Dir,
+        maxGapSeconds)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler).
     * Input columns: user_id, event_type, tsec, event_id.
@@ -59,122 +56,117 @@ object SeqPatternIngest {
   def ingestBatch(batch: DataFrame, lastDir: String, valid2Dir: String,
                   supp2Dir: String, supp3Dir: String,
                   maxGapSeconds: Long): Unit = {
-    val spark = batch.sparkSession
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ev = batch.select(col("user_id"), col("event_type"),
+    Stores.materialized(batch.select(col("user_id"), col("event_type"),
       col("tsec").cast("long").as("tsec"),
-      col("event_id").cast("long").as("event_id")).persist(sl)
-    ev.count() // materialize before the store reads below can race it
-    val o = struct(col("tsec"), col("event_id"))
+      col("event_id").cast("long").as("event_id"))) { ev =>
+      val o = struct(col("tsec"), col("event_id"))
 
-    // ---- pass 1: (A, B) with gap <= g ---------------------------------
-    val oldLast = readMax(spark, lastDir, Seq("user_id", "type_a"), ev
-      .select(col("user_id"), col("event_type").as("type_a"),
-        col("tsec").as("mts"), col("event_id").as("mid")).limit(0))
-
-    // loud ordering-contract guard (ADVICE r18): the summary recurrence
-    // is only exact when batches arrive in per-user event-time order;
-    // an out-of-order batch silently LOSES support (its events query
-    // against summaries whose occurrence is later and thus invisible).
-    // Count the breaches against the stored per-user frontier and
-    // stderr-log them — conservative: an at-least-once REPLAY also
-    // trips it (a replayed event ties or precedes its own marker),
-    // which is harmless for support (scaladoc above) but still worth a
-    // line in the log. [[orderViolations]] is the queryable face.
-    val nViol = violationsAgainst(ev, oldLast).count()
-    if (nViol > 0)
-      System.err.println(s"[seqpattern-ingest] $nViol batch event(s) at " +
-        "or before the stored per-user frontier — out-of-order batch " +
-        "(or at-least-once replay); support may be undercounted " +
-        s"(store: $lastDir)")
-    // the type alphabet must cover STORED types too: an old-type-A
-    // summary still has to mark new-B queries
-    val types = ev.select(col("event_type").as("type_a"))
-      .unionByName(oldLast.select(col("type_a"))).distinct()
-    val mStore = oldLast.select(col("user_id"), col("type_a"),
-      struct(col("mts").as("tsec"), col("mid").as("event_id")).as("o"),
-      col("mts"), lit(1).as("is_m"),
-      lit(null).cast("string").as("type_b"),
-      lit(null).cast("long").as("qts"))
-    val mBatch = ev.select(col("user_id"),
-      col("event_type").as("type_a"), o.as("o"),
-      col("tsec").as("mts"), lit(1).as("is_m"),
-      lit(null).cast("string").as("type_b"),
-      lit(null).cast("long").as("qts"))
-    val queries = ev.select(col("user_id"),
-        col("event_type").as("type_b"), o.as("o"), col("tsec").as("qts"))
-      .crossJoin(broadcast(types))
-      .select(col("user_id"), col("type_a"), col("o"),
-        lit(null).cast("long").as("mts"), lit(0).as("is_m"),
-        col("type_b"), col("qts"))
-    val w1 = Window.partitionBy(col("user_id"), col("type_a"))
-      .orderBy(col("o"), col("is_m"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val valid2New = mStore.unionByName(mBatch).unionByName(queries)
-      .withColumn("__last",
-        max(when(col("is_m") === 1, col("mts"))).over(w1))
-      .filter(col("is_m") === 0 && col("__last").isNotNull &&
-        col("qts") - col("__last") <= maxGapSeconds)
-      .select(col("user_id"), col("type_a"), col("type_b"), col("o"),
-        col("qts"))
-      .persist(sl)
-    valid2New.count()
-    valid2New.select(col("user_id"), col("type_a"), col("type_b"))
-      .distinct()
-      .write.mode("append").parquet(supp2Dir)
-
-    // ---- pass 2: (A, B, C) with both gaps <= g ------------------------
-    val oldV2 = readMax(spark, valid2Dir,
-      Seq("user_id", "type_a", "type_b"), ev
+      // ---- pass 1: (A, B) with gap <= g ---------------------------------
+      val oldLast = readMax(lastDir, Seq("user_id", "type_a"), ev
         .select(col("user_id"), col("event_type").as("type_a"),
-          col("event_type").as("type_b"), col("tsec").as("mts"),
-          col("event_id").as("mid")).limit(0))
-    val pairsAlpha = oldV2.select(col("type_a"), col("type_b"))
-      .unionByName(valid2New.select(col("type_a"), col("type_b")))
-      .distinct()
-    val m2Store = oldV2.select(col("user_id"), col("type_a"),
-      col("type_b"),
-      struct(col("mts").as("tsec"), col("mid").as("event_id")).as("o"),
-      col("mts"), lit(1).as("is_m"),
-      lit(null).cast("string").as("type_c"),
-      lit(null).cast("long").as("qts"))
-    val m2Batch = valid2New.select(col("user_id"), col("type_a"),
-      col("type_b"), col("o"), col("qts").as("mts"), lit(1).as("is_m"),
-      lit(null).cast("string").as("type_c"),
-      lit(null).cast("long").as("qts"))
-    val queries2 = ev.select(col("user_id"),
-        col("event_type").as("type_c"), o.as("o"), col("tsec").as("qts"))
-      .crossJoin(broadcast(pairsAlpha))
-      .select(col("user_id"), col("type_a"), col("type_b"), col("o"),
-        lit(null).cast("long").as("mts"), lit(0).as("is_m"),
-        col("type_c"), col("qts"))
-    val w2 = Window.partitionBy(col("user_id"), col("type_a"),
-        col("type_b"))
-      .orderBy(col("o"), col("is_m"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    m2Store.unionByName(m2Batch).unionByName(queries2)
-      .withColumn("__last",
-        max(when(col("is_m") === 1, col("mts"))).over(w2))
-      .filter(col("is_m") === 0 && col("__last").isNotNull &&
-        col("qts") - col("__last") <= maxGapSeconds)
-      .select(col("user_id"), col("type_a"), col("type_b"),
-        col("type_c"))
-      .distinct()
-      .write.mode("append").parquet(supp3Dir)
+          col("tsec").as("mts"), col("event_id").as("mid")))
 
-    // ---- advance the summaries (per-key maxima; replay-idempotent) ----
-    ev.groupBy(col("user_id"), col("event_type").as("type_a"))
-      .agg(max(o).as("m"))
-      .select(col("user_id"), col("type_a"), col("m.tsec").as("mts"),
-        col("m.event_id").as("mid"))
-      .write.mode("append").parquet(lastDir)
-    valid2New.groupBy(col("user_id"), col("type_a"), col("type_b"))
-      .agg(max(col("o")).as("m"))
-      .select(col("user_id"), col("type_a"), col("type_b"),
-        col("m.tsec").as("mts"), col("m.event_id").as("mid"))
-      .write.mode("append").parquet(valid2Dir)
-    valid2New.unpersist()
-    ev.unpersist()
+      // loud ordering-contract guard (ADVICE r18): the summary recurrence
+      // is only exact when batches arrive in per-user event-time order;
+      // an out-of-order batch silently LOSES support (its events query
+      // against summaries whose occurrence is later and thus invisible).
+      // Count the breaches against the stored per-user frontier and
+      // stderr-log them — conservative: an at-least-once REPLAY also
+      // trips it (a replayed event ties or precedes its own marker),
+      // which is harmless for support (scaladoc above) but still worth a
+      // line in the log. [[orderViolations]] is the queryable face.
+      val nViol = violationsAgainst(ev, oldLast).count()
+      if (nViol > 0)
+        System.err.println(s"[seqpattern-ingest] $nViol batch event(s) at " +
+          "or before the stored per-user frontier — out-of-order batch " +
+          "(or at-least-once replay); support may be undercounted " +
+          s"(store: $lastDir)")
+      // the type alphabet must cover STORED types too: an old-type-A
+      // summary still has to mark new-B queries
+      val types = ev.select(col("event_type").as("type_a"))
+        .unionByName(oldLast.select(col("type_a"))).distinct()
+      val mStore = oldLast.select(col("user_id"), col("type_a"),
+        struct(col("mts").as("tsec"), col("mid").as("event_id")).as("o"),
+        col("mts"), lit(1).as("is_m"),
+        lit(null).cast("string").as("type_b"),
+        lit(null).cast("long").as("qts"))
+      val mBatch = ev.select(col("user_id"),
+        col("event_type").as("type_a"), o.as("o"),
+        col("tsec").as("mts"), lit(1).as("is_m"),
+        lit(null).cast("string").as("type_b"),
+        lit(null).cast("long").as("qts"))
+      val queries = ev.select(col("user_id"),
+          col("event_type").as("type_b"), o.as("o"), col("tsec").as("qts"))
+        .crossJoin(broadcast(types))
+        .select(col("user_id"), col("type_a"), col("o"),
+          lit(null).cast("long").as("mts"), lit(0).as("is_m"),
+          col("type_b"), col("qts"))
+      val w1 = Window.partitionBy(col("user_id"), col("type_a"))
+        .orderBy(col("o"), col("is_m"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      Stores.materialized(mStore.unionByName(mBatch).unionByName(queries)
+        .withColumn("__last",
+          max(when(col("is_m") === 1, col("mts"))).over(w1))
+        .filter(col("is_m") === 0 && col("__last").isNotNull &&
+          col("qts") - col("__last") <= maxGapSeconds)
+        .select(col("user_id"), col("type_a"), col("type_b"), col("o"),
+          col("qts"))) { valid2New =>
+        valid2New.select(col("user_id"), col("type_a"), col("type_b"))
+          .distinct()
+          .write.mode("append").parquet(supp2Dir)
+
+        // ---- pass 2: (A, B, C) with both gaps <= g ------------------------
+        val oldV2 = readMax(valid2Dir,
+          Seq("user_id", "type_a", "type_b"), ev
+            .select(col("user_id"), col("event_type").as("type_a"),
+              col("event_type").as("type_b"), col("tsec").as("mts"),
+              col("event_id").as("mid")))
+        val pairsAlpha = oldV2.select(col("type_a"), col("type_b"))
+          .unionByName(valid2New.select(col("type_a"), col("type_b")))
+          .distinct()
+        val m2Store = oldV2.select(col("user_id"), col("type_a"),
+          col("type_b"),
+          struct(col("mts").as("tsec"), col("mid").as("event_id")).as("o"),
+          col("mts"), lit(1).as("is_m"),
+          lit(null).cast("string").as("type_c"),
+          lit(null).cast("long").as("qts"))
+        val m2Batch = valid2New.select(col("user_id"), col("type_a"),
+          col("type_b"), col("o"), col("qts").as("mts"), lit(1).as("is_m"),
+          lit(null).cast("string").as("type_c"),
+          lit(null).cast("long").as("qts"))
+        val queries2 = ev.select(col("user_id"),
+            col("event_type").as("type_c"), o.as("o"), col("tsec").as("qts"))
+          .crossJoin(broadcast(pairsAlpha))
+          .select(col("user_id"), col("type_a"), col("type_b"), col("o"),
+            lit(null).cast("long").as("mts"), lit(0).as("is_m"),
+            col("type_c"), col("qts"))
+        val w2 = Window.partitionBy(col("user_id"), col("type_a"),
+            col("type_b"))
+          .orderBy(col("o"), col("is_m"))
+          .rowsBetween(Window.unboundedPreceding, -1)
+        m2Store.unionByName(m2Batch).unionByName(queries2)
+          .withColumn("__last",
+            max(when(col("is_m") === 1, col("mts"))).over(w2))
+          .filter(col("is_m") === 0 && col("__last").isNotNull &&
+            col("qts") - col("__last") <= maxGapSeconds)
+          .select(col("user_id"), col("type_a"), col("type_b"),
+            col("type_c"))
+          .distinct()
+          .write.mode("append").parquet(supp3Dir)
+
+        // ---- advance the summaries (per-key maxima; replay-idempotent) ----
+        ev.groupBy(col("user_id"), col("event_type").as("type_a"))
+          .agg(max(o).as("m"))
+          .select(col("user_id"), col("type_a"), col("m.tsec").as("mts"),
+            col("m.event_id").as("mid"))
+          .write.mode("append").parquet(lastDir)
+        valid2New.groupBy(col("user_id"), col("type_a"), col("type_b"))
+          .agg(max(col("o")).as("m"))
+          .select(col("user_id"), col("type_a"), col("type_b"),
+            col("m.tsec").as("mts"), col("m.event_id").as("mid"))
+          .write.mode("append").parquet(valid2Dir)
+      }
+    }
   }
 
   /** Accumulated supported (user, A, B) rows, replay-deduped — equal to
@@ -214,15 +206,14 @@ object SeqPatternIngest {
   def compact(spark: SparkSession, lastDir: String, valid2Dir: String,
               supp2Dir: String, supp3Dir: String,
               numFiles: Int = 4): Unit = {
-    def swap(dir: String)(shape: DataFrame => DataFrame): Unit =
-      if (Stores.hasParquet(spark, dir))
-        graft.pipeline.Pipeline.atomicOverwrite(spark,
-          shape(spark.read.parquet(dir)).repartition(numFiles), dir)
-    swap(lastDir)(maxByKey(_, Seq("user_id", "type_a")))
-    swap(valid2Dir)(maxByKey(_, Seq("user_id", "type_a", "type_b")))
-    swap(supp2Dir)(_.dropDuplicates("user_id", "type_a", "type_b"))
-    swap(supp3Dir)(_.dropDuplicates("user_id", "type_a", "type_b",
-      "type_c"))
+    Stores.rewrite(spark, lastDir)(
+      maxByKey(_, Seq("user_id", "type_a")).repartition(numFiles))
+    Stores.rewrite(spark, valid2Dir)(
+      maxByKey(_, Seq("user_id", "type_a", "type_b")).repartition(numFiles))
+    Stores.compactDedup(spark, supp2Dir, Seq("user_id", "type_a", "type_b"),
+      numFiles)
+    Stores.compactDedup(spark, supp3Dir,
+      Seq("user_id", "type_a", "type_b", "type_c"), numFiles)
   }
 
   /** Ordering-contract audit face (the [[MarkovIngest.orderViolations]]
@@ -237,13 +228,12 @@ object SeqPatternIngest {
     * the frontier.
     */
   def orderViolations(batch: DataFrame, lastDir: String): DataFrame = {
-    val spark = batch.sparkSession
     val ev = batch.select(col("user_id"), col("event_type"),
       col("tsec").cast("long").as("tsec"),
       col("event_id").cast("long").as("event_id"))
-    val stored = readMax(spark, lastDir, Seq("user_id", "type_a"), ev
+    val stored = readMax(lastDir, Seq("user_id", "type_a"), ev
       .select(col("user_id"), col("event_type").as("type_a"),
-        col("tsec").as("mts"), col("event_id").as("mid")).limit(0))
+        col("tsec").as("mts"), col("event_id").as("mid")))
     violationsAgainst(ev, stored)
   }
 
@@ -266,11 +256,9 @@ object SeqPatternIngest {
     * per-batch maxima, so the read-side max reconstructs the true
     * latest occurrence under any replay interleaving.
     */
-  private def readMax(spark: SparkSession, dir: String, keys: Seq[String],
-                      empty: DataFrame): DataFrame =
-    maxByKey(
-      if (Stores.hasParquet(spark, dir)) spark.read.parquet(dir) else empty,
-      keys)
+  private def readMax(dir: String, keys: Seq[String],
+                      like: DataFrame): DataFrame =
+    maxByKey(Stores.read(dir, like), keys)
 
   private def maxByKey(base: DataFrame, keys: Seq[String]): DataFrame =
     base.groupBy(keys.map(col): _*)

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming face of the EXACT set-similarity join
   * ([[graft.ops.Dedup.setSimilarityPairs]]) — the same
-  * foreachBatch-vs-persistent-index shape as [[ErIngest]]. Each
+  * batch-vs-persistent-index shape as [[ErIngest]]. Each
   * micro-batch is joined against the ACCUMULATED document index
   * (new-vs-old, via [[graft.ops.Dedup.setSimilarityIncremental]], which
   * also covers new-vs-new) and the verified pairs appended; then the
@@ -16,17 +16,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * incremental operator's self leg, cross-batch pairs when the later
   * document probes the earlier corpus.
   *
-  * State posture: no Spark streaming state — the index is the plain
-  * (id, text) document table, what exact verification needs anyway;
+  * State posture: the index is the plain (id, text) document table,
+  * what exact verification needs anyway ([[Stores]] has the store
+  * contract);
   * prefixes and the vocabulary order are recomputed per ingest from the
   * accumulated corpus (any total order is lemma-valid, so an
   * implementation that PERSISTS prefix rows under a pinned order is the
   * same operator with a cheaper probe — the batch-mode
   * `setSimilarityIncremental` doc carries that contract).
   *
-  * Delivery contract: at-least-once — a replayed batch appends its
-  * documents and pairs twice. Pair rows are immutable facts keyed by
-  * the unordered id pair, so [[pairs]] dedups on read; a replayed
+  * Replay: pair rows are immutable facts keyed by the unordered id
+  * pair, so [[pairs]] dedups on read; a replayed
   * document probing its own earlier index copy would fabricate the
   * (id, id) self-pair, which the incremental operator already excludes
   * by id inequality, and duplicate index rows only duplicate candidates
@@ -39,35 +39,24 @@ object SetSimIngest {
             checkpointDir: String, idCol: String, textCol: String,
             threshold: Double, k: Int = 3,
             maxBucketSize: Int = 0): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, indexDir, pairsDir, idCol, textCol, threshold,
-          k, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, indexDir, pairsDir, idCol, textCol, threshold,
+        k, maxBucketSize)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler). */
   def ingestBatch(batch: DataFrame, indexDir: String, pairsDir: String,
                   idCol: String, textCol: String, threshold: Double,
-                  k: Int = 3, maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    val recs = batch.select(col(idCol), col(textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    recs.count() // materialize before the index read below can race it
-    val old =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else recs.limit(0)
-    // a replayed record sits in BOTH relations; the old side would pair
-    // it with itself — ids are unique per document, so the inequality
-    // inside the incremental operator (doc_a != doc_b after the
-    // least/greatest normalization) makes the exclusion exact
-    Dedup.setSimilarityIncremental(old, recs, idCol, threshold, textCol,
+                  k: Int = 3, maxBucketSize: Int = 0): Unit =
+    Stores.probeAndAppend(batch.select(col(idCol), col(textCol)),
+        indexDir, pairsDir) { (old, recs) =>
+      // a replayed record sits in BOTH relations; the old side would pair
+      // it with itself — ids are unique per document, so the inequality
+      // inside the incremental operator (doc_a != doc_b after the
+      // least/greatest normalization) makes the exclusion exact
+      Dedup.setSimilarityIncremental(old, recs, idCol, threshold, textCol,
         k, maxBucketSize)
-      .write.mode("append").parquet(pairsDir)
-    recs.write.mode("append").parquet(indexDir)
-    recs.unpersist()
-  }
+    }
 
   /** The accumulated verified pairs, replay-deduped — equal to the
     * batch [[graft.ops.Dedup.setSimilarityPairs]] over everything
@@ -77,10 +66,8 @@ object SetSimIngest {
     spark.read.parquet(pairsDir)
       .dropDuplicates("doc_a", "doc_b")
 
-  /** Store hygiene (the family-wide compact face): rewrite both stores
-    * to their read-side replay-dedup fixpoints through the atomic swap
-    * ([[Stores.compactDedup]]) — replayed deliveries and append-file
-    * fragmentation collapse; reads before and after see the same
+  /** Rewrite both stores to their read-side replay-dedup fixpoints
+    * ([[Stores.compactDedup]]); reads before and after see the same
     * relations.
     */
   def compact(spark: SparkSession, indexDir: String, pairsDir: String,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Aggregations
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming face of the 2D skyline ([[graft.ops.Aggregations.skyline2D]]):
@@ -17,34 +17,29 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ingested, written through the atomic swap (the frontier SHRINKS when
   * a new point dominates old members, so append semantics are wrong).
   *
-  * Delivery contract: at-least-once — a replayed row is an exact
-  * duplicate, and the id-dedup before the skyline keeps equal points
-  * single while the skyline itself keeps distinct-id ties alive
-  * together (same contract as the batch operator).
+  * Replay: a replayed row is an exact duplicate, and the id-dedup
+  * before the skyline keeps equal points single while the skyline
+  * itself keeps distinct-id ties alive together (same contract as the
+  * batch operator).
   */
 object SkylineIngest {
 
   def start(rows: DataFrame, frontierDir: String, checkpointDir: String,
             idCol: String, xCol: String, yCol: String): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, frontierDir, idCol, xCol, yCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(rows, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, frontierDir, idCol, xCol, yCol)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler). */
   def ingestBatch(batch: DataFrame, frontierDir: String, idCol: String,
                   xCol: String, yCol: String): Unit = {
-    val spark = batch.sparkSession
     val recs = batch.select(idCol, xCol, yCol)
-    val old =
-      if (Stores.hasParquet(spark, frontierDir)) spark.read.parquet(frontierDir)
-      else recs.limit(0)
+    val old = Stores.read(frontierDir, recs)
     val next = Aggregations.skyline2D(
         old.unionByName(recs).dropDuplicates(idCol), xCol, yCol)
       .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // cut lineage before the swap overwrites the input
-    graft.pipeline.Pipeline.atomicOverwrite(spark, next, frontierDir)
+    graft.pipeline.Pipeline.atomicOverwrite(batch.sparkSession, next,
+      frontierDir)
   }
 
   /** The current frontier — equal to the batch skyline over everything

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -39,13 +39,8 @@ object StatsIngest {
             sourceCol: String = "source", langCol: String = "lang",
             textCol: String = "text",
             keysDir: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        ingestBatch(batch, statsDir, epoch, sourceCol, langCol, textCol,
-          keysDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir)(
+      ingestBatch(_, statsDir, _, sourceCol, langCol, textCol, keysDir))
 
   def ingestBatch(batch: DataFrame, statsDir: String, epochId: Long,
                   sourceCol: String, langCol: String, textCol: String,
@@ -81,12 +76,10 @@ object StatsIngest {
   def compactKeys(spark: SparkSession, keysDir: String,
                   sourceCol: String = "source", langCol: String = "lang",
                   numFiles: Int = 8): Unit =
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(keysDir)
-        .groupBy(col(sourceCol), col(langCol), col("h"))
+    Stores.rewrite(spark, keysDir)(
+      _.groupBy(col(sourceCol), col(langCol), col("h"))
         .agg(min(col("epoch_id")).as("epoch_id"))
-        .repartition(numFiles),
-      keysDir)
+        .repartition(numFiles))
 
   /** The running card from the persisted partials — safe to read at any
     * time, including mid-ingest. With `keysDir`, the FULL batch card

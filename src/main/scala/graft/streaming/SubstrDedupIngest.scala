@@ -59,15 +59,9 @@ object SubstrDedupIngest {
     * starts with no index (unlike DeconIngest, where a missing benchmark
     * is a configuration error).
     */
-  def readIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    if (hasData) spark.read.parquet(indexDir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], indexSchema)
-  }
+  def readIndex(spark: SparkSession, indexDir: String): DataFrame =
+    Stores.read(indexDir,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], indexSchema))
 
   /** The cumulative per-key minimum owner — the relation every cleaning
     * decision joins against. Collapses append-grown duplicates (and
@@ -84,12 +78,9 @@ object SubstrDedupIngest {
             checkpointDir: String, w: Int,
             idCol: String = "doc_id", textCol: String = "text")
       : StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, indexDir, cleanDir, w, idCol, textCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, indexDir, cleanDir, w, idCol, textCol)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler).
     * The flagged set is eagerly materialized inside

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -16,10 +16,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * contained one) and appends the verified pairs; then the batch's
   * documents join the store.
   *
-  * State and delivery contracts are [[WeightedSetSimIngest]]'s: plain
-  * (id, text) store, at-least-once appends, [[pairs]] dedups on read,
-  * replay-proof verify (one weight row / weight sum per document
-  * inside the incremental operator).
+  * State and replay arguments are [[WeightedSetSimIngest]]'s: plain
+  * (id, text) store, [[pairs]] dedups on read, replay-proof verify
+  * (one weight row / weight sum per document inside the incremental
+  * operator).
   */
 object WeightedContainmentIngest {
 
@@ -27,34 +27,23 @@ object WeightedContainmentIngest {
             checkpointDir: String, idCol: String, textCol: String,
             threshold: Double, k: Int = 1,
             maxBucketSize: Int = 0): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, indexDir, pairsDir, idCol, textCol, threshold,
-          k, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, indexDir, pairsDir, idCol, textCol, threshold,
+        k, maxBucketSize)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler). */
   def ingestBatch(batch: DataFrame, indexDir: String, pairsDir: String,
                   idCol: String, textCol: String, threshold: Double,
-                  k: Int = 1, maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
+                  k: Int = 1, maxBucketSize: Int = 0): Unit =
     // store schema normalized to (doc_id, text) — the QuoteIngest
     // convention, so purge's doc_id key matches ANY caller idCol
-    val recs = batch.select(col(idCol).as("doc_id"),
-        col(textCol).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    recs.count() // materialize before the index read below can race it
-    val old =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else recs.limit(0)
-    Dedup.weightedContainmentIncremental(old, recs, "doc_id", threshold,
+    Stores.probeAndAppend(
+        batch.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+        indexDir, pairsDir) { (old, recs) =>
+      Dedup.weightedContainmentIncremental(old, recs, "doc_id", threshold,
         "text", k, maxBucketSize)
-      .write.mode("append").parquet(pairsDir)
-    recs.write.mode("append").parquet(indexDir)
-    recs.unpersist()
-  }
+    }
 
   /** The accumulated verified pairs, replay-deduped — equal to the
     * batch [[graft.ops.Dedup.weightedContainmentPairs]] over everything
@@ -73,10 +62,8 @@ object WeightedContainmentIngest {
     NearDupIngest.purge(spark, ids,
       pairsDirs = Seq(pairsDir), docsDirs = Seq(indexDir))
 
-  /** Store hygiene (the family-wide compact face): rewrite both stores
-    * to their read-side replay-dedup fixpoints through the atomic swap
-    * ([[Stores.compactDedup]]) — replayed deliveries and append-file
-    * fragmentation collapse; reads before and after see the same
+  /** Rewrite both stores to their read-side replay-dedup fixpoints
+    * ([[Stores.compactDedup]]); reads before and after see the same
     * relations.
     */
   def compact(spark: SparkSession, indexDir: String,

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming face of the EXACT WEIGHTED set-similarity join
   * ([[graft.ops.Dedup.weightedSetSimilarityPairs]]) — the multiset
-  * sibling of [[SetSimIngest]], same foreachBatch-vs-persistent-index
+  * sibling of [[SetSimIngest]], same batch-vs-persistent-index
   * shape. Each micro-batch runs
   * [[graft.ops.Dedup.weightedSetSimilarityIncremental]] against the
   * accumulated document store (new-vs-old plus the new-vs-new self
@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * join the store. Every unordered pair with weighted Jaccard
   * Σ min(tf) / Σ max(tf) ≥ threshold is emitted at least once.
   *
-  * State posture: the store is the plain (id, text) document table —
+  * State posture ([[Stores]] has the store contract): the store is the
+  * plain (id, text) document table —
   * what exact weighted verification needs anyway; term frequencies and
   * the vocabulary order are recomputed per ingest from the accumulated
   * corpus (ANY total order satisfies the weighted prefix lemma, so a
@@ -23,8 +24,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the same operator with a cheaper probe — the [[SetSimIngest]]
   * contract, stated on the batch operator).
   *
-  * Delivery contract: at-least-once — pair rows are immutable facts
-  * keyed by the unordered id pair, so [[pairs]] dedups on read; the
+  * Replay: pair rows are immutable facts keyed by the unordered id
+  * pair, so [[pairs]] dedups on read; the
   * (id, id) self-pair dies on id inequality inside the incremental
   * operator, and its verify reads one (doc, token) weight row and one
   * weight sum per document (replay-deduped inside the operator), so a
@@ -36,34 +37,23 @@ object WeightedSetSimIngest {
             checkpointDir: String, idCol: String, textCol: String,
             threshold: Double, k: Int = 1,
             maxBucketSize: Int = 0): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        ingestBatch(batch, indexDir, pairsDir, idCol, textCol, threshold,
-          k, maxBucketSize)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(docs, checkpointDir) { (batch, _) =>
+      ingestBatch(batch, indexDir, pairsDir, idCol, textCol, threshold,
+        k, maxBucketSize)
+    }
 
   /** One ingest step (also directly usable from a batch scheduler). */
   def ingestBatch(batch: DataFrame, indexDir: String, pairsDir: String,
                   idCol: String, textCol: String, threshold: Double,
-                  k: Int = 1, maxBucketSize: Int = 0): Unit = {
-    val spark = batch.sparkSession
+                  k: Int = 1, maxBucketSize: Int = 0): Unit =
     // store schema normalized to (doc_id, text) — the QuoteIngest
     // convention, so purge's doc_id key matches ANY caller idCol
-    val recs = batch.select(col(idCol).as("doc_id"),
-        col(textCol).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    recs.count() // materialize before the index read below can race it
-    val old =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else recs.limit(0)
-    Dedup.weightedSetSimilarityIncremental(old, recs, "doc_id", threshold,
+    Stores.probeAndAppend(
+        batch.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+        indexDir, pairsDir) { (old, recs) =>
+      Dedup.weightedSetSimilarityIncremental(old, recs, "doc_id", threshold,
         "text", k, maxBucketSize)
-      .write.mode("append").parquet(pairsDir)
-    recs.write.mode("append").parquet(indexDir)
-    recs.unpersist()
-  }
+    }
 
   /** The accumulated verified pairs, replay-deduped — equal to the
     * batch [[graft.ops.Dedup.weightedSetSimilarityPairs]] over
@@ -82,10 +72,8 @@ object WeightedSetSimIngest {
     NearDupIngest.purge(spark, ids,
       pairsDirs = Seq(pairsDir), docsDirs = Seq(indexDir))
 
-  /** Store hygiene (the family-wide compact face): rewrite both stores
-    * to their read-side replay-dedup fixpoints through the atomic swap
-    * ([[Stores.compactDedup]]) — replayed deliveries and append-file
-    * fragmentation collapse; reads before and after see the same
+  /** Rewrite both stores to their read-side replay-dedup fixpoints
+    * ([[Stores.compactDedup]]); reads before and after see the same
     * relations.
     */
   def compact(spark: SparkSession, indexDir: String,

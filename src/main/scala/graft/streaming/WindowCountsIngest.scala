@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming faces of the windowed event analytics that need HISTORY —
   * trailing-baseline anomaly scores ([[graft.ops.EventOps.anomalyScores]])
@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * window's counts, so neither is a pure per-key streaming aggregate;
   * the honest shape is the running-data-card pattern
   * ([[StatsIngest]]): the watermark FINALIZES hourly (window, type)
-  * count rows in append mode, `foreachBatch` persists exactly those
+  * count rows in append mode, each micro-batch persists exactly those
   * rows, and the reports replay the batch scoring logic — the SAME
   * function objects ([[graft.ops.EventOps.anomalyScoresOver]] /
   * [[graft.ops.EventOps.windowedTopKOver]]) — over the accumulated
@@ -31,15 +31,12 @@ object WindowCountsIngest {
   def start(events: DataFrame, countsDir: String, checkpointDir: String,
             width: String = "1 hour",
             watermark: String = "1 hour"): StreamingQuery =
-    EventStreams.windowedCounts(events, width, None, watermark)
-      .select(col("window_start"), col("event_type"), col("n"))
-      .writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], epoch: Long) =>
-        batch.withColumn("epoch_id", lit(epoch))
-          .write.mode("append").parquet(countsDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    Stores.start(EventStreams.windowedCounts(events, width, None, watermark)
+        .select(col("window_start"), col("event_type"), col("n")),
+        checkpointDir) { (batch, epoch) =>
+      batch.withColumn("epoch_id", lit(epoch))
+        .write.mode("append").parquet(countsDir)
+    }
 
   /** The finalized hourly series, replay-deduped — the exact relation
     * [[graft.ops.EventOps.hourlyCounts]] produces in batch for the
@@ -58,13 +55,11 @@ object WindowCountsIngest {
     * [[ActivityIngest.compactKeys]] convention).
     */
   def compact(spark: SparkSession, countsDir: String): Unit =
-    graft.pipeline.Pipeline.atomicOverwrite(spark,
-      spark.read.parquet(countsDir)
-        .groupBy(col("window_start"), col("event_type"))
+    Stores.rewrite(spark, countsDir)(
+      _.groupBy(col("window_start"), col("event_type"))
         .agg(min(col("n")).as("n"), min(col("epoch_id")).as("epoch_id"))
         .select(col("window_start"), col("event_type"), col("n"),
-          col("epoch_id")),
-      countsDir)
+          col("epoch_id")))
 
   /** Running anomaly report — identical to the batch
     * [[graft.ops.EventOps.anomalyScores]] over the finalized windows.
