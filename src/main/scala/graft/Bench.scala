@@ -22,15 +22,6 @@ object Bench {
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** tmpfs scratch when available (local bench boxes), else /tmp —
-    * per-process so concurrent Verify/Bench/test JVMs can't collide.
-    */
-  private[graft] def scratchDir(): String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) Scratch.dir("/dev/shm", "graft_spark")
-    else Scratch.dir(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_spark")
-  }
-
   /** Per-query medians of a PRIOR bench artifact, parsed from its
     * `"queries":{...}` object (files written by this program, so the
     * shape is known: simple-identifier keys, plain numeric values).
@@ -83,7 +74,7 @@ object Bench {
     (rt.totalMemory() - rt.freeMemory()) >> 20
   }
 
-  /** Total bytes under the session's scratch dir (shuffle + spill
+  /** Total bytes under one of [[Session.localDirs]] (shuffle + spill
     * files), MiB — when the scratch is tmpfs (/dev/shm), spill volume
     * is RAM pressure the heap counters can't see. Session-level only:
     * at sweep end the dir can hold 100k+ files, so this walks once per
@@ -217,23 +208,9 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", java.lang.Double.valueOf(v))
 
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val scratch = scratchDir()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tmpfs scratch for shuffle/spill: shared-host disk stalls on /tmp
-      // showed up as random 15-60 s spikes on individual bench samples
-      .config("spark.local.dir", scratch)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // Optional comma-separated filter for targeted profiling runs.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -335,7 +312,7 @@ object Bench {
         s""""heap_used_mb":${heapUsedMb()},""" +
         s""""heap_max_mb":${Runtime.getRuntime.maxMemory() >> 20},""" +
         s""""storage_mb":${storageUsedMb(spark)},""" +
-        s""""scratch_mb":${dirUsedMb(scratch)}}"""
+        s""""scratch_mb":${Session.localDirs.map(dirUsedMb).sum}}"""
       // queries_adjudicated (VERDICT r21 task 6): the first-pass map
       // with every outlier/drift re-timed query OVERWRITTEN by its
       // end-of-sweep median — the spike-free per-query map a

@@ -37,4 +37,14 @@ object Scratch {
     Files.createDirectories(Paths.get(p))
     p
   }
+
+  /** [[dir]] under tmpfs (`/dev/shm`) when it is writable, else under
+    * `java.io.tmpdir`: shared-host disk stalls on /tmp billed random
+    * multi-second spikes to shuffle and store writes.
+    */
+  def tmpfsDir(prefix: String): String = {
+    val shm = new java.io.File("/dev/shm")
+    dir(if (shm.isDirectory && shm.canWrite) "/dev/shm"
+        else sys.props.getOrElse("java.io.tmpdir", "/tmp"), prefix)
+  }
 }

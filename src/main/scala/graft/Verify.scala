@@ -64,26 +64,11 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Pin the JVM default timezone too (not just the session TZ):
-    // java.sql.Timestamp literals and NTZ casts otherwise shift on a
-    // non-UTC host and silently break the oracle compare.
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tmpfs shuffle scratch (see Bench.scratchDir: /tmp disk stalls)
-      .config("spark.local.dir", Bench.scratchDir())
-      // Plain micros timestamps in the dumped parquet (not INT96), so the
-      // driver's DuckDB/pyarrow compare sees the same logical type the
-      // oracle produces.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    // Plain micros timestamps in the dumped parquet (not INT96), so the
+    // DuckDB/pyarrow compare sees the same logical type the oracle
+    // produces.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // Dev loop: SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump AND the
     // oracle json to the named queries (check_oracle.py fails on dumps

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -289,7 +289,7 @@ case class Int8DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Dense matrix x vector product for the OPQ rotation hot path: `mat` is
+/** Dense matrix x vector product for the trained-rotation hot path: `mat` is
   * a ROW-MAJOR flattened `array<double>` of a (dimOut x dimIn) matrix
   * (in practice a FOLDABLE literal — the learned rotation is driver-sized
   * and rides the plan, no broadcast join), `vec` an `array<float|double>`
@@ -390,53 +390,12 @@ case class MatVecMul(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for the graft native functions — either imperatively
-  * ([[GraftFunctions.register]], idempotent, used by the operators
-  * themselves) or declaratively via `spark.sql.extensions=
-  * graft.functions.GraftExtensions` for SQL-only users.
+/** Registration for the graft native functions: [[GraftFunctions.register]]
+  * is idempotent, and the operators call it themselves on every entry.
   */
 object GraftFunctions {
-  val fdotInfo = new ExpressionInfo(
-    classOf[FloatDotProduct].getName, "graft_fdot")
-
-  val vecAvgInfo = new ExpressionInfo(
-    classOf[VectorAvgAggregate].getName, "graft_vec_avg")
-
-  val wordGramsInfo = new ExpressionInfo(
-    classOf[WordGrams].getName, "graft_word_grams")
-
-  val stopwordHitsInfo = new ExpressionInfo(
-    classOf[StopwordHits].getName, "graft_stopword_hits")
-
-  val charFpInfo = new ExpressionInfo(
-    classOf[CharGramFingerprint].getName, "graft_char_fingerprint")
-
-  val q8ScaleInfo = new ExpressionInfo(
-    classOf[Q8Scale].getName, "graft_q8_scale")
-
-  val q8Info = new ExpressionInfo(
-    classOf[Q8Quantize].getName, "graft_q8")
-
-  val i8dotInfo = new ExpressionInfo(
-    classOf[Int8DotProduct].getName, "graft_i8dot")
-
-  val matvecInfo = new ExpressionInfo(
-    classOf[MatVecMul].getName, "graft_matvec")
-
-  val bpeTokensInfo = new ExpressionInfo(
-    classOf[BpeTokenCount].getName, "graft_bpe_tokens")
-
-  val bpeMergeInfo = new ExpressionInfo(
-    classOf[BpeMergeApply].getName, "graft_bpe_merge")
-
-  val wOverlapInfo = new ExpressionInfo(
-    classOf[WeightedMinOverlap].getName, "graft_woverlap")
-
-  val sOverlapInfo = new ExpressionInfo(
-    classOf[SortedOverlapCount].getName, "graft_soverlap")
-
   /** Builder for [[BpeMergeApply]]: (syms, x literal, y literal). */
-  private[functions] def bpeMergeBuilder(exprs: Seq[Expression]): Expression = {
+  private def bpeMergeBuilder(exprs: Seq[Expression]): Expression = {
     checkArgs("graft_bpe_merge", exprs, Seq(3), "(syms, x literal, y literal)")
     BpeMergeApply(exprs.head,
       exprs(1).eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString,
@@ -459,7 +418,7 @@ object GraftFunctions {
   /** Builder for [[WordGrams]] from a `call_function` argument list:
     * (text, k literal, distinct literal[, ws literal]).
     */
-  private[functions] def wordGramsBuilder(exprs: Seq[Expression]): Expression = {
+  private def wordGramsBuilder(exprs: Seq[Expression]): Expression = {
     checkArgs("graft_word_grams", exprs, Seq(3, 4),
       "(text, k literal, distinct literal[, ws literal])")
     WordGrams(exprs.head,
@@ -469,7 +428,7 @@ object GraftFunctions {
   }
 
   /** Builder for [[StopwordHits]]: (text, array<string> literal[, ws literal]). */
-  private[functions] def stopwordHitsBuilder(exprs: Seq[Expression]): Expression = {
+  private def stopwordHitsBuilder(exprs: Seq[Expression]): Expression = {
     checkArgs("graft_stopword_hits", exprs, Seq(2, 3),
       "(text, array<string> literal[, ws literal])")
     StopwordHits(exprs.head,
@@ -482,7 +441,7 @@ object GraftFunctions {
   /** Builder for [[BpeTokenCount]]: (text[, flattened merges
     * array<string> literal]) — omitted merges = [[BpeUtil.DefaultMerges]].
     */
-  private[functions] def bpeTokensBuilder(exprs: Seq[Expression]): Expression = {
+  private def bpeTokensBuilder(exprs: Seq[Expression]): Expression = {
     checkArgs("graft_bpe_tokens", exprs, Seq(1, 2),
       "(text[, flattened merges array<string> literal])")
     val merges =
@@ -495,7 +454,7 @@ object GraftFunctions {
   }
 
   /** Builder for [[CharGramFingerprint]]: (text, n literal). */
-  private[functions] def charFpBuilder(exprs: Seq[Expression]): Expression = {
+  private def charFpBuilder(exprs: Seq[Expression]): Expression = {
     checkArgs("graft_char_fingerprint", exprs, Seq(2), "(text, n literal)")
     CharGramFingerprint(exprs.head,
       exprs(1).eval().asInstanceOf[Number].intValue())
@@ -503,12 +462,9 @@ object GraftFunctions {
 
   /** Register a graft function only if this session doesn't already
     * have it — operators call [[register]] defensively on every entry,
-    * and sessions built with [[GraftExtensions]] arrive with the
-    * functions pre-injected, so an unconditional
-    * `createOrReplaceTempFunction` logged a SimpleFunctionRegistry
-    * "replaced a previously registered function" warning on every
-    * repeat (ADVICE r19 cosmetics). The builders are identical on both
-    * paths, so skipping an existing name is always safe.
+    * so an unconditional `createOrReplaceTempFunction` logged a
+    * SimpleFunctionRegistry "replaced a previously registered function"
+    * warning on every repeat (ADVICE r19 cosmetics).
     */
   private def regIfAbsent(spark: SparkSession, name: String)(
       builder: Seq[Expression] => Expression): Unit = {
@@ -541,50 +497,5 @@ object GraftFunctions {
         exprs(3)))
     regIfAbsent(spark, "graft_soverlap")(
       exprs => SortedOverlapCount(exprs.head, exprs(1)))
-  }
-}
-
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_fdot"),
-      GraftFunctions.fdotInfo,
-      exprs => FloatDotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_vec_avg"),
-      GraftFunctions.vecAvgInfo,
-      exprs => VectorAvgAggregate(exprs.head).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("graft_word_grams"),
-      GraftFunctions.wordGramsInfo,
-      GraftFunctions.wordGramsBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_stopword_hits"),
-      GraftFunctions.stopwordHitsInfo,
-      GraftFunctions.stopwordHitsBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_char_fingerprint"),
-      GraftFunctions.charFpInfo,
-      GraftFunctions.charFpBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_q8_scale"),
-      GraftFunctions.q8ScaleInfo,
-      exprs => Q8Scale(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_q8"),
-      GraftFunctions.q8Info,
-      exprs => Q8Quantize(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_i8dot"),
-      GraftFunctions.i8dotInfo,
-      exprs => Int8DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_matvec"),
-      GraftFunctions.matvecInfo,
-      exprs => MatVecMul(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_bpe_tokens"),
-      GraftFunctions.bpeTokensInfo,
-      GraftFunctions.bpeTokensBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_bpe_merge"),
-      GraftFunctions.bpeMergeInfo,
-      GraftFunctions.bpeMergeBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_woverlap"),
-      GraftFunctions.wOverlapInfo,
-      exprs => WeightedMinOverlap(exprs.head, exprs(1), exprs(2),
-        exprs(3))))
-    ext.injectFunction((FunctionIdentifier("graft_soverlap"),
-      GraftFunctions.sOverlapInfo,
-      exprs => SortedOverlapCount(exprs.head, exprs(1))))
   }
 }

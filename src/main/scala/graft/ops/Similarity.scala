@@ -1390,12 +1390,9 @@ object Similarity {
     corpus.join(flagged, corpus("vec_id") === col("__flag_id"), "left_anti")
   }
 
-  // ---- OPQ rotation (Ge et al., "Optimized Product Quantization", CVPR
-  // 2013 — the parametric solution): learn an ORTHOGONAL rotation that
-  // decorrelates dimensions and balances variance across the m PQ
-  // subspaces before sub-quantization, shrinking ADC quantization error
-  // without touching index or serving shape (rotating both data and
-  // query preserves all dot products).
+  // ---- Trained rotations: learn an ORTHOGONAL rotation from the corpus
+  // covariance ([[pcaRotation]]) and apply it with [[rotate]]; rotating
+  // both data and query preserves all dot products.
 
   /** Mean vector and (centered) covariance of an embedding column,
     * collected to the driver — (dim) and (dim x dim) doubles, driver-
@@ -1488,40 +1485,6 @@ object Similarity {
     (evals, evecs)
   }
 
-  /** The parametric-OPQ rotation for `m` subspaces: eigendecompose the
-    * corpus covariance, then allocate principal directions to subspaces
-    * balancing the VARIANCE PRODUCT (Ge et al. §4's eigenvalue-allocation
-    * — greedy largest-eigenvalue-to-emptiest-bucket on the log scale,
-    * optimal for independent Gaussian dims). Returns the (dim x dim)
-    * rotation as ROW-MAJOR flattened doubles on the 1e-6 grid, ready for
-    * [[rotate]]: row i of R is the eigenvector serving output dim i, so
-    * rotated = R·x groups decorrelated, variance-balanced coordinates
-    * into consecutive PQ subspaces.
-    */
-  def opqParametricRotation(embeddings: DataFrame, m: Int, dim: Int)
-      : Array[Double] = {
-    val (_, cov) = meanAndCovariance(embeddings, dim)
-    val (evals, evecs) = jacobiEigSym(cov)
-    val sub = dim / m
-    // greedy balanced allocation: next-largest eigenvalue goes to the
-    // non-full bucket with the smallest log-variance product
-    val buckets = Array.fill(m)(List.empty[Int])
-    val logs = new Array[Double](m)
-    for (i <- 0 until dim) {
-      var best = -1
-      for (b <- 0 until m if buckets(b).size < sub)
-        if (best < 0 || logs(b) < logs(best)) best = b
-      buckets(best) = buckets(best) :+ i
-      logs(best) += math.log(math.max(evals(i), 1e-12))
-    }
-    val perm = buckets.toSeq.flatten
-    val r = new Array[Double](dim * dim)
-    for (out <- 0 until dim; j <- 0 until dim)
-      // row `out` = eigenvector perm(out) (transposed: rotated_i = u_i·x)
-      r(out * dim + j) = math.rint(evecs(j)(perm(out)) * 1e6) / 1e6
-    r
-  }
-
   /** Farthest-point (k-center / max-min) coreset sampling — the greedy
     * 2-approximation for k-center (Gonzalez 1985), the standard
     * diversity-selection primitive for training-data curation: pick a
@@ -1575,9 +1538,7 @@ object Similarity {
     * concentrates corpus variance into the leading output dims — the
     * trained front-end that makes "serve only the first 16/32 dims"
     * meaningful on embeddings that were never Matryoshka-trained
-    * (measured in MatryoshkaRotationSpec + the BASELINE.md ladder;
-    * [[opqParametricRotation]] is the same machinery with variance
-    * BALANCED across PQ subspaces instead of concentrated).
+    * (measured in MatryoshkaRotationSpec + the BASELINE.md ladder).
     * Row-major flattened on the 1e-6 grid, ready for [[rotate]].
     */
   def pcaRotation(embeddings: DataFrame, dim: Int): Array[Double] = {

@@ -17,23 +17,14 @@ object ParityQueries {
     * every invocation; concurrent Verify/Bench/test processes each get
     * their own root — see [[graft.Scratch]]).
     *
-    * r21 (guide §6): prefers tmpfs (/dev/shm) exactly like
-    * `Bench.scratchDir` does for shuffle/spill, and for the same
-    * measured reason — shared-host disk stalls on /tmp billed random
-    * multi-second spikes to the store-writing capstone queries (their
-    * sinks are invocation-scoped scratch stores, deleted per run, never
-    * durable outputs). Capacity posture matches the shuffle dir: stores
-    * are per-key-sized, and [[graft.Scratch]] reaps dead processes'
-    * roots.
+    * Prefers tmpfs like the shuffle dir ([[graft.Scratch.tmpfsDir]]):
+    * the store-writing capstone queries' sinks are invocation-scoped
+    * scratch stores, deleted per run, never durable outputs. Capacity
+    * posture matches the shuffle dir: stores are per-key-sized, and
+    * [[graft.Scratch]] reaps dead processes' roots.
     */
   def scratch(name: String): String =
-    s"${graft.Scratch.dir(scratchParent, "graft_scratch")}/$name"
-
-  private def scratchParent: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) "/dev/shm"
-    else sys.props.getOrElse("java.io.tmpdir", "/tmp")
-  }
+    s"${graft.Scratch.tmpfsDir("graft_scratch")}/$name"
 
   private val invocationSeq = new java.util.concurrent.atomic.AtomicLong()
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** Dev tool: print the formatted physical plan (and exchange-reuse stats)
   * for one or more declared queries.
@@ -10,17 +9,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     args.tail.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"======== $name (static plan) ========")

@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.{Bench, SparkEntry}
+import graft.{Session, SparkEntry}
 
 /** Job/stage profiler for a named query: runs it once warm, then once
   * measured under a listener, and prints per-job wall time plus stage
@@ -44,19 +43,9 @@ object Profile {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", Bench.scratchDir())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: ANN recall ladder sweep. Measures mean recall@10 of the
@@ -34,44 +34,25 @@ import org.apache.spark.sql.functions._
   * depth is measured flat, so capacity (classically 256 codes/sub) is
   * the remaining recall lever.
   *
-  * A fourth mode measures the OPQ ROTATION (Ge et al., CVPR 2013,
-  * parametric solution — [[Similarity.opqParametricRotation]]): `rot` as
-  * the second argument runs the residual m=8 x 256 rung (the served
-  * configuration) twice — once in the raw space and once in the rotated
-  * space (rotation learned from the residual covariance, whole space
-  * pre-transformed FAISS-OPQMatrix-style so every existing
-  * trainer/server applies unchanged) — and prints ADC + rerank recall
-  * side by side. Adoption gate (r13 verdict): rotated ADC holdout must
-  * move >= +0.05.
-  *
   * Usage: runMain graft.tools.RecallLadder <sfDir> [nprobe,nprobe,...]
   *        runMain graft.tools.RecallLadder <sfDir> iters [d,d,...]
   *        runMain graft.tools.RecallLadder <sfDir> shape [m:k,m:k,...]
-  *        runMain graft.tools.RecallLadder <sfDir> rot [np[,np...]]
   */
 object RecallLadder {
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val sfDir = args.head
     val itersMode = args.length > 1 && args(1) == "iters"
     val shapeMode = args.length > 1 && args(1) == "shape"
-    val rotMode = args.length > 1 && args(1) == "rot"
     val cascadeMode = args.length > 1 && args(1) == "cascade"
     val nprobes: Seq[Int] =
-      if (itersMode || shapeMode || rotMode || cascadeMode || args.length <= 1)
+      if (itersMode || shapeMode || cascadeMode || args.length <= 1)
         Seq(3, 4, 5, 6, 8)
       else args(1).split(",").map(_.trim.toInt).toSeq
     val depths: Seq[Int] =
       if (itersMode && args.length > 2)
         args(2).split(",").map(_.trim.toInt).toSeq
       else Seq(2, 4, 8, 16)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", graft.Bench.scratchDir())
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"),
@@ -92,60 +73,6 @@ object RecallLadder {
     def meanRecallOf(approx: DataFrame, exact: DataFrame): Double =
       Similarity.recallAtK(approx, exact, k = 10)
         .agg(avg(col("recall"))).head().getDouble(0)
-
-    if (rotMode) {
-      // residual m=8 x 256 rung, raw vs rotated space. The rotated leg
-      // re-derives EVERYTHING (coarse book, residuals, PQ books, index,
-      // ground truth) inside the rotated space so the comparison is
-      // end-to-end: exactly what the served pipeline would do if the
-      // rotation were adopted as a pre-transform.
-      val rotNps: Seq[Int] =
-        if (args.length > 2) args(2).split(",").map(_.trim.toInt).toSeq
-        else Seq(10)
-      val coarse0 = Similarity.kmeansTrain(e, seed, maxIters = 2)
-      val rot = Similarity.opqParametricRotation(
-        Similarity.ivfResiduals(e, coarse0), m = 8, dim = 64)
-      for ((tag, eSpace) <- Seq(("raw", e),
-          ("rot", Similarity.rotate(e, rot).persist()))) {
-        eSpace.count()
-        val seedS = eSpace.filter(col("vec_id") % 50 === 0)
-          .select("vec_id", "embedding")
-        val coarse = Similarity.kmeansTrain(eSpace, seedS, maxIters = 2)
-          .persist()
-        coarse.count()
-        val res = Similarity.ivfResiduals(eSpace, coarse).persist()
-        res.count()
-        val pqCb = Similarity.pqCodebookLearnedFrom(res,
-          Similarity.pqCodebookFixed(res, m = 8, dim = 64, k = 256),
-          m = 8, dim = 64, maxIters = 8).persist()
-        pqCb.count()
-        val idx = Similarity.ivfPqResidualIndex(eSpace, coarse, pqCb,
-          m = 8, dim = 64).persist()
-        idx.count()
-        for ((qn, pred) <- Seq(("insample", col("vec_id") % 100 === 0),
-            ("holdout", col("vec_id") % 100 === 7))) {
-          val queries = eSpace.filter(pred)
-          val exact = Similarity.bruteForceTopK(eSpace, pred, k = 10)
-            .persist()
-          exact.count()
-          for (np <- rotNps) {
-            val adc = meanRecallOf(Similarity.ivfPqResidualTopKIndexed(
-              idx, coarse, pqCb, queries, m = 8, dim = 64, nprobe = np,
-              k = 10), exact)
-            val rr = meanRecallOf(
-              Similarity.ivfPqResidualTopKIndexedReranked(idx, coarse,
-                pqCb, queries, eSpace, m = 8, dim = 64, nprobe = np,
-                shortlist = 50, k = 10), exact)
-            println(f"ROT $tag%-4s m=8 k=256 $qn%-9s nprobe=$np%-3d " +
-              f"adc=$adc%.4f rerank50=$rr%.4f")
-          }
-          exact.unpersist()
-        }
-        Seq(coarse, res, pqCb, idx).foreach(_.unpersist())
-      }
-      spark.stop()
-      return
-    }
 
     if (cascadeMode) {
       // r15 verdict task 5: the binary sign-bit tier AS THE COARSE STAGE

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ops.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: scale-up stress probe. Replicates the fixture corpora k-fold
@@ -15,20 +15,11 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val sfDir = args.head
     val k = args(1).toInt
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tmpfs shuffle scratch — shared-host /tmp disk stalls produced
-      // 5-30 s spikes on individual probes (same fix as Bench)
-      .config("spark.local.dir", graft.Bench.scratchDir())
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
     val n0 = docs0.count()
@@ -284,7 +275,7 @@ object ScaleProbe {
     // must track the corpus scan; the verify half shuffles only
     // (id, md5) fixed-width rows
     if (only.exists(_.contains("release_publish"))) {
-      val out = graft.Bench.scratchDir() + s"/probe_publish_$k"
+      val out = graft.Scratch.tmpfsDir("graft_spark") + s"/probe_publish_$k"
       t("release_publish")(
         graft.ops.Corpus.publishRelease(docs, "doc_id", "text",
           nShards = 8, outDir = out))
@@ -311,7 +302,7 @@ object ScaleProbe {
         docs0.select((col("doc_id") + lit(r * 10000000L)).as("doc_id"),
           concat(lit(s"r$r "), col("text")).as("text"), col("source"))
       }.reduce(_ unionByName _).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val out = graft.Bench.scratchDir() + s"/probe_publish_chain_$k"
+      val out = graft.Scratch.tmpfsDir("graft_spark") + s"/probe_publish_chain_$k"
       t("publish_chain") {
         val kept = Dedup.nearDupKeepFirst(docsSrc, "doc_id",
           numHashes = 16, bands = 4, threshold = 0.5, maxBucketSize = 64)

@@ -3,31 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session; Spark
-  * getOrCreate makes this cheap after the first suite).
+/** Shared local session for all suites: the [[Session.local]] factory
+  * the entry points use, built once per test JVM.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  lazy val spark: SparkSession = Session.local()
 
   val sf0001 = "/root/testdata/sf0.001"
 }
 
 abstract class SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkSpec.spark
   def sf0001: String = SparkSpec.sf0001
 }

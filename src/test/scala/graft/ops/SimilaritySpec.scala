@@ -515,7 +515,7 @@ class SimilaritySpec extends SparkSpec {
     assert(clean == Set(2L))
   }
 
-  // ---- OPQ rotation -------------------------------------------------
+  // ---- trained rotations -------------------------------------------
 
   test("jacobiEigSym: recovers a known spectrum, descending, sign-fixed") {
     // diag(3,1) rotated by 45 degrees: eigenvalues {3, 1}, eigenvectors
@@ -543,37 +543,6 @@ class SimilaritySpec extends SparkSpec {
     assert(math.abs(cov(0)(0) - 0.666667) < 1e-6)
     assert(math.abs(cov(0)(1) - 0.666667) < 1e-6)
     assert(math.abs(cov(1)(1) - 2.666667) < 1e-6)
-  }
-
-  test("opq rotation: orthonormal rows, dot products preserved by rotate") {
-    val e = Tables.embeddings(spark, sf0001)
-    val rot = Similarity.opqParametricRotation(e, m = 8, dim = 64)
-    assert(rot.length == 64 * 64)
-    // rows orthonormal (up to the 1e-6 storage grid x 64 dims)
-    for (i <- Seq(0, 7, 63); j <- Seq(0, 31)) {
-      val d = (0 until 64).map(k => rot(i * 64 + k) * rot(j * 64 + k)).sum
-      val want = if (i == j) 1.0 else 0.0
-      assert(math.abs(d - want) < 1e-3, s"row $i . row $j = $d")
-    }
-    // rotation preserves pairwise cosines (orthogonality end-to-end
-    // through the graft_matvec expression), up to the 1e-6 element round
-    def pairCos(d: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] = {
-      val a = d.select(col("vec_id").as("ia"), col("embedding").as("ea"))
-      val b = d.select(col("vec_id").as("ib"), col("embedding").as("eb"))
-      a.join(b, col("ia") < col("ib"))
-        .select(col("ia"), col("ib"),
-          Similarity.cosine(col("ea"), col("eb")).as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-        .toMap
-    }
-    val pre = e.filter(col("vec_id") < 4).select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true)
-    val cPre = pairCos(pre)
-    val cPost = pairCos(Similarity.rotate(pre, rot))
-    assert(cPre.keySet == cPost.keySet && cPre.nonEmpty)
-    cPre.foreach { case (k, v) =>
-      assert(math.abs(v - cPost(k)) < 1e-3, s"pair $k: $v vs ${cPost(k)}")
-    }
   }
 
   test("recallAtK: identical, disjoint, and partial lists") {
