@@ -1,5 +1,6 @@
 package graft.metrics
 
+import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
@@ -10,9 +11,10 @@ import java.util.concurrent.atomic.AtomicLong
   * the cluster actually read (post column-pruning / pushdown — on a scan
   * that prunes to 2 of 40 columns these numbers are the proof).
   *
-  * Listener events are delivered asynchronously; totals are read after a
-  * bounded drain wait, so they are accurate at stage granularity (the
-  * reference's granularity) though not transactional per-task.
+  * Listener events are delivered asynchronously; totals are read once the
+  * listener bus has delivered every event posted while the body ran, so
+  * a slow listener earlier on the shared queue delays the reading instead
+  * of truncating it.
   */
 object SparkIoMetrics {
 
@@ -32,14 +34,9 @@ object SparkIoMetrics {
     spark.sparkContext.addSparkListener(listener)
     try body
     finally {
-      // bounded drain: listener delivery is async
-      val deadline = System.nanoTime() + 2000000000L
-      var last = -1L
-      while (System.nanoTime() < deadline &&
-        (bytes.get() != last || last == -1L)) {
-        last = bytes.get()
-        Thread.sleep(50)
-      }
+      if (!ListenerDrain.drain(spark.sparkContext))
+        System.err.println(
+          s"SparkIoMetrics: listener bus not drained, ${operation}_input may be partial")
       spark.sparkContext.removeSparkListener(listener)
       metrics.bytesProcessed(s"${operation}_input", bytes.get())
       metrics.incCounter("brewery_etl_records_processed_total",

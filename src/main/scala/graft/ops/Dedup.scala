@@ -920,8 +920,9 @@ object Dedup {
     * `docs_affected` is an UPPER BOUND on the recall exposure, not the
     * exact loss — a doc in one hot bucket can still be detected through
     * a non-hot bucket in another band; the exact missed-pair count
-    * (all-witnesses-hot) is what `ScaleProbe publish_cap_audit`
-    * measures, and it is always <= this column's implication. The
+    * (all-witnesses-hot) is always <= this column's implication (the
+    * historical r20 rows under "Hot-bucket cap recall cost" in
+    * BASELINE.md measured both at the publish rungs). The
     * [[capBuckets]] stderr line reports drops at run time; this is the
     * same information as a RELATION, so a deployment can record the
     * cap's recall exposure next to its ladder rungs (the

@@ -578,9 +578,9 @@ object EventOps {
     * user, aggregated immediately map-side; the pattern join is the
     * |types|²-sized e2 relation against the |types|-sized last relation
     * — |types|³ per user, bounded by the type alphabet, NEVER events³
-    * (see the events_{uni,hot}_seq3 ScaleProbe ladder: a planted bot
-    * user holding 20% of the corpus costs linear build fanout, not a
-    * cubic blowup).
+    * (historical r17 `events_{uni,hot}_seq3` rows under "Hot-user skew
+    * face" in BASELINE.md: a planted bot user holding 20% of the corpus
+    * costs linear build fanout, not a cubic blowup).
     */
   def seqPatterns3(ev: DataFrame): DataFrame = {
     val o = struct(col("tsec"), col("event_id"))

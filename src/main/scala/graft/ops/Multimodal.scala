@@ -21,16 +21,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical multimodal schema: id + opaque payload + typed metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media", BinaryType, nullable = true),
-    StructField("media_type", StringType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("codec", StringType, nullable = true))), nullable = true)))
-
   /** Wrap the `documents` fixture as a media table: the UTF-8 bytes of
     * `text` play the opaque payload (derived from driver fixtures, not
     * synthesized data; real deployments read binary parquet/blob columns

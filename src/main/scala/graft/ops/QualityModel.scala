@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -116,8 +117,17 @@ object QualityModel {
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sk = featureSketch(df, idCol, textCol, labelCol, dim).persist(sl)
     val w = trainHashedLogRegWith(sk, idCol, lr, iters)
-    sk.unpersist() // weights are eagerly checkpointed — sketch is done
-    w
+    // the weights are <= dim + 1 rows: return them as a local relation and
+    // release the checkpoint, which otherwise stays persisted until the
+    // driver happens to garbage-collect the returned frame
+    val local = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(w.collect(): _*), w.schema)
+    w.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+    sk.unpersist()
+    local
   }
 
   /** Train against an ALREADY-BUILT (and ideally persisted/checkpointed)
@@ -169,54 +179,19 @@ object QualityModel {
     * the kept-id semi-join is corpus-sized and therefore SHUFFLED, like
     * every keep-set join in the dedup family.
     *
-    * `df` is referenced on both sides (scoring pass + final join) — pass
-    * a cheap scan or a persisted relation, not an expensive lazy chain;
-    * when gating a derived corpus, score the RAW corpus and semi-join
-    * the kept ids against the derived relation instead (scores are
-    * derivation-independent — see `llm_corpus_prep_full`).
-    */
-  def keepTopScored(df: DataFrame, idCol: String, textCol: String,
-                    weights: DataFrame, dim: Int = 64,
-                    quantile: Double = 0.5): DataFrame =
-    keepFromScored(df, idCol,
-      scoreHashedLogReg(df, idCol, textCol, weights, dim), quantile)
-
-  /** [[keepTopScored]] against an already-built feature sketch — the
-    * train+gate composition face: the corpus is tokenized once (in the
-    * sketch), not re-hashed by the gate's scoring pass.
+    * Scores come from an already-built feature sketch `sk`
+    * ([[featureSketch]] / [[featureSketchNg]]), so the corpus is
+    * tokenized once, not re-hashed by the gate's scoring pass; `df` is
+    * only the semi-join's left side. When gating a derived corpus, score
+    * the RAW corpus and semi-join the kept ids against the derived
+    * relation (scores are derivation-independent — see
+    * `llm_corpus_prep_full`).
     */
   def keepTopScoredWith(df: DataFrame, idCol: String, sk: DataFrame,
                         weights: DataFrame,
-                        quantile: Double = 0.5): DataFrame =
-    keepFromScored(df, idCol, scoreHashedLogRegWith(sk, idCol, weights),
-      quantile)
-
-  /** The 100 TB deploy variant of [[keepTopScored]]: the cut is an
-    * APPROXIMATE percentile (Spark's `percentile_approx` sketch, state
-    * bounded by `accuracy`, mergeable across any partitioning) instead
-    * of the exact interpolated percentile, whose aggregation state
-    * grows with the distinct-score grid. Rank error is bounded by
-    * `1 / accuracy` of the corpus, so at the default 10⁴ the kept
-    * fraction is within 0.01 % of target; the exact face remains the
-    * oracle-facing convention (cross-engine reproducible), this is the
-    * one to run where the score relation is petabyte-scale.
-    */
-  def keepTopScoredApprox(df: DataFrame, idCol: String, textCol: String,
-                          weights: DataFrame, dim: Int = 64,
-                          quantile: Double = 0.5,
-                          accuracy: Int = 10000): DataFrame =
-    keepFromScored(df, idCol,
-      scoreHashedLogReg(df, idCol, textCol, weights, dim), quantile,
-      approxAccuracy = Some(accuracy))
-
-  private def keepFromScored(df: DataFrame, idCol: String,
-                             scored: DataFrame, quantile: Double,
-                             approxAccuracy: Option[Int] = None): DataFrame = {
-    val pctl = approxAccuracy match {
-      case Some(acc) => call_function("percentile_approx", col("score"),
-        lit(quantile), lit(acc))
-      case None => call_function("percentile", col("score"), lit(quantile))
-    }
+                        quantile: Double = 0.5): DataFrame = {
+    val scored = scoreHashedLogRegWith(sk, idCol, weights)
+    val pctl = call_function("percentile", col("score"), lit(quantile))
     val cut = scored.agg(grid6(pctl).as("c"))
     val keptIds = scored.crossJoin(broadcast(cut))
       .filter(col("score") >= col("c")).select(col(idCol))
@@ -226,7 +201,7 @@ object QualityModel {
   /** Score documents under a trained (feature, w) relation: the gridded
     * sigmoid of the gridded dot product, plus the 0/1 prediction at the
     * 0.5 boundary. Broadcast weight join + one doc-keyed aggregate — the
-    * corpus streams through once; the filter face is [[keepTopScored]].
+    * corpus streams through once; the filter face is [[keepTopScoredWith]].
     */
   def scoreHashedLogReg(df: DataFrame, idCol: String, textCol: String,
                         weights: DataFrame, dim: Int = 64): DataFrame = {

@@ -645,7 +645,8 @@ object Similarity {
     * the `ivfpq_*_fixedcb` probes pinned for ENCODE. With a fixed seed
     * relation each iteration is one broadcast assign over the (n x m)
     * slice relation + a codebook-sized mean: linear in the corpus
-    * (`pq_train_*` ScaleProbe rows in BASELINE.md).
+    * (historical r12 rows under "Learned-PQ TRAINING cost" in
+    * BASELINE.md).
     */
   def pqCodebookLearnedFrom(embeddings: DataFrame, seedCb: DataFrame,
                             m: Int, dim: Int, maxIters: Int): DataFrame = {
@@ -1138,95 +1139,6 @@ object Similarity {
       .filter(col("rn") <= k)
       .select(col("query_id"), col("vec_id"),
         round(col("score"), 6).as("q8_score"))
-  }
-
-  /** Residual ADC scores for an EXPLICIT per-query candidate set
-    * (query_id, vec_id) instead of probed cells — the scoring core of
-    * the binary-cascade server. Same q·x = q·c + q_r·x_r decomposition
-    * as [[ivfPqResidualAdcScores]]; the LUT covers exactly the
-    * (query, cell, sub, code) combinations the candidates touch, so it
-    * stays candidate-bounded (≤ |Q| · H · m entries) regardless of how
-    * candidates scatter across cells.
-    */
-  private def ivfPqResidualAdcScoresFor(candIds: DataFrame, index: DataFrame,
-                                        ivfCodebook: DataFrame,
-                                        pqCbRes: DataFrame,
-                                        queries: DataFrame,
-                                        m: Int, dim: Int): DataFrame = {
-    val sub = dim / m
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("qe"))
-    val c = ivfCodebook.select(col("vec_id").as("centroid_id"),
-      col("embedding").cast("array<double>").as("cce"))
-    val candIdx = index.join(broadcast(candIds), Seq("vec_id"))
-    val probed = candIdx.select(col("query_id"), col("centroid_id"))
-      .distinct()
-    val qc = broadcast(probed).join(broadcast(q), Seq("query_id"))
-      .join(broadcast(c), Seq("centroid_id"))
-      .select(col("query_id"), col("centroid_id"),
-        round(fdot(col("qe"), col("cce")), 6).as("qcdot"),
-        zip_with(col("qe"), col("cce"), (a, b) => a - b).as("qr"))
-    val qrs = qc.select(col("query_id"), col("centroid_id"), explode(array(
-      (0 until m).map(j => struct(lit(j).as("sub"),
-        slice(col("qr"), j * sub + 1, sub).as("qrsub"))): _*)).as("s"))
-      .select(col("query_id"), col("centroid_id"),
-        col("s.sub").as("sub"), col("s.qrsub").as("qrsub"))
-    val needed = candIdx.select(col("query_id"), col("centroid_id"),
-      col("sub"), col("code")).distinct()
-    val lut = needed
-      .join(broadcast(pqCbRes), Seq("sub", "code"))
-      .join(broadcast(qrs), Seq("query_id", "centroid_id", "sub"))
-      .select(col("query_id"), col("centroid_id"), col("sub"), col("code"),
-        round(fdot(col("qrsub"), col("ce")), 6).as("pdot"))
-    candIdx.join(broadcast(lut), Seq("query_id", "centroid_id", "sub", "code"))
-      .join(broadcast(qc.select(col("query_id"), col("centroid_id"),
-        col("qcdot"))), Seq("query_id", "centroid_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(max(col("qcdot")) + sum(col("pdot")), 6).as("adc_score"))
-  }
-
-  /** Three-tier cascade server: binary sign-bit HAMMING coarse stage →
-    * residual-PQ ADC → exact float rerank. The hamming scan touches 16
-    * bytes per corpus vector (the cheapest whole-corpus pass that
-    * exists) and keeps `hammingList` candidates per query; residual ADC
-    * then scores ONLY those candidates (8 code bytes each, fetched by
-    * id); the float rerank touches `shortlist` vectors. Contrast with
-    * the IVF-probed server ([[ivfPqResidualTopKIndexedReranked]]):
-    * IVF's coarse stage is corpus-INDEPENDENT (probed cells only) but
-    * needs the cell structure to be good; the binary tier is
-    * corpus-LINEAR at 16 B/vector but structure-free. Which serves
-    * cheaper at a given recall is an empirical question —
-    * `RecallLadder <sf> cascade` measures it (BASELINE.md r16).
-    */
-  def ivfPqResidualTopKBinaryCascade(index: DataFrame,
-                                     ivfCodebook: DataFrame,
-                                     pqCbRes: DataFrame,
-                                     queries: DataFrame, store: DataFrame,
-                                     binCodes: DataFrame,
-                                     m: Int, dim: Int, hammingList: Int,
-                                     shortlist: Int, k: Int): DataFrame = {
-    require(hammingList >= shortlist && shortlist >= k,
-      s"tiers must narrow: hammingList ($hammingList) >= shortlist " +
-        s"($shortlist) >= k ($k)")
-    val words = dim / 32
-    val q = quantizeBinary(queries.select(col("vec_id"), col("embedding")),
-      dim)
-      .select(col("vec_id").as("query_id") +:
-        (1 to words).map(i => col(s"b$i").as(s"qb$i")): _*)
-    val ham = (1 to words)
-      .map(i => bit_count(col(s"qb$i").bitwiseXOR(col(s"b$i"))))
-      .reduce(_ + _)
-    val cand = broadcast(q)
-      .join(binCodes, col("vec_id") =!= col("query_id"))
-      .withColumn("hamming", ham.cast("int"))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("hamming"), col("vec_id"))))
-      .filter(col("rn") <= hammingList)
-      .select(col("query_id"), col("vec_id"))
-    rerankShortlist(
-      ivfPqResidualAdcScoresFor(cand, index, ivfCodebook, pqCbRes,
-        queries, m, dim),
-      queries, store, shortlist, k)
   }
 
   /** Recall@k of an APPROXIMATE top-k result against the exact one —

@@ -317,20 +317,6 @@ object TextAnalysis {
           col("n_replacement") === 0 && col("n_control") === 0)
   }
 
-  /** The filter face of [[vetDocuments]]: documents passing every
-    * hygiene invariant, original columns intact — a map-only predicate
-    * fused into the scan ([[graft.ops.Similarity.cleanEmbeddings]]'s
-    * contract).
-    */
-  def cleanDocuments(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = col(textCol)
-    df.filter(length(t) > 0 &&
-      length(regexp_replace(t, "[ \\t\\n\\f\\r]", "")) > 0 &&
-      length(t) === length(regexp_replace(t, "\uFFFD", "")) &&
-      length(regexp_replace(t,
-        "[^\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "")) === 0)
-  }
-
   /** The FILTER face of [[gopherRules]]: keep documents passing the rule
     * conjunction, original columns intact — one map-only predicate, no
     * join, composable into release chains. `requireStopWords = false`
@@ -1495,29 +1481,11 @@ object TextAnalysis {
     * by the distinct-score grid, ~1e6 entries worst case) broadcast as
     * one row into a map-only tier assignment.
     */
-  def qualityTiers(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    qualityTiersBy(df, idCol, textCol, None)
-
-  /** The 100 TB deploy variant: quartile cutoffs from Spark's
-    * `percentile_approx` sketch (state bounded by `accuracy` and
-    * mergeable across partitions) instead of the exact percentile,
-    * whose aggregation state grows with the distinct-score grid. Rank
-    * error per cutoff is bounded by `1 / accuracy` of the corpus; the
-    * exact face stays the oracle-facing convention.
-    */
-  def qualityTiersApprox(df: DataFrame, idCol: String, textCol: String,
-                         accuracy: Int = 10000): DataFrame =
-    qualityTiersBy(df, idCol, textCol, Some(accuracy))
-
-  private def qualityTiersBy(df: DataFrame, idCol: String, textCol: String,
-                             approxAccuracy: Option[Int]): DataFrame = {
+  def qualityTiers(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val scored = quality(df, idCol, textCol)
       .select(col(idCol), col("quality_score"))
-    def pctl(p: Double) = approxAccuracy match {
-      case Some(acc) => call_function("percentile_approx",
-        col("quality_score"), lit(p), lit(acc))
-      case None => call_function("percentile", col("quality_score"), lit(p))
-    }
+    def pctl(p: Double) =
+      call_function("percentile", col("quality_score"), lit(p))
     val cuts = scored.agg(
       round(pctl(0.25), 6).as("t1"),
       round(pctl(0.5), 6).as("t2"),

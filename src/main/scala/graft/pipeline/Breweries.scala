@@ -71,15 +71,6 @@ object Breweries {
     (cleaned, quarantine)
   }
 
-  /** Both sides of the split from ONE chain construction. Prefer this
-    * over calling [[silver]] and [[quarantine]] separately when you need
-    * both: the convenience accessors each rebuild the bronze join + split
-    * plan (the PIPELINE never does — it splits the materialized bronze
-    * table once, Pipeline stage 3).
-    */
-  def silverAndQuarantine(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    silverSplit(bronze(spark, sfDir))
-
   def silver(spark: SparkSession, sfDir: String): DataFrame =
     silverSplit(bronze(spark, sfDir))._1
 

@@ -62,7 +62,8 @@ object Profile {
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val total = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500) // let the listener bus drain BEFORE detaching, or tail events are dropped
+          // deliver every queued event BEFORE detaching, or tail events are dropped
+          org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
           spark.sparkContext.removeSparkListener(tally)
           val rows = tally.jobs.entrySet().toArray
             .map(_.asInstanceOf[java.util.Map.Entry[Int, (Long, Long, Int)]])

@@ -43,9 +43,8 @@ object RecallLadder {
     val sfDir = args.head
     val itersMode = args.length > 1 && args(1) == "iters"
     val shapeMode = args.length > 1 && args(1) == "shape"
-    val cascadeMode = args.length > 1 && args(1) == "cascade"
     val nprobes: Seq[Int] =
-      if (itersMode || shapeMode || cascadeMode || args.length <= 1)
+      if (itersMode || shapeMode || args.length <= 1)
         Seq(3, 4, 5, 6, 8)
       else args(1).split(",").map(_.trim.toInt).toSeq
     val depths: Seq[Int] =
@@ -73,59 +72,6 @@ object RecallLadder {
     def meanRecallOf(approx: DataFrame, exact: DataFrame): Double =
       Similarity.recallAtK(approx, exact, k = 10)
         .agg(avg(col("recall"))).head().getDouble(0)
-
-    if (cascadeMode) {
-      // r15 verdict task 5: the binary sign-bit tier AS THE COARSE STAGE
-      // of the served residual rung (hamming shortlist -> residual ADC
-      // -> exact rerank) vs the IVF-probed server (np=20, sl=100,
-      // holdout 0.84). Same prebuilt m=8 x 256 index on both legs;
-      // hammingList sweeps the only new knob. Each serve leg is timed
-      // AFTER a warmup pass (the serve-cost protocol of the r14 ladder).
-      val hams: Seq[Int] =
-        if (args.length > 2) args(2).split(",").map(_.trim.toInt).toSeq
-        else Seq(100, 200, 400, 800)
-      val coarse = Similarity.kmeansTrain(e, seed, maxIters = 2).persist()
-      coarse.count()
-      val res = Similarity.ivfResiduals(e, coarse).persist()
-      res.count()
-      val pqCbRes = Similarity.pqCodebookLearnedFrom(res,
-        Similarity.pqCodebookFixed(res, m = 8, dim = 64, k = 256),
-        m = 8, dim = 64, maxIters = 8).persist()
-      pqCbRes.count()
-      val idx = Similarity.ivfPqResidualIndex(e, coarse, pqCbRes, m = 8,
-        dim = 64).persist()
-      idx.count()
-      val bin = Similarity.quantizeBinary(e)
-        .select(col("vec_id"), col("b1"), col("b2")).persist()
-      bin.count()
-      def timedRecall(df: => DataFrame, exact: DataFrame): (Double, Double) = {
-        df.write.format("noop").mode("overwrite").save() // warmup
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        (meanRecallOf(df, exact), sec)
-      }
-      for ((qn, queries, exact) <- querySets) {
-        val nq = queries.count()
-        val (r0, t0s) = timedRecall(
-          Similarity.ivfPqResidualTopKIndexedReranked(idx, coarse, pqCbRes,
-            queries, e, m = 8, dim = 64, nprobe = 20, shortlist = 100,
-            k = 10), exact)
-        println(f"CASCADE ivf(np=20,sl=100)   $qn%-9s |Q|=$nq%-4d " +
-          f"recall=$r0%.4f serve=$t0s%6.2fs (${t0s / nq}%.4f/q)")
-        for (h <- hams) {
-          val (r, ts) = timedRecall(
-            Similarity.ivfPqResidualTopKBinaryCascade(idx, coarse, pqCbRes,
-              queries, e, bin, m = 8, dim = 64, hammingList = h,
-              shortlist = math.min(h, 100), k = 10), exact)
-          println(f"CASCADE bin(h=$h%-4d,sl=100) $qn%-9s |Q|=$nq%-4d " +
-            f"recall=$r%.4f serve=$ts%6.2fs (${ts / nq}%.4f/q)")
-        }
-      }
-      Seq(coarse, res, pqCbRes, idx, bin).foreach(_.unpersist())
-      spark.stop()
-      return
-    }
 
     if (itersMode) {
       // rerank50 recall at the served rungs across training depths;

@@ -110,4 +110,31 @@ class MetricsSpec extends AnyFunSuite {
     try assert(!m.pushTo(s"127.0.0.1:${server.getAddress.getPort}", "j"))
     finally server.stop(0)
   }
+
+  test("SparkIoMetrics waits out a slow listener instead of recording partial input") {
+    val spark = graft.SparkSpec.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_io_").toString + "/t"
+    // 8 small files: a multi-task scan
+    spark.range(0, 40000, 1, 8).selectExpr("id", "cast(id * 7 as string) as s")
+      .write.parquet(dir)
+    def measured(): (Double, Double) = {
+      val m = EtlMetrics.quiet()
+      SparkIoMetrics.measure(spark, m, "scan")(spark.read.parquet(dir).collect())
+      val op = Map("operation" -> "scan_input")
+      (m.counter("brewery_etl_data_processed_bytes", op),
+        m.counter("brewery_etl_records_processed_total", op))
+    }
+    val alone = measured()
+    assert(alone._1 > 0 && alone._2 == 40000.0)
+    // registered first, so every task-end waits 100 ms behind it on the
+    // shared queue before the measuring listener sees it
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Thread.sleep(100)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try assert(measured() == alone)
+    finally spark.sparkContext.removeSparkListener(slow)
+  }
 }

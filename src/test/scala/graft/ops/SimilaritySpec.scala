@@ -628,29 +628,4 @@ class SimilaritySpec extends SparkSpec {
     val recall = (exact & served).size.toDouble / exact.size
     assert(recall >= 0.4, s"filtered IVF recall $recall too low")
   }
-
-  test("binary cascade with corpus-wide tiers degenerates to exact brute force") {
-    // hammingList = shortlist = corpus size keeps every candidate through
-    // both approximate tiers, so the exact-cosine rerank must reproduce
-    // bruteForceTopK — pins the cascade's stage plumbing (hamming keep,
-    // candidate-restricted ADC, rerank ids) end to end
-    val e = Tables.embeddings(spark, sf0001)
-    val n = e.count().toInt
-    val cb = e.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
-    val res = Similarity.ivfResiduals(e, cb)
-    val pqCbRes = Similarity.pqCodebookLearnedFrom(res,
-      Similarity.pqCodebookFixed(res, m = 8, dim = 64, k = 16),
-      m = 8, dim = 64, maxIters = 1)
-    val idx = Similarity.ivfPqResidualIndex(e, cb, pqCbRes, m = 8, dim = 64)
-    val bin = Similarity.quantizeBinary(e)
-      .select(col("vec_id"), col("b1"), col("b2"))
-    val pred = col("vec_id") % 100 === 0
-    val cascade = Similarity.ivfPqResidualTopKBinaryCascade(idx, cb,
-        pqCbRes, e.filter(pred), e, bin, m = 8, dim = 64,
-        hammingList = n, shortlist = n, k = 10)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val exact = Similarity.bruteForceTopK(e, pred, k = 10)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    assert(cascade == exact)
-  }
 }

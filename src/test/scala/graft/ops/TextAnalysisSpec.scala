@@ -286,18 +286,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(vet(5L)._4 == 2 && !vet(5L)._5)
   }
 
-  test("cleanDocuments keeps exactly the vet-ok rows") {
-    val rows = Seq(
-      (1L, "a clean little document"), (2L, ""), (3L, "   \t \n "),
-      (4L, "broken \uFFFD here"), (5L, "spill\u0001ed"),
-      (6L, "tabs\tare fine")).toDF("doc_id", "text")
-    val kept = TextAnalysis.cleanDocuments(rows, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    val okIds = TextAnalysis.vetDocuments(rows, "doc_id", "text")
-      .filter($"ok").select("doc_id").as[Long].collect().toSet
-    assert(kept == okIds && kept == Set(1L, 6L))
-  }
-
   test("gopherRules: prose passes, listings and symbol soup fail their rules") {
     val prose = (1 to 6).map(_ =>
       "the cat sat with the dog and they have gone to look at that bird")
@@ -317,26 +305,6 @@ class TextAnalysisSpec extends SparkSpec {
     // 16 '#' over 17 words -> ratio ~0.94 > 0.1; stopwords still present
     assert(rows(3L)("r_symbol_ratio") == 0 && rows(3L)("r_stop_words") == 1)
     assert(rows(3L)("pass") == 0)
-  }
-
-  test("qualityTiersApprox: tier assignment tracks the exact quartiles") {
-    val corpus = graft.Tables.documents(spark, sf0001)
-    val n = corpus.count().toDouble
-    val exact = TextAnalysis.qualityTiers(corpus, "doc_id", "text")
-      .select("doc_id", "tier").as[(Long, Int)].collect().toMap
-    val approx = TextAnalysis.qualityTiersApprox(corpus, "doc_id", "text",
-      accuracy = 10000)
-      .select("doc_id", "tier").as[(Long, Int)].collect().toMap
-    // per-cutoff rank error <= n / accuracy (< 1 row at this accuracy);
-    // the residual differences come from exact-face interpolation vs the
-    // sketch's observed-value cuts — bounded by the tie classes
-    // straddling the three cutoffs
-    val moved = exact.count { case (id, t) => approx(id) != t }
-    info(s"n=$n moved=$moved")
-    assert(moved <= (0.05 * n).toInt,
-      s"$moved of $n docs changed tier under the approx cutoffs")
-    // every doc still gets a tier in 1..4 and all four tiers are populated
-    assert(approx.values.toSet == Set(1, 2, 3, 4))
   }
 
   test("gopherFilter(requireStopWords = true): accept and reject paths") {
