@@ -964,337 +964,44 @@ object Dedup {
     out
   }
 
-  /** Incremental (batch-vs-index) face of [[setSimilarityPairs]] — the
-    * exact-similarity analogue of [[incrementalLshCandidates]]: every
-    * pair (new, old) and (new, new) with shingle-set Jaccard >=
-    * `threshold`; the old corpus is never self-joined. The vocabulary
-    * order is PINNED to the CORPUS-ONLY document frequencies: the
-    * prefix lemma holds under ANY total order (frequency is only the
-    * selectivity heuristic), so a production index can compute its
-    * prefixes once and serve every future batch without re-ordering —
-    * batch tokens unseen in the corpus order first (df 0, the rarest
-    * position, which is also the selective choice). Exactness is
-    * unaffected; only prefix selectivity ages with corpus drift.
-    *
-    * r17: the PPJoin length + positional filters and the array-based
-    * verify of [[setSimilarityPairs]] apply here too (both are
-    * pair-local consequences of J ≥ t, valid under the pinned order);
-    * only the ASYMMETRIC prefix stays out — pair roles here are
-    * new/old, which do not align with the (size, id) order the short
-    * indexing prefix needs, so both sides keep the standard AllPairs
-    * prefix.
+  /** Exact shingle-set Jaccard self-join: every unordered pair with
+    * |A∩B| / |A∪B| ≥ `threshold` over its k-shingle sets (k = 1: word
+    * sets), as `(doc_a, doc_b, jaccard)` with doc_a < doc_b — the
+    * zero-false-negative companion of banded-LSH [[fuzzy]]. One call of
+    * the [[prefixFilterJoin]] kernel.
+    */
+  def setSimilarityPairs(docs: DataFrame, idCol: String, threshold: Double,
+                         textCol: String = "text", k: Int = 3,
+                         maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(tokenSides(docs, None, idCol, textCol, k, weighted = false),
+      threshold, containment = false, maxBucketSize, "setSimilarityPairs")
+
+  /** Batch-against-corpus face of [[setSimilarityPairs]]: every pair
+    * (new, old) and (new, new) with shingle-set Jaccard ≥ `threshold`,
+    * same output schema; the corpus is never self-joined and its
+    * vocabulary order is pinned (see [[prefixFilterJoin]]).
     */
   def setSimilarityIncremental(corpus: DataFrame, batch: DataFrame,
                                idCol: String, threshold: Double,
                                textCol: String = "text", k: Int = 3,
-                               maxBucketSize: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eps = 1e-9
-    def shingles(d: DataFrame) =
-      shingleRows(d.select(col(idCol), col(textCol)), idCol, textCol, k)
-        .select(col("doc_id"), col("s").as("w")).distinct()
-    val tkOld = shingles(corpus).persist(sl); tkOld.count()
-    val tkNew = shingles(batch).persist(sl); tkNew.count()
-    val dfreq = tkOld.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    def docTok(tk: DataFrame): DataFrame =
-      tk.join(dfreq, Seq("w"), "left")
-        .select(col("doc_id"), col("w"), coalesce(col("df"), lit(0L)).as("df"))
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(struct(col("df"), col("w")))).as("ts"))
-        .withColumn("s", size(col("ts")))
-        .withColumn("p",
-          col("s") - ceil(lit(threshold) * col("s") - lit(eps)).cast("int") + 1)
-    val dtOld = docTok(tkOld).persist(sl); dtOld.count()
-    val dtNew = docTok(tkNew).persist(sl); dtNew.count()
-    def prefixRows(dt: DataFrame): DataFrame =
-      dt.select(col("doc_id"), col("s"),
-          posexplode(expr("slice(ts, 1, p)")).as(Seq("p0", "pt")))
-        .select(col("doc_id"), col("s"), (col("p0") + 1).as("pos"),
-          col("pt.w").as("w"))
-    val (pn, po) = capBucketsPaired(prefixRows(dtNew), prefixRows(dtOld),
-      Seq("w"), maxBucketSize, "setSimilarityIncremental")
-    val pnP = pn.persist(sl); pnP.count()
-    def leg(a: DataFrame, b: DataFrame, pred: Column): DataFrame =
-      a.select(col("w"), col("doc_id").as("na"), col("s").as("sa"),
-          col("pos").as("ia"))
-        .join(b.select(col("w"), col("doc_id").as("nb"), col("s").as("sb"),
-          col("pos").as("ib")), Seq("w"))
-        .filter(pred)
-        // length filter, both directions (the pair is not size-ordered)
-        .filter(col("sa").cast("double") >=
-            lit(threshold) * col("sb") - lit(eps) &&
-          col("sb").cast("double") >=
-            lit(threshold) * col("sa") - lit(eps))
-        .groupBy(col("na"), col("nb"))
-        // the (ia, ib) pair-min packed into ONE long (ia in the high 32
-        // bits): min(struct(...)) only runs in a SortAggregate, which
-        // sorted the whole quadratic match relation by (na, nb) before
-        // aggregating — the packed primitive min hash-aggregates with
-        // whole-stage codegen and map-side partial aggregation (r22;
-        // positions are 1-based ints, so the lexicographic min and the
-        // packed-long min agree exactly)
-        .agg(min(shiftleft(col("ia").cast("long"), 32) + col("ib"))
-            .as("mp"),
-          first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-        // positional filter at the first common token (min ia over the
-        // match rows IS the globally-minimal common token: both arrays
-        // sort by the pinned order and the lemma puts it in both
-        // prefixes)
-        .filter(lit(1) +
-          least(col("sa") - shiftright(col("mp"), 32).cast("int"),
-            col("sb") - col("mp").bitwiseAND(lit(4294967295L)).cast("int")) >=
-          ceil(lit(threshold / (1 + threshold)) *
-            (col("sa") + col("sb")) - lit(eps)))
-        .select(col("na"), col("nb"))
-    // a REPLAYED document sits in both relations; id inequality excludes
-    // the self-pair exactly (ids are unique per document)
-    val cross = leg(pnP, po, col("na") =!= col("nb"))
-    val self = leg(pnP, pnP, col("na") < col("nb"))
-    val cand = cross.unionByName(self)
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .distinct()
-      .persist(sl)
-    cand.count()
-    // one sorted-token row per doc even under replay: the same text
-    // yields the same token set, hence the same ts/s on either side —
-    // dropDuplicates keeps the verify's sizes exact (the r16 lesson:
-    // double-counted token rows inflate inter AND the sizes)
-    val arr = dtNew.unionByName(dtOld).dropDuplicates("doc_id")
-      .select(col("doc_id"),
-        sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
-        col("s"))
-    val withArrays = cand
-      .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
-        col("s").as("sa")), Seq("doc_a"))
-      .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
-        col("s").as("sb")), Seq("doc_b"))
-      // zero-alloc merge-walk intersection over the re-sorted arrays
-      // (r22 — see containmentPairs)
-      .withColumn("inter",
-        call_function("graft_soverlap", col("wa"), col("wb")))
-    val jac = col("inter").cast("double") /
-      (col("sa") + col("sb") - col("inter")).cast("double")
-    withArrays
-      .filter(jac >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"))
-  }
+                               maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(
+      tokenSides(batch, Some(corpus), idCol, textCol, k, weighted = false),
+      threshold, containment = false, maxBucketSize,
+      "setSimilarityIncremental")
 
-  /** EXACT word-set similarity self-join via prefix filtering — the
-    * AllPairs/SSJoin family (Bayardo, Ma & Srikant, "Scaling Up All
-    * Pairs Similarity Search", WWW 2007; Chaudhuri, Ganti & Kaushik,
-    * ICDE 2006), upgraded to PPJoin-grade candidate pruning (Xiao,
-    * Wang, Lin & Yu, "Efficient Similarity Joins for Near Duplicate
-    * Detection", WWW 2008 — implemented from scratch on relational
-    * primitives): every unordered document pair whose token-SET
-    * Jaccard reaches `threshold`, with EXACT cross-product semantics —
-    * the deterministic companion to banded-LSH [[fuzzy]], which trades
-    * a tunable miss probability for its candidate bound.
-    *
-    * Prefix lemma: order the vocabulary globally (document frequency
-    * ascending, token text as tiebreak — rarest first, so prefixes are
-    * maximally selective) and keep each document's first
-    * p = s − ceil(t·s) + 1 tokens of its sorted set (s = set size). If
-    * jaccard(A, B) ≥ t then |A∩B| ≥ t·|A∪B| ≥ ceil(t·|A|), so were the
-    * globally-smallest shared token outside A's prefix, the whole
-    * intersection would fit in A's suffix of ceil(t·|A|) − 1 tokens —
-    * contradiction; symmetrically for B. The prefix-prefix equi-join
-    * therefore has ZERO false negatives, and the exact Jaccard verify
-    * removes the false positives. Three LOSSLESS prunes ride on top
-    * (each a consequence of J ≥ t, so no true pair can fail them):
-    *
-    *  - asymmetric prefixes (PPJoin's indexing prefix): order each pair
-    *    so A is the (size, id)-smaller side. The required overlap
-    *    α = ⌈t/(1+t)·(sa+sb)⌉ is ≥ ⌈2t/(1+t)·sa⌉, so the pair's FIRST
-    *    common token sits within A's first sa − ⌈2t/(1+t)·sa⌉ + 1
-    *    tokens — a strictly shorter prefix than AllPairs' (one third vs
-    *    one half of the set at t = 0.5), shrinking the join's left side;
-    *  - length filter: J ≥ t ⇒ sa ≥ t·sb, applied as a join residual
-    *    before any aggregation;
-    *  - positional filter: for the first common token at positions
-    *    (i, j), |A∩B| ≤ 1 + min(sa − i, sb − j); pairs where that bound
-    *    is < α die before verification. The first common token IS the
-    *    (i, j)-minimal prefix match (the arrays sort by the same global
-    *    order), so one min-struct aggregate finds it.
-    *
-    * Verification fetches each candidate's sorted token ARRAY (two hash
-    * joins against the doc-count-sized docTokens relation) and computes
-    * the exact intersection map-side via `array_intersect` — candidate-
-    * sized work, replacing the r16 token-explode verify whose three
-    * shuffles carried candidate × token rows (this is where PPJoin+'s
-    * suffix filter would live; with the array in hand the exact
-    * intersection costs the same O(sa+sb) as the suffix probe, so the
-    * filter is subsumed rather than approximated).
-    *
-    * Scale shape: token and prefix relations are corpus-linear; the
-    * candidate join keys on prefix tokens (rare by construction), with
-    * the standard hot-bucket cap for the degenerate corpus (tiny
-    * documents built entirely from the same frequent words); the
-    * verify join is candidate-sized (the [[jaccardVerify]] posture).
-    * The document-frequency relation is VOCABULARY-sized — the global
-    * order is a vocabulary artifact, like a codebook.
-    */
-  def setSimilarityPairs(docs: DataFrame, idCol: String, threshold: Double,
-                         textCol: String = "text", k: Int = 3,
-                         maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (cand, docTokens) =
-      setSimilarityCandidates(docs, idCol, threshold, textCol, k,
-        maxBucketSize)
-    val candP = cand.persist(sl)
-    candP.count()
-    // ts is (df, w)-sorted for the prefix lemma; one sort_array pass per
-    // candidate doc re-orders the token array into plain binary order so
-    // the per-PAIR intersection is a zero-alloc graft_soverlap merge
-    // walk instead of array_intersect's per-evaluation hash set — and
-    // the Jaccard threshold lives in the verify join's condition, where
-    // codegen re-evaluates the kernel per candidate (r22; the word-mode
-    // face carries ~12M verify pairs at sf0.1, measured 10.2 -> see
-    // OPTIMIZATION_r22.md)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val arr = docTokens.select(col("doc_id"),
-      sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"))
-    val inter = candP
-      .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa")),
-        Seq("doc_a"))
-      .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb")),
-        Seq("doc_b"))
-      .withColumn("inter",
-        call_function("graft_soverlap", col("wa"), col("wb")))
-    val jac = col("inter").cast("double") /
-      (col("sa") + col("sb") - col("inter")).cast("double")
-    inter
-      .filter(jac >= threshold)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-        round(jac, 6).as("jaccard"))
-  }
-
-  /** Candidate generation for [[setSimilarityPairs]] — exposed
-    * separately so the scale ladder can count candidates (the metric
-    * the PPJoin filters exist to cut). Returns (candidates with both
-    * set sizes, the persisted per-doc sorted-token relation).
-    */
-  private[graft] def setSimilarityCandidates(
-      docs: DataFrame, idCol: String, threshold: Double,
-      textCol: String, k: Int,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the set universe is k-shingles (k = 1 -> word sets). Prefix
-    // filtering needs a DIVERSE universe to prune: a tiny vocabulary
-    // (the 31-word synthetic corpus) makes every "rare" prefix token
-    // corpus-common and the candidate set near-quadratic — the PPJoin
-    // filters bound that regime (see the word-mode ladder row in
-    // BASELINE.md), and shingles remain the default diverse unit (the
-    // same reason the LSH family sketches k = 3 grams, not words).
-    val tk = shingleRows(docs.select(col(idCol), col(textCol)),
-        idCol, textCol, k)
-      .select(col("doc_id"), col("s").as("w"))
-      .distinct()
-      .persist(sl)
-    tk.count()
-    val freq = tk.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    // ceil over the RATIONAL t·s, guarded against float overshoot: for a
-    // threshold whose double sits just above its rational (0.8, 0.7 …),
-    // t*s can land epsilon ABOVE an exact integer k and ceil to k+1 —
-    // one token too few in the prefix, a silent false negative. The
-    // 1e-9 back-off restores k (real fractional parts are >= 1/s,
-    // orders of magnitude above it). Same guard on every derived bound
-    // below — each one must only ever err towards KEEPING a pair.
-    val eps = 1e-9
-    val idxFrac = 2 * threshold / (1 + threshold)
-    val docTokens = tk.join(freq, Seq("w"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("w")))).as("ts"))
-      .withColumn("s", size(col("ts")))
-      .withColumn("p",
-        col("s") -
-          ceil(lit(threshold) * col("s") - lit(eps)).cast("int") + 1)
-      .withColumn("pi",
-        col("s") -
-          ceil(lit(idxFrac) * col("s") - lit(eps)).cast("int") + 1)
-      .persist(sl)
-    docTokens.count()
-    // prefix rows carry the 1-based POSITION in the doc's sorted set —
-    // the positional filter's input
-    def prefixRows(lenCol: String): DataFrame =
-      docTokens
-        .select(col("doc_id"), col("s"),
-          posexplode(expr(s"slice(ts, 1, $lenCol)")).as(Seq("p0", "pt")))
-        .select(col("doc_id"), col("s"), (col("p0") + 1).as("pos"),
-          col("pt.w").as("w"))
-    val (pShort, pStd) = capBucketsPaired(
-      prefixRows("pi"), prefixRows("p"), Seq("w"), maxBucketSize,
-      "setSimilarityPairs")
-    val alpha = ceil(lit(threshold / (1 + threshold)) *
-      (col("sa") + col("sb")) - lit(eps))
-    val cand = pShort.select(col("w"), col("doc_id").as("doc_a"),
-        col("s").as("sa"), col("pos").as("ia"))
-      .join(pStd.select(col("w"), col("doc_id").as("doc_b"),
-        col("s").as("sb"), col("pos").as("ib")), Seq("w"))
-      // A = the (size, id)-smaller side; its SHORT prefix suffices —
-      // scalar comparison, not struct(...) < struct(...): the struct
-      // form allocated two named_structs per MATCH ROW of the
-      // quadratic join (r22)
-      .filter(col("sa") < col("sb") ||
-        (col("sa") === col("sb") && col("doc_a") < col("doc_b")))
-      // length filter: J >= t forces sa >= t*sb
-      .filter(col("sa").cast("double") >=
-        lit(threshold) * col("sb") - lit(eps))
-      .groupBy(col("doc_a"), col("doc_b"))
-      // packed (ia, ib) pair-min: primitive long min hash-aggregates
-      // with codegen; min(struct(...)) forced a SortAggregate that
-      // sorted the whole match relation (r22 — see the incremental leg)
-      .agg(min(shiftleft(col("ia").cast("long"), 32) + col("ib")).as("mp"),
-        first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-      // positional filter at the first common token
-      .filter(lit(1) +
-        least(col("sa") - shiftright(col("mp"), 32).cast("int"),
-          col("sb") - col("mp").bitwiseAND(lit(4294967295L)).cast("int"))
-          >= alpha)
-      .select(col("doc_a"), col("doc_b"), col("sa"), col("sb"))
-    (cand, docTokens)
-  }
-
-  /** EXACT containment self-join (r17): every unordered pair whose
-    * LARGER containment max(|A∩B|/|A|, |A∩B|/|B|) reaches `threshold`,
-    * with cross-product semantics — the zero-false-negative companion
-    * of the anchor-blocked [[anchorCandidatePairs]] +
-    * [[containmentPairs]] composition, exactly as [[setSimilarityPairs]]
-    * is to banded LSH. Same output schema as [[containmentPairs]].
-    *
-    * Blocking: containment admits a prefix lemma only on the CONTAINED
-    * side — c(A in B) ≥ t ⇒ |A∩B| ≥ ⌈t·|A|⌉ ⇒ the globally-minimal
-    * common token lies in A's first s − ⌈t·s⌉ + 1 tokens; the container
-    * side has NO length relation to exploit (a 10-token quote can live
-    * in a 10^6-token book), so the join is prefix(contained) ×
-    * FULL-token(container) — candidate volume rides the token
-    * frequency skew, which is precisely why the approximate anchor
-    * family exists for corpora whose shingle universe is dense; the
-    * hot-token cap ([[capBucketsPaired]], combined membership) bounds
-    * the flood loudly. A positional filter prunes before verification:
-    * at the first common token (positions i, j under the global
-    * rare-first order), |A∩B| ≤ 1 + min(sa − i, sb − j), which any
-    * qualifying pair needs ≥ ⌈t·min(sa, sb)⌉. Verification fetches
-    * both sorted token arrays and intersects map-side (the
-    * [[setSimilarityPairs]] posture) — candidate-sized, exact.
+  /** Exact containment self-join: every unordered pair whose LARGER
+    * containment max(|A∩B|/|A|, |A∩B|/|B|) reaches `threshold`, as
+    * `(doc_a, doc_b, jaccard, cont_a_in_b, cont_b_in_a, quote_like)`,
+    * the schema of [[containmentPairs]] — the zero-false-negative
+    * companion of its anchor-blocked composition. One call of the
+    * [[prefixFilterJoin]] kernel.
     */
   def containmentSelfPairs(docs: DataFrame, idCol: String,
                            threshold: Double, textCol: String = "text",
-                           k: Int = 3, maxBucketSize: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val tk = containmentTokens(docs, idCol, textCol, k).persist(sl)
-    tk.count()
-    val docTokens = containmentDocTokens(tk).persist(sl)
-    docTokens.count()
-    containmentSelfPairsFrom(docTokens, threshold, maxBucketSize)
-  }
+                           k: Int = 3, maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(tokenSides(docs, None, idCol, textCol, k, weighted = false),
+      threshold, containment = true, maxBucketSize, "containmentSelfPairs")
 
   /** The distinct shingle-token relation `(doc_id, w)` over one corpus
     * — THE shared sub-build of the whole containment/anchor family
@@ -1332,435 +1039,346 @@ object Dedup {
   /** [[containmentSelfPairs]] over a pre-built (memoized or persisted)
     * [[containmentDocTokens]] relation — the face the quote-audit
     * queries consume so the shingle/freq/array sub-builds are shared
-    * across legs instead of rebuilt per leg (r17 verdict: the exact
-    * and anchored legs of `dedup_quote_missed` each re-derived them).
+    * across legs instead of rebuilt per leg.
     */
   def containmentSelfPairsFrom(docTokens0: DataFrame, threshold: Double,
-                               maxBucketSize: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eps = 1e-9
-    val docTokens = docTokens0
-      .withColumn("p",
-        col("s") -
-          ceil(lit(threshold) * col("s") - lit(eps)).cast("int") + 1)
-    def rowsOf(lenCol: Column): DataFrame =
-      docTokens
-        .select(col("doc_id"), col("s"),
-          posexplode(slice(col("ts"), lit(1), lenCol)).as(Seq("p0", "pt")))
-        .select(col("doc_id"), col("s"), (col("p0") + 1).as("pos"),
-          col("pt.w").as("w"))
-    val (pPfx, pAll) = capBucketsPaired(rowsOf(col("p")), rowsOf(col("s")),
-      Seq("w"), maxBucketSize, "containmentSelfPairs")
-    val cand = pPfx.select(col("w"), col("doc_id").as("na"),
-        col("s").as("sa"), col("pos").as("ia"))
-      .join(pAll.select(col("w"), col("doc_id").as("nb"), col("s").as("sb"),
-        col("pos").as("ib")), Seq("w"))
-      .filter(col("na") =!= col("nb"))
-      .groupBy(col("na"), col("nb"))
-      // packed (ia, ib) pair-min — hash-aggregates with codegen where
-      // min(struct(...)) forced a SortAggregate over the match relation
-      .agg(min(shiftleft(col("ia").cast("long"), 32) + col("ib")).as("mp"),
-        first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-      .filter(lit(1) +
-        least(col("sa") - shiftright(col("mp"), 32).cast("int"),
-          col("sb") - col("mp").bitwiseAND(lit(4294967295L)).cast("int")) >=
-        ceil(lit(threshold) * least(col("sa"), col("sb")) - lit(eps)))
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .distinct()
-      .persist(sl)
-    cand.count()
-    // re-sorted once per doc, merge-walk per pair (r22 — see
-    // setSimilarityPairs)
-    graft.functions.GraftFunctions.register(docTokens.sparkSession)
-    val arr = docTokens.select(col("doc_id"),
-      sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
-      col("s"))
-    val withArrays = cand
-      .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
-        col("s").as("sa")), Seq("doc_a"))
-      .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
-        col("s").as("sb")), Seq("doc_b"))
-      .withColumn("inter",
-        call_function("graft_soverlap", col("wa"), col("wb")))
-    val jac = col("inter").cast("double") /
-      (col("sa") + col("sb") - col("inter")).cast("double")
-    val ca = col("inter").cast("double") / col("sa")
-    val cb = col("inter").cast("double") / col("sb")
-    withArrays
-      .filter(greatest(ca, cb) >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"),
-        round(ca, 6).as("cont_a_in_b"), round(cb, 6).as("cont_b_in_a"),
-        (greatest(ca, cb) >= 0.8 && jac < 0.5).cast("int").as("quote_like"))
-  }
+                               maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(Sides(docTokens0, None, None), threshold,
+      containment = true, maxBucketSize, "containmentSelfPairs")
 
-  /** EXACT WEIGHTED set-similarity self-join (r17): every unordered
-    * pair whose weighted Jaccard Σ_t min(tf_a, tf_b) / Σ_t max(tf_a,
-    * tf_b) reaches `threshold`, weights = term frequency of the k-gram
-    * within the document. The multiset companion of
-    * [[setSimilarityPairs]]: set semantics treat "spam spam spam spam"
-    * and one "spam" as identical; weighted Jaccard does not — the
-    * standard similarity for boilerplate whose REPETITION is the
-    * signature.
-    *
-    * Weighted prefix lemma (the generalization in Chaudhuri, Ganti &
-    * Kaushik, ICDE 2006): order tokens globally (df ascending, token
-    * text tiebreak); per doc keep the positions whose SUFFIX WEIGHT
-    * (Σ tf from the position on) is ≥ t·S (S = Σ tf). J_w ≥ t forces
-    * the shared weight m ≥ t/(1+t)·(S_a+S_b) ≥ t·S_a (using the
-    * weighted length filter S_b ≥ t·S_a, itself forced by J_w ≤
-    * S_a/S_b); were every shared token outside A's weighted prefix, m
-    * could not exceed the sub-t·S_a suffix weight — contradiction, so
-    * the prefix-prefix equi-join has zero false negatives. The
-    * positional filter rides the carried suffix weights: at the first
-    * shared token, m ≤ min(suffixW_a, suffixW_b) must reach
-    * t/(1+t)·(S_a+S_b). The verify is the exploded shared-token join
-    * summing least(tf_a, tf_b) — m plus the two doc weight sums
-    * recover Σ max = S_a + S_b − m exactly (min + max = a + b per
-    * token, zero min on non-shared).
-    *
-    * Scale shape: tf and prefix relations are corpus-linear; the
-    * candidate join keys on rare-first prefix tokens with the standard
-    * hot-bucket cap; the verify join is candidate-sized.
+  /** Batch-against-corpus face of [[containmentSelfPairs]]: every pair
+    * touching at least one batch document whose larger containment
+    * reaches `threshold`, same output schema (see [[prefixFilterJoin]]).
+    */
+  def containmentIncremental(corpus: DataFrame, batch: DataFrame,
+                             idCol: String, threshold: Double,
+                             textCol: String = "text", k: Int = 3,
+                             maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(
+      tokenSides(batch, Some(corpus), idCol, textCol, k, weighted = false),
+      threshold, containment = true, maxBucketSize, "containmentIncremental")
+
+  /** Exact WEIGHTED Jaccard self-join over term-frequency multisets of
+    * word k-grams: Σ_t min(tf_a, tf_b) / Σ_t max(tf_a, tf_b) ≥
+    * `threshold`, as `(doc_a, doc_b, wjaccard)` with doc_a < doc_b. Set
+    * semantics treat "spam spam spam spam" and one "spam" as identical;
+    * the weighted form does not — the similarity for boilerplate whose
+    * REPETITION is the signature. One call of [[prefixFilterJoin]].
     */
   def weightedSetSimilarityPairs(docs: DataFrame, idCol: String,
                                  threshold: Double,
                                  textCol: String = "text", k: Int = 1,
-                                 maxBucketSize: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eps = 1e-9
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    // NON-distinct grams: the weights ARE the duplicate counts
-    val grams = docs.select(col(idCol).as("doc_id"),
-      explode(coalesce(
-        call_function("graft_word_grams", lower(col(textCol)), lit(k),
-          lit(false)),
-        typedLit(Seq.empty[String]))).as("w"))
-    val tf = grams.groupBy(col("doc_id"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(sl)
-    tf.count()
-    val freq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val docTokens = tf.join(freq, Seq("w"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(
-          struct(col("df"), col("w"), col("tf")))).as("ts"),
-        sum(col("tf")).as("sw"))
-      .persist(sl)
-    docTokens.count()
-    // prefix rows carry the suffix weight: cumulative tf from the row's
-    // position to the end of the doc's sorted token list
-    val prefix = docTokens
-      .select(col("doc_id"), col("sw"),
-        posexplode(col("ts")).as(Seq("p0", "pt")))
-      .withColumn("suffw", col("sw") - sum(col("pt.tf")).over(
-        Window.partitionBy(col("doc_id")).orderBy(col("p0")))
-        + col("pt.tf"))
-      .filter(col("suffw").cast("double") >=
-        lit(threshold) * col("sw") - lit(eps))
-      .select(col("doc_id"), col("sw"), col("suffw"),
-        col("pt.w").as("w"))
-    val pruned = capBuckets(prefix, Seq("w"), maxBucketSize,
+                                 maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(tokenSides(docs, None, idCol, textCol, k, weighted = true),
+      threshold, containment = false, maxBucketSize,
       "weightedSetSimilarityPairs")
-    val alpha = lit(threshold / (1 + threshold)) *
-      (col("sa") + col("sb")) - lit(eps)
-    val cand = pruned.select(col("w"), col("doc_id").as("doc_a"),
-        col("sw").as("sa"), col("suffw").as("fa"))
-      .join(pruned.select(col("w"), col("doc_id").as("doc_b"),
-        col("sw").as("sb"), col("suffw").as("fb")), Seq("w"))
-      .filter(col("doc_a") < col("doc_b"))
-      // weighted length filter, both directions
-      .filter(col("sa").cast("double") >=
-          lit(threshold) * col("sb") - lit(eps) &&
-        col("sb").cast("double") >=
-          lit(threshold) * col("sa") - lit(eps))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(max(least(col("fa"), col("fb"))).as("bound"),
-        first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-      // positional filter: the BEST shared-token bound must clear the
-      // required shared weight (max over matches is the sound bound —
-      // every match row's min(suffw) is a valid upper bound for the
-      // weight shared FROM that token on, and the first shared token's
-      // row bounds all of m)
-      .filter(col("bound").cast("double") >= alpha)
-      .select(col("doc_a"), col("doc_b"))
-      .persist(sl)
-    cand.count()
-    // MERGE-WALK verify (r19): one codegen'd sorted-merge Σ min(tf)
-    // per pair instead of the exploded shared-token join — the same
-    // candidate-row-bound shape as the containment faces
-    val m = weightedMergeVerify(cand, tf,
-      docTokens.select(col("doc_id"), col("sw")),
-      "weightedSetSimilarityPairs")
-    val jw = col("m").cast("double") /
-      (col("sa") + col("sb") - col("m")).cast("double")
-    m.filter(jw >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jw, 6).as("wjaccard"))
-  }
 
-  /** EXACT WEIGHTED containment self-join — the multiset analogue of
-    * [[containmentSelfPairs]] and the containment face of
-    * [[weightedSetSimilarityPairs]]: every unordered pair whose larger
-    * WEIGHTED containment Σ_t min(tf_a, tf_b) / S_side reaches
-    * `threshold` (S = the side's total term weight). Set containment
-    * calls a page that repeats a boilerplate line 50 times "contained"
-    * after one occurrence; the weighted form demands the REPETITION be
-    * covered too — the honest detector for templated spam.
-    *
-    * Blocking: the SMALLER-weight side's weighted prefix (positions
-    * whose suffix weight ≥ t·S — if every shared token sat below that,
-    * the shared weight could not reach t·S_min) joined against the
-    * larger side's FULL weighted token list (no length relation exists,
-    * as in the set case, but the weight ORDER picks the one prefix the
-    * lemma needs — r19, halving the old symmetric prefix × full match
-    * volume); pair-level SUFFIX filter (PPJoin+ adapted to weighted
-    * containment — exact matched-prefix weight plus the min of the two
-    * tails after the last match bounds m from above; the candidate set
-    * this kills was 99.5% of the verify's input at the k=4 ladder
-    * rung); exploded Σ min(tf) verify, candidate-sized.
-    */
-  def weightedContainmentPairs(docs: DataFrame, idCol: String,
-                               threshold: Double,
-                               textCol: String = "text", k: Int = 1,
-                               maxBucketSize: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eps = 1e-9
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val grams = docs.select(col(idCol).as("doc_id"),
-      explode(coalesce(
-        call_function("graft_word_grams", lower(col(textCol)), lit(k),
-          lit(false)),
-        typedLit(Seq.empty[String]))).as("w"))
-    val tf = grams.groupBy(col("doc_id"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(sl)
-    tf.count()
-    val freq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val docTokens = tf.join(freq, Seq("w"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(
-          struct(col("df"), col("w"), col("tf")))).as("ts"),
-        sum(col("tf")).as("sw"))
-      .persist(sl)
-    docTokens.count()
-    val rows = docTokens
-      .select(col("doc_id"), col("sw"),
-        posexplode(col("ts")).as(Seq("p0", "pt")))
-      .withColumn("suffw", col("sw") - sum(col("pt.tf")).over(
-        Window.partitionBy(col("doc_id")).orderBy(col("p0")))
-        + col("pt.tf"))
-      .select(col("doc_id"), col("sw"), col("suffw"),
-        col("pt.w").as("w"), col("pt.tf").as("tf"))
-      // both candidate-join sides read this relation (prefix is a
-      // filter of it), so the per-doc suffix-weight window runs once
-      .persist(sl)
-    rows.count()
-    val prefix = rows.filter(col("suffw").cast("double") >=
-      lit(threshold) * col("sw") - lit(eps))
-    val (pPfx, pAll) = capBucketsPaired(prefix, rows, Seq("w"),
-      maxBucketSize, "weightedContainmentPairs")
-    // r19 (verdict task 5, the k=4 ladder rung). Two exact prunes:
-    //
-    // (1) The pair survives iff m >= t*min(Sa, Sb), so the prefix lemma
-    // only needs the SMALLER side's prefix — the weight-order join
-    // condition halves the match rows of the old symmetric prefix x
-    // full join (every pair arrived through BOTH role assignments).
-    //
-    // (2) The old positional filter (max over matches of min suffix
-    // weight >= t*S_min) was TOOTHLESS for the asymmetric pairs
-    // containment exists for: with Sb >> Sa, any late token of B still
-    // carries suffw_b >= t*Sa, so ~all blocking pairs passed and the
-    // exploded verify ran |cand| x doc-length rows (measured at k=4:
-    // 7.1M candidates for 34k true pairs — the whole 69 s rung).
-    // The match rows already hold the tight bound (PPJoin+'s suffix
-    // filter, weighted): the token lists share ONE global (df, w)
-    // order, so per pair, m <= [sum of min(tf_a, tf_b) over matched
-    // prefix tokens] + min(A tail, B tail) where the tails are the
-    // suffix weights strictly after the LAST matched prefix token
-    // (suffw − tf at that row — suffw is strictly decreasing within a
-    // doc, so min(struct(fa ...)) picks it deterministically). Shared
-    // tokens at or before the last match in A's prefix are summed
-    // exactly; everything after (including A's whole below-prefix
-    // suffix) is capped by both tails. A true pair keeps
-    // bound >= m >= t*Sa, so the filter has zero false negatives.
-    val cand = pPfx.select(col("w"), col("doc_id").as("na"),
-        col("sw").as("sa"), col("suffw").as("fa"), col("tf").as("ta"))
-      .join(pAll.select(col("w"), col("doc_id").as("nb"),
-        col("sw").as("sb"), col("suffw").as("fb"), col("tf").as("tb")),
-        Seq("w"))
-      .filter(col("sa") < col("sb") ||
-        (col("sa") === col("sb") && col("na") < col("nb")))
-      .groupBy(col("na"), col("nb"))
-      // the last-matched-row tails as two PACKED primitive mins (r22):
-      // fa is unique within a pair's match rows (suffw strictly
-      // decreases along A), so min keyed by fa in the high bits picks
-      // the same row as the old min(struct(fa, ta, fb, tb)) while
-      // hash-aggregating with codegen (the struct min forced a
-      // SortAggregate over the whole match relation). The low 32 bits
-      // carry the row's tails (fa−ta, fb−tb) directly; they fit by an
-      // ENGINE invariant, not an assumption — a tail is bounded by one
-      // document's token count, and a Spark string row caps at 2^31
-      // bytes, so every packed field is < 2^31. A tie (impossible while
-      // fa is strictly decreasing) would only select a DIFFERENT
-      // matched row, whose tails are looser-or-equal upper bounds
-      // (tails shrink monotonically toward the last row) — the filter
-      // can still never drop a true pair.
-      .agg(sum(least(col("ta"), col("tb"))).as("ms"),
-        min(shiftleft(col("fa"), 32) + (col("fa") - col("ta"))).as("m1"),
-        min(shiftleft(col("fa"), 32) + (col("fb") - col("tb"))).as("m2"),
-        first(col("sa")).as("sa"))
-      .filter((col("ms") +
-          least(col("m1").bitwiseAND(lit(4294967295L)),
-            col("m2").bitwiseAND(lit(4294967295L)))).cast("double") >=
-        lit(threshold) * col("sa") - lit(eps))
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .persist(sl)
-    cand.count()
-    // MERGE-WALK verify (r19): containment candidates are inherently
-    // false-positive-heavy (one shared rare early token defeats every
-    // candidate-level bound — at the k=4 ladder rung 7.1M of 7.1M
-    // candidates reached verify for 34k true pairs), so the verify
-    // must be candidate-row-bound, not candidate×doc-length — no
-    // exploded shared-token join, no 10⁸-row pair aggregate behind it
-    val m = weightedMergeVerify(cand, tf,
-      docTokens.select(col("doc_id"), col("sw")),
-      "weightedContainmentPairs")
-    val jw = col("m").cast("double") /
-      (col("sa") + col("sb") - col("m")).cast("double")
-    val ca = col("m").cast("double") / col("sa")
-    val cb = col("m").cast("double") / col("sb")
-    m.filter(greatest(ca, cb) >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jw, 6).as("wjaccard"),
-        round(ca, 6).as("wcont_a_in_b"), round(cb, 6).as("wcont_b_in_a"))
-  }
-
-  /** Shared weighted-relation builds of the incremental (batch-vs-
-    * index) weighted faces: per-side term-frequency relations, the
-    * vocabulary order PINNED to corpus-only document frequencies
-    * (the [[setSimilarityIncremental]] contract — any total order
-    * satisfies the weighted prefix lemma, so a production index keeps
-    * its order as batches arrive; batch-only tokens order first at
-    * df 0), per-side exploded rows carrying each position's SUFFIX
-    * WEIGHT, and the replay-deduped verify relations.
-    */
-  private case class WeightedSides(rowsNew: DataFrame, rowsOld: DataFrame,
-                                   tfAll: DataFrame, sums: DataFrame)
-
-  private def weightedIncrementalRows(corpus: DataFrame, batch: DataFrame,
-                                      idCol: String, textCol: String,
-                                      k: Int): WeightedSides = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    def grams(d: DataFrame) = d.select(col(idCol).as("doc_id"),
-      explode(coalesce(
-        call_function("graft_word_grams", lower(col(textCol)), lit(k),
-          lit(false)),
-        typedLit(Seq.empty[String]))).as("w"))
-    def tfOf(d: DataFrame) = grams(d).groupBy(col("doc_id"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-    val tfOld = tfOf(corpus).persist(sl); tfOld.count()
-    val tfNew = tfOf(batch).persist(sl); tfNew.count()
-    val dfreq = tfOld.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    def docTok(tf: DataFrame): DataFrame =
-      tf.join(dfreq, Seq("w"), "left")
-        .select(col("doc_id"), col("w"),
-          coalesce(col("df"), lit(0L)).as("df"), col("tf"))
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(
-            struct(col("df"), col("w"), col("tf")))).as("ts"),
-          sum(col("tf")).as("sw"))
-    val dtOld = docTok(tfOld).persist(sl); dtOld.count()
-    val dtNew = docTok(tfNew).persist(sl); dtNew.count()
-    def rowsOf(dt: DataFrame): DataFrame =
-      dt.select(col("doc_id"), col("sw"),
-          posexplode(col("ts")).as(Seq("p0", "pt")))
-        .withColumn("suffw", col("sw") - sum(col("pt.tf")).over(
-          Window.partitionBy(col("doc_id")).orderBy(col("p0")))
-          + col("pt.tf"))
-        .select(col("doc_id"), col("sw"), col("suffw"),
-          col("pt.w").as("w"))
-    // one (doc, token) weight and one weight sum per doc even under
-    // replay: a replayed document sits in both relations with the same
-    // text, hence identical tf rows — duplicates would double m AND sw
-    val tfAll = tfNew.unionByName(tfOld).dropDuplicates("doc_id", "w")
-    val sums = dtNew.unionByName(dtOld).dropDuplicates("doc_id")
-      .select(col("doc_id"), col("sw"))
-    WeightedSides(rowsOf(dtNew), rowsOf(dtOld), tfAll, sums)
-  }
-
-  /** Incremental (batch-vs-index) face of
-    * [[weightedSetSimilarityPairs]]: every pair (new, old) and (new,
-    * new) with weighted Jaccard Σ min(tf) / Σ max(tf) ≥ `threshold`;
-    * the old corpus is never self-joined. Both sides keep the standard
-    * weighted prefix (positions whose suffix weight ≥ t·S — the pair
-    * roles are new/old, which do not align with the size order an
-    * asymmetric prefix needs, exactly the [[setSimilarityIncremental]]
-    * posture); the weighted length and positional filters are
-    * pair-local consequences of J_w ≥ t and apply unchanged. Verify is
-    * the exploded shared-token join over the replay-deduped tf
-    * relation — candidate-sized.
+  /** Batch-against-corpus face of [[weightedSetSimilarityPairs]], same
+    * output schema (see [[prefixFilterJoin]]).
     */
   def weightedSetSimilarityIncremental(corpus: DataFrame, batch: DataFrame,
                                        idCol: String, threshold: Double,
                                        textCol: String = "text", k: Int = 1,
-                                       maxBucketSize: Int = 0): DataFrame = {
+                                       maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(
+      tokenSides(batch, Some(corpus), idCol, textCol, k, weighted = true),
+      threshold, containment = false, maxBucketSize,
+      "weightedSetSimilarityIncremental")
+
+  /** Exact WEIGHTED containment self-join: every unordered pair whose
+    * larger weighted containment Σ_t min(tf_a, tf_b) / S_side reaches
+    * `threshold` (S = the side's total term weight), as `(doc_a, doc_b,
+    * wjaccard, wcont_a_in_b, wcont_b_in_a)`. Set containment calls a
+    * page that repeats a boilerplate line 50 times "contained" after one
+    * occurrence; the weighted form demands the repetition be covered
+    * too. One call of [[prefixFilterJoin]].
+    */
+  def weightedContainmentPairs(docs: DataFrame, idCol: String,
+                               threshold: Double,
+                               textCol: String = "text", k: Int = 1,
+                               maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(tokenSides(docs, None, idCol, textCol, k, weighted = true),
+      threshold, containment = true, maxBucketSize,
+      "weightedContainmentPairs")
+
+  /** Batch-against-corpus face of [[weightedContainmentPairs]], same
+    * output schema (see [[prefixFilterJoin]]).
+    */
+  def weightedContainmentIncremental(corpus: DataFrame, batch: DataFrame,
+                                     idCol: String, threshold: Double,
+                                     textCol: String = "text", k: Int = 1,
+                                     maxBucketSize: Int = 0): DataFrame =
+    prefixFilterJoin(
+      tokenSides(batch, Some(corpus), idCol, textCol, k, weighted = true),
+      threshold, containment = true, maxBucketSize,
+      "weightedContainmentIncremental")
+
+  /** Input of [[prefixFilterJoin]]: rare-first per-doc token arrays
+    * `(doc_id, ts, s)` of the probing documents and, in batch mode, of
+    * the indexed corpus; for term-frequency multisets also the
+    * `(doc_id, w, tf)` relation the verify walks (None for sets).
+    */
+  private final case class Sides(fresh: DataFrame, index: Option[DataFrame],
+                                 tf: Option[DataFrame])
+
+  /** Token build and vocabulary order of [[prefixFilterJoin]]. Sets are
+    * the distinct k-shingles of [[containmentTokens]]; multisets count
+    * every word k-gram occurrence as `tf`. `ts` sorts each doc's tokens
+    * by (document frequency, token) — rarest first, so prefixes are
+    * maximally selective — and `s` is the set size or the total weight
+    * Σ tf. A self-join orders by the whole input
+    * ([[containmentDocTokens]] for sets). Batch mode PINS the order to
+    * the corpus-only frequencies: the prefix lemma holds under ANY total
+    * order, so an index computes its prefixes once and serves every
+    * later batch; batch tokens the corpus never saw order first, at
+    * df 0. Only prefix selectivity ages with corpus drift.
+    */
+  private def tokenSides(docs: DataFrame, corpus: Option[DataFrame],
+                         idCol: String, textCol: String, k: Int,
+                         weighted: Boolean): Sides = {
+    def tokens(d: DataFrame): DataFrame =
+      if (!weighted) containmentTokens(d, idCol, textCol, k)
+      else {
+        graft.functions.GraftFunctions.register(d.sparkSession)
+        // NON-distinct grams: the weights ARE the duplicate counts
+        d.select(col(idCol).as("doc_id"), explode(coalesce(
+            call_function("graft_word_grams", lower(col(textCol)), lit(k),
+              lit(false)),
+            typedLit(Seq.empty[String]))).as("w"))
+          .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
+      }
+    val tkOld = corpus.map(c => persisted(tokens(c)))
+    val tkNew = persisted(tokens(docs))
+    val vocab = tkOld.getOrElse(tkNew)
+      .groupBy(col("w")).agg(count(lit(1)).as("df"))
+    def arrays(tk: DataFrame): DataFrame = persisted(
+      if (!weighted && corpus.isEmpty) containmentDocTokens(tk)
+      else {
+        val entry = Seq(coalesce(col("df"), lit(0L)).as("df"), col("w")) ++
+          (if (weighted) Seq(col("tf")) else Nil)
+        val ts = sort_array(collect_list(struct(entry: _*))).as("ts")
+        val byDoc = tk.join(vocab, Seq("w"), "left").groupBy(col("doc_id"))
+        if (weighted) byDoc.agg(ts, sum(col("tf")).as("s"))
+        else byDoc.agg(ts).withColumn("s", size(col("ts")))
+      })
+    val index = tkOld.map(arrays)
+    // a replayed document sits in both sides with identical tf rows:
+    // one weight per (doc, token), or the verify doubles m
+    Sides(arrays(tkNew), index, Option.when(weighted)(
+      tkOld.fold(tkNew)(tkNew.unionByName(_).dropDuplicates("doc_id", "w"))))
+  }
+
+  private def persisted(d: DataFrame): DataFrame = {
+    val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
+  }
+
+  /** The exact set-similarity kernel: the AllPairs/PPJoin prefix-filter
+    * join (Bayardo, Ma & Srikant, WWW 2007; Xiao, Wang, Lin & Yu, WWW
+    * 2008; the weighted lemma of Chaudhuri, Ganti & Kaushik, ICDE 2006),
+    * built on relational primitives. Every face above is one call;
+    * three choices separate them:
+    *
+    *  - measure: Jaccard m/(sa + sb − m), or (`containment`) the larger
+    *    containment m / min(sa, sb);
+    *  - weights: sets (m = |A∩B|, s = |A|), or term-frequency multisets
+    *    (`sides.tf` defined; m = Σ min(tf_a, tf_b), s = Σ tf). Weights
+    *    select the position encoding and the verify, nothing else;
+    *  - mode: a self-join, or (`sides.index` defined) a batch against a
+    *    corpus: every pair touching the batch, the corpus never
+    *    self-joined — the same search run over a delta.
+    *
+    * Prefix lemma. Each row carries its SUFFIX `pos`: the weight from
+    * that token to the end of its doc's rare-first array (the token
+    * count for sets). The prefix at fraction f keeps the rows with
+    * pos ≥ f·s. If a pair must share m ≥ f·sa, the globally-first shared
+    * token has suffix ≥ m on A, so it lies in A's prefix: the equi-join
+    * on prefix tokens has ZERO false negatives, and the exact verify
+    * removes the false positives. For sets, m is integral, so the prefix
+    * is the first s − ⌈f·s⌉ + 1 tokens. Every bound is computed minus
+    * 1e-9: for a threshold whose double sits just above its rational
+    * (0.8, 0.7 …), t·s can land epsilon ABOVE an exact integer and ceil
+    * one too high — one token too few in the prefix, a silent false
+    * negative. Real fractional parts are ≥ 1/s, far above the back-off,
+    * so every bound errs only towards KEEPING a pair.
+    *
+    * Blocking, and why each filter is lossless:
+    *
+    *  - Jaccard: J ≥ t forces m ≥ α = t/(1+t)·(sa + sb) and the LENGTH
+    *    filter sa ≥ t·sb (and back), applied as a join residual; with
+    *    it α ≥ t·s on either side, so prefix × prefix at f = t is exact.
+    *    A self-join meets each pair once, ordered by ROLE: A is the
+    *    (size, id)-smaller side. Over sets, A's α ≥ 2t/(1+t)·sa admits
+    *    PPJoin's shorter indexing prefix on A (one third vs one half of
+    *    the set at t = 0.5);
+    *  - containment: m ≥ t·min(sa, sb) gives a lemma only on the
+    *    CONTAINED side — a 10-token quote can live in a 10^6-token book —
+    *    so the join is the prefix of the role-smaller side A × the FULL
+    *    rows of B; containment has no length filter;
+    *  - positional filter: at the first shared token, m ≤ min(pos_a,
+    *    pos_b), and the suffixes only shrink along the shared order, so
+    *    max over the match rows of least(pos_a, pos_b) bounds m; a pair
+    *    whose bound misses α (Jaccard) or t·sa (containment) cannot
+    *    qualify;
+    *  - weighted containment instead runs PPJoin+'s suffix filter: A's
+    *    prefix meets all of B, so m ≤ Σ_matches min(tf_a, tf_b) + the
+    *    smaller of the two tails strictly after the LAST matched prefix
+    *    token — shared tokens up to it are summed exactly, everything
+    *    after is capped by both tails. That row is the min-suffix match
+    *    (pos strictly decreases along A), found by two PACKED primitive
+    *    mins keyed by pos in the high 32 bits, which hash-aggregate with
+    *    codegen where min(struct(...)) forced a SortAggregate; a tail is
+    *    bounded by one document's token count (a Spark string row caps at
+    *    2^31 bytes), so every packed field fits.
+    *
+    * Batch mode: a Jaccard batch probes with its prefixes the corpus
+    * prefixes and its own (role-ordered). The cross leg orients pairs
+    * new → old, not by role, so only id inequality applies and both
+    * sides keep the standard prefix. A containment pair can have
+    * either side contained, so batch prefixes probe everyone's full rows
+    * and corpus prefixes probe the batch's full rows, each leg
+    * role-ordered. A REPLAYED document sits in both relations: id
+    * inequality and the role exclude the self-pair, the candidate
+    * `distinct` merges the legs, and the verify reads one array per doc.
+    *
+    * Hot-token cap ([[capBucketsPaired]]): judged on the COMBINED
+    * membership of the two join sides, except the weighted Jaccard
+    * self-join, whose one prefix relation joins itself and is counted
+    * once ([[capBuckets]]). Dropped tokens trade recall loudly, never
+    * precision.
+    *
+    * Verify: sets fetch each candidate's array re-sorted into binary
+    * order and count the intersection with the zero-alloc
+    * `graft_soverlap` merge walk; multisets run [[weightedMergeVerify]].
+    * Either is candidate-row-bound, never candidate × doc-length.
+    *
+    * Scale shape: token and prefix relations are corpus-linear; the
+    * candidate join keys on rare-first prefix tokens; the vocabulary
+    * order is a vocabulary-sized artifact, like a codebook.
+    */
+  private def prefixFilterJoin(sides: => Sides, threshold: Double,
+                               containment: Boolean, maxBucketSize: Int,
+                               label: String): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val Sides(fresh, index, tf) = sides
+    val weighted = tf.isDefined
     val eps = 1e-9
-    val ws = weightedIncrementalRows(corpus, batch, idCol, textCol, k)
-    def pref(r: DataFrame) = r.filter(col("suffw").cast("double") >=
-      lit(threshold) * col("sw") - lit(eps))
-    val (pn, po) = capBucketsPaired(pref(ws.rowsNew), pref(ws.rowsOld),
-      Seq("w"), maxBucketSize, "weightedSetSimilarityIncremental")
-    val pnP = pn.persist(sl); pnP.count()
-    val alpha = lit(threshold / (1 + threshold)) *
-      (col("sa") + col("sb")) - lit(eps)
-    def leg(a: DataFrame, b: DataFrame, pred: Column): DataFrame =
-      a.select(col("w"), col("doc_id").as("na"), col("sw").as("sa"),
-          col("suffw").as("fa"))
-        .join(b.select(col("w"), col("doc_id").as("nb"),
-          col("sw").as("sb"), col("suffw").as("fb")), Seq("w"))
-        .filter(pred)
-        // weighted length filter, both directions (pair not size-ordered)
-        .filter(col("sa").cast("double") >=
-            lit(threshold) * col("sb") - lit(eps) &&
-          col("sb").cast("double") >=
-            lit(threshold) * col("sa") - lit(eps))
-        .groupBy(col("na"), col("nb"))
-        .agg(max(least(col("fa"), col("fb"))).as("bound"),
+    val t = lit(threshold)
+    // rows (doc_id, s, pos, w[, tf]) of the prefix at fraction `frac`
+    // (None: every token); pos is the row's suffix, the token count
+    // (sets) or weight (multisets) from it to the end of its doc
+    def rows(dt: DataFrame, frac: Option[Double]): DataFrame =
+      if (!weighted) {
+        val len = frac.fold(col("s"))(f =>
+          col("s") - ceil(lit(f) * col("s") - lit(eps)).cast("int") + 1)
+        dt.select(col("doc_id"), col("s"),
+            posexplode(slice(col("ts"), lit(1), len)).as(Seq("p0", "pt")))
+          .select(col("doc_id"), col("s"), (col("s") - col("p0")).as("pos"),
+            col("pt.w").as("w"))
+      } else {
+        val all = dt.select(col("doc_id"), col("s"),
+            posexplode(col("ts")).as(Seq("p0", "pt")))
+          .select(col("doc_id"), col("s"), (col("s") - sum(col("pt.tf"))
+              .over(Window.partitionBy(col("doc_id")).orderBy(col("p0"))) +
+              col("pt.tf")).as("pos"),
+            col("pt.w").as("w"), col("pt.tf").as("tf"))
+        frac.fold(all)(f =>
+          all.filter(col("pos").cast("double") >= lit(f) * col("s") - lit(eps)))
+      }
+    def tagged(old: DataFrame, frac: Option[Double]): DataFrame =
+      rows(fresh, frac).withColumn("__new", lit(1))
+        .unionByName(rows(old, frac).withColumn("__new", lit(0)))
+    val pfx = Some(threshold)
+    // (prefix side, probed side)
+    val (l, r) = (index, containment) match {
+      case (None, true) => (rows(fresh, pfx), rows(fresh, None))
+      case (None, false) =>
+        val std = rows(fresh, pfx)
+        (if (weighted) std
+         else rows(fresh, Some(2 * threshold / (1 + threshold))), std)
+      case (Some(old), false) => (rows(fresh, pfx), rows(old, pfx))
+      case (Some(old), true) => (tagged(old, pfx), tagged(old, None))
+    }
+    val (lc, rc) =
+      if (l eq r) { val c = capBuckets(l, Seq("w"), maxBucketSize, label); (c, c) }
+      else capBucketsPaired(l, r, Seq("w"), maxBucketSize, label)
+    val role = col("sa") < col("sb") ||
+      (col("sa") === col("sb") && col("na") < col("nb"))
+    val need =
+      if (containment) t * col("sa")
+      else lit(threshold / (1 + threshold)) * (col("sa") + col("sb"))
+    def leg(a: DataFrame, b: DataFrame, pair: Column): DataFrame = {
+      def side(d: DataFrame, x: String) = d.select(Seq(col("w"),
+          col("doc_id").as(s"n$x"), col("s").as(s"s$x"),
+          col("pos").as(s"f$x")) ++
+        (if (weighted && containment) Seq(col("tf").as(s"t$x")) else Nil): _*)
+      val matched = side(a, "a").join(side(b, "b"), Seq("w")).filter(pair)
+      val sized = if (containment) matched else matched.filter(
+        col("sa").cast("double") >= t * col("sb") - lit(eps) &&
+          col("sb").cast("double") >= t * col("sa") - lit(eps))
+      val byPair = sized.groupBy(col("na"), col("nb"))
+      val bounded =
+        if (weighted && containment) {
+          val low = lit(4294967295L)
+          byPair.agg(sum(least(col("ta"), col("tb"))).as("ms"),
+              min(shiftleft(col("fa"), 32) + (col("fa") - col("ta"))).as("m1"),
+              min(shiftleft(col("fa"), 32) + (col("fb") - col("tb"))).as("m2"),
+              first(col("sa")).as("sa"))
+            .withColumn("bound", col("ms") +
+              least(col("m1").bitwiseAND(low), col("m2").bitwiseAND(low)))
+        } else byPair.agg(max(least(col("fa"), col("fb"))).as("bound"),
           first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-        // positional filter: the best shared-token suffix bound must
-        // clear the required shared weight (the first shared token's
-        // min(suffw) bounds all of m — see weightedSetSimilarityPairs)
-        .filter(col("bound").cast("double") >= alpha)
+      bounded.filter(col("bound").cast("double") >= need - lit(eps))
         .select(col("na"), col("nb"))
-    // a REPLAYED document sits in both relations; id inequality excludes
-    // the self-pair exactly (ids are unique per document)
-    val cand = leg(pnP, po, col("na") =!= col("nb"))
-      .unionByName(leg(pnP, pnP, col("na") < col("nb")))
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .distinct()
-      .persist(sl)
-    cand.count()
-    // MERGE-WALK verify (r19, the weightedContainmentIncremental shape):
-    // per pair one codegen'd sorted-merge Σ min(tf) instead of the
-    // exploded shared-token join; arrays resolved and dropped before
-    // the weight-sum joins
-    val m = weightedMergeVerify(cand, ws.tfAll, ws.sums,
-      "weightedSetSimilarityIncremental")
-    val jw = col("m").cast("double") /
+    }
+    val legs = index match {
+      case None => leg(lc, rc, role)
+      case Some(_) if containment =>
+        val (pc, fc) = (persisted(lc), persisted(rc))
+        leg(pc.filter(col("__new") === 1), fc, role).unionByName(
+          leg(pc.filter(col("__new") === 0), fc.filter(col("__new") === 1),
+            role))
+      case Some(_) =>
+        val pn = persisted(lc)
+        leg(pn, rc, col("na") =!= col("nb")).unionByName(leg(pn, pn, role))
+    }
+    val pairs = legs.select(least(col("na"), col("nb")).as("doc_a"),
+      greatest(col("na"), col("nb")).as("doc_b"))
+    // a self-join's role order yields each pair once; batch legs overlap
+    val cand = persisted(if (index.isEmpty) pairs else pairs.distinct())
+    val all = index.fold(fresh)(fresh.unionByName(_).dropDuplicates("doc_id"))
+    graft.functions.GraftFunctions.register(fresh.sparkSession)
+    val m = tf match {
+      case None =>
+        val arr = all.select(col("doc_id"),
+          sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
+          col("s"))
+        cand
+          .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
+            col("s").as("sa")), Seq("doc_a"))
+          .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
+            col("s").as("sb")), Seq("doc_b"))
+          .withColumn("m", call_function("graft_soverlap", col("wa"), col("wb")))
+      case Some(tfs) => weightedMergeVerify(cand, tfs,
+        all.select(col("doc_id"), col("s").as("sw")), label)
+    }
+    val wt = if (weighted) "w" else ""
+    val jac = col("m").cast("double") /
       (col("sa") + col("sb") - col("m")).cast("double")
-    m.filter(jw >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jw, 6).as("wjaccard"))
+    val ca = col("m").cast("double") / col("sa")
+    val cb = col("m").cast("double") / col("sb")
+    if (!containment)
+      m.filter(jac >= threshold)
+        .select(col("doc_a"), col("doc_b"), round(jac, 6).as(s"${wt}jaccard"))
+    else m.filter(greatest(ca, cb) >= threshold).select(Seq(col("doc_a"),
+        col("doc_b"), round(jac, 6).as(s"${wt}jaccard"),
+        round(ca, 6).as(s"${wt}cont_a_in_b"),
+        round(cb, 6).as(s"${wt}cont_b_in_a")) ++
+      (if (weighted) Nil
+       else Seq((greatest(ca, cb) >= 0.8 && jac < 0.5).cast("int")
+         .as("quote_like"))): _*)
   }
 
   /** Shared merge-walk verify of the weighted families (r19): builds
@@ -1824,174 +1442,6 @@ object Dedup {
         Seq("doc_a"))
       .join(sums.select(col("doc_id").as("doc_b"), col("sw").as("sb")),
         Seq("doc_b"))
-  }
-
-  /** Incremental (batch-vs-index) face of [[weightedContainmentPairs]]:
-    * every pair touching at least one batch document whose larger
-    * WEIGHTED containment Σ min(tf) / S_side reaches `threshold`; the
-    * old corpus is never self-joined. Two blocking legs, because the
-    * CONTAINED side (the smaller-total-weight side — it owns the
-    * larger containment) carries the weighted prefix lemma and either
-    * side of a cross pair can be the contained one: batch weighted
-    * prefixes probe everyone's FULL weighted rows (new-in-old,
-    * new-in-new, old-containing-new), old prefixes probe the batch's
-    * full rows (old-contained-in-new). Hot-token cap judges combined
-    * prefix-side/full-side membership ([[containmentIncremental]]).
-    */
-  def weightedContainmentIncremental(corpus: DataFrame, batch: DataFrame,
-                                     idCol: String, threshold: Double,
-                                     textCol: String = "text", k: Int = 1,
-                                     maxBucketSize: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eps = 1e-9
-    val ws = weightedIncrementalRows(corpus, batch, idCol, textCol, k)
-    def tag(r: DataFrame, t: Int) = r.withColumn("__new", lit(t))
-    def pref(r: DataFrame) = r.filter(col("suffw").cast("double") >=
-      lit(threshold) * col("sw") - lit(eps))
-    val pfx = tag(pref(ws.rowsNew), 1).unionByName(tag(pref(ws.rowsOld), 0))
-    val full = tag(ws.rowsNew, 1).unionByName(tag(ws.rowsOld, 0))
-    val (pc, fc) = capBucketsPaired(pfx, full, Seq("w"), maxBucketSize,
-      "weightedContainmentIncremental")
-    val pcP = pc.persist(sl); pcP.count()
-    val fcP = fc.persist(sl); fcP.count()
-    def leg(a: DataFrame, b: DataFrame): DataFrame =
-      a.select(col("w"), col("doc_id").as("na"), col("sw").as("sa"),
-          col("suffw").as("fa"))
-        .join(b.select(col("w"), col("doc_id").as("nb"),
-          col("sw").as("sb"), col("suffw").as("fb")), Seq("w"))
-        .filter(col("na") =!= col("nb"))
-        .groupBy(col("na"), col("nb"))
-        .agg(max(least(col("fa"), col("fb"))).as("bound"),
-          first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-        .filter(col("bound").cast("double") >=
-          lit(threshold) * least(col("sa"), col("sb")) - lit(eps))
-        .select(col("na"), col("nb"))
-    val cand = leg(pcP.filter(col("__new") === 1), fcP)
-      .unionByName(leg(pcP.filter(col("__new") === 0),
-        fcP.filter(col("__new") === 1)))
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .distinct()
-      .persist(sl)
-    cand.count()
-    // MERGE-WALK verify over the replay-deduped tf relation (r19 —
-    // the batch face's shape: containment candidates are false-
-    // positive-heavy by nature, so verify must be candidate-row-bound)
-    val m = weightedMergeVerify(cand, ws.tfAll, ws.sums,
-      "weightedContainmentIncremental")
-    val jw = col("m").cast("double") /
-      (col("sa") + col("sb") - col("m")).cast("double")
-    val ca = col("m").cast("double") / col("sa")
-    val cb = col("m").cast("double") / col("sb")
-    m.filter(greatest(ca, cb) >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jw, 6).as("wjaccard"),
-        round(ca, 6).as("wcont_a_in_b"), round(cb, 6).as("wcont_b_in_a"))
-  }
-
-  /** Incremental (batch-vs-index) face of [[containmentSelfPairs]] —
-    * the containment analogue of [[setSimilarityIncremental]]: every
-    * pair touching at least one batch document whose larger containment
-    * reaches `threshold`; the old corpus is never self-joined. Two
-    * blocking legs, because the CONTAINED side owns the prefix lemma
-    * and either side of a cross pair can be the contained one: batch
-    * prefixes probe the full token sets of everything (covering new-in-
-    * old, new-in-new, and old-CONTAINING-new via symmetry of the pair),
-    * and old prefixes probe the batch's full tokens (old-contained-in-
-    * new). Vocabulary order pinned to corpus-only document frequencies
-    * (any total order satisfies the lemma — the
-    * [[setSimilarityIncremental]] contract); the hot-token cap judges
-    * combined prefix-side/full-side membership per token.
-    */
-  def containmentIncremental(corpus: DataFrame, batch: DataFrame,
-                             idCol: String, threshold: Double,
-                             textCol: String = "text", k: Int = 3,
-                             maxBucketSize: Int = 0): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eps = 1e-9
-    def shingles(d: DataFrame) =
-      shingleRows(d.select(col(idCol), col(textCol)), idCol, textCol, k)
-        .select(col("doc_id"), col("s").as("w")).distinct()
-    val tkOld = shingles(corpus).persist(sl); tkOld.count()
-    val tkNew = shingles(batch).persist(sl); tkNew.count()
-    val dfreq = tkOld.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    def docTok(tk: DataFrame): DataFrame =
-      tk.join(dfreq, Seq("w"), "left")
-        .select(col("doc_id"), col("w"),
-          coalesce(col("df"), lit(0L)).as("df"))
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(struct(col("df"), col("w")))).as("ts"))
-        .withColumn("s", size(col("ts")))
-        .withColumn("p",
-          col("s") -
-            ceil(lit(threshold) * col("s") - lit(eps)).cast("int") + 1)
-    val dtOld = docTok(tkOld).persist(sl); dtOld.count()
-    val dtNew = docTok(tkNew).persist(sl); dtNew.count()
-    def rowsOf(dt: DataFrame, lenCol: Column, tag: Int): DataFrame =
-      dt.select(col("doc_id"), col("s"),
-          posexplode(slice(col("ts"), lit(1), lenCol)).as(Seq("p0", "pt")))
-        .select(col("doc_id"), col("s"), (col("p0") + 1).as("pos"),
-          col("pt.w").as("w"), lit(tag).as("__new"))
-    // cap on COMBINED membership: the join is prefix-side x full-side
-    val pfx = rowsOf(dtNew, col("p"), 1)
-      .unionByName(rowsOf(dtOld, col("p"), 0))
-    val full = rowsOf(dtNew, col("s"), 1)
-      .unionByName(rowsOf(dtOld, col("s"), 0))
-    val (pc, fc) = capBucketsPaired(pfx, full, Seq("w"), maxBucketSize,
-      "containmentIncremental")
-    val pcP = pc.persist(sl); pcP.count()
-    val fcP = fc.persist(sl); fcP.count()
-    def leg(a: DataFrame, b: DataFrame): DataFrame =
-      a.select(col("w"), col("doc_id").as("na"), col("s").as("sa"),
-          col("pos").as("ia"))
-        .join(b.select(col("w"), col("doc_id").as("nb"), col("s").as("sb"),
-          col("pos").as("ib")), Seq("w"))
-        .filter(col("na") =!= col("nb"))
-        .groupBy(col("na"), col("nb"))
-        // packed (ia, ib) pair-min — hash-aggregates with codegen where
-        // min(struct(...)) forced a SortAggregate (r22)
-        .agg(min(shiftleft(col("ia").cast("long"), 32) + col("ib")).as("mp"),
-          first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-        .filter(lit(1) +
-          least(col("sa") - shiftright(col("mp"), 32).cast("int"),
-            col("sb") - col("mp").bitwiseAND(lit(4294967295L)).cast("int")) >=
-          ceil(lit(threshold) * least(col("sa"), col("sb")) - lit(eps)))
-        .select(col("na"), col("nb"))
-    val cand = leg(pcP.filter(col("__new") === 1), fcP)
-      .unionByName(leg(pcP.filter(col("__new") === 0),
-        fcP.filter(col("__new") === 1)))
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .distinct()
-      .persist(sl)
-    cand.count()
-    // one sorted-token row per doc even under replay (same text -> same
-    // ts on either side)
-    val arr = dtNew.unionByName(dtOld).dropDuplicates("doc_id")
-      .select(col("doc_id"),
-        sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
-        col("s"))
-    val withArrays = cand
-      .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
-        col("s").as("sa")), Seq("doc_a"))
-      .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
-        col("s").as("sb")), Seq("doc_b"))
-      // zero-alloc merge-walk intersection over the re-sorted arrays
-      // (r22 — see containmentPairs)
-      .withColumn("inter",
-        call_function("graft_soverlap", col("wa"), col("wb")))
-    val jac = col("inter").cast("double") /
-      (col("sa") + col("sb") - col("inter")).cast("double")
-    val ca = col("inter").cast("double") / col("sa")
-    val cb = col("inter").cast("double") / col("sb")
-    withArrays
-      .filter(greatest(ca, cb) >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"),
-        round(ca, 6).as("cont_a_in_b"), round(cb, 6).as("cont_b_in_a"),
-        (greatest(ca, cb) >= 0.8 && jac < 0.5).cast("int").as("quote_like"))
   }
 
   /** Connected-component resolution over verified near-dup PAIRS — the

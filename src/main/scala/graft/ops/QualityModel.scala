@@ -122,20 +122,27 @@ object QualityModel {
     // driver happens to garbage-collect the returned frame
     val local = df.sparkSession.createDataFrame(
       java.util.Arrays.asList(w.collect(): _*), w.schema)
+    releaseCheckpoint(w)
+    sk.unpersist()
+    local
+  }
+
+  /** Unpersist the checkpointed RDD behind `w` now, instead of whenever
+    * the JVM garbage-collects the frame. */
+  private def releaseCheckpoint(w: DataFrame): Unit =
     w.queryExecution.analyzed.foreach {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
-    sk.unpersist()
-    local
-  }
 
   /** Train against an ALREADY-BUILT (and ideally persisted/checkpointed)
     * feature sketch — the face that lets a train+score composition
     * tokenize the corpus exactly once: build [[featureSketch]], cut its
     * lineage (`localCheckpoint(true)`), train here, then score the same
     * relation with [[scoreHashedLogRegWith]]. `sk` must carry
-    * (`idCol`, y, feature) as produced by [[featureSketch]].
+    * (`idCol`, y, feature) as produced by [[featureSketch]]. Each
+    * iteration's checkpoint is released once the next one is
+    * materialized; the caller owns the returned one.
     */
   def trainHashedLogRegWith(sk: DataFrame, idCol: String, lr: Double = 0.5,
                             iters: Int = 3): DataFrame = {
@@ -160,11 +167,13 @@ object QualityModel {
         .agg(grid6(sum(col("p") - col("y")) / nDocs).as("g"))
       val prev = if (w == null) grad.select(col("feature"),
         lit(0.0).as("w")) else w
-      w = prev.join(grad, Seq("feature"), "outer")
+      val next = prev.join(grad, Seq("feature"), "outer")
         .select(col("feature"),
           grid6(coalesce(col("w"), lit(0.0)) -
             lit(lr) * coalesce(col("g"), lit(0.0))).as("w"))
         .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // cut the per-iteration lineage stack
+      if (w != null) releaseCheckpoint(w)
+      w = next
     }
     w
   }

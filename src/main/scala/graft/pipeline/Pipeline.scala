@@ -363,7 +363,7 @@ object Pipeline {
     // Stage 3 — bronze -> silver + quarantine: ONE materialized input, two
     // complementary pushdown-filtered sinks. Executor-side input metrics
     // recorded alongside the dir-size gauge.
-    val (silverRows, quarantineRows, silverParts) = stage { metrics.timed("bronze_to_silver") {
+    val (silverRows, quarantineRows, discarded, silverParts) = stage { metrics.timed("bronze_to_silver") {
       graft.metrics.SparkIoMetrics.measure(spark, metrics, "bronze_to_silver") {
       val bronze = spark.read.parquet(lay.bronze)
       Quality.requireColumns(bronze, Breweries.KeyFields)
@@ -374,16 +374,19 @@ object Pipeline {
       atomicOverwrite(spark, quarantine, s"${lay.quarantine}/run=$runTag")
       atomicOverwrite(spark, cleaned, lay.silver, partitionBy = Seq("location"))
       val sRows = spark.read.parquet(lay.silver).count()
+      // the result reports every run's quarantine; the counter only this
+      // run's (the reference counts the current run's invalid rows)
       val qRows = spark.read.parquet(lay.quarantine).count()
+      val runQ = spark.read.parquet(s"${lay.quarantine}/run=$runTag").count()
       val parts = spark.read.parquet(lay.silver)
         .select("location").distinct().count()
-      (sRows, qRows, parts)
+      (sRows, qRows, runQ, parts)
       }
     }}
     metrics.recordsProcessed("bronze_to_silver", silverRows)
     metrics.setGauge("brewery_etl_silver_partitions_count", silverParts.toDouble)
     metrics.incCounter("brewery_etl_records_discarded_total",
-      Map("operation" -> "bronze_to_silver"), quarantineRows.toDouble)
+      Map("operation" -> "bronze_to_silver"), discarded.toDouble)
 
     // Stage 4 — silver -> gold: the two reference aggregations, one
     // partial+final hash-agg each over the partitioned silver table.

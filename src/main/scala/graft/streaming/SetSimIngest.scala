@@ -22,8 +22,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * prefixes and the vocabulary order are recomputed per ingest from the
   * accumulated corpus (any total order is lemma-valid, so an
   * implementation that PERSISTS prefix rows under a pinned order is the
-  * same operator with a cheaper probe — the batch-mode
-  * `setSimilarityIncremental` doc carries that contract).
+  * same operator with a cheaper probe — the batch mode of the
+  * `Dedup.prefixFilterJoin` kernel states that contract).
   *
   * Replay: pair rows are immutable facts keyed by the unordered id
   * pair, so [[pairs]] dedups on read; a replayed

@@ -397,6 +397,16 @@ class DedupSpec extends SparkSpec {
         k = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == want, s"missing ${want -- got}, extra ${got -- want}")
+    // the weighted face over the same split
+    def triples(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val wFull = triples(Dedup.weightedSetSimilarityPairs(all, "doc_id", 0.5))
+    val wWant = wFull.filterNot(p => oldIds(p._1) && oldIds(p._2))
+    assert(wWant.nonEmpty && wWant.size < wFull.size)
+    val wGot = triples(
+      Dedup.weightedSetSimilarityIncremental(old, batch, "doc_id", 0.5))
+    assert(wGot == wWant, s"weighted: missing ${wWant -- wGot}, " +
+      s"extra ${wGot -- wWant}")
   }
 
   test("containmentSelfPairs equals the brute-force containment join") {
@@ -548,6 +558,19 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getInt(5))).toSet
     assert(got == want, s"missing ${want -- got}, extra ${got -- want}")
+    // the weighted face over the same split
+    def rows5(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        r.getDouble(3), r.getDouble(4))).toSet
+    val wFull = rows5(Dedup.weightedContainmentPairs(all, "doc_id", 0.5))
+    val wWant = wFull.filterNot(p => oldIds(p._1) && oldIds(p._2))
+    assert(wWant.nonEmpty && wWant.size < wFull.size)
+    assert(wWant.exists(p => p._1 == 2L && p._2 == 11L), "weighted old-in-new")
+    assert(wWant.exists(p => p._1 == 1L && p._2 == 12L), "weighted new-in-old")
+    val wGot = rows5(
+      Dedup.weightedContainmentIncremental(old, batch, "doc_id", 0.5))
+    assert(wGot == wWant, s"weighted: missing ${wWant -- wGot}, " +
+      s"extra ${wGot -- wWant}")
   }
 
   test("setSimilarityPairs cap drops the frequent-word flood loudly, never precision") {
@@ -563,6 +586,20 @@ class DedupSpec extends SparkSpec {
     val cs = capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cs.size < 435, "cap should drop the flood")
     assert(cs.forall { case (a, b) => a < b }, "surviving pairs well-formed")
+    // the weighted faces under the same flood: every doc is a tf-1
+    // multiset, so all 435 pairs are true pairs for both measures
+    type Face = (org.apache.spark.sql.DataFrame, String, Double, String,
+      Int, Int) => org.apache.spark.sql.DataFrame
+    for ((name, face) <- Seq[(String, Face)](
+        "weightedSetSimilarityPairs" -> (Dedup.weightedSetSimilarityPairs _),
+        "weightedContainmentPairs" -> (Dedup.weightedContainmentPairs _))) {
+      assert(face(docs, "doc_id", 0.5, "text", 1, 0).count() == 435, name)
+      val wcs = face(docs, "doc_id", 0.5, "text", 1, 10).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(wcs.size < 435, s"$name: cap should drop the flood")
+      assert(wcs.forall { case (a, b) => a < b },
+        s"$name: surviving pairs well-formed")
+    }
   }
 
   test("lshCapAudit quantifies exactly what the hot-bucket cap drops") {

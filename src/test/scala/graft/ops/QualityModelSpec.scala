@@ -87,6 +87,20 @@ class QualityModelSpec extends SparkSpec {
     assert(bi(1L) != bi(2L))
   }
 
+  test("training leaves only the returned weights checkpoint persisted") {
+    // each iteration checkpoints w; the superseded one must be released
+    // at once, not left for a garbage collection
+    val sk = QualityModel.featureSketch(docs, "doc_id", "text", col("y"), 64)
+      .persist()
+    sk.count()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val w = QualityModel.trainHashedLogRegWith(sk, "doc_id", iters = 3)
+    val rose = spark.sparkContext.getPersistentRDDs.size - before
+    assert(rose <= 1, s"persistent RDDs rose by $rose")
+    assert(w.count() > 0)
+    sk.unpersist()
+  }
+
   test("training is deterministic across runs") {
     def run() = QualityModel.trainHashedLogReg(docs, "doc_id", "text",
       col("y"), dim = 64, lr = 0.5, iters = 3)

@@ -60,6 +60,19 @@ class PipelineSpec extends SparkSpec {
     assert(r2again.quarantineRows == r2.quarantineRows)
   }
 
+  test("records_discarded_total adds only each run's own quarantine") {
+    val out = Files.createTempDirectory("graft_pipe_").toString
+    val metrics = EtlMetrics.quiet()
+    val r1 = Pipeline.run(spark, sf0001, out, metrics, runTag = "r1")
+    val r2 = Pipeline.run(spark, sf0001, out, metrics, runTag = "r2")
+    // quarantineRows is cumulative across runTags, so q1 + q2 = r2's
+    val q1 = r1.quarantineRows
+    val q2 = r2.quarantineRows - r1.quarantineRows
+    assert(q1 > 0 && q2 > 0)
+    assert(metrics.counter("brewery_etl_records_discarded_total",
+      Map("operation" -> "bronze_to_silver")) == (q1 + q2).toDouble)
+  }
+
   test("atomic overwrite leaves no temp dir and swaps content completely") {
     import spark.implicits._
     val path = Files.createTempDirectory("graft_atomic_").toString + "/t"
