@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.Declared
 
 /** Benchmark harness (BASELINE.md protocol): per query, one warmup run
   * then the MEDIAN of 3 timed runs; every run fully materializes the
@@ -229,11 +230,10 @@ object Bench {
     // from this one artifact
     val jvm = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
     val jvmEnd = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.declared.filter(d => only.forall(_.contains(d.name)))
+      .foreach { case Declared(name, plan, _) =>
       try {
-        val m = measureQuery(spark, sfDir, runs, fn)
+        val m = measureQuery(spark, sfDir, runs, plan)
         times += name -> m.median
         jvm += name -> ((m.gcMs, m.heapMb, m.storageMb))
         System.err.println(s"[bench] $name median=${f3(m.median)} s  " +

@@ -3,12 +3,13 @@ package graft
 import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The declared queries — see SURVEY.md §7.
   *
-  * `queries` carries one entry per implemented operator from SURVEY.md §2
-  * (plus the LLM-pipeline extensions); `oracleSql` carries the DuckDB
-  * equivalent for every SQL-expressible query, with column aliases
-  * matching the Spark output exactly.
+  * `declared` is every implemented operator from SURVEY.md §2 (plus the
+  * LLM-pipeline extensions) as one [[graft.queries.Declared]] entry: its
+  * Spark plan and the DuckDB SQL that replays it, with column aliases
+  * matching the Spark output exactly. Each family object is named here
+  * once.
   */
 object SparkEntry {
 
@@ -19,11 +20,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     pipeline.Breweries.silver(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ LlmQueries.queries ++ AnalyticsQueries.queries ++
-      ErQueries.queries ++ StatsQueries.queries ++ MiningQueries.queries
+  /** Every declared query, in name order. */
+  val declared: Seq[Declared] = Seq(
+    ParityQueries.declared, AnalyticsQueries.declared, StatsQueries.declared,
+    MiningQueries.declared, ErQueries.declared, DedupQueries.declared,
+    SampleQueries.declared, TextQueries.declared, EventQueries.declared,
+    SimilarityQueries.declared, VectorQueries.declared,
+    MultimodalQueries.declared, CorpusQueries.declared
+  ).flatten.sortBy(_.name)
+
+  def queries: Map[String, Query] = declared.map(d => d.name -> d.plan).toMap
 
   def oracleSql: Map[String, String] =
-    ParityQueries.oracle ++ LlmQueries.oracle ++ AnalyticsQueries.oracle ++
-      ErQueries.oracle ++ StatsQueries.oracle ++ MiningQueries.oracle
+    declared.map(d => d.name -> d.oracleSql).toMap
 }

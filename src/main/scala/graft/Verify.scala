@@ -3,8 +3,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.declared plan's result → parquet,
+  * plus its oracle SQL in oracle_sql.json, for the DuckDB compare. */
 object Verify {
 
   /** Dump ONE declared query. On success writes the normalized result
@@ -70,23 +70,22 @@ object Verify {
     // produces.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump AND the
-    // oracle json to the named queries (check_oracle.py fails on dumps
-    // missing vs oracle_sql.json, so both must filter together).
+    // Dev loop: SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the run to the
+    // named queries; each dump and its oracle_sql.json entry come from
+    // the same declared entry.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val errors = SparkEntry.queries.filter(kv => wanted(kv._1)).toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
-        dumpOne(spark, sfDir, outDir, name, fn).map(name -> _)
-      }
+    val picked = SparkEntry.declared.filter(d => only.forall(_.contains(d.name)))
+    val errors = picked.flatMap { d =>
+      dumpOne(spark, sfDir, outDir, d.name, d.plan).map(d.name -> _)
+    }
     // Always write the error summary (empty object = clean run), so both
     // driver and humans can distinguish "all ran" from "some rows are
     // __error artifacts" without parsing every dump.
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
       errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = picked.map(d => s"${q(d.name)}: ${q(d.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +

@@ -298,7 +298,7 @@ case class CharGramFingerprint(child: Expression, n: Int)
   *
   * Oracle parity: grams equal DuckDB's
   * `array_to_string(string_split(text, ' ')[i:i+k-1], ' ')` — see
-  * [[graft.queries.LlmQueries]]. With `ws = true`, tokenization switches
+  * [[graft.queries.TextQueries]]. With `ws = true`, tokenization switches
   * to whitespace-robust `split('\\s+')` semantics (empty tokens dropped,
   * grams joined with a normalized single space) — the mode for raw crawl
   * text, whose oracle mirror is
@@ -398,7 +398,7 @@ object SortedOverlapUtil {
   * over: the Jaccard/containment threshold is pushed into the verify
   * join's CONDITION, where codegen has no subexpression elimination, so
   * the intersection kernel runs several times per candidate (see the
-  * dedup_quotes_removed note in LlmQueries) — each run must be cheap.
+  * dedup_quotes_removed note in DedupQueries) — each run must be cheap.
   * Sort/distinctness contract as [[WeightedMinOverlap]]: both arrays
   * ascending, elements unique within a document (they come from set
   * aggregates); NULL entries are skipped.

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StringType
   * derives its signature values from ONE md5 per gram via a literal-seed
   * universal-hash family — see [[MinhashSeeds]]), so results are
   * reproducible across engines (the DuckDB oracles in
-  * [[graft.queries.LlmQueries]] replay the identical computation).
+  * [[graft.queries.DedupQueries]] replay the identical computation).
   *
   * Resource contract: the pair operators persist small sketch relations
   * (MEMORY_AND_DISK, deserialized: SQL-cache blocks are already compact
@@ -699,40 +699,82 @@ object Dedup {
     * posture the containment/setsim verifies already use — each
     * candidate doc's sorted shingle SET as ONE array row, two hash joins,
     * and a zero-alloc graft_soverlap merge walk per pair. The
-    * `inter > 0` residual reproduces the old inner intersection join's
+    * `m > 0` residual reproduces the old inner intersection join's
     * semantics exactly (a zero-overlap candidate produced no row there),
     * independent of `threshold`.
     */
   def jaccardVerify(docs: DataFrame, candidates: DataFrame, idCol: String,
                     k: Int, threshold: Double,
-                    textCol: String = "text"): DataFrame = {
-    // Both relations here are candidate-sized (small by construction) and
-    // referenced 2-3 times each — persist so the upstream LSH pipeline and
-    // the semi-joined shingle array build run once, not per reference.
-    val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cand.count() // serial materialization — see lshCandidatePairs
+                    textCol: String = "text"): DataFrame =
+    overlapScores(shingleOverlap(docs, candidates, idCol, k, textCol),
+      threshold, containment = false)
+
+  /** Candidate pairs with their exact shingle-set overlap
+    * `(doc_a, doc_b, m, sa, sb)`: the corpus is semi-joined down to the
+    * candidate docs, each one's sorted shingle SET built as one array
+    * row, then [[arrayOverlap]]. Both relations are candidate-sized and
+    * referenced 2-3 times each; they are persisted (and materialized
+    * serially, see lshCandidatePairs) so the upstream candidate pipeline
+    * and the array build run once, not per reference — downstream
+    * composers (quote drop, the release chain) re-evaluate the pair
+    * subtree.
+    */
+  private def shingleOverlap(docs: DataFrame, candidates: DataFrame,
+                             idCol: String, k: Int,
+                             textCol: String): DataFrame = {
+    val cand = persisted(candidates)
     val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
       .distinct()
     val needed = docs.join(candIds, col(idCol) === col("cid"), "left_semi")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val arr = shingleRows(needed, idCol, textCol, k)
+    val arr = persisted(shingleRows(needed, idCol, textCol, k)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("s"))).as("ws"))
-      .withColumn("c", size(col("ws")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    arr.count() // serial materialization before the 2 dependent joins
-    val withArrays = cand
+      .withColumn("s", size(col("ws"))))
+    arrayOverlap(cand, arr)
+  }
+
+  /** Candidate pairs `(doc_a, doc_b)` joined to both sides' token arrays
+    * `arr(doc_id, ws, s)`, sorted in binary order with `s` the set size,
+    * giving `(doc_a, doc_b, m, sa, sb)`. The overlap `m` is a zero-alloc
+    * `graft_soverlap` merge walk per pair, where `array_intersect` built
+    * a hash set and a result array per evaluation (r22).
+    */
+  private def arrayOverlap(cand: DataFrame, arr: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(cand.sparkSession)
+    cand
       .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
-        col("c").as("ca")), Seq("doc_a"))
+        col("s").as("sa")), Seq("doc_a"))
       .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
-        col("c").as("cb")), Seq("doc_b"))
-      .withColumn("inter",
-        call_function("graft_soverlap", col("wa"), col("wb")))
-    val jac = col("inter").cast("double") /
-      (col("ca") + col("cb") - col("inter")).cast("double")
-    withArrays
-      .filter(col("inter") > 0 && jac >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"))
+        col("s").as("sb")), Seq("doc_b"))
+      .withColumn("m", call_function("graft_soverlap", col("wa"), col("wb")))
+  }
+
+  /** The verify's output over `(doc_a, doc_b, m, sa, sb)` (`m` the
+    * overlap, `sa`/`sb` the sizes), rounded to 6 places. Jaccard keeps
+    * overlapping pairs at `jaccard >= threshold`; containment keeps the
+    * larger containment at `threshold` and adds both containments, and
+    * for sets `quote_like` = max containment >= 0.8 while jaccard < 0.5,
+    * the asymmetric quote signature. `weighted` prefixes the columns
+    * with `w`.
+    */
+  private def overlapScores(m: DataFrame, threshold: Double,
+                            containment: Boolean,
+                            weighted: Boolean = false): DataFrame = {
+    val wt = if (weighted) "w" else ""
+    val jac = col("m").cast("double") /
+      (col("sa") + col("sb") - col("m")).cast("double")
+    val ca = col("m").cast("double") / col("sa")
+    val cb = col("m").cast("double") / col("sb")
+    if (!containment)
+      m.filter(col("m") > 0 && jac >= threshold)
+        .select(col("doc_a"), col("doc_b"), round(jac, 6).as(s"${wt}jaccard"))
+    else m.filter(greatest(ca, cb) >= threshold).select(Seq(col("doc_a"),
+        col("doc_b"), round(jac, 6).as(s"${wt}jaccard"),
+        round(ca, 6).as(s"${wt}cont_a_in_b"),
+        round(cb, 6).as(s"${wt}cont_b_in_a")) ++
+      (if (weighted) Nil
+       else Seq((greatest(ca, cb) >= 0.8 && jac < 0.5).cast("int")
+         .as("quote_like"))): _*)
   }
 
   /** Containment-friendly candidate generator: bottom-`nAnchors`
@@ -819,44 +861,9 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, candidates: DataFrame, idCol: String,
                        k: Int, threshold: Double,
-                       textCol: String = "text"): DataFrame = {
-    val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cand.count() // serial materialization — see lshCandidatePairs
-    val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
-      .distinct()
-    val needed = docs.join(candIds, col(idCol) === col("cid"), "left_semi")
-    // persisted like the r16 exploded relation was: downstream composers
-    // (quote drop, the release chain) re-evaluate the pair subtree, and
-    // an unpersisted array build would re-shingle per consumer
-    // arrays SORTED at build time (one pass per candidate doc), so the
-    // per-pair intersection is a graft_soverlap merge walk — zero
-    // allocation, where array_intersect built a hash set + result array
-    // per evaluation, and the threshold residual in the verify join's
-    // condition evaluates the kernel several times per candidate (r22)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val arr = shingleRows(needed, idCol, textCol, k)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("s"))).as("ws"))
-      .withColumn("c", size(col("ws")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    arr.count()
-    val withArrays = cand
-      .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
-        col("c").as("ca")), Seq("doc_a"))
-      .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
-        col("c").as("cb")), Seq("doc_b"))
-      .withColumn("inter",
-        call_function("graft_soverlap", col("wa"), col("wb")))
-    val jac = col("inter").cast("double") /
-      (col("ca") + col("cb") - col("inter")).cast("double")
-    val ca = col("inter").cast("double") / col("ca")
-    val cb = col("inter").cast("double") / col("cb")
-    withArrays
-      .filter(greatest(ca, cb) >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"),
-        round(ca, 6).as("cont_a_in_b"), round(cb, 6).as("cont_b_in_a"),
-        (greatest(ca, cb) >= 0.8 && jac < 0.5).cast("int").as("quote_like"))
-  }
+                       textCol: String = "text"): DataFrame =
+    overlapScores(shingleOverlap(docs, candidates, idCol, k, textCol),
+      threshold, containment = true)
 
   /** [[containmentPairs]] over a pre-built (memoized)
     * [[containmentDocTokens]] relation — the candidate-restricted
@@ -866,39 +873,17 @@ object Dedup {
     */
   def containmentPairsFrom(docTokens: DataFrame, candidates: DataFrame,
                            threshold: Double): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cand = candidates.persist(sl)
-    cand.count() // serial materialization — see lshCandidatePairs
+    val cand = persisted(candidates)
     val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
       .distinct()
     // ts is (df, w)-sorted for the prefix lemma; the verify re-sorts the
-    // token array into plain binary order ONCE per candidate doc so each
-    // pair's intersection is a zero-alloc graft_soverlap merge walk (r22
-    // — see containmentPairs)
-    graft.functions.GraftFunctions.register(docTokens.sparkSession)
-    val arr = docTokens
+    // token array into plain binary order ONCE per candidate doc
+    val arr = persisted(docTokens
       .join(candIds, col("doc_id") === col("cid"), "left_semi")
       .select(col("doc_id"),
         sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
-        col("s").as("c"))
-      .persist(sl)
-    arr.count()
-    val withArrays = cand
-      .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
-        col("c").as("ca")), Seq("doc_a"))
-      .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
-        col("c").as("cb")), Seq("doc_b"))
-      .withColumn("inter",
-        call_function("graft_soverlap", col("wa"), col("wb")))
-    val jac = col("inter").cast("double") /
-      (col("ca") + col("cb") - col("inter")).cast("double")
-    val ca = col("inter").cast("double") / col("ca")
-    val cb = col("inter").cast("double") / col("cb")
-    withArrays
-      .filter(greatest(ca, cb) >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jaccard"),
-        round(ca, 6).as("cont_a_in_b"), round(cb, 6).as("cont_b_in_a"),
-        (greatest(ca, cb) >= 0.8 && jac < 0.5).cast("int").as("quote_like"))
+        col("s")))
+    overlapScores(arrayOverlap(cand, arr), threshold, containment = true)
   }
 
   /** Full fuzzy-dedup pipeline: banded-LSH candidates, then exact Jaccard
@@ -1349,36 +1334,14 @@ object Dedup {
     // a self-join's role order yields each pair once; batch legs overlap
     val cand = persisted(if (index.isEmpty) pairs else pairs.distinct())
     val all = index.fold(fresh)(fresh.unionByName(_).dropDuplicates("doc_id"))
-    graft.functions.GraftFunctions.register(fresh.sparkSession)
     val m = tf match {
-      case None =>
-        val arr = all.select(col("doc_id"),
-          sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
-          col("s"))
-        cand
-          .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
-            col("s").as("sa")), Seq("doc_a"))
-          .join(arr.select(col("doc_id").as("doc_b"), col("ws").as("wb"),
-            col("s").as("sb")), Seq("doc_b"))
-          .withColumn("m", call_function("graft_soverlap", col("wa"), col("wb")))
+      case None => arrayOverlap(cand, all.select(col("doc_id"),
+        sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
+        col("s")))
       case Some(tfs) => weightedMergeVerify(cand, tfs,
         all.select(col("doc_id"), col("s").as("sw")), label)
     }
-    val wt = if (weighted) "w" else ""
-    val jac = col("m").cast("double") /
-      (col("sa") + col("sb") - col("m")).cast("double")
-    val ca = col("m").cast("double") / col("sa")
-    val cb = col("m").cast("double") / col("sb")
-    if (!containment)
-      m.filter(jac >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(jac, 6).as(s"${wt}jaccard"))
-    else m.filter(greatest(ca, cb) >= threshold).select(Seq(col("doc_a"),
-        col("doc_b"), round(jac, 6).as(s"${wt}jaccard"),
-        round(ca, 6).as(s"${wt}cont_a_in_b"),
-        round(cb, 6).as(s"${wt}cont_b_in_a")) ++
-      (if (weighted) Nil
-       else Seq((greatest(ca, cb) >= 0.8 && jac < 0.5).cast("int")
-         .as("quote_like"))): _*)
+    overlapScores(m, threshold, containment, weighted)
   }
 
   /** Shared merge-walk verify of the weighted families (r19): builds
@@ -1404,6 +1367,7 @@ object Dedup {
   private def weightedMergeVerify(cand: DataFrame, tf: DataFrame,
                                   sums: DataFrame,
                                   label: String): DataFrame = {
+    graft.functions.GraftFunctions.register(cand.sparkSession)
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docArrs = tf.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("w"), col("tf"))))

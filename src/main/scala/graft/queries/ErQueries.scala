@@ -74,40 +74,57 @@ object ErQueries {
   private def dirty(s: org.apache.spark.sql.SparkSession, dir: String) =
     clean(s, dir).selectExpr("c_custkey", s"$MutateSql AS nm")
 
-  val queries: Map[String, Query] = Map(
+  val declared: Seq[Declared] = Seq(
     // unordered within-relation pairs at distance <= 1 over the clean
     // names — dedup-candidate discovery, the self-join face
-    "er_self_pairs" -> ((s, dir) =>
+    Declared("er_self_pairs", (s, dir) =>
       EntityResolution.editDistanceSelfJoin(clean(s, dir), "c_custkey", "nm",
           d = 1)
-        .select(col("id_a"), col("id_b"), col("dist"))),
+        .select(col("id_a"), col("id_b"), col("dist")),
+      s"""WITH $FixtureCtes
+         |SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
+         |       CAST(levenshtein(a.nm, b.nm) AS INT) AS dist
+         |FROM cl a JOIN cl b ON a.c_custkey < b.c_custkey
+         |WHERE levenshtein(a.nm, b.nm) <= 1""".stripMargin),
 
     // dirty->clean record linkage at distance <= 1: every candidate pair
     // (a dirty record can match several clean names — the mutation makes
     // it distance 1 from its OWN source and sometimes distance 1 from a
     // neighbor key's name too)
-    "er_dirty_link" -> ((s, dir) =>
+    Declared("er_dirty_link", (s, dir) =>
       EntityResolution.editDistanceJoin(
         dirty(s, dir).select(col("c_custkey").as("dirty_id"), col("nm")),
         "dirty_id", "nm",
         clean(s, dir).select(col("c_custkey").as("clean_id"), col("nm")),
-        "clean_id", "nm", d = 1)),
+        "clean_id", "nm", d = 1),
+      s"""WITH $FixtureCtes
+         |SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
+         |       CAST(levenshtein(d.nm, c.nm) AS INT) AS dist
+         |FROM dr d JOIN cl c ON levenshtein(d.nm, c.nm) <= 1""".stripMargin),
 
     // resolution: each dirty record's single best match (min distance,
     // min clean id on ties) — one aggregation over the pair relation
-    "er_link_best" -> ((s, dir) =>
+    Declared("er_link_best", (s, dir) =>
       EntityResolution.linkBest(
         dirty(s, dir).select(col("c_custkey").as("dirty_id"), col("nm")),
         "dirty_id", "nm",
         clean(s, dir).select(col("c_custkey").as("clean_id"), col("nm")),
-        "clean_id", "nm", d = 1)),
+        "clean_id", "nm", d = 1),
+      s"""WITH $FixtureCtes,
+         |pr AS (SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
+         |              CAST(levenshtein(d.nm, c.nm) AS INT) AS dist
+         |       FROM dr d JOIN cl c ON levenshtein(d.nm, c.nm) <= 1)
+         |SELECT dirty_id, clean_id, dist FROM (
+         |  SELECT *, row_number() OVER (
+         |    PARTITION BY dirty_id ORDER BY dist, clean_id) AS rn FROM pr)
+         |WHERE rn = 1""".stripMargin),
 
     // Jaro-Winkler re-rank of the blocked candidate pairs: the
     // record-linkage two-stage (block exactly, score finely) — the
     // native graft_jaro_winkler expression is byte-for-byte pinned to
     // DuckDB's jaro_winkler_similarity, so the SCORES hash-gate, not
     // just the pair set
-    "er_jw_rerank" -> ((s, dir) => {
+    Declared("er_jw_rerank", (s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val d = dirty(s, dir).select(col("c_custkey").as("dirty_id"),
         col("nm").as("dn"))
@@ -122,7 +139,12 @@ object ErQueries {
           org.apache.spark.sql.functions.round(
             org.apache.spark.sql.functions.call_function(
               "graft_jaro_winkler", col("dn"), col("cn")), 6).as("jw"))
-    }),
+    },
+      s"""WITH $FixtureCtes
+         |SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
+         |       CAST(levenshtein(d.nm, c.nm) AS INT) AS dist,
+         |       round(jaro_winkler_similarity(d.nm, c.nm), 6) AS jw
+         |FROM dr d JOIN cl c ON levenshtein(d.nm, c.nm) <= 1""".stripMargin),
 
     // the rescued self-join on the FLOODING name universe (plain
     // zero-padded keys: the constant leading-zero half puts one segment
@@ -130,18 +152,23 @@ object ErQueries {
     // The cap (64) genuinely fires here, so this query proves the
     // deletion-neighborhood second family restores EXACT recall: the
     // oracle is the plain brute-force cross product, no cap modeled
-    "er_self_pairs_rescued" -> ((s, dir) =>
+    Declared("er_self_pairs_rescued", (s, dir) =>
       EntityResolution.editDistanceSelfJoinRescued(
         Tables.customer(s, dir).selectExpr("c_custkey",
           s"$FloodNameSql AS nm"),
         "c_custkey", "nm", d = 1, maxBucketSize = 64)
-        .select(col("id_a"), col("id_b"), col("dist"))),
+        .select(col("id_a"), col("id_b"), col("dist")),
+      s"""WITH fl AS (SELECT c_custkey, $FloodNameSql AS nm FROM customer)
+         |SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
+         |       CAST(levenshtein(a.nm, b.nm) AS INT) AS dist
+         |FROM fl a JOIN fl b ON a.c_custkey < b.c_custkey
+         |WHERE levenshtein(a.nm, b.nm) <= 1""".stripMargin),
 
     // rescued record linkage on the flooding universe: dirty copies of
     // the zero-padded names linked back to the clean relation with the
     // cap armed — same contract as er_self_pairs_rescued (the oracle
     // models no cap; green only because recall is exactly restored)
-    "er_dirty_link_rescued" -> ((s, dir) => {
+    Declared("er_dirty_link_rescued", (s, dir) => {
       val cl = Tables.customer(s, dir).selectExpr("c_custkey",
         s"$FloodNameSql AS nm")
       val dr = cl.selectExpr("c_custkey", s"$MutateSql AS nm")
@@ -155,21 +182,42 @@ object ErQueries {
         "dirty_id", "nm",
         cl.select(col("c_custkey").as("clean_id"), col("nm")),
         "clean_id", "nm", d = 1, maxBucketSize = 256)
-    }),
+    },
+      s"""WITH fl AS (SELECT c_custkey, $FloodNameSql AS nm FROM customer),
+         |fd AS (SELECT c_custkey, $MutateSql AS nm
+         |       FROM (SELECT c_custkey, nm FROM fl) AS cl)
+         |SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
+         |       CAST(levenshtein(d.nm, c.nm) AS INT) AS dist
+         |FROM fd d JOIN fl c ON levenshtein(d.nm, c.nm) <= 1""".stripMargin),
 
     // entity clusters over the scrambled universe: clean records union
     // their dirty copies (ids offset +100000), connected components over
     // the distance-1 graph, every record labeled with its component min —
     // the oracle replays the closure as a recursive CTE over the same
     // brute-force pair set
-    "er_clusters" -> ((s, dir) => {
+    Declared("er_clusters", (s, dir) => {
       val base = Tables.customer(s, dir)
         .selectExpr("c_custkey", s"$ScrambledNameSql AS nm")
       val u = base.select(col("c_custkey").as("id"), col("nm"))
         .unionByName(base.selectExpr("c_custkey", s"$MutateSql AS nm")
           .select((col("c_custkey") + 100000L).as("id"), col("nm")))
       EntityResolution.clusterIds(u, "id", "nm", d = 1)
-    }),
+    },
+      s"""WITH RECURSIVE
+         |s0 AS (SELECT c_custkey, $ScrambledNameSql AS nm FROM customer),
+         |u AS (SELECT c_custkey AS id, nm FROM s0
+         |      UNION ALL
+         |      SELECT c_custkey + 100000 AS id, $MutateSql AS nm
+         |      FROM (SELECT c_custkey, nm FROM s0) AS cl),
+         |pr AS (SELECT a.id AS ida, b.id AS idb
+         |       FROM u a JOIN u b ON a.id < b.id
+         |       WHERE levenshtein(a.nm, b.nm) <= 1),
+         |e AS (SELECT ida AS a, idb AS b FROM pr
+         |      UNION SELECT idb, ida FROM pr),
+         |r AS (SELECT id, id AS reach FROM u
+         |      UNION
+         |      SELECT r.id, e.b FROM r JOIN e ON r.reach = e.a)
+         |SELECT id, min(reach) AS cluster_id FROM r GROUP BY id""".stripMargin),
 
     // clusters over the FLOODING universe with the cap armed (r16
     // verdict task 5: the downstream face must consume the RESCUED
@@ -180,7 +228,7 @@ object ErQueries {
     // row, far over the 64 cap), so the rescue genuinely fires. The
     // oracle models NO cap — green only because recall is exactly
     // restored
-    "er_clusters_rescued" -> ((s, dir) => {
+    Declared("er_clusters_rescued", (s, dir) => {
       val base = Tables.customer(s, dir)
         .filter(col("c_custkey") % 5 === 0)
         .selectExpr("c_custkey", s"$FloodNameSql AS nm")
@@ -189,71 +237,7 @@ object ErQueries {
           .select((col("c_custkey") + 100000L).as("id"), col("nm")))
       EntityResolution.clusterIdsRescued(u, "id", "nm", d = 1,
         maxBucketSize = 64)
-    }),
-
-    // best-match resolution over the flooding universe with the cap
-    // armed: under the flood the plain capped linkBest degrades to
-    // "best SURVIVING match" — the rescued face restores exact recall
-    // first, so the min-distance aggregate sees every true candidate
-    "er_link_best_rescued" -> ((s, dir) => {
-      val cl = Tables.customer(s, dir).selectExpr("c_custkey",
-        s"$FloodNameSql AS nm")
-      val dr = cl.selectExpr("c_custkey", s"$MutateSql AS nm")
-      EntityResolution.linkBestRescued(
-        dr.select(col("c_custkey").as("dirty_id"), col("nm")),
-        "dirty_id", "nm",
-        cl.select(col("c_custkey").as("clean_id"), col("nm")),
-        "clean_id", "nm", d = 1, maxBucketSize = 256)
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-    "er_self_pairs" ->
-      s"""WITH $FixtureCtes
-         |SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-         |       CAST(levenshtein(a.nm, b.nm) AS INT) AS dist
-         |FROM cl a JOIN cl b ON a.c_custkey < b.c_custkey
-         |WHERE levenshtein(a.nm, b.nm) <= 1""".stripMargin,
-
-    "er_self_pairs_rescued" ->
-      s"""WITH fl AS (SELECT c_custkey, $FloodNameSql AS nm FROM customer)
-         |SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-         |       CAST(levenshtein(a.nm, b.nm) AS INT) AS dist
-         |FROM fl a JOIN fl b ON a.c_custkey < b.c_custkey
-         |WHERE levenshtein(a.nm, b.nm) <= 1""".stripMargin,
-
-    "er_dirty_link" ->
-      s"""WITH $FixtureCtes
-         |SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
-         |       CAST(levenshtein(d.nm, c.nm) AS INT) AS dist
-         |FROM dr d JOIN cl c ON levenshtein(d.nm, c.nm) <= 1""".stripMargin,
-
-    "er_dirty_link_rescued" ->
-      s"""WITH fl AS (SELECT c_custkey, $FloodNameSql AS nm FROM customer),
-         |fd AS (SELECT c_custkey, $MutateSql AS nm
-         |       FROM (SELECT c_custkey, nm FROM fl) AS cl)
-         |SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
-         |       CAST(levenshtein(d.nm, c.nm) AS INT) AS dist
-         |FROM fd d JOIN fl c ON levenshtein(d.nm, c.nm) <= 1""".stripMargin,
-
-    "er_jw_rerank" ->
-      s"""WITH $FixtureCtes
-         |SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
-         |       CAST(levenshtein(d.nm, c.nm) AS INT) AS dist,
-         |       round(jaro_winkler_similarity(d.nm, c.nm), 6) AS jw
-         |FROM dr d JOIN cl c ON levenshtein(d.nm, c.nm) <= 1""".stripMargin,
-
-    "er_link_best" ->
-      s"""WITH $FixtureCtes,
-         |pr AS (SELECT d.c_custkey AS dirty_id, c.c_custkey AS clean_id,
-         |              CAST(levenshtein(d.nm, c.nm) AS INT) AS dist
-         |       FROM dr d JOIN cl c ON levenshtein(d.nm, c.nm) <= 1)
-         |SELECT dirty_id, clean_id, dist FROM (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY dirty_id ORDER BY dist, clean_id) AS rn FROM pr)
-         |WHERE rn = 1""".stripMargin,
-
-    "er_clusters_rescued" ->
+    },
       s"""WITH RECURSIVE
          |s0 AS (SELECT c_custkey, $FloodNameSql AS nm FROM customer
          |       WHERE c_custkey % 5 = 0),
@@ -269,9 +253,22 @@ object ErQueries {
          |r AS (SELECT id, id AS reach FROM u
          |      UNION
          |      SELECT r.id, e.b FROM r JOIN e ON r.reach = e.a)
-         |SELECT id, min(reach) AS cluster_id FROM r GROUP BY id""".stripMargin,
+         |SELECT id, min(reach) AS cluster_id FROM r GROUP BY id""".stripMargin),
 
-    "er_link_best_rescued" ->
+    // best-match resolution over the flooding universe with the cap
+    // armed: under the flood the plain capped linkBest degrades to
+    // "best SURVIVING match" — the rescued face restores exact recall
+    // first, so the min-distance aggregate sees every true candidate
+    Declared("er_link_best_rescued", (s, dir) => {
+      val cl = Tables.customer(s, dir).selectExpr("c_custkey",
+        s"$FloodNameSql AS nm")
+      val dr = cl.selectExpr("c_custkey", s"$MutateSql AS nm")
+      EntityResolution.linkBestRescued(
+        dr.select(col("c_custkey").as("dirty_id"), col("nm")),
+        "dirty_id", "nm",
+        cl.select(col("c_custkey").as("clean_id"), col("nm")),
+        "clean_id", "nm", d = 1, maxBucketSize = 256)
+    },
       s"""WITH fl AS (SELECT c_custkey, $FloodNameSql AS nm FROM customer),
          |fd AS (SELECT c_custkey, $MutateSql AS nm
          |       FROM (SELECT c_custkey, nm FROM fl) AS cl),
@@ -281,23 +278,6 @@ object ErQueries {
          |SELECT dirty_id, clean_id, dist FROM (
          |  SELECT *, row_number() OVER (
          |    PARTITION BY dirty_id ORDER BY dist, clean_id) AS rn FROM pr)
-         |WHERE rn = 1""".stripMargin,
-
-    "er_clusters" ->
-      s"""WITH RECURSIVE
-         |s0 AS (SELECT c_custkey, $ScrambledNameSql AS nm FROM customer),
-         |u AS (SELECT c_custkey AS id, nm FROM s0
-         |      UNION ALL
-         |      SELECT c_custkey + 100000 AS id, $MutateSql AS nm
-         |      FROM (SELECT c_custkey, nm FROM s0) AS cl),
-         |pr AS (SELECT a.id AS ida, b.id AS idb
-         |       FROM u a JOIN u b ON a.id < b.id
-         |       WHERE levenshtein(a.nm, b.nm) <= 1),
-         |e AS (SELECT ida AS a, idb AS b FROM pr
-         |      UNION SELECT idb, ida FROM pr),
-         |r AS (SELECT id, id AS reach FROM u
-         |      UNION
-         |      SELECT r.id, e.b FROM r JOIN e ON r.reach = e.a)
-         |SELECT id, min(reach) AS cluster_id FROM r GROUP BY id""".stripMargin
+         |WHERE rn = 1""".stripMargin)
   )
 }

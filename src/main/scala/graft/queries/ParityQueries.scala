@@ -41,231 +41,212 @@ object ParityQueries {
   def scratchInvocation(name: String): String =
     s"${scratch(name)}_i${invocationSeq.incrementAndGet()}"
 
-  val queries: Map[String, Query] = Map(
+  val declared: Seq[Declared] = Seq(
     // S8 — plain parquet table scan (reference helpers.py:326-360).
-    "s8_parquet_scan" -> ((s, dir) => Tables.supplier(s, dir)),
+    Declared("s8_parquet_scan", (s, dir) => Tables.supplier(s, dir),
+      "SELECT * FROM supplier"),
 
     // S1/S2/S3/S5 — the paginated extract connector end-to-end against the
     // fixture source (reference extract_brewery_data.py:68-133): page loop
     // with stop conditions writes JSON landing files, read back as one
     // relation. The HTTP impl shares the same loop (SourceSpec covers its
     // retry/backoff contract offline).
-    "s1_landing_extract" -> ((s, dir) => {
+    Declared("s1_landing_extract", (s, dir) => {
       val n = Tables.nation(s, dir)
       val source = new graft.sources.FixtureBrewerySource(n.toJSON.collect().toSeq)
       val landing = scratch("s1_landing")
       graft.sources.Extractor.extract(source, landing, perPage = 10, batchTag = "verify")
       s.read.schema(n.schema).option("multiLine", true).json(landing)
-    }),
+    },
+      "SELECT * FROM nation"),
 
     // S4/S6/U1 — JSON landing-file read: write the nation table as
     // JSON-lines landing files, read them back as one relation (schema-on-
     // read union of files, reference landing_to_bronze.py:128-139).
     // Fixed scratch dirs (overwritten per run) instead of fresh temp dirs,
     // so repeated Verify/bench runs don't leak copies under /tmp.
-    "s4_json_landing_read" -> ((s, dir) => {
+    Declared("s4_json_landing_read", (s, dir) => {
       val n = Tables.nation(s, dir)
       val tmp = scratch("landing")
       n.write.mode("overwrite").json(tmp)
       s.read.schema(n.schema).json(tmp)
-    }),
+    },
+      "SELECT * FROM nation"),
 
     // S7/S9 — partitioned write + partition-discovery read
     // (reference bronze_to_silver.py:142, helpers.py:436-493).
-    "s7_partitioned_roundtrip" -> ((s, dir) => {
+    Declared("s7_partitioned_roundtrip", (s, dir) => {
       val li = Tables.lineitem(s, dir)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       val tmp = scratch("part")
       li.write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
       s.read.parquet(tmp).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    }),
+    },
+      "SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem"),
 
     // Source-format coverage beyond parquet/JSON: header'd CSV and ORC
     // round trips (write the table out, read it back with schema).
-    "s7_csv_roundtrip" -> ((s, dir) => {
+    Declared("s7_csv_roundtrip", (s, dir) => {
       val n = Tables.nation(s, dir)
       val tmp = scratch("csv")
       n.write.mode("overwrite").option("header", true).csv(tmp)
       s.read.schema(n.schema).option("header", true).csv(tmp)
-    }),
+    },
+      "SELECT * FROM nation"),
 
-    "s7_orc_roundtrip" -> ((s, dir) => {
+    Declared("s7_orc_roundtrip", (s, dir) => {
       val sup = Tables.supplier(s, dir)
       val tmp = scratch("orc")
       sup.write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
-    }),
+    },
+      "SELECT * FROM supplier"),
 
     // F1 — null-key split, valid side (reference bronze_to_silver.py:164-204).
-    "f1_valid_rows" -> ((s, dir) =>
-      Quality.nullKeySplit(Breweries.bronze(s, dir), Breweries.KeyFields)._1),
-
-    // F1 — null-key split, quarantine side with reason + ISO-string
-    // timestamp enrichment (reference bronze_to_silver.py:182-183).
-    "f1_quarantine_rows" -> ((s, dir) =>
-      Quality.nullKeySplit(Breweries.bronze(s, dir), Breweries.KeyFields)._2),
-
-    // F3 — duplicate-id diagnostic (reference helpers.py:116-131).
-    "f3_duplicate_ids" -> ((s, dir) =>
-      Quality.duplicateIds(Tables.lineitem(s, dir), "l_orderkey")
-        .withColumnRenamed("l_orderkey", "id")),
-
-    // P1 — string casts (reference helpers.py:183-197).
-    "p1_cast_strings" -> ((s, dir) =>
-      Cleaning.castStrings(
-        Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus"),
-        Seq("o_orderkey", "o_custkey", "not_a_column"))),
-
-    // P2 — location standardization (reference helpers.py:43-57).
-    "p2_location_standardize" -> ((s, dir) =>
-      Cleaning.standardizeLocations(Breweries.bronze(s, dir))
-        .select("id", "name", "city", "state", "country", "location")),
-
-    // P3 — categorical recode (reference helpers.py:60-86).
-    "p3_type_recode" -> ((s, dir) =>
-      Cleaning.recodeType(
-        Tables.events(s, dir).select("event_id", "event_type"),
-        "event_type", canonical = Set("click", "view", "purchase"))),
-
-    // P4 — URL normalization (reference helpers.py:89-113).
-    "p4_url_normalize" -> ((s, dir) =>
-      Cleaning.normalizeUrl(
-        Breweries.bronze(s, dir).select("name", "website_url"), "website_url")),
-
-    // P5/P6 — batch metadata columns (reference helpers.py:312-323,134-147).
-    "p5_p6_metadata" -> ((s, dir) => {
-      val base = Tables.orders(s, dir).select("o_orderkey")
-      Cleaning.withProcessingMetadata(
-        Cleaning.withIngestionMetadata(base, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")),
-        processedAtIso = "2026-01-01T00:00:00")
-    }),
-
-    // A1 — generic group-count (reference helpers.py:496-509).
-    "a1_group_count" -> ((s, dir) =>
-      Aggregations.groupCount(
-        Tables.orders(s, dir), Seq("o_orderstatus", "o_orderpriority"), "cnt")),
-
-    // A2 — gold by_type_location (reference silver_to_gold.py:117-119).
-    "a2_gold_by_type_location" -> ((s, dir) => Breweries.goldByTypeLocation(s, dir)),
-
-    // A3 — gold by_location (reference silver_to_gold.py:120-122).
-    "a3_gold_by_location" -> ((s, dir) => Breweries.goldByLocation(s, dir)),
-
-    // A2+A3 fused: one grouping-sets pass produces both gold tables
-    // (one scan + one shuffle instead of two — the reference runs them
-    // independently; SURVEY §2.4 flags the fusion).
-    "a2_a3_grouping_sets" -> ((s, dir) =>
-      Aggregations.goldGroupingSets(Breweries.silver(s, dir))),
-
-    // A4 — exact distinct count (reference bronze_to_silver.py:83-84).
-    "a4_distinct_count" -> ((s, dir) =>
-      Tables.lineitem(s, dir).agg(countDistinct(col("l_returnflag")).as("n_distinct"))),
-
-    // A5 — value counts (reference helpers.py:83).
-    "a5_value_counts" -> ((s, dir) =>
-      Aggregations.valueCounts(Tables.events(s, dir), "event_type")),
-
-    // A6 — row count (record metrics, e.g. reference bronze_to_silver.py:65).
-    "a6_row_count" -> ((s, dir) =>
-      Tables.lineitem(s, dir).agg(count(lit(1)).as("n"))),
-
-    // A7 — per-field null counts, fused into one pass
-    // (reference bronze_to_silver.py:185-188).
-    "a7_null_counts" -> ((s, dir) =>
-      Quality.nullCounts(Breweries.bronze(s, dir), Seq("id", "brewery_type", "website_url"))),
-
-    // U1/U2 — union-all (reference landing_to_bronze.py:128-139,
-    // helpers.py:458-480): two disjoint filters unioned back == source.
-    // Null-COMPLETE split (`<=>`): a NULL o_orderstatus lands in the
-    // negated side instead of being dropped by null-rejecting `=!=`.
-    "u1_union_all" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      o.filter(col("o_orderstatus") === "O")
-        .unionByName(o.filter(!(col("o_orderstatus") <=> "O")))
-    }),
-
-    // EP2 — the full silver chain end-to-end (F1+P1+P2+P3+P4+P6).
-    "medallion_silver" -> ((s, dir) => Breweries.silver(s, dir))
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s8_parquet_scan" -> "SELECT * FROM supplier",
-    "s1_landing_extract" -> "SELECT * FROM nation",
-    "s7_csv_roundtrip" -> "SELECT * FROM nation",
-    "s7_orc_roundtrip" -> "SELECT * FROM supplier",
-    "s4_json_landing_read" -> "SELECT * FROM nation",
-    "s7_partitioned_roundtrip" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem",
-    "f1_valid_rows" ->
+    Declared("f1_valid_rows", (s, dir) =>
+      Quality.nullKeySplit(Breweries.bronze(s, dir), Breweries.KeyFields)._1,
       s"""WITH bronze AS (${Breweries.BronzeSql})
          |SELECT * FROM bronze
          |WHERE id IS NOT NULL AND brewery_type IS NOT NULL AND state IS NOT NULL
-         |  AND city IS NOT NULL AND country IS NOT NULL""".stripMargin,
-    "f1_quarantine_rows" ->
+         |  AND city IS NOT NULL AND country IS NOT NULL""".stripMargin),
+
+    // F1 — null-key split, quarantine side with reason + ISO-string
+    // timestamp enrichment (reference bronze_to_silver.py:182-183).
+    Declared("f1_quarantine_rows", (s, dir) =>
+      Quality.nullKeySplit(Breweries.bronze(s, dir), Breweries.KeyFields)._2,
       s"""WITH bronze AS (${Breweries.BronzeSql})
          |SELECT *, 'missing_key_values' AS quarantine_reason,
          |       '2026-01-01T00:00:00' AS quarantine_timestamp FROM bronze
          |WHERE id IS NULL OR brewery_type IS NULL OR state IS NULL
-         |   OR city IS NULL OR country IS NULL""".stripMargin,
-    "f3_duplicate_ids" ->
-      "SELECT l_orderkey AS id, count(*) AS cnt FROM lineitem GROUP BY 1 HAVING count(*) > 1",
-    "p1_cast_strings" ->
+         |   OR city IS NULL OR country IS NULL""".stripMargin),
+
+    // F3 — duplicate-id diagnostic (reference helpers.py:116-131).
+    Declared("f3_duplicate_ids", (s, dir) =>
+      Quality.duplicateIds(Tables.lineitem(s, dir), "l_orderkey")
+        .withColumnRenamed("l_orderkey", "id"),
+      "SELECT l_orderkey AS id, count(*) AS cnt FROM lineitem GROUP BY 1 HAVING count(*) > 1"),
+
+    // P1 — string casts (reference helpers.py:183-197).
+    Declared("p1_cast_strings", (s, dir) =>
+      Cleaning.castStrings(
+        Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderstatus"),
+        Seq("o_orderkey", "o_custkey", "not_a_column")),
       """SELECT CAST(o_orderkey AS VARCHAR) AS o_orderkey,
         |       CAST(o_custkey AS VARCHAR) AS o_custkey, o_orderstatus
-        |FROM orders""".stripMargin,
-    "p2_location_standardize" ->
+        |FROM orders""".stripMargin),
+
+    // P2 — location standardization (reference helpers.py:43-57).
+    Declared("p2_location_standardize", (s, dir) =>
+      Cleaning.standardizeLocations(Breweries.bronze(s, dir))
+        .select("id", "name", "city", "state", "country", "location"),
       s"""WITH bronze AS (${Breweries.BronzeSql})
          |SELECT id, name, upper(city) AS city, upper(state) AS state,
          |       upper(country) AS country, upper(country) AS location
-         |FROM bronze""".stripMargin,
-    "p3_type_recode" ->
+         |FROM bronze""".stripMargin),
+
+    // P3 — categorical recode (reference helpers.py:60-86).
+    Declared("p3_type_recode", (s, dir) =>
+      Cleaning.recodeType(
+        Tables.events(s, dir).select("event_id", "event_type"),
+        "event_type", canonical = Set("click", "view", "purchase")),
       """SELECT event_id,
         |  CASE WHEN event_type IS NULL THEN 'unknown'
         |       WHEN lower(trim(event_type)) IN ('click', 'purchase', 'view')
         |         THEN lower(trim(event_type))
         |       ELSE 'other' END AS event_type
-        |FROM events""".stripMargin,
-    "p4_url_normalize" ->
+        |FROM events""".stripMargin),
+
+    // P4 — URL normalization (reference helpers.py:89-113).
+    Declared("p4_url_normalize", (s, dir) =>
+      Cleaning.normalizeUrl(
+        Breweries.bronze(s, dir).select("name", "website_url"), "website_url"),
       s"""WITH bronze AS (${Breweries.BronzeSql})
          |SELECT name,
          |  CASE WHEN website_url IS NULL OR trim(website_url) = '' THEN NULL
          |       WHEN regexp_matches(trim(website_url), '^https?://') THEN trim(website_url)
          |       ELSE 'http://' || trim(website_url) END AS website_url
-         |FROM bronze""".stripMargin,
-    "p5_p6_metadata" ->
+         |FROM bronze""".stripMargin),
+
+    // P5/P6 — batch metadata columns (reference helpers.py:312-323,134-147).
+    Declared("p5_p6_metadata", (s, dir) => {
+      val base = Tables.orders(s, dir).select("o_orderkey")
+      Cleaning.withProcessingMetadata(
+        Cleaning.withIngestionMetadata(base, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")),
+        processedAtIso = "2026-01-01T00:00:00")
+    },
       """SELECT o_orderkey, TIMESTAMP '2026-01-01 00:00:00' AS ingestion_timestamp,
         |       '2026-01-01T00:00:00' AS processed_at, '1.0' AS etl_version
-        |FROM orders""".stripMargin,
-    "a1_group_count" ->
-      "SELECT o_orderstatus, o_orderpriority, count(*) AS cnt FROM orders GROUP BY 1, 2",
-    "a2_gold_by_type_location" ->
+        |FROM orders""".stripMargin),
+
+    // A1 — generic group-count (reference helpers.py:496-509).
+    Declared("a1_group_count", (s, dir) =>
+      Aggregations.groupCount(
+        Tables.orders(s, dir), Seq("o_orderstatus", "o_orderpriority"), "cnt"),
+      "SELECT o_orderstatus, o_orderpriority, count(*) AS cnt FROM orders GROUP BY 1, 2"),
+
+    // A2 — gold by_type_location (reference silver_to_gold.py:117-119).
+    Declared("a2_gold_by_type_location", (s, dir) => Breweries.goldByTypeLocation(s, dir),
       s"""WITH silver AS (${Breweries.SilverSql})
          |SELECT brewery_type, location, state, city, count(*) AS brewery_count
-         |FROM silver GROUP BY 1, 2, 3, 4""".stripMargin,
-    "a3_gold_by_location" ->
+         |FROM silver GROUP BY 1, 2, 3, 4""".stripMargin),
+
+    // A3 — gold by_location (reference silver_to_gold.py:120-122).
+    Declared("a3_gold_by_location", (s, dir) => Breweries.goldByLocation(s, dir),
       s"""WITH silver AS (${Breweries.SilverSql})
          |SELECT location, state, city, count(*) AS brewery_count
-         |FROM silver GROUP BY 1, 2, 3""".stripMargin,
-    "a2_a3_grouping_sets" ->
+         |FROM silver GROUP BY 1, 2, 3""".stripMargin),
+
+    // A2+A3 fused: one grouping-sets pass produces both gold tables
+    // (one scan + one shuffle instead of two — the reference runs them
+    // independently; SURVEY §2.4 flags the fusion).
+    Declared("a2_a3_grouping_sets", (s, dir) =>
+      Aggregations.goldGroupingSets(Breweries.silver(s, dir)),
       s"""WITH silver AS (${Breweries.SilverSql})
          |SELECT brewery_type, location, state, city,
          |       count(*) AS brewery_count,
          |       CAST(grouping(brewery_type) AS INT) AS is_by_location
          |FROM silver
          |GROUP BY GROUPING SETS ((brewery_type, location, state, city),
-         |                        (location, state, city))""".stripMargin,
-    "a4_distinct_count" ->
-      "SELECT count(DISTINCT l_returnflag) AS n_distinct FROM lineitem",
-    "a5_value_counts" ->
-      "SELECT event_type, count(*) AS count FROM events GROUP BY 1",
-    "a6_row_count" -> "SELECT count(*) AS n FROM lineitem",
-    "a7_null_counts" ->
+         |                        (location, state, city))""".stripMargin),
+
+    // A4 — exact distinct count (reference bronze_to_silver.py:83-84).
+    Declared("a4_distinct_count", (s, dir) =>
+      Tables.lineitem(s, dir).agg(countDistinct(col("l_returnflag")).as("n_distinct")),
+      "SELECT count(DISTINCT l_returnflag) AS n_distinct FROM lineitem"),
+
+    // A5 — value counts (reference helpers.py:83).
+    Declared("a5_value_counts", (s, dir) =>
+      Aggregations.valueCounts(Tables.events(s, dir), "event_type"),
+      "SELECT event_type, count(*) AS count FROM events GROUP BY 1"),
+
+    // A6 — row count (record metrics, e.g. reference bronze_to_silver.py:65).
+    Declared("a6_row_count", (s, dir) =>
+      Tables.lineitem(s, dir).agg(count(lit(1)).as("n")),
+      "SELECT count(*) AS n FROM lineitem"),
+
+    // A7 — per-field null counts, fused into one pass
+    // (reference bronze_to_silver.py:185-188).
+    Declared("a7_null_counts", (s, dir) =>
+      Quality.nullCounts(Breweries.bronze(s, dir), Seq("id", "brewery_type", "website_url")),
       s"""WITH bronze AS (${Breweries.BronzeSql})
          |SELECT count(*) - count(id) AS id_nulls,
          |       count(*) - count(brewery_type) AS brewery_type_nulls,
          |       count(*) - count(website_url) AS website_url_nulls
-         |FROM bronze""".stripMargin,
-    "u1_union_all" -> "SELECT * FROM orders",
-    "medallion_silver" -> Breweries.SilverSql
+         |FROM bronze""".stripMargin),
+
+    // U1/U2 — union-all (reference landing_to_bronze.py:128-139,
+    // helpers.py:458-480): two disjoint filters unioned back == source.
+    // Null-COMPLETE split (`<=>`): a NULL o_orderstatus lands in the
+    // negated side instead of being dropped by null-rejecting `=!=`.
+    Declared("u1_union_all", (s, dir) => {
+      val o = Tables.orders(s, dir)
+      o.filter(col("o_orderstatus") === "O")
+        .unionByName(o.filter(!(col("o_orderstatus") <=> "O")))
+    },
+      "SELECT * FROM orders"),
+
+    // EP2 — the full silver chain end-to-end (F1+P1+P2+P3+P4+P6).
+    Declared("medallion_silver", (s, dir) => Breweries.silver(s, dir),
+      Breweries.SilverSql)
   )
 }

@@ -1,0 +1,1329 @@
+package graft.queries
+
+import graft.Tables
+import graft.ops.Similarity
+import org.apache.spark.sql.functions._
+import LlmFixtures._
+
+/** Similarity-search queries over `embeddings`: brute-force top-k,
+  * Matryoshka and quantized scoring, IVF, product quantization and the
+  * served residual IVF-PQ rung, with their recall audits.
+  */
+object SimilarityQueries {
+
+  /** Per-subspace Lloyd chain like [[pqLearnedCbDef]], but over an
+    * ARBITRARY slice-relation CTE (vec_id, sub, xe) and with prefixed
+    * CTE names — the residual oracle trains its PQ codebooks on
+    * residual slices (`rxs`) instead of raw ones (`xs`). Seeds are the
+    * `vec_id % 50 = 0` rows of the slice relation (the SQL twin of
+    * [[Similarity.pqCodebookResidualLearned]]'s seeding).
+    */
+  private def pqLearnedCbDefOver(iters: Int, xsName: String,
+                                 pfx: String,
+                                 seedSql: Option[String] = None): String = {
+    val chain = (1 to iters).map { i =>
+      s""",
+         |${pfx}a$i AS MATERIALIZED (SELECT vec_id, sub, xe, code FROM (
+         |   SELECT x.vec_id, x.sub, x.xe, c.code,
+         |     row_number() OVER (PARTITION BY x.vec_id, x.sub
+         |       ORDER BY round(${dotSql("x.xe", "x.xe")}
+         |           - 2.0 * ${dotSql("x.xe", "c.ce")}
+         |           + ${dotSql("c.ce", "c.ce")}, 6), c.code) AS rn
+         |   FROM $xsName x JOIN ${pfx}cb${i - 1} c ON x.sub = c.sub)
+         |   WHERE rn = 1),
+         |${pfx}cb$i AS MATERIALIZED (SELECT sub, code, list(av ORDER BY i) AS ce FROM (
+         |   SELECT sub, code, i, round(avg(CAST(xe[i] AS DOUBLE)), 6) AS av
+         |   FROM ${pfx}a$i, unnest(range(1, len(xe)+1)) t(i)
+         |   GROUP BY 1, 2, 3) GROUP BY 1, 2)""".stripMargin
+    }.mkString
+    val cb0 = seedSql.getOrElse(
+      s"SELECT sub, vec_id AS code, xe AS ce FROM $xsName WHERE vec_id % 50 = 0")
+    s"""${pfx}cb0 AS MATERIALIZED ($cb0)""" + chain
+  }
+
+  /** FIXED-size seed selection SQL (the [[Similarity.pqCodebookFixed]]
+    * twin): the k vectors ranked first by md5(vec_id), all subspaces.
+    */
+  private def fixedSeedSql(xsName: String, k: Int): String =
+    s"""SELECT sub, vec_id AS code, xe AS ce FROM $xsName
+       |   WHERE vec_id IN (SELECT vec_id FROM (SELECT DISTINCT vec_id
+       |     FROM $xsName)
+       |     ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $k)""".stripMargin
+
+  /** Residual IVF-PQ pipeline CTEs (the SQL twin of
+    * [[Similarity.ivfPqResidualIndex]] + [[Similarity.ivfPqResidualTopKIndexed]]):
+    * learned coarse cells, residual slices x − c(cell), residual-trained
+    * PQ codebooks, residual codes, and candidate ADC sums in `sc` where
+    * the score decomposes as q·c + (q − c)·decode(codes). Emits the
+    * same `q` / `sc` contract as [[ivfPqCtesWith]], so [[rerankCtes]]
+    * composes unchanged.
+    */
+  private def ivfPqResidualCtes(nprobe: Int, queryRes: Int = 0,
+                                m: Int = 4, iters: Int = 2,
+                                fixedK: Option[Int] = None): String = {
+    val sw = 64 / m // subspace width
+    s"""subs AS (SELECT CAST(unnest(range(0, $m)) AS INT) AS sub),
+       |${coarseLearnedDef(2)},
+       |rasg AS MATERIALIZED (${asgSql("cl2")}),
+       |rxs AS MATERIALIZED (SELECT a.vec_id, a.centroid_id, s.sub,
+       |          list_transform(range(1, ${sw + 1}), i ->
+       |            CAST(a.embedding[s.sub*$sw + i] AS DOUBLE) -
+       |            CAST(c.ce[s.sub*$sw + i] AS DOUBLE)) AS xe
+       |        FROM rasg a JOIN cl2 c ON a.centroid_id = c.centroid_id,
+       |             subs s),
+       |${pqLearnedCbDefOver(iters, "rxs", "r",
+          fixedK.map(k => fixedSeedSql("rxs", k)))},
+       |rd AS (SELECT x.vec_id, x.sub, c.code,
+       |             round(${dotSql("x.xe", "x.xe")}
+       |               - 2.0 * ${dotSql("x.xe", "c.ce")}
+       |               + ${dotSql("c.ce", "c.ce")}, 6) AS d2
+       |      FROM rxs x JOIN rcb$iters c ON x.sub = c.sub),
+       |rcodes AS MATERIALIZED (SELECT vec_id, sub, code FROM (
+       |  SELECT vec_id, sub, code,
+       |         row_number() OVER (PARTITION BY vec_id, sub
+       |                            ORDER BY d2, code) AS rn FROM rd)
+       |  WHERE rn = 1),
+       |q AS (SELECT vec_id AS query_id, embedding AS qe
+       |      FROM embeddings WHERE vec_id % 100 = $queryRes),
+       |probe AS (SELECT query_id, centroid_id FROM (
+       |            SELECT q.query_id, c.centroid_id,
+       |              row_number() OVER (PARTITION BY q.query_id
+       |                ORDER BY ${cosSql("q.qe", "c.ce")} DESC,
+       |                         c.centroid_id) AS rn
+       |            FROM q, cl2 c) WHERE rn <= $nprobe),
+       |qc AS (SELECT p.query_id, p.centroid_id,
+       |         round(${dotSql("q.qe", "c.ce")}, 6) AS qcdot
+       |       FROM probe p JOIN q ON q.query_id = p.query_id
+       |       JOIN cl2 c ON c.centroid_id = p.centroid_id),
+       |rqs AS (SELECT p.query_id, p.centroid_id, s.sub,
+       |          list_transform(range(1, ${sw + 1}), i ->
+       |            CAST(q.qe[s.sub*$sw + i] AS DOUBLE) -
+       |            CAST(c.ce[s.sub*$sw + i] AS DOUBLE)) AS qrsub
+       |        FROM probe p JOIN q ON q.query_id = p.query_id
+       |        JOIN cl2 c ON c.centroid_id = p.centroid_id, subs s),
+       |rlut AS (SELECT rq.query_id, rq.centroid_id, cb.sub, cb.code,
+       |           round(${dotSql("rq.qrsub", "cb.ce")}, 6) AS pdot
+       |         FROM rqs rq JOIN rcb$iters cb ON rq.sub = cb.sub),
+       |cand AS (SELECT p.query_id, a.vec_id, a.centroid_id
+       |         FROM probe p JOIN rasg a ON p.centroid_id = a.centroid_id
+       |         WHERE a.vec_id <> p.query_id),
+       |sc AS (SELECT cd.query_id, cd.vec_id,
+       |         round(max(qc.qcdot) + sum(l.pdot), 6) AS adc_score
+       |       FROM cand cd
+       |       JOIN rcodes k ON k.vec_id = cd.vec_id
+       |       JOIN rlut l ON l.query_id = cd.query_id
+       |         AND l.centroid_id = cd.centroid_id
+       |         AND l.sub = k.sub AND l.code = k.code
+       |       JOIN qc ON qc.query_id = cd.query_id
+       |         AND qc.centroid_id = cd.centroid_id
+       |       GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** Coarse-codebook CTE chain for `iters` unrolled Lloyd steps (the
+    * [[Similarity.kmeansTrain]] oracle shape), final book named
+    * `cl<iters>`.
+    */
+  private def coarseLearnedDef(iters: Int): String = {
+    val chain = (1 to iters).map { i =>
+      s""",
+         |casg$i AS (${asgSql(if (i == 1) "cl0" else s"cl${i - 1}")}),
+         |cl$i AS (${cMeanSql(s"casg$i")})""".stripMargin
+    }.mkString
+    s"""cl0 AS (SELECT vec_id AS centroid_id, embedding AS ce
+       |        FROM embeddings WHERE vec_id % 50 = 0)""".stripMargin + chain
+  }
+
+  /** The full IVF-PQ pipeline CTEs against the codebook CTE `cbName`
+    * (defined by `cbDef`): PQ codes, coarse cells, probes, query LUTs,
+    * candidate ADC sums in `sc` — shared by the serving, rerank, recall,
+    * and learned-codebook oracles.
+    */
+  private def ivfPqCtesWith(cbName: String, cbDef: String,
+                            coarseName: String = "c0",
+                            coarseDef: String =
+                              """c0 AS (SELECT vec_id AS centroid_id, embedding AS ce
+                                |       FROM embeddings WHERE vec_id % 50 = 0)""".stripMargin,
+                            nprobe: Int = 3,
+                            queryRes: Int = 0)
+      : String =
+    s"""subs AS (SELECT CAST(unnest(range(0, 4)) AS INT) AS sub),
+       |xs AS (SELECT e.vec_id, s.sub,
+       |              e.embedding[s.sub*16+1 : s.sub*16+16] AS xe
+       |       FROM embeddings e, subs s),
+       |$cbDef,
+       |d AS (SELECT x.vec_id, x.sub, c.code,
+       |             round(${dotSql("x.xe", "x.xe")}
+       |               - 2.0 * ${dotSql("x.xe", "c.ce")}
+       |               + ${dotSql("c.ce", "c.ce")}, 6) AS d2
+       |      FROM xs x JOIN $cbName c ON x.sub = c.sub),
+       |codes AS (SELECT vec_id, sub, code FROM (
+       |  SELECT vec_id, sub, code,
+       |         row_number() OVER (PARTITION BY vec_id, sub
+       |                            ORDER BY d2, code) AS rn FROM d)
+       |  WHERE rn = 1),
+       |$coarseDef,
+       |asg AS (${asgSql(coarseName)}),
+       |q AS (SELECT vec_id AS query_id, embedding AS qe
+       |      FROM embeddings WHERE vec_id % 100 = $queryRes),
+       |probe AS (SELECT query_id, centroid_id FROM (
+       |            SELECT q.query_id, c.centroid_id,
+       |              row_number() OVER (PARTITION BY q.query_id
+       |                ORDER BY ${cosSql("q.qe", "c.ce")} DESC,
+       |                         c.centroid_id) AS rn
+       |            FROM q, $coarseName c) WHERE rn <= $nprobe),
+       |qs AS (SELECT vec_id AS query_id, sub, xe AS qsub
+       |       FROM xs WHERE vec_id % 100 = $queryRes),
+       |lut AS (SELECT qs.query_id, c.sub, c.code,
+       |               round(${dotSql("qs.qsub", "c.ce")}, 6) AS pdot
+       |        FROM qs JOIN $cbName c ON qs.sub = c.sub),
+       |cand AS (SELECT p.query_id, a.vec_id
+       |         FROM probe p JOIN asg a ON p.centroid_id = a.centroid_id
+       |         WHERE a.vec_id <> p.query_id),
+       |sc AS (SELECT cd.query_id, cd.vec_id,
+       |              round(sum(l.pdot), 6) AS adc_score
+       |       FROM cand cd
+       |       JOIN codes k ON k.vec_id = cd.vec_id
+       |       JOIN lut l ON l.query_id = cd.query_id
+       |                 AND l.sub = k.sub AND l.code = k.code
+       |       GROUP BY 1, 2)""".stripMargin
+
+  private val IvfPqCtes: String = ivfPqCtesWith("cb", seedPqCbDef("cb"))
+
+  private val IvfPqLearnedCtes: String =
+    ivfPqCtesWith("pcb2", pqLearnedCbDef(2))
+
+  /** Fully learned IVF-PQ: learned coarse cells (2 Lloyd steps) AND
+    * learned sub-codebooks, at the ladder-picked serving nprobe=5.
+    */
+  private val IvfPqFullLearnedCtes: String =
+    ivfPqCtesWith("pcb2", pqLearnedCbDef(2), "cl2", coarseLearnedDef(2),
+      nprobe = 5)
+
+  /** The SAME served fully-learned configuration, measured on the HOLDOUT
+    * query set (vec_id % 100 = 7 — disjoint from the % 50 centroid/k-means
+    * seeds). The in-sample convention is optimistically biased (every
+    * query is its own seed centroid); this is the honest out-of-sample
+    * recall the RecallLadder sweeps tune on.
+    */
+  private val IvfPqFullLearnedHoldoutCtes: String =
+    ivfPqCtesWith("pcb2", pqLearnedCbDef(2), "cl2", coarseLearnedDef(2),
+      nprobe = 5, queryRes = 7)
+
+  /** The two-stage rerank tail shared by the reranked serving oracles:
+    * ADC shortlist (top `shortlist` by adc_score from `sc`) re-scored
+    * with the exact cosine in `rr`.
+    */
+  private def rerankCtes(shortlist: Int): String =
+    s"""short AS (SELECT query_id, vec_id FROM (
+       |  SELECT query_id, vec_id,
+       |         row_number() OVER (PARTITION BY query_id
+       |                            ORDER BY adc_score DESC, vec_id) AS srn
+       |  FROM sc) WHERE srn <= $shortlist),
+       |rr AS (SELECT s.query_id, s.vec_id,
+       |         ${cosSql("q.qe", "e.embedding")} AS sim
+       |       FROM short s JOIN q ON q.query_id = s.query_id
+       |       JOIN embeddings e ON e.vec_id = s.vec_id)""".stripMargin
+
+  /** [[rerankCtes]] with the rerank stage scoring against the QUANTIZED
+    * store: the shortlist joins `qv` (the [[Q8Ctes]] int8 projection) on
+    * both sides and descales the exact integer dot — mirrors
+    * [[graft.ops.Similarity.ivfPqResidualTopKIndexedRerankedQ8]].
+    * Requires `sc` (ADC scores) and `qv` in scope.
+    */
+  private def rerankQ8Ctes(shortlist: Int): String =
+    s"""short AS (SELECT query_id, vec_id FROM (
+       |  SELECT query_id, vec_id,
+       |         row_number() OVER (PARTITION BY query_id
+       |                            ORDER BY adc_score DESC, vec_id) AS srn
+       |  FROM sc) WHERE srn <= $shortlist),
+       |rrq AS (SELECT s.query_id, s.vec_id,
+       |          CASE WHEN a.sc * b.sc = 0 THEN 0.0
+       |               ELSE CAST(list_aggregate(list_transform(
+       |                      range(1, len(a.q)+1), i -> a.q[i] * b.q[i]),
+       |                      'sum') AS DOUBLE) / (a.sc * b.sc)
+       |          END AS score
+       |        FROM short s
+       |        JOIN qv a ON a.vec_id = s.query_id
+       |        JOIN qv b ON b.vec_id = s.vec_id)""".stripMargin
+
+  /** The built residual index artifacts: coarse book, residual PQ book,
+    * code index, cell inventory — everything whose lifetime is the INDEX
+    * lifetime, not the query lifetime.
+    */
+  private final case class ResidualBuilt(
+      ivfCb: org.apache.spark.sql.DataFrame,
+      pqCbRes: org.apache.spark.sql.DataFrame,
+      index: org.apache.spark.sql.DataFrame,
+      cellCodes: org.apache.spark.sql.DataFrame)
+
+  /** Build-once memo for the served residual index (r13 verdict task 2):
+    * the three `sim_ivfpq_residual_*` evals serve from the SAME codebooks
+    * + index, so rebuilding them inline per query tripled ~12 s of Lloyd
+    * training in every bench/verify session (~28% of the local bench).
+    * The build is `localCheckpoint(true)`-materialized — eager, and
+    * backed by block-manager RDD blocks that `spark.catalog.clearCache()`
+    * (the bench's BETWEEN-runs hygiene) does not drop — mirroring the
+    * production shape: an index is built once and amortized across its
+    * serving lifetime; only SERVING is per-query work. Keyed by (session,
+    * dir) so concurrent test sessions and different fixture dirs can
+    * never cross-feed.
+    */
+  private val residualBuiltMemo =
+    new java.util.concurrent.ConcurrentHashMap[
+      (org.apache.spark.sql.SparkSession, String), ResidualBuilt]()
+
+  private def residualBuilt(s: org.apache.spark.sql.SparkSession,
+                            dir: String): ResidualBuilt =
+    residualBuiltMemo.computeIfAbsent((s, dir), { _ =>
+      val e = Tables.embeddings(s, dir)
+      val ivfCb = kmeans2(s, dir)
+      val pqCbRes = memoDf(s, dir, "pqResFixed8") {
+        val res = Similarity.ivfResiduals(e, ivfCb)
+        Similarity.pqCodebookLearnedFrom(res,
+          Similarity.pqCodebookFixed(res, m = 8, dim = 64, k = 256),
+          m = 8, dim = 64, maxIters = 8)
+      }
+      val index = memoDf(s, dir, "residualIndex8") {
+        Similarity.ivfPqResidualIndex(e, ivfCb, pqCbRes, m = 8, dim = 64)
+      }
+      val cellCodes = memoDf(s, dir, "residualCells8") {
+        Similarity.ivfPqCellCodes(index)
+      }
+      ResidualBuilt(ivfCb, pqCbRes, index, cellCodes)
+    })
+
+  /** The 2-step-Lloyd learned coarse book — shared by the fully-learned
+    * m=4 rungs AND the residual m=8 build.
+    */
+  private def kmeans2(s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame =
+    memoDf(s, dir, "kmeans2") {
+      val e = Tables.embeddings(s, dir)
+      Similarity.kmeansTrain(e,
+        e.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"),
+        maxIters = 2)
+    }
+
+  /** The m=4 corpus-seeded learned PQ book (fixture convention) —
+    * shared by four serving/recall queries.
+    */
+  private def pq4learned(s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame =
+    memoDf(s, dir, "pq4learned") {
+      Similarity.pqCodebookLearned(Tables.embeddings(s, dir), m = 4,
+        dim = 64, centroidMod = 50, maxIters = 2)
+    }
+
+  /** Exact cosine ground truth for the `vec_id % 100 == res` query set —
+    * the relation every recall eval compares against; built once like a
+    * production eval's frozen ground-truth table.
+    */
+  private def exactTopK(s: org.apache.spark.sql.SparkSession, dir: String,
+                        res: Int): org.apache.spark.sql.DataFrame =
+    memoDf(s, dir, s"exact$res") {
+      Similarity.bruteForceTopK(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === res, k = 10)
+    }
+
+  /** The SERVED residual rung, r14: PRODUCTION-SHAPE fixed sub-codebooks
+    * (m=8 x 256 md5-ranked seeds, 8 Lloyd steps — `pqCodebookFixed` +
+    * `pqCodebookLearnedFrom`) at nprobe=20 + rerank100. Moved from the
+    * r13 np=10 + rerank50 point (holdout 0.63) on the r14 serve-cost
+    * ladder (BASELINE.md `ivfpq_residual_serve_r14_*`): the full
+    * reranked serve path at np=20/sl=100 costs the SAME per query as
+    * the np=10 rung at 100 k vectors (~0.087 vs ~0.085 s/query, both
+    * falling with corpus — cost is probed-cell-bounded, and doubling
+    * the probed cells is invisible next to fixed per-job overhead),
+    * while the shortlist-sweep attribution table puts np=20 + sl=100 at
+    * **0.84 holdout recall** — over the >= 0.75 gate the r13 verdict
+    * set for the move.
+    */
+  private def residualServed(s: org.apache.spark.sql.SparkSession,
+                             dir: String, queryRes: Int)
+      : org.apache.spark.sql.DataFrame = {
+    val e = Tables.embeddings(s, dir)
+    val b = residualBuilt(s, dir)
+    Similarity.ivfPqResidualTopKIndexedReranked(
+      b.index, b.ivfCb, b.pqCbRes,
+      e.filter(col("vec_id") % 100 === queryRes), e,
+      m = 8, dim = 64, nprobe = 20, shortlist = 100, k = 10,
+      cellCodes = Some(b.cellCodes))
+  }
+
+  /** The served residual rung with the QUANTIZED rerank store (the
+    * corpus/4-byte point-read tier); the int8 store is an index-lifetime
+    * artifact, memoized like the codebooks.
+    */
+  private def residualServedQ8(s: org.apache.spark.sql.SparkSession,
+                               dir: String, queryRes: Int)
+      : org.apache.spark.sql.DataFrame = {
+    val e = Tables.embeddings(s, dir)
+    val b = residualBuilt(s, dir)
+    val q8store = memoDf(s, dir, "q8store") {
+      Similarity.quantize(e).select(col("vec_id"), col("q8"),
+        col("q_scale"))
+    }
+    Similarity.ivfPqResidualTopKIndexedRerankedQ8(
+      b.index, b.ivfCb, b.pqCbRes,
+      e.filter(col("vec_id") % 100 === queryRes), q8store,
+      m = 8, dim = 64, nprobe = 20, shortlist = 100, k = 10,
+      cellCodes = Some(b.cellCodes))
+  }
+
+  val declared: Seq[Declared] = Seq(
+    Declared("sim_topk", (s, dir) =>
+      Similarity.bruteForceTopK(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === 0, k = 10),
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+         |           FROM embeddings WHERE vec_id % 100 = 0),
+         |p AS (SELECT q.query_id, e.vec_id,
+         |        ${cosSql("q.qe", "e.embedding")} AS sim
+         |      FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |r AS (SELECT query_id, vec_id, sim,
+         |        row_number() OVER (PARTITION BY query_id
+         |                           ORDER BY sim DESC, vec_id) AS rn
+         |      FROM p)
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine
+         |FROM r WHERE rn <= 10""".stripMargin),
+
+    // radius (range) search: all neighbors within cosine >= 0.25 of each
+    // query — the "how crowded is this region" face; hit-sized output
+    Declared("sim_radius", (s, dir) =>
+      Similarity.radiusSearch(Tables.embeddings(s, dir),
+        col("vec_id") % 20 === 0, threshold = 0.25),
+      // radius search: same cosine expression, threshold instead of rank
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+         |           FROM embeddings WHERE vec_id % 20 = 0)
+         |SELECT q.query_id, e.vec_id,
+         |  round(${cosSql("q.qe", "e.embedding")}, 6) AS cosine
+         |FROM q, embeddings e
+         |WHERE e.vec_id <> q.query_id
+         |  AND ${cosSql("q.qe", "e.embedding")} >= 0.25""".stripMargin),
+
+    // Matryoshka-style prefix-dimension ladder (Kusupati et al. 2022):
+    // recall@10 of brute-force cosine over only the FIRST 16/32 of 64
+    // dims vs the full-dim exact top-10 — the measurement behind
+    // serving truncated embeddings (4x/2x less memory and bandwidth at
+    // a measured recall cost). The exact ground truth is the session
+    // memo the recall family shares.
+    Declared("sim_matryoshka_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      val exact = exactTopK(s, dir, 0)
+      Seq(16, 32).map { dims =>
+        Similarity.recallAtK(
+          Similarity.bruteForceTopK(
+            e.select(col("vec_id"),
+              slice(col("embedding"), 1, dims).as("embedding")),
+            col("vec_id") % 100 === 0, k = 10),
+          exact, k = 10)
+          .select(lit(dims).as("dims"), col("query_id"), col("recall"))
+      }.reduce(_ unionByName _)
+    },
+      // prefix-dim recall vs the full-dim exact list, one block per rung
+      {
+        def rung(d: Int): String =
+          s"""p$d AS (SELECT q.query_id, e.vec_id,
+             |        ${cosSql(s"q.qe[1:$d]", s"e.embedding[1:$d]")} AS sim
+             |      FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+             |a$d AS (SELECT query_id, vec_id FROM (
+             |      SELECT query_id, vec_id, row_number() OVER (
+             |        PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rn
+             |      FROM p$d) WHERE rn <= 10),
+             |r$d AS (SELECT CAST($d AS INT) AS dims, ex.query_id,
+             |        round(CAST(sum(CASE WHEN a.vec_id IS NOT NULL
+             |          THEN 1 ELSE 0 END) AS DOUBLE) / 10.0, 6) AS recall
+             |      FROM ex LEFT JOIN a$d a
+             |        ON ex.query_id = a.query_id AND ex.vec_id = a.vec_id
+             |      GROUP BY 2)""".stripMargin
+        s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+           |           FROM embeddings WHERE vec_id % 100 = 0),
+           |pf AS (SELECT q.query_id, e.vec_id,
+           |        ${cosSql("q.qe", "e.embedding")} AS sim
+           |      FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+           |ex AS (SELECT query_id, vec_id FROM (
+           |      SELECT query_id, vec_id, row_number() OVER (
+           |        PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rn
+           |      FROM pf) WHERE rn <= 10),
+           |${rung(16)},
+           |${rung(32)}
+           |SELECT * FROM r16 UNION ALL SELECT * FROM r32""".stripMargin
+      }),
+
+    // TRAINED rotation in front of the prefix truncation (r16 verdict
+    // task 2): dims re-ordered by corpus variance DESCENDING before
+    // slicing — the axis-aligned member of the rotation family, whose
+    // training loop (per-dim grid6 moments) has an exact SQL twin so
+    // the query stays oracle-gated; the dense PCA rotation (same
+    // protocol, eigendecomposition front-end) is measured in
+    // MatryoshkaRotationSpec + BASELINE.md
+    Declared("sim_matryoshka_rotated_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      val exact = exactTopK(s, dir, 0)
+      val perm = Similarity.varianceOrder(e, dim = 64)
+      Seq(16, 32).map { dims =>
+        Similarity.recallAtK(
+          Similarity.bruteForceTopK(
+            e.select(col("vec_id"),
+              array(perm.take(dims).toIndexedSeq
+                .map(i => col("embedding").getItem(i)): _*).as("embedding")),
+            col("vec_id") % 100 === 0, k = 10),
+          exact, k = 10)
+          .select(lit(dims).as("dims"), col("query_id"), col("recall"))
+      }.reduce(_ unionByName _)
+    },
+      // variance-ordered (trained axis-aligned rotation) prefix recall:
+      // the dim permutation replays from per-dim grid6 moments, then the
+      // same rung/recall shape as sim_matryoshka_recall over the permuted
+      // prefix lists
+      {
+        val m1 = grid6Sql("avg(CAST(e0.embedding[i] AS DOUBLE))")
+        val m2 = grid6Sql(
+          "avg(CAST(e0.embedding[i] AS DOUBLE) * CAST(e0.embedding[i] AS DOUBLE))")
+        def rung(d: Int): String =
+          s"""pe$d AS (SELECT e.vec_id, list(e.embedding[rk.i] ORDER BY rk.rnk) AS pe
+             |      FROM embeddings e, rk WHERE rk.rnk <= $d GROUP BY 1),
+             |p$d AS (SELECT a.vec_id AS query_id, b.vec_id,
+             |        ${cosSql("a.pe", "b.pe")} AS sim
+             |      FROM pe$d a, pe$d b
+             |      WHERE a.vec_id % 100 = 0 AND b.vec_id <> a.vec_id),
+             |a$d AS (SELECT query_id, vec_id FROM (
+             |      SELECT query_id, vec_id, row_number() OVER (
+             |        PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rn
+             |      FROM p$d) WHERE rn <= 10),
+             |r$d AS (SELECT CAST($d AS INT) AS dims, ex.query_id,
+             |        round(CAST(sum(CASE WHEN a.vec_id IS NOT NULL
+             |          THEN 1 ELSE 0 END) AS DOUBLE) / 10.0, 6) AS recall
+             |      FROM ex LEFT JOIN a$d a
+             |        ON ex.query_id = a.query_id AND ex.vec_id = a.vec_id
+             |      GROUP BY 2)""".stripMargin
+        s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+           |           FROM embeddings WHERE vec_id % 100 = 0),
+           |pf AS (SELECT q.query_id, e.vec_id,
+           |        ${cosSql("q.qe", "e.embedding")} AS sim
+           |      FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+           |ex AS (SELECT query_id, vec_id FROM (
+           |      SELECT query_id, vec_id, row_number() OVER (
+           |        PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rn
+           |      FROM pf) WHERE rn <= 10),
+           |m AS (SELECT i, $m1 AS m1, $m2 AS m2
+           |      FROM embeddings e0, unnest(range(1, 65)) t(i) GROUP BY 1),
+           |rk AS (SELECT i, row_number() OVER (
+           |        ORDER BY ${grid6Sql("m2 - m1 * m1")} DESC, i) AS rnk
+           |      FROM m),
+           |${rung(16)},
+           |${rung(32)}
+           |SELECT * FROM r16 UNION ALL SELECT * FROM r32""".stripMargin
+      }),
+
+    // farthest-point (k-center) coreset sampling: 8 greedy max-min
+    // selections from vec 0 — the diversity-selection primitive for
+    // training-data curation (Gonzalez's 2-approximation). Each round
+    // is one map-only scan (centers ride as plan literals) + one
+    // max-struct aggregate; the oracle replays all 8 rounds as
+    // unrolled CTEs on the same 1e-6 grid with the same min-id ties
+    Declared("sim_coreset_fps", (s, dir) =>
+      Similarity.farthestPointSample(Tables.embeddings(s, dir), k = 8,
+        startId = 0L),
+      // greedy farthest-point selection, all rounds unrolled: round i
+      // recomputes every point's min grid-distance to the selected set
+      // and takes the max (min-id ties), excluding already-selected ids
+      {
+        val k = 8
+        val steps = (2 to k).map { i =>
+          s"""m$i AS (SELECT e.vec_id,
+             |    min(round(1 - ${cosSql("e.embedding", "ce.embedding")}, 6)) AS md
+             |  FROM e, sel${i - 1} s, e ce WHERE ce.vec_id = s.vec_id
+             |  GROUP BY e.vec_id),
+             |c$i AS (SELECT vec_id, md FROM m$i
+             |  WHERE vec_id NOT IN (SELECT vec_id FROM sel${i - 1})
+             |  ORDER BY md DESC, vec_id LIMIT 1),
+             |sel$i AS (SELECT * FROM sel${i - 1}
+             |  UNION ALL SELECT $i, vec_id, md FROM c$i)""".stripMargin
+        }.mkString(",\n")
+        s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+           |sel1(sel_order, vec_id, dist) AS (
+           |  VALUES (1, CAST(0 AS BIGINT), CAST(0.0 AS DOUBLE))),
+           |$steps
+           |SELECT CAST(sel_order AS INT) AS sel_order, vec_id, dist
+           |FROM sel$k""".stripMargin
+      }),
+
+    // metadata-equality-constrained top-k: rank only candidates sharing
+    // the query's label (same-language retrieval); the equality key is
+    // the partition pruning at scale
+    Declared("sim_topk_label", (s, dir) =>
+      Similarity.partitionedTopK(Tables.embeddings(s, dir),
+        col("vec_id") % 50 === 0, "label", k = 10),
+      // same-label top-k: the equality constraint joins query to its
+      // label's candidates only
+      s"""WITH q AS (SELECT vec_id AS query_id, label AS qlabel,
+         |             embedding AS qe
+         |           FROM embeddings WHERE vec_id % 50 = 0),
+         |p AS (SELECT q.query_id, e.vec_id,
+         |        ${cosSql("q.qe", "e.embedding")} AS sim
+         |      FROM q JOIN embeddings e ON e.label = q.qlabel
+         |      WHERE e.vec_id <> q.query_id),
+         |r AS (SELECT query_id, vec_id, sim,
+         |        row_number() OVER (PARTITION BY query_id
+         |                           ORDER BY sim DESC, vec_id) AS rn
+         |      FROM p)
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine
+         |FROM r WHERE rn <= 10""".stripMargin),
+
+    // pre-filter top-k: arbitrary candidate predicate applied BEFORE
+    // ranking, so each query still gets its full k — the vector-DB
+    // "filtered search" contract (exact ground-truth face)
+    Declared("sim_topk_filtered", (s, dir) =>
+      Similarity.filteredTopK(Tables.embeddings(s, dir),
+        col("vec_id") % 50 === 0, col("label") % 3 === 0, k = 10),
+      // pre-filter top-k: predicate on the candidate side before ranking
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+         |           FROM embeddings WHERE vec_id % 50 = 0),
+         |p AS (SELECT q.query_id, e.vec_id,
+         |        ${cosSql("q.qe", "e.embedding")} AS sim
+         |      FROM q, embeddings e
+         |      WHERE e.vec_id <> q.query_id AND e.label % 3 = 0),
+         |r AS (SELECT query_id, vec_id, sim,
+         |        row_number() OVER (PARTITION BY query_id
+         |                           ORDER BY sim DESC, vec_id) AS rn
+         |      FROM p)
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine
+         |FROM r WHERE rn <= 10""".stripMargin),
+
+    // recall@10 of filtered IVF serving (predicate applied inside probed
+    // cells) against the exact filtered ground truth — quantifies the
+    // filtered-ANN recall cost of a fixed probe width
+    Declared("sim_ivf_filtered_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.recallAtK(
+        Similarity.ivfTopKIndexedFiltered(ivfAsgSeed(s, dir), seedCb(s, dir),
+          e.filter(col("vec_id") % 100 === 0), col("label") % 3 === 0,
+          nprobe = 3, k = 10),
+        Similarity.filteredTopK(e, col("vec_id") % 100 === 0,
+          col("label") % 3 === 0, k = 10), k = 10)
+    },
+      // filtered-IVF recall eval: exact filtered ground truth vs the
+      // probed-cell pre-filtered list, recalled per query (the asg CTE
+      // carries label so the in-cell filter can replay)
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+         |           FROM embeddings WHERE vec_id % 100 = 0),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e
+         |       WHERE e.vec_id <> q.query_id AND e.label % 3 = 0),
+         |br AS (SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |       FROM bp),
+         |ex AS (SELECT query_id, vec_id FROM br WHERE rn <= 10),
+         |c AS (SELECT vec_id AS centroid_id, embedding AS ce
+         |      FROM embeddings WHERE vec_id % 50 = 0),
+         |asg AS (SELECT vec_id, embedding, label, centroid_id FROM (
+         |          SELECT e.vec_id, e.embedding, e.label, c.centroid_id,
+         |            row_number() OVER (PARTITION BY e.vec_id
+         |              ORDER BY ${cosSql("e.embedding", "c.ce")} DESC,
+         |                       c.centroid_id) AS rn
+         |          FROM embeddings e, c) WHERE rn = 1),
+         |probe AS (SELECT query_id, qe, centroid_id FROM (
+         |            SELECT q.query_id, q.qe, c.centroid_id,
+         |              row_number() OVER (PARTITION BY q.query_id
+         |                ORDER BY ${cosSql("q.qe", "c.ce")} DESC,
+         |                         c.centroid_id) AS rn
+         |            FROM q, c) WHERE rn <= 3),
+         |icand AS (SELECT p.query_id, a.vec_id,
+         |            ${cosSql("p.qe", "a.embedding")} AS sim
+         |          FROM probe p JOIN asg a ON p.centroid_id = a.centroid_id
+         |          WHERE a.vec_id <> p.query_id AND a.label % 3 = 0),
+         |ir AS (SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |       FROM icand),
+         |ap AS (SELECT query_id, vec_id FROM ir WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    Declared("sim_ivf_topk", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.ivfTopKIndexed(ivfAsgSeed(s, dir), seedCb(s, dir),
+        e.filter(col("vec_id") % 100 === 0), nprobe = 3, k = 10)
+    },
+      s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS ce
+         |           FROM embeddings WHERE vec_id % 50 = 0),
+         |asg AS (SELECT vec_id, embedding, centroid_id FROM (
+         |          SELECT e.vec_id, e.embedding, c.centroid_id,
+         |            row_number() OVER (PARTITION BY e.vec_id
+         |              ORDER BY ${cosSql("e.embedding", "c.ce")} DESC,
+         |                       c.centroid_id) AS rn
+         |          FROM embeddings e, c) WHERE rn = 1),
+         |q AS (SELECT vec_id AS query_id, embedding AS qe
+         |      FROM embeddings WHERE vec_id % 100 = 0),
+         |probe AS (SELECT query_id, qe, centroid_id FROM (
+         |            SELECT q.query_id, q.qe, c.centroid_id,
+         |              row_number() OVER (PARTITION BY q.query_id
+         |                ORDER BY ${cosSql("q.qe", "c.ce")} DESC,
+         |                         c.centroid_id) AS rn
+         |            FROM q, c) WHERE rn <= 3),
+         |cand AS (SELECT p.query_id, a.vec_id,
+         |           ${cosSql("p.qe", "a.embedding")} AS sim
+         |         FROM probe p JOIN asg a ON p.centroid_id = a.centroid_id
+         |         WHERE a.vec_id <> p.query_id),
+         |r AS (SELECT query_id, vec_id, sim,
+         |        row_number() OVER (PARTITION BY query_id
+         |                           ORDER BY sim DESC, vec_id) AS rn
+         |      FROM cand)
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine
+         |FROM r WHERE rn <= 10""".stripMargin),
+
+    // recall@10 of the IVF configuration against exact brute force over
+    // the same queries — the eval gate an ANN config must pass to serve
+    Declared("sim_ivf_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.recallAtK(
+        Similarity.ivfTopKIndexed(ivfAsgSeed(s, dir), seedCb(s, dir),
+          e.filter(col("vec_id") % 100 === 0), nprobe = 3, k = 10),
+        exactTopK(s, dir, 0), k = 10)
+    },
+      // recall eval: the exact and IVF lists are the two oracles above,
+      // left-joined per query — mirror of Similarity.recallAtK
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
+         |           FROM embeddings WHERE vec_id % 100 = 0),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |br AS (SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |       FROM bp),
+         |ex AS (SELECT query_id, vec_id FROM br WHERE rn <= 10),
+         |c AS (SELECT vec_id AS centroid_id, embedding AS ce
+         |      FROM embeddings WHERE vec_id % 50 = 0),
+         |asg AS (SELECT vec_id, embedding, centroid_id FROM (
+         |          SELECT e.vec_id, e.embedding, c.centroid_id,
+         |            row_number() OVER (PARTITION BY e.vec_id
+         |              ORDER BY ${cosSql("e.embedding", "c.ce")} DESC,
+         |                       c.centroid_id) AS rn
+         |          FROM embeddings e, c) WHERE rn = 1),
+         |probe AS (SELECT query_id, qe, centroid_id FROM (
+         |            SELECT q.query_id, q.qe, c.centroid_id,
+         |              row_number() OVER (PARTITION BY q.query_id
+         |                ORDER BY ${cosSql("q.qe", "c.ce")} DESC,
+         |                         c.centroid_id) AS rn
+         |            FROM q, c) WHERE rn <= 3),
+         |icand AS (SELECT p.query_id, a.vec_id,
+         |            ${cosSql("p.qe", "a.embedding")} AS sim
+         |          FROM probe p JOIN asg a ON p.centroid_id = a.centroid_id
+         |          WHERE a.vec_id <> p.query_id),
+         |ir AS (SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |       FROM icand),
+         |ap AS (SELECT query_id, vec_id FROM ir WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // IVF with a LEARNED codebook: two Lloyd iterations from the
+    // deterministic seed (fixed budget so the oracle can replay the exact
+    // trajectory), then the same probe/rank pipeline
+    Declared("sim_ivf_topk_learned", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      val cb = Similarity.kmeansTrain(e,
+        e.filter(col("vec_id") % 50 === 0), maxIters = 2)
+      Similarity.ivfTopKWith(e, cb, col("vec_id") % 100 === 0, nprobe = 3, k = 10)
+    },
+      s"""WITH c0 AS (SELECT vec_id AS centroid_id, embedding AS ce
+         |            FROM embeddings WHERE vec_id % 50 = 0),
+         |asg1 AS (${asgSql("c0")}),
+         |c1 AS (${cMeanSql("asg1")}),
+         |asg2 AS (${asgSql("c1")}),
+         |c2 AS (${cMeanSql("asg2")}),
+         |asg3 AS (${asgSql("c2")}),
+         |q AS (SELECT vec_id AS query_id, embedding AS qe
+         |      FROM embeddings WHERE vec_id % 100 = 0),
+         |probe AS (SELECT query_id, qe, centroid_id FROM (
+         |            SELECT q.query_id, q.qe, c.centroid_id,
+         |              row_number() OVER (PARTITION BY q.query_id
+         |                ORDER BY ${cosSql("q.qe", "c.ce")} DESC,
+         |                         c.centroid_id) AS rn
+         |            FROM q, c2 c) WHERE rn <= 3),
+         |cand AS (SELECT p.query_id, a.vec_id,
+         |           ${cosSql("p.qe", "a.embedding")} AS sim
+         |         FROM probe p JOIN asg3 a ON p.centroid_id = a.centroid_id
+         |         WHERE a.vec_id <> p.query_id),
+         |r AS (SELECT query_id, vec_id, sim,
+         |        row_number() OVER (PARTITION BY query_id
+         |                           ORDER BY sim DESC, vec_id) AS rn
+         |      FROM cand)
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine
+         |FROM r WHERE rn <= 10""".stripMargin),
+
+    // asymmetric-distance (ADC) top-k over the PQ index: per-query LUT of
+    // subspace partial dots, score = sum over the vector's 4 codes
+    Declared("sim_pq_topk", (s, dir) =>
+      Similarity.pqAdcTopK(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === 0, m = 4, dim = 64, centroidMod = 50,
+        k = 10),
+      s"""WITH subs AS (SELECT CAST(unnest(range(0, 4)) AS INT) AS sub),
+         |cb AS (SELECT s.sub, e.vec_id AS code,
+         |              e.embedding[s.sub*16+1 : s.sub*16+16] AS ce
+         |       FROM embeddings e, subs s WHERE e.vec_id % 50 = 0),
+         |xs AS (SELECT e.vec_id, s.sub,
+         |              e.embedding[s.sub*16+1 : s.sub*16+16] AS xe
+         |       FROM embeddings e, subs s),
+         |d AS (SELECT x.vec_id, x.sub, c.code,
+         |             round(${dotSql("x.xe", "x.xe")}
+         |               - 2.0 * ${dotSql("x.xe", "c.ce")}
+         |               + ${dotSql("c.ce", "c.ce")}, 6) AS d2
+         |      FROM xs x JOIN cb c ON x.sub = c.sub),
+         |codes AS (SELECT vec_id, sub, code FROM (
+         |  SELECT vec_id, sub, code,
+         |         row_number() OVER (PARTITION BY vec_id, sub
+         |                            ORDER BY d2, code) AS rn FROM d)
+         |  WHERE rn = 1),
+         |q AS (SELECT vec_id AS query_id, sub, xe AS qe
+         |      FROM xs WHERE vec_id % 100 = 0),
+         |lut AS (SELECT q.query_id, c.sub, c.code,
+         |               round(${dotSql("q.qe", "c.ce")}, 6) AS pdot
+         |        FROM q JOIN cb c ON q.sub = c.sub),
+         |sc AS (SELECT l.query_id, k.vec_id,
+         |              round(sum(l.pdot), 6) AS adc_score
+         |       FROM codes k JOIN lut l ON k.sub = l.sub AND k.code = l.code
+         |       WHERE k.vec_id <> l.query_id
+         |       GROUP BY 1, 2)
+         |SELECT query_id, vec_id, adc_score FROM (
+         |  SELECT query_id, vec_id, adc_score,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY adc_score DESC, vec_id) AS rn
+         |  FROM sc)
+         |WHERE rn <= 10""".stripMargin),
+
+    // the composed IVF-PQ: probe 3 coarse cells, ADC-score only their
+    // members from the all-integer (cell, codes) index — the classical
+    // trillion-scale ANN serving shape
+    Declared("sim_ivfpq_topk", (s, dir) =>
+      Similarity.ivfPqTopK(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === 0, m = 4, dim = 64, centroidMod = 50,
+        nprobe = 3, k = 10),
+      // IVF-PQ: cosine cell assignment + probe selection against the %50
+      // coarse codebook (same asg machinery as sim_ivf_topk), candidates
+      // restricted to probed cells, ADC scoring from the PQ CTE block
+      s"""WITH $IvfPqCtes
+         |SELECT query_id, vec_id, adc_score FROM (
+         |  SELECT query_id, vec_id, adc_score,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY adc_score DESC, vec_id) AS rn
+         |  FROM sc)
+         |WHERE rn <= 10""".stripMargin),
+
+    // IVF-PQ SERVED from the LEARNED sub-codebooks at the rung the r12
+    // RecallLadder sweep picked: nprobe=3 + exact-cosine rerank of the
+    // ADC-50 shortlist (recall@10 0.82 vs 0.50 ADC-only — see ROUND12.md)
+    Declared("sim_ivfpq_topk_learned", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      val ivfCb = e.filter(col("vec_id") % 50 === 0)
+        .select("vec_id", "embedding")
+      val pqCb = pq4learned(s, dir)
+      Similarity.ivfPqTopKIndexedReranked(
+        memoDf(s, dir, "idx4seed")(
+          Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
+        ivfCb, pqCb, e.filter(col("vec_id") % 100 === 0), e, m = 4,
+        dim = 64, nprobe = 3, shortlist = 50, k = 10)
+    },
+      // learned-PQ serving at its ladder rung: nprobe=3 + rerank50
+      s"""WITH $IvfPqLearnedCtes,
+         |${rerankCtes(50)}
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine FROM (
+         |  SELECT query_id, vec_id, sim,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10""".stripMargin),
+
+    // FULLY learned IVF-PQ (learned coarse cells AND learned
+    // sub-codebooks) at ITS ladder-picked serving rung: nprobe=5 +
+    // rerank50 — recall@10 0.78 in-sample / 0.40 holdout, the best
+    // holdout of all three configs (the learned coarse quantizer
+    // generalizes; it only trailed in-sample where every query is its
+    // own seed centroid). Replaces the ADC-only nprobe=3 rung (0.46).
+    Declared("sim_ivfpq_full_learned_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      val ivfCb = kmeans2(s, dir)
+      val pqCb = pq4learned(s, dir)
+      Similarity.recallAtK(
+        Similarity.ivfPqTopKIndexedReranked(
+          memoDf(s, dir, "idx4kmeans")(
+            Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
+          ivfCb, pqCb, e.filter(col("vec_id") % 100 === 0), e, m = 4,
+          dim = 64, nprobe = 5, shortlist = 50, k = 10),
+        exactTopK(s, dir, 0), k = 10)
+    },
+      // fully-learned serving at its ladder rung: nprobe=5 + rerank50
+      s"""WITH $IvfPqFullLearnedCtes,
+         |${rerankCtes(50)},
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // the SAME served fully-learned rung measured on the HOLDOUT query
+    // set (vec_id % 100 == 7, disjoint from the % 50 centroid seeds) —
+    // the honest out-of-sample recall (0.40 at sf0.01; the in-sample
+    // 0.78 is biased: every in-sample query is its own seed centroid).
+    // Tuning decisions (RecallLadder, BASELINE.md) are made on this set.
+    Declared("sim_ivfpq_holdout_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      val ivfCb = kmeans2(s, dir)
+      val pqCb = pq4learned(s, dir)
+      Similarity.recallAtK(
+        Similarity.ivfPqTopKIndexedReranked(
+          memoDf(s, dir, "idx4kmeans")(
+            Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
+          ivfCb, pqCb, e.filter(col("vec_id") % 100 === 7), e, m = 4,
+          dim = 64, nprobe = 5, shortlist = 50, k = 10),
+        exactTopK(s, dir, 7), k = 10)
+    },
+      // the served fully-learned rung on the holdout query set — honest
+      // out-of-sample recall, disjoint from every training seed
+      s"""WITH $IvfPqFullLearnedHoldoutCtes,
+         |${rerankCtes(50)},
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // RESIDUAL IVF-PQ (FAISS IVFADC shape: PQ over x − coarse centroid)
+    // at the r14 ladder-picked rung: production-shape m=8 x 256 fixed
+    // codebooks, nprobe=20 + rerank100 — holdout recall@10 0.84 at
+    // sf0.1 (r13 served 0.63 at np=10/sl=50; moved on the r14
+    // serve-cost ladder showing the wider probe costs the same per
+    // query — BASELINE.md shortlist-sweep + serve_r14 tables).
+    Declared("sim_ivfpq_residual_topk", (s, dir) =>
+      residualServed(s, dir, queryRes = 0),
+      // residual IVF-PQ serving at the r13 rung: fixed m=8 x 256
+      // codebooks, 8 Lloyd steps, nprobe=10 + rerank50 (see residualServed)
+      s"""WITH ${ivfPqResidualCtes(20, m = 8, iters = 8, fixedK = Some(256))},
+         |${rerankCtes(100)}
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine FROM (
+         |  SELECT query_id, vec_id, sim,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10""".stripMargin),
+
+    Declared("sim_ivfpq_residual_recall", (s, dir) =>
+      Similarity.recallAtK(residualServed(s, dir, queryRes = 0),
+        exactTopK(s, dir, 0), k = 10),
+      s"""WITH ${ivfPqResidualCtes(20, m = 8, iters = 8, fixedK = Some(256))},
+         |${rerankCtes(100)},
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // the same served rung reranking against the QUANTIZED store
+    // (quarter point-read bytes, exact integer scoring)
+    Declared("sim_ivfpq_residual_topk_q8", (s, dir) =>
+      residualServedQ8(s, dir, queryRes = 0),
+      s"""WITH ${ivfPqResidualCtes(20, m = 8, iters = 8, fixedK = Some(256))},
+         |$Q8Ctes,
+         |${rerankQ8Ctes(100)}
+         |SELECT query_id, vec_id, round(score, 6) AS q8_score FROM (
+         |  SELECT query_id, vec_id, score,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY score DESC, vec_id) AS rn
+         |  FROM rrq) WHERE rn <= 10""".stripMargin),
+
+    // recall of the q8-reranked rung vs exact brute force — what the
+    // 4x-smaller rerank tier costs in quality (measured at sf0.1:
+    // insample 0.955 vs 0.965 float; holdout face below)
+    Declared("sim_ivfpq_residual_q8_recall", (s, dir) =>
+      Similarity.recallAtK(residualServedQ8(s, dir, queryRes = 0),
+        exactTopK(s, dir, 0), k = 10),
+      s"""WITH ${ivfPqResidualCtes(20, m = 8, iters = 8, fixedK = Some(256))},
+         |$Q8Ctes,
+         |${rerankQ8Ctes(100)},
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY score DESC, vec_id) AS rn
+         |  FROM rrq) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // the honest out-of-sample number for the q8-reranked rung (the
+    // %100==7 holdout, disjoint from every seed)
+    Declared("sim_ivfpq_residual_q8_holdout_recall", (s, dir) =>
+      Similarity.recallAtK(residualServedQ8(s, dir, queryRes = 7),
+        exactTopK(s, dir, 7), k = 10),
+      s"""WITH ${ivfPqResidualCtes(20, queryRes = 7, m = 8, iters = 8,
+             fixedK = Some(256))},
+         |$Q8Ctes,
+         |${rerankQ8Ctes(100)},
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY score DESC, vec_id) AS rn
+         |  FROM rrq) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    Declared("sim_ivfpq_residual_holdout_recall", (s, dir) =>
+      Similarity.recallAtK(residualServed(s, dir, queryRes = 7),
+        exactTopK(s, dir, 7), k = 10),
+      s"""WITH ${ivfPqResidualCtes(20, queryRes = 7, m = 8, iters = 8,
+        fixedK = Some(256))},
+         |${rerankCtes(100)},
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // recall@10 of the learned-codebook ADC vs exact brute force — the
+    // training-lift measurement next to sim_ivfpq_recall's 0.38
+    Declared("sim_ivfpq_learned_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      val ivfCb = e.filter(col("vec_id") % 50 === 0)
+        .select("vec_id", "embedding")
+      val pqCb = pq4learned(s, dir)
+      Similarity.recallAtK(
+        Similarity.ivfPqTopKIndexed(
+          memoDf(s, dir, "idx4seed")(
+            Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
+          ivfCb, pqCb, e.filter(col("vec_id") % 100 === 0), m = 4,
+          dim = 64, nprobe = 3, k = 10),
+        exactTopK(s, dir, 0), k = 10)
+    },
+      s"""WITH $IvfPqLearnedCtes,
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY adc_score DESC, vec_id) AS rn
+         |  FROM sc) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // two-stage serving: ADC shortlist of 50 from the integer index,
+    // exact-cosine rerank of the shortlist only — the classical recall
+    // recovery (0.38 -> 0.72 on this fixture)
+    Declared("sim_ivfpq_rerank", (s, dir) =>
+      Similarity.ivfPqTopKReranked(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === 0, m = 4, dim = 64, centroidMod = 50,
+        nprobe = 3, shortlist = 50, k = 10),
+      // two-stage rerank: ADC shortlist (rn <= 50) re-scored with the
+      // exact cosine, ranked on the raw sim like sim_topk
+      s"""WITH $IvfPqCtes,
+         |short AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY adc_score DESC, vec_id) AS srn
+         |  FROM sc) WHERE srn <= 50),
+         |rr AS (SELECT s.query_id, s.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM short s JOIN q ON q.query_id = s.query_id
+         |       JOIN embeddings e ON e.vec_id = s.vec_id)
+         |SELECT query_id, vec_id, round(sim, 6) AS cosine FROM (
+         |  SELECT query_id, vec_id, sim,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10""".stripMargin),
+
+    Declared("sim_ivfpq_rerank_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.recallAtK(
+        Similarity.ivfPqTopKReranked(e, col("vec_id") % 100 === 0, m = 4,
+          dim = 64, centroidMod = 50, nprobe = 3, shortlist = 50, k = 10),
+        exactTopK(s, dir, 0), k = 10)
+    },
+      s"""WITH $IvfPqCtes,
+         |short AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY adc_score DESC, vec_id) AS srn
+         |  FROM sc) WHERE srn <= 50),
+         |rr AS (SELECT s.query_id, s.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM short s JOIN q ON q.query_id = s.query_id
+         |       JOIN embeddings e ON e.vec_id = s.vec_id),
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM rr) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // recall@10 of the composed IVF-PQ configuration against exact
+    // brute force — quantifies what the m=4 ADC approximation costs
+    Declared("sim_ivfpq_recall", (s, dir) => {
+      val e = Tables.embeddings(s, dir)
+      Similarity.recallAtK(
+        Similarity.ivfPqTopK(e, col("vec_id") % 100 === 0, m = 4,
+          dim = 64, centroidMod = 50, nprobe = 3, k = 10),
+        exactTopK(s, dir, 0), k = 10)
+    },
+      // recall@10 of the composed IVF-PQ config against exact brute force
+      // (the `q` CTE is shared: same query set on both sides)
+      s"""WITH $IvfPqCtes,
+         |ap AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY adc_score DESC, vec_id) AS rn
+         |  FROM sc) WHERE rn <= 10),
+         |bp AS (SELECT q.query_id, e.vec_id,
+         |         ${cosSql("q.qe", "e.embedding")} AS sim
+         |       FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |ex AS (SELECT query_id, vec_id FROM (
+         |  SELECT query_id, vec_id,
+         |         row_number() OVER (PARTITION BY query_id
+         |                            ORDER BY sim DESC, vec_id) AS rn
+         |  FROM bp) WHERE rn <= 10)
+         |SELECT ex.query_id,
+         |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS INT) AS n_hits,
+         |  round(CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
+         |       AS DOUBLE) / 10.0, 6) AS recall
+         |FROM ex LEFT JOIN ap
+         |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
+         |GROUP BY 1""".stripMargin),
+
+    // SRP-LSH bucket assignment (data-independent cosine bucketing; the
+    // hyperplanes are md5-derived so the oracle replays them exactly).
+    Declared("sim_srp_buckets", (s, dir) =>
+      Similarity.srpBuckets(Tables.embeddings(s, dir), planes = 8, dim = 64),
+      """WITH hp AS (SELECT p, i,
+        |         CAST(strpos('0123456789abcdef',
+        |                     substr(md5(p || ':' || i), 1, 1)) - 1 AS DOUBLE)
+        |           - 7.5 AS w
+        |       FROM range(0, 8) t(p), range(1, 65) u(i)),
+        |d AS (SELECT e.vec_id, hp.p,
+        |        sum(CAST(e.embedding[hp.i] AS DOUBLE) * hp.w) AS dot
+        |      FROM embeddings e, hp GROUP BY 1, 2)
+        |SELECT vec_id,
+        |       CAST(sum(CASE WHEN dot > 0 THEN 1 << p ELSE 0 END) AS INT) AS bucket
+        |FROM d GROUP BY 1""".stripMargin),
+
+    // quantized ANN serving: integer dot products over the int8 index,
+    // descaled — the memory-footprint scale path for brute-force scoring
+    Declared("sim_topk_q8", (s, dir) =>
+      Similarity.bruteForceTopKQ8(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === 0, k = 10),
+      // integer dots are exact and the descale product is bit-identical
+      // IEEE on both engines, so the ranking needs no rounding guard
+      s"""WITH $Q8Ctes,
+         |p AS (SELECT a.vec_id AS query_id, b.vec_id AS vec_id,
+         |        CAST(list_aggregate(list_transform(range(1, len(a.q)+1),
+         |          i -> a.q[i] * b.q[i]), 'sum') AS DOUBLE) AS dq,
+         |        a.sc AS sa, b.sc AS sb
+         |      FROM qv a JOIN qv b ON b.vec_id <> a.vec_id
+         |      WHERE a.vec_id % 100 = 0),
+         |r AS (SELECT query_id, vec_id,
+         |        CASE WHEN sa * sb = 0 THEN 0.0
+         |             ELSE dq / (sa * sb) END AS score
+         |      FROM p),
+         |rk AS (SELECT *, row_number() OVER (PARTITION BY query_id
+         |         ORDER BY score DESC, vec_id) AS rn FROM r)
+         |SELECT query_id, vec_id, round(score, 6) AS q8_score
+         |FROM rk WHERE rn <= 10""".stripMargin),
+
+    // hamming candidate generation over the sign bits (the stage that
+    // touches every vector reads 16 bytes of it), exact float cosine
+    // reranks only the 40-candidate short list fetched by id
+    Declared("sim_topk_q1", (s, dir) =>
+      Similarity.bruteForceTopKBinary(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === 0, k = 10, rerank = 40),
+      // hamming over packed sign bits == count of sign mismatches, which
+      // is how the oracle states it (no bit packing needed to agree);
+      // candidate cut at (hamming, vec_id), final rank at (cosine, vec_id)
+      s"""WITH h AS (SELECT q.vec_id AS query_id, e.vec_id,
+         |        CAST(len(list_filter(range(1, 65),
+         |          i -> (q.embedding[i] > 0) <> (e.embedding[i] > 0)))
+         |          AS INT) AS hamming
+         |      FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
+         |      WHERE q.vec_id % 100 = 0),
+         |c AS (SELECT *, row_number() OVER (PARTITION BY query_id
+         |        ORDER BY hamming, vec_id) AS rn FROM h),
+         |r AS (SELECT c.query_id, c.vec_id, c.hamming,
+         |        ${cosSql("qq.embedding", "ee.embedding")} AS sim
+         |      FROM c JOIN embeddings qq ON c.query_id = qq.vec_id
+         |             JOIN embeddings ee ON c.vec_id = ee.vec_id
+         |      WHERE c.rn <= 40),
+         |rk AS (SELECT *, row_number() OVER (PARTITION BY query_id
+         |         ORDER BY sim DESC, vec_id) AS rnk FROM r)
+         |SELECT query_id, vec_id, hamming, round(sim, 6) AS cosine
+         |FROM rk WHERE rnk <= 10""".stripMargin),
+
+    // the production ANN shape: IVF cells bound the candidates, int8
+    // sketches bound the bytes — float embeddings never stored or read
+    Declared("sim_ivf_topk_q8", (s, dir) =>
+      Similarity.ivfTopKQ8(Tables.embeddings(s, dir),
+        col("vec_id") % 100 === 0, centroidMod = 50, nprobe = 3, k = 10),
+      // same cells and probes as sim_ivf_topk; candidate scoring swapped to
+      // the exact-integer quantized dot, descaled
+      s"""WITH $Q8Ctes,
+         |c AS (SELECT vec_id AS centroid_id, embedding AS ce
+         |      FROM embeddings WHERE vec_id % 50 = 0),
+         |asg AS (SELECT vec_id, centroid_id FROM (
+         |          SELECT e.vec_id, c.centroid_id,
+         |            row_number() OVER (PARTITION BY e.vec_id
+         |              ORDER BY ${cosSql("e.embedding", "c.ce")} DESC,
+         |                       c.centroid_id) AS rn
+         |          FROM embeddings e, c) WHERE rn = 1),
+         |q AS (SELECT vec_id AS query_id, embedding AS qe
+         |      FROM embeddings WHERE vec_id % 100 = 0),
+         |probe AS (SELECT query_id, centroid_id FROM (
+         |            SELECT q.query_id, c.centroid_id,
+         |              row_number() OVER (PARTITION BY q.query_id
+         |                ORDER BY ${cosSql("q.qe", "c.ce")} DESC,
+         |                         c.centroid_id) AS rn
+         |            FROM q, c) WHERE rn <= 3),
+         |cand AS (SELECT p.query_id, v.vec_id,
+         |           CASE WHEN qq.sc * v.sc = 0 THEN 0.0
+         |                ELSE CAST(list_aggregate(list_transform(
+         |                       range(1, len(qq.q)+1), i -> qq.q[i] * v.q[i]),
+         |                       'sum') AS DOUBLE) / (qq.sc * v.sc) END AS score
+         |         FROM probe p
+         |         JOIN asg a ON p.centroid_id = a.centroid_id
+         |         JOIN qv v ON v.vec_id = a.vec_id
+         |         JOIN qv qq ON qq.vec_id = p.query_id
+         |         WHERE a.vec_id <> p.query_id),
+         |r AS (SELECT query_id, vec_id, score,
+         |        row_number() OVER (PARTITION BY query_id
+         |                           ORDER BY score DESC, vec_id) AS rn
+         |      FROM cand)
+         |SELECT query_id, vec_id, round(score, 6) AS q8_score
+         |FROM r WHERE rn <= 10""".stripMargin)
+  )
+}

@@ -16,6 +16,13 @@ class EntrySpec extends SparkSpec {
     assert(q == o, s"queries without oracles: ${(q -- o).toSeq.sorted}")
   }
 
+  test("declared query names are distinct (a repeated name would shadow one)") {
+    val names = SparkEntry.declared.map(_.name)
+    val repeated = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(repeated.isEmpty, s"repeated names: ${repeated.toSeq.sorted}")
+    assert(names.size == 326)
+  }
+
   test("query names are stable identifiers (no spaces/uppercase)") {
     SparkEntry.queries.keys.foreach { n =>
       assert(n.matches("[a-z0-9_]+"), s"bad query name: $n")

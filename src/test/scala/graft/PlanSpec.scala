@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.{LlmQueries, ParityQueries}
-
 /** Plan-shape regression tests: the physical plans the engine depends on
   * for 100 TB viability, asserted so a refactor can't silently regress
   * them (e.g. losing a broadcast, a pushed filter, or the pre-shuffle

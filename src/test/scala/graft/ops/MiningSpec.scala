@@ -256,7 +256,7 @@ class MiningSpec extends SparkSpec {
       (4L, "alpha beta alpha beta"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = graft.queries.MiningQueries.queries("text_collocations")(
+    val out = graft.SparkEntry.queries("text_collocations")(
       spark, tmp)
     // min co-occurrence threshold (20) filters the toy bigrams away; the
     // point is the plan EXECUTES — degenerate docs contribute nothing

@@ -9,9 +9,15 @@ by every column) and compared cell by cell with exact equality. Parquet
 files themselves are not compared: their footers list column encodings in
 a run-dependent order, so two dumps of the same rows differ in bytes.
 
+It also compares the two directories' `oracle_sql.json`: the same keys, and
+identical SQL text for each key.
+
 Exits 1 when any query differs, is missing from either side, or either
-side holds an `__error` dump; prints one line per query either way.
+side holds an `__error` dump, and when the oracles differ in any key or
+text or either `oracle_sql.json` is missing; prints one line per query and
+one line per oracle difference.
 """
+import json
 import os
 import sys
 
@@ -43,6 +49,26 @@ def first_diff(a, b):
     return None
 
 
+def oracle_diffs(dir_a, dir_b):
+    """(number of keys, one line per difference) of the two oracle_sql.json."""
+    oracles = []
+    for d in (dir_a, dir_b):
+        path = os.path.join(d, "oracle_sql.json")
+        if not os.path.exists(path):
+            return 0, [f"ORACLE DIFF: {path} missing"]
+        with open(path) as f:
+            oracles.append(json.load(f))
+    a, b = oracles
+    lines = []
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            side = dir_a if name not in a else dir_b
+            lines.append(f"ORACLE DIFF {name}: missing from {side}")
+        elif a[name] != b[name]:
+            lines.append(f"ORACLE DIFF {name}: SQL text differs")
+    return len(a.keys() | b.keys()), lines
+
+
 def main():
     if len(sys.argv) != 3:
         sys.exit(__doc__)
@@ -68,8 +94,12 @@ def main():
         else:
             print(f"SAME {name} ({len(a)} rows)")
             n_same += 1
+    n_keys, oracle_lines = oracle_diffs(dir_a, dir_b)
+    for line in oracle_lines:
+        print(line)
     print(f"\n{n_same} identical, {n_bad} differ")
-    sys.exit(1 if n_bad else 0)
+    print(f"oracle_sql.json: {n_keys} keys, {len(oracle_lines)} differ")
+    sys.exit(1 if n_bad or oracle_lines else 0)
 
 
 if __name__ == "__main__":
