@@ -3,8 +3,12 @@ package graft.pipeline
 import graft.metrics.EtlMetrics
 import graft.ops.{Aggregations, Cleaning, Quality}
 import graft.sources.{BrewerySource, Extractor, IteratorBrewerySource}
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** The 4-stage medallion driver with REAL materialization — the Spark
   * re-expression of the reference's Airflow DAG
@@ -17,6 +21,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Stage boundaries are files on disk, like the reference (XCom only ever
   * carried paths). Writes use atomic overwrite (temp dir + rename,
   * reference helpers.py:363-417 — Delta's only feature actually exercised).
+  *
+  * The reference verifies each write by reading the table back and
+  * counting it (S10, landing_to_bronze.py:184-188). Here every read-back
+  * count — bronze, silver, quarantine, both gold tables — and the silver
+  * partition gauge come from the Parquet footers of the committed files,
+  * summed on the driver ([[committedRows]]), and each stage reads its
+  * input with the schema the previous stage wrote. A run starts only its
+  * write jobs: 1 for bronze, 2 for quarantine and silver, 2 per gold
+  * aggregate under AQE.
   *
   * Scale notes (100 TB):
   *  - The F1 split is computed from the MATERIALIZED bronze table: the
@@ -101,7 +114,7 @@ object Pipeline {
     val kept = if (numFiles > 0) keep.repartition(numFiles) else keep
     val nBefore = before.count()
     atomicOverwrite(spark, kept, path)
-    nBefore - spark.read.parquet(path).count()
+    nBefore - committedRows(spark, path)
   }
 
   /** Recursive non-hidden data-file listing of a store directory —
@@ -110,21 +123,48 @@ object Pipeline {
     * same way Hadoop's listing filter hides them from readers.
     */
   private[graft] def listDataFiles(fs: FileSystem,
-                                   dest: HPath): Set[String] = {
-    if (!fs.exists(dest)) return Set.empty
-    val root = fs.makeQualified(dest)
-    val out = scala.collection.mutable.Set.empty[String]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      // hidden if any component BELOW the store root is ./_-prefixed
-      // (partition dirs may nest); the root's own name is exempt
-      val hidden = Iterator.iterate(f)(_.getParent)
-        .takeWhile(p => p != null && p != root)
-        .exists(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
-      if (!hidden && f.getName.endsWith(".parquet")) out += f.toString
-    }
-    out.toSet
+                                   dest: HPath): Set[String] =
+    dataFiles(fs, dest).map(_.getPath.toString).toSet
+
+  /** The walk behind [[listDataFiles]] and [[committedRows]]: one
+    * `listStatus` per directory, never descending into a hidden
+    * (`.`/`_`-prefixed) entry below the store root (the root's own name
+    * is exempt; partition dirs may nest). A plain `listStatus` walk, not
+    * Hadoop's recursive `listFiles`, whose located statuses cost block
+    * lookups per file.
+    */
+  private def dataFiles(fs: FileSystem, dest: HPath): Seq[FileStatus] = {
+    def walk(dir: HPath): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith(".") || name.startsWith("_")) Nil
+        else if (st.isDirectory) walk(st.getPath)
+        else if (name.endsWith(".parquet")) Seq(st)
+        else Nil
+      }
+    if (fs.exists(dest)) walk(fs.makeQualified(dest)) else Nil
+  }
+
+  /** Sum of the Parquet footer row counts of `files`, read on the
+    * driver: the S10 read-back without a Spark job. The deprecated
+    * `readFooter` takes the walk's `FileStatus`; its replacement,
+    * `ParquetFileReader.open(HadoopInputFile.fromPath(..))`, stats each
+    * file again and builds a full reader around the footer.
+    */
+  @scala.annotation.nowarn("cat=deprecation")
+  private def footerRows(conf: Configuration, files: Seq[FileStatus]): Long =
+    files.iterator.map { st =>
+      ParquetFileReader.readFooter(conf, st, ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.iterator.map(_.getRowCount).sum
+    }.sum
+
+  /** Committed row count of the parquet table at `path`: the footer row
+    * counts of its visible data files (what a reader of `path` counts),
+    * summed on the driver. A missing table holds 0 rows.
+    */
+  def committedRows(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    footerRows(conf, dataFiles(FileSystem.get(conf), new HPath(path)))
   }
 
   /** The pre-swap half of the concurrent-append guard: files present
@@ -309,10 +349,8 @@ object Pipeline {
           runTag: String = "batch0"): RunResult = {
     val lay = Layout(outRoot)
     val sourceDf = Breweries.bronze(spark, sfDir)
-    val source = new IteratorBrewerySource(() => {
-      import scala.jdk.CollectionConverters._
-      sourceDf.toJSON.toLocalIterator().asScala
-    })
+    val source = new IteratorBrewerySource(() =>
+      sourceDf.toJSON.toLocalIterator().asScala)
     run(spark, source, sourceDf.schema, lay, metrics, perPage, csvGold,
       runTag, retryDelayMillis = 0)
   }
@@ -341,7 +379,7 @@ object Pipeline {
 
     // Stage 2 — landing -> bronze: union-all of page files (schema-on-read),
     // ingestion metadata, overwrite write, read-back verification (S10).
-    val (bronzeRows, bronzeBytes, bronzeFields) = stage { metrics.timed("landing_to_bronze") {
+    val (bronzeRows, bronzeBytes, bronzeSchema) = stage { metrics.timed("landing_to_bronze") {
       // FAILFAST: the reference raises on an unreadable/corrupt landing
       // file (landing_to_bronze.py:146-154) rather than skipping it.
       // (Its `finally` also bumps the failure counter on every file —
@@ -353,19 +391,22 @@ object Pipeline {
         landing, java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
       atomicOverwrite(spark, bronze, lay.bronze)
       val (rows, bytes) = Extractor.readBack(spark, lay.bronze)
-      (rows, bytes, bronze.schema.fields.length)
+      (rows, bytes, bronze.schema)
     }}
     metrics.setGauge("brewery_etl_transform_schema_fields_count",
-      bronzeFields.toDouble)
+      bronzeSchema.fields.length.toDouble)
     metrics.recordsProcessed("landing_to_bronze", bronzeRows)
     metrics.bytesProcessed("landing_to_bronze", bronzeBytes)
 
     // Stage 3 — bronze -> silver + quarantine: ONE materialized input, two
     // complementary pushdown-filtered sinks. Executor-side input metrics
-    // recorded alongside the dir-size gauge.
-    val (silverRows, quarantineRows, discarded, silverParts) = stage { metrics.timed("bronze_to_silver") {
+    // recorded alongside the dir-size gauge. Bronze is read with the
+    // schema stage 2 wrote (an inferred read is one more job), and the
+    // silver schema is handed to stage 4 the same way.
+    val (silverRows, quarantineRows, discarded, silverParts, silverSchema) =
+      stage { metrics.timed("bronze_to_silver") {
       graft.metrics.SparkIoMetrics.measure(spark, metrics, "bronze_to_silver") {
-      val bronze = spark.read.parquet(lay.bronze)
+      val bronze = spark.read.schema(bronzeSchema).parquet(lay.bronze)
       Quality.requireColumns(bronze, Breweries.KeyFields)
       val (cleaned, quarantine) = Breweries.silverSplit(bronze)
       // per-run subdir + atomic overwrite: cross-run APPEND semantics via
@@ -373,14 +414,17 @@ object Pipeline {
       // double-appending
       atomicOverwrite(spark, quarantine, s"${lay.quarantine}/run=$runTag")
       atomicOverwrite(spark, cleaned, lay.silver, partitionBy = Seq("location"))
-      val sRows = spark.read.parquet(lay.silver).count()
+      val conf = spark.sparkContext.hadoopConfiguration
+      val silverFiles = dataFiles(FileSystem.get(conf), new HPath(lay.silver))
+      val sRows = footerRows(conf, silverFiles)
+      // a partition is a `location=` directory holding a data file
+      val parts = silverFiles.map(_.getPath.getParent)
+        .filter(_.getName.startsWith("location=")).distinct.size.toLong
       // the result reports every run's quarantine; the counter only this
       // run's (the reference counts the current run's invalid rows)
-      val qRows = spark.read.parquet(lay.quarantine).count()
-      val runQ = spark.read.parquet(s"${lay.quarantine}/run=$runTag").count()
-      val parts = spark.read.parquet(lay.silver)
-        .select("location").distinct().count()
-      (sRows, qRows, runQ, parts)
+      val qRows = committedRows(spark, lay.quarantine)
+      val runQ = committedRows(spark, s"${lay.quarantine}/run=$runTag")
+      (sRows, qRows, runQ, parts, cleaned.schema)
       }
     }}
     metrics.recordsProcessed("bronze_to_silver", silverRows)
@@ -394,7 +438,7 @@ object Pipeline {
     // README documents CSV gold outputs its code never wrote — offered
     // behind a flag, SURVEY §3).
     val goldRows = stage { metrics.timed("silver_to_gold") {
-      val silver = spark.read.parquet(lay.silver)
+      val silver = spark.read.schema(silverSchema).parquet(lay.silver)
       val aggs = Map(
         "by_type_location" -> Aggregations.goldByTypeLocation(silver),
         "by_location" -> Aggregations.goldByLocation(silver))
@@ -403,7 +447,7 @@ object Pipeline {
         if (csvGold)
           df.coalesce(1).write.mode("overwrite").option("header", true)
             .csv(lay.gold(name) + "_csv")
-        name -> spark.read.parquet(lay.gold(name)).count()
+        name -> committedRows(spark, lay.gold(name))
       }
     }}
     goldRows.foreach { case (name, n) =>

@@ -76,7 +76,7 @@ object CorpusQueries {
     */
   private def guardedKeptIds(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame =
-    memoDf(s, dir, "guardedKeptIds") {
+    BuildMemo.df(s, dir, "guardedKeptIds") {
       Dedup.nearDupKeepFirst(Tables.documents(s, dir), "doc_id",
           numHashes = 16, bands = 4, threshold = 0.5, maxBucketSize = 64)
         .select(col("doc_id"))
@@ -100,7 +100,7 @@ object CorpusQueries {
     */
   private def substrDropIds(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame =
-    memoDf(s, dir, "substrDropIds") {
+    BuildMemo.df(s, dir, "substrDropIds") {
       TextAnalysis.substringDupStats(Tables.documents(s, dir),
           "doc_id", "text", w = 20)
         .filter(col("dropped")).select(col("doc_id"))
@@ -112,7 +112,7 @@ object CorpusQueries {
     */
   private def contamFlagged(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame =
-    memoDf(s, dir, "contamFlagged") {
+    BuildMemo.df(s, dir, "contamFlagged") {
       val docs = Tables.documents(s, dir)
       TextAnalysis.contaminationReport(docs,
         docs.filter(col("source") === "src9"), "doc_id", "text", n = 8)
@@ -127,7 +127,7 @@ object CorpusQueries {
     */
   private def qclfTopIds(s: org.apache.spark.sql.SparkSession,
                          dir: String): org.apache.spark.sql.DataFrame =
-    memoDf(s, dir, "qclfTopIds") {
+    BuildMemo.df(s, dir, "qclfTopIds") {
       val sk = qclfSketch(s, dir)
       val w = QualityModel.trainHashedLogRegWith(sk, "doc_id", lr = 0.5,
         iters = 3)

@@ -277,16 +277,16 @@ object SimilarityQueries {
     residualBuiltMemo.computeIfAbsent((s, dir), { _ =>
       val e = Tables.embeddings(s, dir)
       val ivfCb = kmeans2(s, dir)
-      val pqCbRes = memoDf(s, dir, "pqResFixed8") {
+      val pqCbRes = BuildMemo.df(s, dir, "pqResFixed8") {
         val res = Similarity.ivfResiduals(e, ivfCb)
         Similarity.pqCodebookLearnedFrom(res,
           Similarity.pqCodebookFixed(res, m = 8, dim = 64, k = 256),
           m = 8, dim = 64, maxIters = 8)
       }
-      val index = memoDf(s, dir, "residualIndex8") {
+      val index = BuildMemo.df(s, dir, "residualIndex8") {
         Similarity.ivfPqResidualIndex(e, ivfCb, pqCbRes, m = 8, dim = 64)
       }
-      val cellCodes = memoDf(s, dir, "residualCells8") {
+      val cellCodes = BuildMemo.df(s, dir, "residualCells8") {
         Similarity.ivfPqCellCodes(index)
       }
       ResidualBuilt(ivfCb, pqCbRes, index, cellCodes)
@@ -297,7 +297,7 @@ object SimilarityQueries {
     */
   private def kmeans2(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    memoDf(s, dir, "kmeans2") {
+    BuildMemo.df(s, dir, "kmeans2") {
       val e = Tables.embeddings(s, dir)
       Similarity.kmeansTrain(e,
         e.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"),
@@ -309,7 +309,7 @@ object SimilarityQueries {
     */
   private def pq4learned(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    memoDf(s, dir, "pq4learned") {
+    BuildMemo.df(s, dir, "pq4learned") {
       Similarity.pqCodebookLearned(Tables.embeddings(s, dir), m = 4,
         dim = 64, centroidMod = 50, maxIters = 2)
     }
@@ -320,7 +320,7 @@ object SimilarityQueries {
     */
   private def exactTopK(s: org.apache.spark.sql.SparkSession, dir: String,
                         res: Int): org.apache.spark.sql.DataFrame =
-    memoDf(s, dir, s"exact$res") {
+    BuildMemo.df(s, dir, s"exact$res") {
       Similarity.bruteForceTopK(Tables.embeddings(s, dir),
         col("vec_id") % 100 === res, k = 10)
     }
@@ -359,7 +359,7 @@ object SimilarityQueries {
       : org.apache.spark.sql.DataFrame = {
     val e = Tables.embeddings(s, dir)
     val b = residualBuilt(s, dir)
-    val q8store = memoDf(s, dir, "q8store") {
+    val q8store = BuildMemo.df(s, dir, "q8store") {
       Similarity.quantize(e).select(col("vec_id"), col("q8"),
         col("q_scale"))
     }
@@ -835,7 +835,7 @@ object SimilarityQueries {
         .select("vec_id", "embedding")
       val pqCb = pq4learned(s, dir)
       Similarity.ivfPqTopKIndexedReranked(
-        memoDf(s, dir, "idx4seed")(
+        BuildMemo.df(s, dir, "idx4seed")(
           Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
         ivfCb, pqCb, e.filter(col("vec_id") % 100 === 0), e, m = 4,
         dim = 64, nprobe = 3, shortlist = 50, k = 10)
@@ -861,7 +861,7 @@ object SimilarityQueries {
       val pqCb = pq4learned(s, dir)
       Similarity.recallAtK(
         Similarity.ivfPqTopKIndexedReranked(
-          memoDf(s, dir, "idx4kmeans")(
+          BuildMemo.df(s, dir, "idx4kmeans")(
             Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
           ivfCb, pqCb, e.filter(col("vec_id") % 100 === 0), e, m = 4,
           dim = 64, nprobe = 5, shortlist = 50, k = 10),
@@ -903,7 +903,7 @@ object SimilarityQueries {
       val pqCb = pq4learned(s, dir)
       Similarity.recallAtK(
         Similarity.ivfPqTopKIndexedReranked(
-          memoDf(s, dir, "idx4kmeans")(
+          BuildMemo.df(s, dir, "idx4kmeans")(
             Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
           ivfCb, pqCb, e.filter(col("vec_id") % 100 === 7), e, m = 4,
           dim = 64, nprobe = 5, shortlist = 50, k = 10),
@@ -1092,7 +1092,7 @@ object SimilarityQueries {
       val pqCb = pq4learned(s, dir)
       Similarity.recallAtK(
         Similarity.ivfPqTopKIndexed(
-          memoDf(s, dir, "idx4seed")(
+          BuildMemo.df(s, dir, "idx4seed")(
             Similarity.ivfPqIndex(e, ivfCb, pqCb, m = 4, dim = 64)),
           ivfCb, pqCb, e.filter(col("vec_id") % 100 === 0), m = 4,
           dim = 64, nprobe = 3, k = 10),

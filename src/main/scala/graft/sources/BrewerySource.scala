@@ -166,10 +166,12 @@ object Extractor {
   }
 
   /** S10 — read-back verification + dir-size metric
-    * (landing_to_bronze.py:184-188, helpers.py:150-166).
+    * (landing_to_bronze.py:184-188, helpers.py:150-166). The row count
+    * comes from the Parquet footers of the committed files
+    * ([[graft.pipeline.Pipeline.committedRows]]), not from a Spark job.
     */
   def readBack(spark: SparkSession, path: String): (Long, Long) = {
-    val rows = spark.read.parquet(path).count()
+    val rows = graft.pipeline.Pipeline.committedRows(spark, path)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength

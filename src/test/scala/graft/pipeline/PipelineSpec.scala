@@ -2,9 +2,30 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.metrics.EtlMetrics
+import graft.sources.IteratorBrewerySource
 import java.nio.file.Files
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 class PipelineSpec extends SparkSpec {
+
+  private val brewerySchema = StructType(Seq("id", "name", "brewery_type",
+    "city", "state", "country", "website_url")
+    .map(StructField(_, StringType)))
+
+  /** `n` in-memory brewery rows as JSON; rows for which `invalid` holds
+    * have a null `id` (a key field, so they go to quarantine).
+    */
+  private def breweryRows(n: Int, invalid: Int => Boolean): IteratorBrewerySource =
+    new IteratorBrewerySource(() => Iterator.tabulate(n) { i =>
+      val id = if (invalid(i)) "null" else s""""b$i""""
+      s"""{"id":$id,"name":"Brew $i","brewery_type":"micro","city":"c${i % 5}",""" +
+        s""""state":"s${i % 3}","country":"k${i % 4}","website_url":"brew$i.example"}"""
+    })
+
+  private def runOn(source: IteratorBrewerySource, out: String,
+                    metrics: EtlMetrics, runTag: String): Pipeline.RunResult =
+    Pipeline.run(spark, source, brewerySchema, Pipeline.Layout(out), metrics,
+      perPage = 50, csvGold = false, runTag = runTag, retryDelayMillis = 0)
 
   test("full medallion run materializes every layer with conserved counts") {
     val out = Files.createTempDirectory("graft_pipe_").toString
@@ -228,5 +249,94 @@ class PipelineSpec extends SparkSpec {
     intercept[RuntimeException] {
       Pipeline.retry(2, 0, _ => ())(throw new RuntimeException("always"))
     }
+  }
+
+  test("listStatus walk lists the same data files as Hadoop's recursive listing") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val root = Files.createTempDirectory("graft_list_").toString + "/x"
+    Seq((1, "a", 10), (2, "b", 20), (3, "a", 30)).toDF("v", "p", "q")
+      .write.partitionBy("p", "q").parquet(root)
+    // hidden siblings inside the table: a `_SUCCESS` marker (the write
+    // left one too), an interrupted swap's tmp and stash, each holding
+    // a parquet file a reader must not see
+    Seq(s"$root/.x.__tmp", s"$root/.x.__old", s"$root/p=a/.x.__tmp")
+      .foreach(d => Seq(9).toDF("v").write.parquet(d))
+    Files.write(new java.io.File(s"$root/p=b/_SUCCESS").toPath, Array[Byte]())
+    val qroot = fs.makeQualified(new HPath(root))
+    val it = fs.listFiles(qroot, true)
+    val recursive = Iterator.continually(it).takeWhile(_.hasNext)
+      .map(_.next().getPath)
+      .filter { f =>
+        val hidden = Iterator.iterate(f)(_.getParent)
+          .takeWhile(p => p != null && p != qroot)
+          .exists(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
+        !hidden && f.getName.endsWith(".parquet")
+      }.map(_.toString).toSet
+    assert(recursive.size >= 3)
+    assert(Pipeline.listDataFiles(fs, new HPath(root)) == recursive)
+    assert(Pipeline.committedRows(spark, root) == spark.read.parquet(root).count())
+    assert(Pipeline.listDataFiles(fs, new HPath(root + "_missing")).isEmpty)
+    assert(Pipeline.committedRows(spark, root + "_missing") == 0L)
+  }
+
+  test("an all-invalid batch completes with empty silver and gold, all rows quarantined") {
+    val out = Files.createTempDirectory("graft_pipe_").toString
+    val metrics = EtlMetrics.quiet()
+    val res = runOn(breweryRows(120, _ => true), out, metrics, "r1")
+    assert(res.bronzeRows == 120)
+    assert(res.silverRows == 0)
+    assert(metrics.gauge("brewery_etl_silver_partitions_count") == 0.0)
+    assert(res.goldRows == Map("by_type_location" -> 0L, "by_location" -> 0L))
+    assert(res.quarantineRows == res.bronzeRows)
+    assert(metrics.counter("brewery_etl_records_discarded_total",
+      Map("operation" -> "bronze_to_silver")) == res.bronzeRows.toDouble)
+  }
+
+  test("a run starts only its write jobs, and its read-back equals Spark's counts") {
+    import org.apache.spark.graft.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_pipe_").toString
+    // a stale hidden swap dir holding rows: readers skip it, so must the
+    // footer read-back of the quarantine root
+    Seq(("stale", 1)).toDF("id", "n").write.parquet(s"$out/quarantine/.run=r2.__tmp")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val invalid = (i: Int) => i % 7 == 0
+    val metrics = EtlMetrics.quiet()
+    ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val r1 = try runOn(breweryRows(400, invalid), out, metrics, "r1")
+    finally {
+      ListenerDrain.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() <= 7, s"${jobs.get()} jobs")
+
+    // every RunResult field and the partition gauge equal what Spark's
+    // own reads of the written tables report
+    def checkReadBack(r: Pipeline.RunResult, tag: String): Unit = {
+      def count(sub: String) = spark.read.parquet(s"$out/$sub").count()
+      assert(r == Pipeline.RunResult(8, count("bronze"), r.bronzeBytes,
+        count("silver"), count("quarantine"),
+        Map("by_type_location" -> count("gold/by_type_location"),
+          "by_location" -> count("gold/by_location"))), tag)
+      assert(r.bronzeBytes > 0, tag)
+      assert(metrics.gauge("brewery_etl_silver_partitions_count") ==
+        spark.read.parquet(s"$out/silver").select("location").distinct()
+          .count().toDouble, tag)
+    }
+    checkReadBack(r1, "r1")
+    val r2 = runOn(breweryRows(400, invalid), out, metrics, "r2")
+    checkReadBack(r2, "r2")
+    val q = (0 until 400).count(invalid).toLong
+    assert(r1.bronzeRows == 400 && r1.quarantineRows == q &&
+      r2.quarantineRows == 2 * q && r2.silverRows == 400 - q)
+    assert(metrics.counter("brewery_etl_records_discarded_total",
+      Map("operation" -> "bronze_to_silver")) == 2.0 * q)
   }
 }
