@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *  - [[bruteForceTopK]] broadcasts the query set; the candidate corpus is
   *    scanned once map-side; the only shuffle carries (query, candidate,
   *    sim) survivors keyed by the small query set.
-  *  - [[ivfTopK]] is the scale path: a coarse quantizer (here a
-  *    deterministic corpus subset standing in for a learned k-means
-  *    codebook) partitions the corpus into cells; queries probe `nprobe`
+  *  - [[ivfTopKWith]] is the scale path: a coarse quantizer (a learned
+  *    k-means codebook, or a deterministic corpus subset standing in for
+  *    one) partitions the corpus into cells; queries probe `nprobe`
   *    cells, dropping per-query work from |corpus| to nprobe * |cell|.
   *  - [[blockedNearDupPairs]] compares pairs only within a coarse bucket —
   *    IVF-style near-dup, never an all-pairs join across the corpus.
@@ -44,21 +44,120 @@ object Similarity {
     embeddings.withColumn("nrm", sqrt(fdot(col("embedding"), col("embedding"))))
   }
 
+  // ---- The search steps every face below is built from ----------------
+
+  /** Cosine of vectors `a` and `b` from their precomputed norms. Kept in
+    * division form (not `dot >= t*|a||b|`): bit-parity with the oracle's
+    * cosine expression on borderline rows.
+    */
+  private def cosineOf(a: String, an: String, b: String, bn: String): Column =
+    fdot(col(a), col(b)) / (col(an) * col(bn))
+
+  /** Query row `qe` against candidate row `embedding`. */
+  private def qsim: Column = cosineOf("qe", "qnrm", "embedding", "nrm")
+
+  private def notSelf: Column = col("vec_id") =!= col("query_id")
+
+  private def cosineOut: Column = round(col("sim"), 6).as("cosine")
+
+  private def q8Out: Column = round(col("score"), 6).as("q8_score")
+
+  /** Rank rows within each `part` by `order` and keep the first `k`. The
+    * filter sits directly above the window, so Spark plans a
+    * WindowGroupLimit below the shuffle: each map task ships at most k
+    * rows per key.
+    */
+  private def rankCut(df: DataFrame, part: String, k: Int,
+                      order: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(part).orderBy(order: _*)))
+      .filter(col("rn") <= k)
+
+  /** Per query, the `k` candidates with the highest `score` (ties on
+    * vec_id), as (query_id, vec_id, out...).
+    */
+  private def topK(df: DataFrame, score: String, k: Int,
+                   out: Column*): DataFrame =
+    rankCut(df, "query_id", k, col(score).desc, col("vec_id"))
+      .select(Seq(col("query_id"), col("vec_id")) ++ out: _*)
+
+  /** The query side of a float search, (query_id, qe, qnrm, extra...),
+    * from rows carrying `nrm`.
+    */
+  private def queryRows(normed: DataFrame, extra: Column*): DataFrame =
+    normed.select(Seq(col("vec_id").as("query_id"), col("embedding").as("qe"),
+      col("nrm").as("qnrm")) ++ extra: _*)
+
+  /** The query's int8 sketch columns, as [[q8Score]] reads them. */
+  private def q8Query: Seq[Column] =
+    Seq(col("q8").as("qq8"), col("q_scale").as("qq_scale"))
+
+  /** The approximate raw dot of int8 sketches: one exact integer dot
+    * ([[graft.functions.Int8DotProduct]]) descaled by the two scales, 0
+    * when either scale is 0.
+    */
+  private def q8Score: Column = {
+    val denom = col("qq_scale") * col("q_scale")
+    when(denom === 0.0, 0.0).otherwise(
+      call_function("graft_i8dot", col("qq8"), col("q8")).cast("double") / denom)
+  }
+
+  /** The coarse codebook as broadcastable cells (centroid_id, ce, cnrm). */
+  private def cells(codebook: DataFrame): DataFrame =
+    withNorm(codebook).select(col("vec_id").as("centroid_id"),
+      col("embedding").as("ce"), col("nrm").as("cnrm"))
+
+  /** Each query's `nprobe` nearest coarse cells by cosine (ties on
+    * centroid id): |Q| x nprobe rows, both sides broadcast. `q` is
+    * [[queryRows]] output; the `keep` columns ride through, so callers
+    * never join the probe back to their queries.
+    */
+  private def probe(q: DataFrame, codebook: DataFrame, nprobe: Int,
+                    keep: String*): DataFrame =
+    rankCut(broadcast(q).join(broadcast(cells(codebook)))
+        .withColumn("psim", cosineOf("qe", "qnrm", "ce", "cnrm")),
+      "query_id", nprobe, col("psim").desc, col("centroid_id"))
+      .select((keep :+ "centroid_id").map(col): _*)
+
+  /** One row per (row, subspace j < m): the `keep` columns, `sub` = j and
+    * `as` = the j-th (dim/m)-slice of `vec`.
+    */
+  private def subvectors(df: DataFrame, keep: Seq[String], vec: String,
+                         as: String, m: Int, dim: Int): DataFrame = {
+    val sub = dim / m
+    val kept = keep.map(col)
+    df.select(kept :+ explode(array(
+        (0 until m).map(j => struct(lit(j).as("sub"),
+          slice(col(vec), j * sub + 1, sub).as(as))): _*)).as("s"): _*)
+      .select(kept :+ col("s.sub").as("sub") :+ col(s"s.$as").as(as): _*)
+  }
+
+  /** Squared L2 distance of subvector `xe` to sub-centroid `ce`, through
+    * [[graft.functions.FloatDotProduct]]'s sequential double accumulation
+    * (`x.x - 2 x.c + c.c`, so the oracle replays it bit-identically),
+    * rounded to 6 decimals before any argmin.
+    */
+  private def d2: Column = round(
+    fdot(col("xe"), col("xe")) - lit(2.0) * fdot(col("xe"), col("ce")) +
+      fdot(col("ce"), col("ce")), 6)
+
+  /** The exact scoring step shared by [[bruteForceTopK]],
+    * [[partitionedTopK]] and [[filteredTopK]]: broadcast the query rows
+    * `q`, score every normed candidate of `cand` matching `on` by cosine,
+    * rank per query.
+    */
+  private def exactTopK(q: DataFrame, cand: DataFrame, on: Column,
+                        k: Int): DataFrame =
+    topK(broadcast(q).join(cand, on).withColumn("sim", qsim), "sim", k,
+      cosineOut)
+
   /** Exact top-k by cosine for each query vector (queries = rows of
     * `embeddings` selected by `queryPred`), excluding self-matches.
     * Ties break deterministically on candidate id.
     */
   def bruteForceTopK(embeddings: DataFrame, queryPred: Column, k: Int): DataFrame = {
     val e = withNorm(embeddings)
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val pairs = broadcast(q).join(e, col("vec_id") =!= col("query_id"))
-      .withColumn("sim", fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id")))
-    pairs.withColumn("rn", rn).filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("cosine"))
+    exactTopK(queryRows(e.filter(queryPred)), e, notSelf, k)
   }
 
   /** int8 scalar quantization of the embedding column: appends `q_scale`
@@ -120,24 +219,14 @@ object Similarity {
     val ham = (1 to words)
       .map(i => bit_count(col(s"qb$i").bitwiseXOR(col(s"b$i"))))
       .reduce(_ + _)
-    val cand = broadcast(q).join(bq, col("vec_id") =!= col("query_id"))
-      .withColumn("hamming", ham.cast("int"))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("hamming"), col("vec_id"))))
-      .filter(col("rn") <= rerank)
+    val cand = rankCut(broadcast(q).join(bq, notSelf)
+        .withColumn("hamming", ham.cast("int")),
+      "query_id", rerank, col("hamming"), col("vec_id"))
       .select(col("query_id"), col("vec_id"), col("hamming"))
     // rerank-sized float fetches: one per candidate, one per query
     val e = withNorm(embeddings)
-    val qe = e.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      col("nrm").as("qnrm"))
-    cand.join(e, "vec_id").join(broadcast(qe), "query_id")
-      .withColumn("sim",
-        fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")))
-      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("hamming"),
-        round(col("sim"), 6).as("cosine"))
+    topK(cand.join(e, "vec_id").join(broadcast(queryRows(e)), "query_id")
+      .withColumn("sim", qsim), "sim", k, col("hamming"), cosineOut)
   }
 
   /** Brute-force top-k over the QUANTIZED index: per pair one integer dot
@@ -166,17 +255,9 @@ object Similarity {
   def bruteForceTopKQ8Indexed(e: DataFrame, queryPred: Column,
                               k: Int): DataFrame = {
     GraftFunctions.register(e.sparkSession)
-    val q = e.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("q8").as("qq8"), col("q_scale").as("qq_scale"))
-    val dq = call_function("graft_i8dot", col("qq8"), col("q8")).cast("double")
-    val denom = col("qq_scale") * col("q_scale")
-    val pairs = broadcast(q).join(e, col("vec_id") =!= col("query_id"))
-      .withColumn("score", when(denom === 0.0, 0.0).otherwise(dq / denom))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("score").desc, col("vec_id")))
-    pairs.withColumn("rn", rn).filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"),
-        round(col("score"), 6).as("q8_score"))
+    val q = e.filter(queryPred).select(col("vec_id").as("query_id") +: q8Query: _*)
+    topK(broadcast(q).join(e, notSelf).withColumn("score", q8Score), "score", k,
+      q8Out)
   }
 
   /** The quantized ANN index: IVF cell assignment + int8 sketch, keeping
@@ -196,32 +277,15 @@ object Similarity {
     */
   def ivfTopKIndexedQ8(assignedQ8: DataFrame, codebook: DataFrame,
                        queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val q = withNorm(quantize(queries))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"), col("q8").as("qq8"),
-        col("q_scale").as("qq_scale"))
-    val c = withNorm(codebook).select(col("vec_id").as("centroid_id"),
-      col("embedding").as("ce"), col("nrm").as("cnrm"))
-    val probeRn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("psim").desc, col("centroid_id")))
-    val probed = broadcast(q).join(broadcast(c))
-      .withColumn("psim", fdot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")))
-      .withColumn("prn", probeRn).filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("qq8"), col("qq_scale"), col("centroid_id"))
-    val denom = col("qq_scale") * col("q_scale")
-    val cand = probed.join(assignedQ8, Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score", when(denom === 0.0, 0.0).otherwise(
-        call_function("graft_i8dot", col("qq8"), col("q8")).cast("double") / denom))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("score").desc, col("vec_id")))
-    cand.withColumn("rn", rn).filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"),
-        round(col("score"), 6).as("q8_score"))
+    val q = queryRows(withNorm(quantize(queries)), q8Query: _*)
+    val probed = probe(q, codebook, nprobe, "query_id", "qq8", "qq_scale")
+    topK(probed.join(assignedQ8, Seq("centroid_id")).filter(notSelf)
+      .withColumn("score", q8Score), "score", k, q8Out)
   }
 
-  /** One-call quantized IVF (codebook = the deterministic corpus subset,
-    * as [[ivfTopK]]): build the quantized index, serve the queries.
+  /** One-call quantized IVF (codebook = the deterministic corpus subset
+    * `vec_id % centroidMod == 0`, a stand-in for a learned k-means
+    * codebook): build the quantized index, serve the queries.
     */
   def ivfTopKQ8(embeddings: DataFrame, queryPred: Column, centroidMod: Int,
                 nprobe: Int, k: Int): DataFrame = {
@@ -235,35 +299,21 @@ object Similarity {
     * cross-score + per-vector argmax — the corpus is scanned once.
     */
   def ivfAssign(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    val e = withNorm(embeddings)
-    val c = withNorm(centroids).select(col("vec_id").as("centroid_id"),
-      col("embedding").as("ce"), col("nrm").as("cnrm"))
-    val scored = e.join(broadcast(c))
-      .withColumn("csim", fdot(col("embedding"), col("ce")) / (col("nrm") * col("cnrm")))
-    val rn = row_number().over(
-      Window.partitionBy("vec_id").orderBy(col("csim").desc, col("centroid_id")))
+    val scored = withNorm(embeddings).join(broadcast(cells(centroids)))
+      .withColumn("csim", cosineOf("embedding", "nrm", "ce", "cnrm"))
     // carry every original column (schema-agnostic) + norm + assignment
-    scored.withColumn("rn", rn).filter(col("rn") === 1)
+    rankCut(scored, "vec_id", 1, col("csim").desc, col("centroid_id"))
       .select(embeddings.columns.toIndexedSeq.map(col) :+
         col("nrm") :+ col("centroid_id"): _*)
   }
 
-  /** IVF search: centroids = vectors with `vec_id % centroidMod == 0`
-    * (deterministic stand-in for a learned codebook); each query probes the
-    * `nprobe` nearest cells and ranks only the vectors inside them.
-    * Approximate by design — recall vs [[bruteForceTopK]] is asserted in
-    * the unit tests.
-    */
-  def ivfTopK(embeddings: DataFrame, queryPred: Column, centroidMod: Int,
-              nprobe: Int, k: Int): DataFrame =
-    ivfTopKWith(embeddings,
-      embeddings.filter(col("vec_id") % centroidMod === 0).select("vec_id", "embedding"),
-      queryPred, nprobe, k)
-
-  /** IVF search against an EXPLICIT codebook `(vec_id, embedding)` — the
-    * entry point once [[kmeansTrain]] has produced a learned quantizer
-    * (embedding may be array<float> or array<double>; the dot-product
-    * expression accepts either).
+  /** IVF search against an EXPLICIT codebook `(vec_id, embedding)`: each
+    * query probes the `nprobe` nearest cells and ranks only the vectors
+    * inside them. The codebook is [[kmeansTrain]]'s learned quantizer or
+    * a deterministic stand-in (e.g. the `vec_id % 50 == 0` corpus
+    * subset); embedding may be array<float> or array<double>, the
+    * dot-product expression accepts either. Approximate by design —
+    * recall vs [[bruteForceTopK]] is asserted in the unit tests.
     */
   def ivfTopKWith(embeddings: DataFrame, codebook: DataFrame, queryPred: Column,
                   nprobe: Int, k: Int): DataFrame =
@@ -280,27 +330,13 @@ object Similarity {
     */
   def ivfTopKIndexed(assigned: DataFrame, codebook: DataFrame,
                      queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val q = withNorm(queries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val c = withNorm(codebook).select(col("vec_id").as("centroid_id"),
-      col("embedding").as("ce"), col("nrm").as("cnrm"))
-    val probeRn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("psim").desc, col("centroid_id")))
-    val probed = broadcast(q).join(broadcast(c))
-      .withColumn("psim", fdot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")))
-      .withColumn("prn", probeRn).filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("qe"), col("qnrm"), col("centroid_id"))
+    val probed = probe(queryRows(withNorm(queries)), codebook, nprobe,
+      "query_id", "qe", "qnrm")
     // the probe relation is |Q| x nprobe rows — broadcast by
     // construction, so the cell-restricted candidate join never
     // shuffles the stored index
-    val cand = broadcast(probed).join(assigned, Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id")))
-    cand.withColumn("rn", rn).filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("cosine"))
+    topK(broadcast(probed).join(assigned, Seq("centroid_id")).filter(notSelf)
+      .withColumn("sim", qsim), "sim", k, cosineOut)
   }
 
   /** Deterministic sign-random-projection (SRP) LSH bucket for cosine
@@ -309,7 +345,7 @@ object Similarity {
     * (`hexdigit(md5("p:i")) - 7.5`) — reproducible across engines, no
     * rand(). Vectors with high cosine land in the same bucket with high
     * probability, so near-dup search joins within buckets only — the
-    * data-independent alternative to [[ivfTopK]]'s learned cells.
+    * data-independent alternative to [[ivfTopKWith]]'s learned cells.
     *
     * The hyperplanes are materialized ONCE on the driver and embedded as
     * float-array literals; each row pays `planes` codegen'd dot products.
@@ -375,18 +411,34 @@ object Similarity {
   def incrementalSrpNearDup(corpus: DataFrame, batch: DataFrame,
                             planes: Int, dim: Int,
                             threshold: Double,
-                            maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bOld = srpIndex(corpus, planes, dim).persist(sl)
-    bOld.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bNew = srpIndex(batch, planes, dim).persist(sl)
-    bNew.count()
-    val result = incrementalSrpNearDupIndexed(bOld, bNew, threshold,
+                            maxBucketSize: Int = 0): DataFrame =
+    incrementalPairs(corpus, batch, srpIndex(_, planes, dim), threshold,
       maxBucketSize)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // eager + cache release: the per-ingest path
-    bOld.unpersist()
-    bNew.unpersist()
-    result
+
+  /** The incremental faces' skeleton: index the corpus, then the batch
+    * (each persisted and counted in turn — serial materialization, see
+    * Dedup.lshCandidatePairs), pair them through
+    * [[incrementalSrpNearDupIndexed]] into an eager local checkpoint, and
+    * release both persists in `finally`, so a failure in either index or
+    * in the pairing leaves nothing cached behind it.
+    */
+  private def incrementalPairs(corpus: DataFrame, batch: DataFrame,
+                               index: DataFrame => DataFrame,
+                               threshold: Double,
+                               maxBucketSize: Int): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    var held = List.empty[DataFrame]
+    def pinned(d: DataFrame): DataFrame = {
+      val p = d.persist(StorageLevel.MEMORY_AND_DISK)
+      held ::= p
+      p.count()
+      p
+    }
+    try {
+      val iOld = pinned(index(corpus))
+      incrementalSrpNearDupIndexed(iOld, pinned(index(batch)), threshold,
+        maxBucketSize).localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    } finally held.foreach(_.unpersist())
   }
 
   /** [[incrementalSrpNearDup]] over PREBUILT index relations
@@ -408,11 +460,10 @@ object Similarity {
     val intra = side("a", pNew).join(side("b", pNew), Seq("bucket"))
       .filter(col("va") < col("vb"))
     cross.union(intra)
-      .withColumn("sim", fdot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .withColumn("sim", cosineOf("ea", "na", "eb", "nb"))
       .filter(col("sim") >= threshold)
       .select(least(col("va"), col("vb")).as("vec_a"),
-        greatest(col("va"), col("vb")).as("vec_b"),
-        round(col("sim"), 6).as("cosine"))
+        greatest(col("va"), col("vb")).as("vec_b"), cosineOut)
   }
 
   /** Per-bucket centroid (element-wise mean embedding) via the custom
@@ -542,19 +593,9 @@ object Similarity {
     */
   def incrementalSemanticPairs(corpus: DataFrame, batch: DataFrame,
                                codebook: DataFrame, threshold: Double,
-                               maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val iOld = semanticIndex(corpus, codebook).persist(sl)
-    iOld.count() // serial materialization — see Dedup.lshCandidatePairs
-    val iNew = semanticIndex(batch, codebook).persist(sl)
-    iNew.count()
-    val result = incrementalSrpNearDupIndexed(iOld, iNew, threshold,
+                               maxBucketSize: Int = 0): DataFrame =
+    incrementalPairs(corpus, batch, semanticIndex(_, codebook), threshold,
       maxBucketSize)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // eager + cache release: the per-ingest path
-    iOld.unpersist()
-    iNew.unpersist()
-    result
-  }
 
   /** The semantically deduplicated corpus: resolve
     * [[semanticDedupPairs]] into clusters (min-id keeper, the shared
@@ -575,16 +616,21 @@ object Similarity {
 
   /** PQ codebook from deterministic seeds: subspace `j` of `m` gets the
     * seed vectors' (`vec_id % centroidMod == 0`) j-th subvectors as its
-    * centroids — the PQ counterpart of [[ivfTopK]]'s deterministic
-    * stand-in codebook (swap in per-subspace [[kmeansTrain]] output for a
+    * centroids — the PQ counterpart of the deterministic stand-in
+    * coarse codebook (swap in per-subspace [[kmeansTrain]] output for a
     * learned one; the relation shape `(sub, code, ce)` is the contract).
     * Size: m x (n/centroidMod) x (dim/m) floats — driver/broadcast-sized
     * by construction, like every quantizer in this file.
     */
   def pqCodebook(embeddings: DataFrame, m: Int, dim: Int,
-                 centroidMod: Int): DataFrame = {
+                 centroidMod: Int): DataFrame =
+    pqSeedSlices(embeddings.filter(col("vec_id") % centroidMod === 0), m, dim)
+
+  /** A PQ codebook `(sub, code, ce)` from seed vectors: subspace `j`'s
+    * codes are the seeds' ids, its centroids their j-th subvectors.
+    */
+  private def pqSeedSlices(seeds: DataFrame, m: Int, dim: Int): DataFrame = {
     val sub = dim / m
-    val seeds = embeddings.filter(col("vec_id") % centroidMod === 0)
     (0 until m).map { j =>
       seeds.select(lit(j).as("sub"), col("vec_id").as("code"),
         slice(col("embedding"), j * sub + 1, sub).as("ce"))
@@ -603,16 +649,10 @@ object Similarity {
     * (top-k, no global sort materialization).
     */
   def pqCodebookFixed(embeddings: DataFrame, m: Int, dim: Int,
-                      k: Int): DataFrame = {
-    val sub = dim / m
-    val seeds = embeddings
+                      k: Int): DataFrame =
+    pqSeedSlices(embeddings
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(k)
-    (0 until m).map { j =>
-      seeds.select(lit(j).as("sub"), col("vec_id").as("code"),
-        slice(col("embedding"), j * sub + 1, sub).as("ce"))
-    }.reduce(_ unionByName _)
-  }
+      .limit(k), m, dim)
 
   /** LEARNED per-subspace PQ codebooks: `maxIters` Lloyd steps run in
     * every subspace SIMULTANEOUSLY over the one (vec_id, sub, xe) slice
@@ -653,16 +693,12 @@ object Similarity {
     GraftFunctions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val sub = dim / m
     // persisted once: every Lloyd iteration re-reads the slice relation,
     // and without the persist each pass re-derives it through the full
     // corpus lineage (maxIters corpus scans instead of one — the
     // pq_train_* probes billed that directly to the per-iteration
     // marginal)
-    val xs = embeddings.select(col("vec_id"), explode(array(
-        (0 until m).map(j => struct(lit(j).as("sub"),
-          slice(col("embedding"), j * sub + 1, sub).as("xe"))): _*)).as("s"))
-      .select(col("vec_id"), col("s.sub").as("sub"), col("s.xe").as("xe"))
+    val xs = subvectors(embeddings, Seq("vec_id"), "embedding", "xe", m, dim)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cb = seedCb
       .select(col("sub").cast("int"), col("code").cast("long"),
@@ -672,11 +708,7 @@ object Similarity {
     var converged = false
     while (it < maxIters && !converged) {
       it += 1
-      val cbDf = cb.toDF("sub", "code", "ce")
-      val d2 = round(
-        fdot(col("xe"), col("xe")) - lit(2.0) * fdot(col("xe"), col("ce")) +
-          fdot(col("ce"), col("ce")), 6)
-      val next = xs.join(broadcast(cbDf), Seq("sub"))
+      val next = xs.join(broadcast(cb.toDF("sub", "code", "ce")), Seq("sub"))
         .select(col("vec_id"), col("sub"), col("xe"), col("code"),
           d2.as("d2"))
         .groupBy(col("vec_id"), col("sub"))
@@ -725,16 +757,9 @@ object Similarity {
   private def pqEncode(df: DataFrame, carry: Seq[String],
                        codebook: DataFrame, m: Int, dim: Int): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    val sub = dim / m
     val keep = col("vec_id") +: carry.map(col)
-    val xs = df.select(keep :+ explode(array(
-      (0 until m).map(j => struct(lit(j).as("sub"),
-        slice(col("embedding"), j * sub + 1, sub).as("xe"))): _*)).as("s"): _*)
-      .select(keep :+ col("s.sub").as("sub") :+ col("s.xe").as("xe"): _*)
-    val d2 = round(
-      fdot(col("xe"), col("xe")) - lit(2.0) * fdot(col("xe"), col("ce")) +
-        fdot(col("ce"), col("ce")), 6)
-    xs.join(broadcast(codebook), Seq("sub"))
+    subvectors(df, "vec_id" +: carry, "embedding", "xe", m, dim)
+      .join(broadcast(codebook), Seq("sub"))
       .select(keep :+ col("sub") :+ col("code") :+ d2.as("d2"): _*)
       .groupBy(keep :+ col("sub"): _*)
       .agg(min(struct(col("d2"), col("code"))).as("best"))
@@ -754,22 +779,15 @@ object Similarity {
                        queries: DataFrame, m: Int, dim: Int,
                        k: Int): DataFrame = {
     GraftFunctions.register(codes.sparkSession)
-    val sub = dim / m
-    val qs = queries.select(col("vec_id").as("query_id"), explode(array(
-      (0 until m).map(j => struct(lit(j).as("sub"),
-        slice(col("embedding"), j * sub + 1, sub).as("qe"))): _*)).as("s"))
-      .select(col("query_id"), col("s.sub").as("sub"), col("s.qe").as("qe"))
+    val qs = subvectors(queries.withColumnRenamed("vec_id", "query_id"),
+      Seq("query_id"), "embedding", "qe", m, dim)
     val lut = qs.join(codebook, Seq("sub"))
       .select(col("query_id"), col("sub"), col("code"),
         round(fdot(col("qe"), col("ce")), 6).as("pdot"))
-    codes.join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
+    topK(codes.join(broadcast(lut), Seq("sub", "code")).filter(notSelf)
       .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(sum(col("pdot")), 6).as("adc_score"))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("adc_score").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_score"))
+      .agg(round(sum(col("pdot")), 6).as("adc_score")),
+      "adc_score", k, col("adc_score"))
   }
 
   /** [[pqAdcTopKIndexed]] with the index built inline from the
@@ -809,12 +827,8 @@ object Similarity {
                        pqCb: DataFrame, queries: DataFrame, m: Int,
                        dim: Int, nprobe: Int, k: Int,
                        cellCodes: Option[DataFrame] = None): DataFrame =
-    ivfPqAdcScores(index, ivfCodebook, pqCb, queries, m, dim, nprobe,
-        cellCodes)
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("adc_score").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_score"))
+    topK(ivfPqAdcScores(index, ivfCodebook, pqCb, queries, m, dim, nprobe,
+      cellCodes), "adc_score", k, col("adc_score"))
 
   /** The index's cell -> code INVENTORY: the distinct (centroid_id, sub,
     * code) triples present in the index — an index-LIFETIME artifact
@@ -833,19 +847,8 @@ object Similarity {
     * the probe convention.
     */
   def ivfPqProbedPairs(ivfCodebook: DataFrame, queries: DataFrame,
-                       nprobe: Int): DataFrame = {
-    val q = withNorm(queries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val c = withNorm(ivfCodebook).select(col("vec_id").as("centroid_id"),
-      col("embedding").as("ce"), col("nrm").as("cnrm"))
-    val probeRn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("psim").desc, col("centroid_id")))
-    broadcast(q).join(broadcast(c))
-      .withColumn("psim", fdot(col("qe"), col("ce")) / (col("qnrm") * col("cnrm")))
-      .withColumn("prn", probeRn).filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"))
-  }
+                       nprobe: Int): DataFrame =
+    probe(queryRows(withNorm(queries)), ivfCodebook, nprobe, "query_id")
 
   /** The ADC-scored candidate relation behind [[ivfPqTopKIndexed]] —
     * (query_id, vec_id, adc_score) for every vector in a probed cell.
@@ -865,31 +868,34 @@ object Similarity {
                              dim: Int, nprobe: Int,
                              cellCodes: Option[DataFrame] = None): DataFrame = {
     GraftFunctions.register(index.sparkSession)
-    val sub = dim / m
-    val q = withNorm(queries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
-    val probed = ivfPqProbedPairs(ivfCodebook, queries, nprobe)
-    val qs = q.select(col("query_id"), explode(array(
-      (0 until m).map(j => struct(lit(j).as("sub"),
-        slice(col("qe"), j * sub + 1, sub).as("qsub"))): _*)).as("s"))
-      .select(col("query_id"), col("s.sub").as("sub"), col("s.qsub").as("qsub"))
-    val cand = index.join(broadcast(probed), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val needed = cellCodes match {
-      case Some(inv) => inv.join(broadcast(probed), Seq("centroid_id"))
-        .select(col("query_id"), col("sub"), col("code")).distinct()
-      case None => cand.select(col("query_id"), col("sub"), col("code"))
-        .distinct()
-    }
-    val lut = needed
-      .join(broadcast(pqCb), Seq("sub", "code"))
-      .join(broadcast(qs), Seq("query_id", "sub"))
-      .select(col("query_id"), col("sub"), col("code"),
-        round(fdot(col("qsub"), col("ce")), 6).as("pdot"))
-    cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
+    val qs = subvectors(queryRows(withNorm(queries)), Seq("query_id"), "qe",
+      "qsub", m, dim)
+    adcCandidates(index, ivfPqProbedPairs(ivfCodebook, queries, nprobe), pqCb,
+        qs, Seq("query_id", "sub", "code"), cellCodes)
       .groupBy(col("query_id"), col("vec_id"))
       .agg(round(sum(col("pdot")), 6).as("adc_score"))
+  }
+
+  /** The ADC candidate rows shared by the raw and residual IVF-PQ
+    * servers: every index row in a probed cell (self-matches dropped),
+    * joined to its partial dot `pdot` = round(qsub . ce, 6) from a LUT
+    * keyed by `keys` (the query-subvector relation `qsubs` is keyed by
+    * `keys` without `code`). The LUT holds only the codes the probe can
+    * reach: the [[ivfPqCellCodes]] inventory's when one is supplied,
+    * else the candidates' own.
+    */
+  private def adcCandidates(index: DataFrame, probed: DataFrame,
+                            pqCb: DataFrame, qsubs: DataFrame,
+                            keys: Seq[String],
+                            cellCodes: Option[DataFrame]): DataFrame = {
+    val cand = index.join(broadcast(probed), Seq("centroid_id")).filter(notSelf)
+    val needed = cellCodes.fold(cand)(_.join(broadcast(probed), Seq("centroid_id")))
+      .select(keys.map(col): _*).distinct()
+    val lut = needed
+      .join(broadcast(pqCb), Seq("sub", "code"))
+      .join(broadcast(qsubs), keys.init)
+      .select(keys.map(col) :+ round(fdot(col("qsub"), col("ce")), 6).as("pdot"): _*)
+    cand.join(broadcast(lut), keys)
   }
 
   /** One-call IVF-PQ with both codebooks drawn from the deterministic
@@ -921,34 +927,25 @@ object Similarity {
                                nprobe: Int, shortlist: Int, k: Int,
                                cellCodes: Option[DataFrame] = None): DataFrame =
     rerankShortlist(ivfPqAdcScores(index, ivfCodebook, pqCb, queries, m,
-      dim, nprobe, cellCodes), queries, store, shortlist, k)
+        dim, nprobe, cellCodes),
+      queryRows(withNorm(queries)), withNorm(store), qsim, "cosine",
+      shortlist, k)
 
-  /** The shared exact-cosine rerank tail: take the ADC top-`shortlist`
-    * per query from `scores` (query_id, vec_id, adc_score), re-score
-    * that shortlist alone against the raw vector `store`, return the
-    * exact top-k. The shortlist relation is |Q| x shortlist rows —
-    * broadcast into the store join, so the store is point-read, never
-    * shuffled.
+  /** The shared rerank tail: take the ADC top-`shortlist` per query from
+    * `scores` (query_id, vec_id, adc_score), re-score that shortlist alone
+    * against the point-read `store` with the store's scorer — `score`
+    * over the shortlist joined to the query rows `q` and the store — and
+    * return the top-k as `out`. The shortlist relation is |Q| x shortlist
+    * rows — broadcast into the store join, so the store is point-read,
+    * never shuffled.
     */
-  private def rerankShortlist(scores: DataFrame, queries: DataFrame,
-                              store: DataFrame, shortlist: Int,
-                              k: Int): DataFrame = {
-    val short = scores
-      .withColumn("srn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("adc_score").desc, col("vec_id"))))
-      .filter(col("srn") <= shortlist)
-      .select(col("query_id"), col("vec_id"))
-    val q = withNorm(queries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qnrm"))
+  private def rerankShortlist(scores: DataFrame, q: DataFrame,
+                              store: DataFrame, score: Column, out: String,
+                              shortlist: Int, k: Int): DataFrame = {
+    val short = topK(scores, "adc_score", shortlist)
     val rr = broadcast(short.join(broadcast(q), Seq("query_id")))
-      .join(withNorm(store), Seq("vec_id"))
-      .withColumn("sim",
-        fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")))
-    rr.withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("cosine"))
+      .join(store, Seq("vec_id")).withColumn("score", score)
+    topK(rr, "score", k, round(col("score"), 6).as(out))
   }
 
   /** One-call [[ivfPqTopKIndexedReranked]] with the deterministic seed
@@ -1027,7 +1024,6 @@ object Similarity {
                                      m: Int, dim: Int, nprobe: Int,
                                      cellCodes: Option[DataFrame]): DataFrame = {
     GraftFunctions.register(index.sparkSession)
-    val sub = dim / m
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").cast("array<double>").as("qe"))
     val c = ivfCodebook.select(col("vec_id").as("centroid_id"),
@@ -1040,26 +1036,10 @@ object Similarity {
       .select(col("query_id"), col("centroid_id"),
         round(fdot(col("qe"), col("cce")), 6).as("qcdot"),
         zip_with(col("qe"), col("cce"), (a, b) => a - b).as("qr"))
-    val qrs = qc.select(col("query_id"), col("centroid_id"), explode(array(
-      (0 until m).map(j => struct(lit(j).as("sub"),
-        slice(col("qr"), j * sub + 1, sub).as("qrsub"))): _*)).as("s"))
-      .select(col("query_id"), col("centroid_id"),
-        col("s.sub").as("sub"), col("s.qrsub").as("qrsub"))
-    val cand = index.join(broadcast(probed), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val needed = cellCodes match {
-      case Some(inv) => inv.join(broadcast(probed), Seq("centroid_id"))
-        .select(col("query_id"), col("centroid_id"), col("sub"),
-          col("code")).distinct()
-      case None => cand.select(col("query_id"), col("centroid_id"),
-        col("sub"), col("code")).distinct()
-    }
-    val lut = needed
-      .join(broadcast(pqCbRes), Seq("sub", "code"))
-      .join(broadcast(qrs), Seq("query_id", "centroid_id", "sub"))
-      .select(col("query_id"), col("centroid_id"), col("sub"), col("code"),
-        round(fdot(col("qrsub"), col("ce")), 6).as("pdot"))
-    cand.join(broadcast(lut), Seq("query_id", "centroid_id", "sub", "code"))
+    val qrs = subvectors(qc, Seq("query_id", "centroid_id"), "qr", "qsub", m,
+      dim)
+    adcCandidates(index, probed, pqCbRes, qrs,
+        Seq("query_id", "centroid_id", "sub", "code"), cellCodes)
       .join(broadcast(qc.select(col("query_id"), col("centroid_id"),
         col("qcdot"))), Seq("query_id", "centroid_id"))
       .groupBy(col("query_id"), col("vec_id"))
@@ -1075,12 +1055,8 @@ object Similarity {
                                pqCbRes: DataFrame, queries: DataFrame,
                                m: Int, dim: Int, nprobe: Int, k: Int,
                                cellCodes: Option[DataFrame] = None): DataFrame =
-    ivfPqResidualAdcScores(index, ivfCodebook, pqCbRes, queries, m, dim,
-        nprobe, cellCodes)
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("adc_score").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("adc_score"))
+    topK(ivfPqResidualAdcScores(index, ivfCodebook, pqCbRes, queries, m, dim,
+      nprobe, cellCodes), "adc_score", k, col("adc_score"))
 
   /** Two-stage residual IVF-PQ serving: residual-ADC shortlist, exact
     * cosine rerank — [[ivfPqTopKIndexedReranked]] on the residual index.
@@ -1094,7 +1070,9 @@ object Similarity {
                                        cellCodes: Option[DataFrame] = None)
       : DataFrame =
     rerankShortlist(ivfPqResidualAdcScores(index, ivfCodebook, pqCbRes,
-      queries, m, dim, nprobe, cellCodes), queries, store, shortlist, k)
+        queries, m, dim, nprobe, cellCodes),
+      queryRows(withNorm(queries)), withNorm(store), qsim, "cosine",
+      shortlist, k)
 
   /** [[ivfPqResidualTopKIndexedReranked]] with the rerank stage reading
     * a QUANTIZED point-read store (`q8store` = [[quantize]]'s
@@ -1118,28 +1096,11 @@ object Similarity {
                                          m: Int, dim: Int, nprobe: Int,
                                          shortlist: Int, k: Int,
                                          cellCodes: Option[DataFrame] = None)
-      : DataFrame = {
-    val short = ivfPqResidualAdcScores(index, ivfCodebook, pqCbRes,
-        queries, m, dim, nprobe, cellCodes)
-      .withColumn("srn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("adc_score").desc, col("vec_id"))))
-      .filter(col("srn") <= shortlist)
-      .select(col("query_id"), col("vec_id"))
-    val q = quantize(queries)
-      .select(col("vec_id").as("query_id"), col("q8").as("qq8"),
-        col("q_scale").as("qq_scale"))
-    val denom = col("qq_scale") * col("q_scale")
-    val rr = broadcast(short.join(broadcast(q), Seq("query_id")))
-      .join(q8store, Seq("vec_id"))
-      .withColumn("score", when(denom === 0.0, 0.0).otherwise(
-        call_function("graft_i8dot", col("qq8"), col("q8")).cast("double")
-          / denom))
-    rr.withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("score").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"),
-        round(col("score"), 6).as("q8_score"))
-  }
+      : DataFrame =
+    rerankShortlist(ivfPqResidualAdcScores(index, ivfCodebook, pqCbRes,
+        queries, m, dim, nprobe, cellCodes),
+      quantize(queries).select(col("vec_id").as("query_id") +: q8Query: _*),
+      q8store, q8Score, "q8_score", shortlist, k)
 
   /** Recall@k of an APPROXIMATE top-k result against the exact one —
     * the eval primitive that decides whether an IVF / PQ configuration
@@ -1218,9 +1179,8 @@ object Similarity {
     * always carries ragged/NaN/zero rows (truncated writes, failed
     * forward passes, padding artifacts); indexing them corrupts
     * codebook training (NaN poisons every mean it touches) and
-    * similarity ranking silently. Map-only single scan; run
-    * [[cleanEmbeddings]] (or audit the `ok=false` rows) before
-    * training/indexing.
+    * similarity ranking silently. Map-only single scan; keep the
+    * `ok` rows (or audit the `ok=false` ones) before training/indexing.
     */
   def vetEmbeddings(embeddings: DataFrame, dim: Int): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
@@ -1235,20 +1195,6 @@ object Similarity {
       .withColumn("ok",
         col("n_dims") === dim && col("n_nonfinite") === 0 &&
           !col("zero_norm"))
-  }
-
-  /** The vetted corpus: rows passing every [[vetEmbeddings]] invariant.
-    * Hit-sized flag relation is unnecessary — the vet is a map-only
-    * predicate, so this is a plain filter fused into the scan.
-    */
-  def cleanEmbeddings(embeddings: DataFrame, dim: Int): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val e = col("embedding")
-    embeddings.filter(
-      size(e) === dim &&
-        size(filter(e, x => isnan(x) || x === lit(Float.PositiveInfinity) ||
-          x === lit(Float.NegativeInfinity) || x.isNull)) === 0 &&
-        fdot(e, e) =!= lit(0.0))
   }
 
   /** EMBEDDING-SPACE decontamination report: for every corpus vector
@@ -1275,14 +1221,9 @@ object Similarity {
     val b = withNorm(benchmark)
       .select(col("vec_id").as("bench_id"), col("embedding").as("be"),
         col("nrm").as("bn"))
-    // division form (not dot >= t*|a||b|): bit-parity with the oracle's
-    // cosine expression on borderline rows
-    c.join(broadcast(b),
-        fdot(col("ce"), col("be")) / (col("cn") * col("bn"))
-          >= lit(threshold))
-      .select(col("vec_id"), col("bench_id"),
-        round(fdot(col("ce"), col("be")) / (col("cn") * col("bn")), 6)
-          .as("cosine"))
+    val sim = cosineOf("ce", "cn", "be", "bn")
+    c.join(broadcast(b), sim >= lit(threshold))
+      .select(col("vec_id"), col("bench_id"), round(sim, 6).as("cosine"))
       .groupBy(col("vec_id"))
       .agg(max(struct(col("cosine"), (-col("bench_id")).as("nb"))).as("best"),
         count(lit(1)).as("n_matches"))
@@ -1523,15 +1464,9 @@ object Similarity {
   def radiusSearch(embeddings: DataFrame, queryPred: Column,
                    threshold: Double): DataFrame = {
     val e = withNorm(embeddings)
-    val q = e.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"), col("nrm").as("qnrm"))
-    e.join(broadcast(q),
-        col("vec_id") =!= col("query_id") &&
-          fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm"))
-            >= lit(threshold))
-      .select(col("query_id"), col("vec_id"),
-        round(fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")),
-          6).as("cosine"))
+    e.join(broadcast(queryRows(e.filter(queryPred))),
+        notSelf && qsim >= lit(threshold))
+      .select(col("query_id"), col("vec_id"), round(qsim, 6).as("cosine"))
   }
 
   /** Exact top-k restricted to candidates sharing the query's value of
@@ -1545,17 +1480,8 @@ object Similarity {
   def partitionedTopK(embeddings: DataFrame, queryPred: Column,
                       partCol: String, k: Int): DataFrame = {
     val e = withNorm(embeddings)
-    val q = e.filter(queryPred).select(col(partCol).as("__qpart"),
-      col("vec_id").as("query_id"), col("embedding").as("qe"),
-      col("nrm").as("qnrm"))
-    val pairs = broadcast(q).join(e,
-        col("__qpart") === col(partCol) && col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id")))
-    pairs.withColumn("rn", rn).filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("cosine"))
+    exactTopK(queryRows(e.filter(queryPred), col(partCol).as("__qpart")), e,
+      col("__qpart") === col(partCol) && notSelf, k)
   }
 
   /** Exact top-k with an arbitrary candidate-side predicate — PRE-filter
@@ -1569,16 +1495,7 @@ object Similarity {
   def filteredTopK(embeddings: DataFrame, queryPred: Column,
                    candFilter: Column, k: Int): DataFrame = {
     val e = withNorm(embeddings)
-    val q = e.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("embedding").as("qe"), col("nrm").as("qnrm"))
-    val pairs = broadcast(q)
-      .join(e.filter(candFilter), col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        fdot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id")))
-    pairs.withColumn("rn", rn).filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("cosine"))
+    exactTopK(queryRows(e.filter(queryPred)), e.filter(candFilter), notSelf, k)
   }
 
   /** Filtered search against the PREBUILT IVF index ([[ivfAssign]]'s
@@ -1613,8 +1530,8 @@ object Similarity {
     val b = e.select(col(bucketCol).as("bucket"),
       col("vec_id").as("vec_b"), col("embedding").as("eb"), col("nrm").as("nb"))
     a.join(b, Seq("bucket")).filter(col("vec_a") < col("vec_b"))
-      .withColumn("sim", fdot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .withColumn("sim", cosineOf("ea", "na", "eb", "nb"))
       .filter(col("sim") >= threshold)
-      .select(col("vec_a"), col("vec_b"), round(col("sim"), 6).as("cosine"))
+      .select(col("vec_a"), col("vec_b"), cosineOut)
   }
 }

@@ -83,14 +83,6 @@ object Pipeline {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Atomic overwrite: write to a temp sibling, rename the old table
-    * ASIDE, rename the new one in, then drop the old (reference
-    * helpers.py:363-417). A crash at any point leaves either the old or
-    * the new COMPLETE table recoverable — the previous committed data is
-    * never deleted before its replacement is in place. (Append sinks like
-    * quarantine keep plain append mode — schema evolution across versions
-    * is the caller's concern there.)
-    */
   /** Right-to-be-forgotten purge: rewrite the parquet table at `path`
     * dropping every row whose value in ANY of `idCols` appears in
     * `ids` (single column, any name), through the crash-safe atomic
@@ -204,7 +196,13 @@ object Pipeline {
       require(fs.rename(old, dest), s"restore of stashed $dest failed")
   }
 
-  /** Crash-safe full-table replacement via tmp-write + rename.
+  /** Crash-safe full-table replacement via tmp-write + rename: write to
+    * a temp sibling, rename the old table ASIDE, rename the new one in,
+    * then drop the old (reference helpers.py:363-417). A crash at any
+    * point leaves either the old or the new COMPLETE table recoverable —
+    * the previous committed data is never deleted before its replacement
+    * is in place. (Append sinks like quarantine keep plain append mode —
+    * schema evolution across versions is the caller's concern there.)
     *
     * Concurrency contract: writers must be QUIESCED for the duration —
     * an overwrite is a statement about the whole table, meaningless

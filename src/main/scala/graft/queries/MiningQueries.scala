@@ -5,6 +5,7 @@ import graft.ops.{Graph, Ivm, Kmv, MarketBasket}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import LlmFixtures.hexToLongSql
 
 /** Session-5 mining surface: market-basket analysis (Apriori pairs /
   * rules / item-item cosine), KMV distinct sketches with set
@@ -114,16 +115,6 @@ object MiningQueries {
       |      FROM g JOIN s ON g.event_type = s.event_type
       |                   AND g.rn = s.rn + 1)""".stripMargin
 
-  /** 32-bit integer from the first 8 md5 hex digits of `e` — the
-    * engine-shared hash (StatsQueries.hex8 restated).
-    */
-  private def hex8(e: String): String = {
-    val terms = (0 until 8).map { j =>
-      val pow = 1L << (4 * (7 - j))
-      s"(strpos('0123456789abcdef', substr($e, ${j + 1}, 1)) - 1) * $pow"
-    }.mkString(" + ")
-    s"($terms)"
-  }
 
   /** Frequent-pairs CTE chain shared by the three basket oracles:
     * terminal relation `fp(item_a, item_b, n_a, n_b, co_n)`.
@@ -172,7 +163,8 @@ object MiningQueries {
     */
   private val KmvCtes: String =
     s"""du AS (SELECT DISTINCT event_type AS slice,
-       |    CAST(${hex8("md5(CAST(user_id AS VARCHAR))")} AS BIGINT) AS h
+       |    CAST(${hexToLongSql("md5(CAST(user_id AS VARCHAR))", 1, 8)}
+       |      AS BIGINT) AS h
        |  FROM events WHERE event_type IS NOT NULL),
        |sk AS (SELECT slice, pos, h FROM (
        |    SELECT slice, h, row_number() OVER (
@@ -1149,8 +1141,8 @@ object MiningQueries {
           round(col("n_docs").cast("double") / col("n_total"), 6).as("share"))
     },
       {
-        val bucket = s"(CAST(${hex8("md5(CAST(doc_id AS VARCHAR))")} " +
-          "AS BIGINT) % 100)"
+        val bucket = "(CAST(" +
+          hexToLongSql("md5(CAST(doc_id AS VARCHAR))", 1, 8) + " AS BIGINT) % 100)"
         s"""WITH d AS (SELECT doc_id, lang, n_chars,
            |    CAST($bucket % 5 AS INT) AS fold
            |  FROM documents),

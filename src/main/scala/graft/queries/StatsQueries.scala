@@ -4,6 +4,7 @@ import graft.Tables
 import graft.ops.{CountMin, DataProfile, EventOps, Graph}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import LlmFixtures.hexToLongSql
 
 /** Statistical-analysis and attribution queries — the "data science on
   * the warehouse" surface: one-pass correlation/regression moments,
@@ -22,25 +23,14 @@ object StatsQueries {
   private val Touches = Seq("click", "view")
   private val Lookback = 72 // hours
 
-  /** 32-bit integer from the first 8 hex digits of `hexExpr` — the
-    * per-digit strpos polynomial (DuckDB has no hex->int conv), the
-    * LlmFixtures.hexToLongSql convention restated for the sketch oracles.
-    */
-  private def hex8(hexExpr: String): String = {
-    val terms = (0 until 8).map { j =>
-      val pow = 1L << (4 * (7 - j))
-      s"(strpos('0123456789abcdef', substr($hexExpr, ${j + 1}, 1)) - 1) * $pow"
-    }.mkString(" + ")
-    s"($terms)"
-  }
 
   /** The CMS cell set per (hash row, key) — shared by both sketch
     * oracles. `rel` must expose a `user_id` column.
     */
   private def cmsCells(rel: String): String =
     s"""SELECT i, user_id,
-       |  ${hex8("md5(concat_ws('|', CAST(i AS VARCHAR), " +
-                 "CAST(user_id AS VARCHAR)))")} % 2048 AS bucket
+       |  ${hexToLongSql("md5(concat_ws('|', CAST(i AS VARCHAR), " +
+                 "CAST(user_id AS VARCHAR)))", 1, 8)} % 2048 AS bucket
        |FROM $rel CROSS JOIN range(5) t(i)""".stripMargin
 
   /** The unrolled PageRank recurrence (the same 1e-12-gridded decimal
@@ -74,16 +64,6 @@ object StatsQueries {
        |SELECT node, round(rank, 6) AS rank FROM pr$iterations""".stripMargin
   }
 
-  /** First-8-hex-digits-of-md5 → 32-bit integer polynomial (DuckDB has
-    * no hex→int conversion; the [[LlmFixtures.hexToLongSql]] convention).
-    */
-  private def hex8Sql(hexExpr: String): String = {
-    val terms = (0 until 8).map { j =>
-      val pow = 1L << (4 * (7 - j))
-      s"(strpos('0123456789abcdef', substr($hexExpr, ${j + 1}, 1)) - 1) * $pow"
-    }.mkString(" +\n           ")
-    s"($terms)"
-  }
 
   val declared: Seq[Declared] = Seq(
     // first/last-touch attribution per conversion: one user-keyed range
@@ -290,7 +270,7 @@ object StatsQueries {
            |    CAST(event_id AS VARCHAR) AS id, b
            |  FROM events, unnest(range(0, 32)) t(b)),
            |h AS (SELECT event_type, v, b,
-           |    ${hex8Sql("md5(id || ':' || CAST(b AS VARCHAR))")}
+           |    ${hexToLongSql("md5(id || ':' || CAST(b AS VARCHAR))", 1, 8)}
            |      / 4294967296.0 AS u
            |  FROM r),
            |wt AS (SELECT event_type, v, b,
@@ -335,7 +315,7 @@ object StatsQueries {
            |  FROM events, unnest(range(0, 32)) t(b)
            |  WHERE event_type IN ('click', 'view')),
            |h AS (SELECT event_type, v, b,
-           |    ${hex8Sql("md5(id || ':' || CAST(b AS VARCHAR))")}
+           |    ${hexToLongSql("md5(id || ':' || CAST(b AS VARCHAR))", 1, 8)}
            |      / 4294967296.0 AS u
            |  FROM r),
            |wt AS (SELECT event_type, v, b,
@@ -658,8 +638,9 @@ object StatsQueries {
             .as("z"))
     },
       {
-        val grp = s"CAST(CAST(${hex8("md5(CAST(user_id AS VARCHAR))")} " +
-          "AS BIGINT) % 100 % 2 AS INT)"
+        val grp = "CAST(CAST(" +
+          hexToLongSql("md5(CAST(user_id AS VARCHAR))", 1, 8) +
+          " AS BIGINT) % 100 % 2 AS INT)"
         s"""WITH e AS (SELECT user_id, event_type,
            |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS tsec
            |  FROM events),

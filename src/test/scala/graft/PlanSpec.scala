@@ -168,6 +168,21 @@ class PlanSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(p).length == 1)
   }
 
+  test("ivf and quantized serving: pre-shuffle rank limit, pinned shuffle count") {
+    // each face ranks and cuts per query through one window; the filter
+    // directly above it must stay a WindowGroupLimit below the shuffle,
+    // and the number of hash shuffles is pinned per query
+    val exchanges = Map("sim_ivf_topk" -> 2, "sim_topk_q8" -> 1,
+      "sim_ivf_topk_q8" -> 5, "sim_ivfpq_rerank" -> 7,
+      "sim_ivfpq_residual_topk_q8" -> 8)
+    val seen = exchanges.keys.toSeq.sorted.map { n =>
+      val p = planOf(n)
+      assert(p.contains("WindowGroupLimit"), s"$n:\n$p")
+      n -> "Exchange hashpartitioning".r.findAllIn(p).length
+    }
+    assert(seen.toMap == exchanges, seen.mkString(", "))
+  }
+
   test("curation filter: fully codegen single-scan projection+filter") {
     val p = planOf("text_curation")
     // native expressions keep the whole operator inside codegen (the HOF

@@ -44,4 +44,21 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(rows(inc) == rows(full))
     spark.catalog.clearCache()
   }
+
+  test("incremental embedding faces release the corpus index when the batch fails") {
+    import spark.implicits._
+    val corpus = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val batch = Seq(3L).toDF("vec_id") // no embedding: indexing it throws
+    def releases(face: String)(call: => DataFrame): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      intercept[Exception](call)
+      assert(spark.sparkContext.getPersistentRDDs.size <= before,
+        s"$face: the corpus index stayed cached")
+    }
+    releases("srp")(Similarity.incrementalSrpNearDup(corpus, batch,
+      planes = 2, dim = 2, threshold = 0.5))
+    releases("semantic")(Similarity.incrementalSemanticPairs(corpus, batch,
+      corpus, threshold = 0.5))
+  }
 }

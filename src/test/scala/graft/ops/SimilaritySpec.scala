@@ -67,7 +67,8 @@ class SimilaritySpec extends SparkSpec {
     val pred = col("vec_id") % 100 === 0
     val brute = Similarity.bruteForceTopK(e, pred, 10)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
-    val ivf = Similarity.ivfTopK(e, pred, centroidMod = 50, nprobe = 3, k = 10)
+    val codebook = e.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
+    val ivf = Similarity.ivfTopKWith(e, codebook, pred, nprobe = 3, k = 10)
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
     assert(ivf.size == brute.size)
     val recall = (brute & ivf).size.toDouble / brute.size
@@ -211,7 +212,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("quantized IVF: recall tracks the float IVF path on the fixture") {
     val e = Tables.embeddings(spark, sf0001)
-    val float = Similarity.ivfTopK(e, col("vec_id") % 100 === 0, 50, 3, 10)
+    val codebook = e.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
+    val float = Similarity.ivfTopKWith(e, codebook, col("vec_id") % 100 === 0, 3, 10)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     val q8 = Similarity.ivfTopKQ8(e, col("vec_id") % 100 === 0, 50, 3, 10)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
@@ -490,9 +492,6 @@ class SimilaritySpec extends SparkSpec {
     assert(vet(4L)._2 == 1 && !vet(4L)._4)
     assert(vet(5L) == ((2, 0, true, false)))
     assert(vet(6L) == ((3, 0, false, false)))
-    val clean = Similarity.cleanEmbeddings(rows, dim = 2)
-      .select("vec_id").as[Long].collect().toSet
-    assert(clean == Set(1L))
   }
 
   test("embedding decon: threshold gate, lowest-id tie-break, self-match") {
