@@ -20,33 +20,68 @@ import graft.queries.Declared
   */
 object Bench {
 
+  private type Times = collection.Map[String, Double]
+
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Per-query medians of a PRIOR bench artifact, parsed from its
+  /** The committed anchor: one clean full sweep on this host, the
+    * baseline the outlier/drift re-time blocks judge against. Read from
+    * the working directory (the repo root under sbt and tools/run_main.sh).
+    */
+  private[graft] val AnchorPath = "BENCH_ANCHOR.json"
+
+  /** Wall budget of the end-of-sweep re-time pass, seconds. */
+  private val RetimeBudgetS = 600
+
+  private def readText(path: String): Option[String] = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p)) None
+    else Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+  }
+
+  /** First group of `re` in the artifact text at `path`; a missing field
+    * fails loudly — a corrupt anchor must not read as "no baseline".
+    */
+  private def field(path: String, txt: String, re: String): String =
+    re.r.findFirstMatchIn(txt).map(_.group(1)).getOrElse(
+      throw new IllegalArgumentException(s"$path does not parse: no match for $re"))
+
+  private def queriesIn(path: String, txt: String): Map[String, Double] =
+    "\"([^\"]+)\":([0-9.eE+-]+)".r
+      .findAllMatchIn(field(path, txt, "\"queries\":\\{([^}]*)\\}"))
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+
+  /** Per-query medians of a bench artifact, parsed from its
     * `"queries":{...}` object (files written by this program, so the
     * shape is known: simple-identifier keys, plain numeric values).
-    * The outlier/drift baseline main() feeds it is
-    * BENCH_FULL_LATEST.json — the last CLEAN FULL run, deliberately
-    * not LASTRUN (ADVICE r17: the messages and the file must agree).
-    * Empty map when the file is absent/unreadable — first run on a
-    * fresh checkout simply has no baseline.
+    * Empty map when the file is absent; a present file without that
+    * object throws.
     */
   private[graft] def readLastRunQueries(path: String): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      val start = txt.indexOf("\"queries\":{")
-      if (start < 0) Map.empty
-      else {
-        val open = txt.indexOf('{', start)
-        val close = txt.indexOf('}', open)
-        val body = txt.substring(open + 1, close)
-        val entry = "\"([^\"]+)\":([0-9.eE+-]+)".r
-        entry.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+    readText(path).fold(Map.empty[String, Double])(queriesIn(path, _))
+
+  /** Adjudication baseline for the outlier/drift re-time blocks: the
+    * anchor's per-query medians, only when it was taken with this run's
+    * `cpus` and `sf` — a baseline from another host or scale would
+    * re-time queries for the machine, not the code. None (with one
+    * stderr line saying why) when the anchor is absent or from another
+    * setup; throws when it is present but does not parse. The rolling
+    * BENCH_FULL_LATEST.json is never read: a regression an earlier sweep
+    * wrote there would read flat in every later one.
+    */
+  private[graft] def adjudicationBaseline(cpus: Int, sf: String,
+      path: String = AnchorPath): Option[Map[String, Double]] =
+    readText(path).map(txt => (queriesIn(path, txt),
+        field(path, txt, "\"cpus\":(\\d+)").toInt,
+        field(path, txt, "\"sf\":\"([^\"]*)\""))) match {
+      case Some((queries, `cpus`, `sf`)) => Some(queries)
+      case other =>
+        val why = other.fold(s"$path is absent") { case (_, aCpus, aSf) =>
+          s"$path was taken at cpus=$aCpus sf=$aSf, this run is cpus=$cpus sf=$sf" }
+        System.err.println(s"[bench] no adjudication: $why")
+        None
+    }
 
   private def timeOnce(body: => Unit): Double = {
     val t0 = System.nanoTime()
@@ -154,11 +189,8 @@ object Bench {
     * end-of-sweep median — later blocks win, insertion order preserved.
     * Spec-pinned (BenchTelemetrySpec).
     */
-  private[graft] def adjudicatedMap(
-      first: collection.Map[String, Double],
-      retimed: collection.Map[String, Double],
-      drifted: collection.Map[String, Double])
-      : collection.Map[String, Double] =
+  private[graft] def adjudicatedMap(first: Times, retimed: Times,
+                                    drifted: Times): Times =
     first ++ retimed ++ drifted
 
   /** `{"name":[gc_ms,heap_mb,storage_mb],...}` — the per-query JVM
@@ -170,37 +202,6 @@ object Bench {
     m.map { case (k, (g, h, s)) => s""""$k":[$g,$h,$s]""" }
       .mkString("{", ",", "}")
 
-  /** Round number inferred from committed driver artifacts: the driver
-    * writes BENCH_r{N}.json AFTER this bench runs, so during round N the
-    * highest on disk is N-1.
-    */
-  private[graft] def inferRound(): Int = {
-    val re = "BENCH_r(\\d+)\\.json".r
-    val seen = Option(new java.io.File(".").listFiles()).toSeq.flatten
-      .flatMap(f => re.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-    if (seen.isEmpty) 0 else seen.max + 1
-  }
-
-  /** Adjudication baseline for the outlier/drift re-time blocks: the last
-    * CLOSED round's per-query medians (`BENCH_LOCAL_r{N-1}.json`, the
-    * closing-sweep copy committed with round N-1), falling back to the
-    * rolling `BENCH_FULL_LATEST.json` only for queries absent from it
-    * (new this round, so no closed-round value exists). Baselining on
-    * rolling LATEST was the r18 blind spot: an earlier same-round sweep
-    * writes a regressed value into LATEST and the regression reads flat
-    * in every later sweep — exactly how the 2.1x dedup_quotes_removed
-    * escaped both blocks (VERDICT r18 task 2).
-    */
-  private[graft] def adjudicationBaseline(): (String, Map[String, Double]) = {
-    val closedPath = s"BENCH_LOCAL_r${inferRound() - 1}.json"
-    val closed = readLastRunQueries(closedPath)
-    val latest = readLastRunQueries("BENCH_FULL_LATEST.json")
-    val name =
-      if (closed.nonEmpty) s"$closedPath (+LATEST for new queries)"
-      else "BENCH_FULL_LATEST.json"
-    (name, latest ++ closed)
-  }
-
   /** Locale-pinned 3-decimal seconds: the default-locale `f"%.3f"` emits
     * a comma decimal separator under e.g. de_DE, which would corrupt the
     * one-line JSON contract.
@@ -208,19 +209,35 @@ object Bench {
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", java.lang.Double.valueOf(v))
 
+  /** A JSON string literal of `s`, for the bench artifact and Verify's
+    * oracle json. Escapes ALL control chars: exception text and query SQL
+    * regularly carry newlines or tabs, which would break the JSON.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** `{"key":value,...}` of `m` with each value rendered by `v`. */
+  private def obj[V](m: collection.Map[String, V])(v: V => String): String =
+    m.map { case (k, x) => s"${jstr(k)}:${v(x)}" }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val spark = Session.local()
+    val cpus = spark.sparkContext.defaultParallelism
 
     // Optional comma-separated filter for targeted profiling runs.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // Previous per-query medians for the outlier/drift re-time blocks:
-    // the last CLOSED round's artifact, falling back to LATEST only for
-    // queries new this round (see adjudicationBaseline). Read BEFORE the
-    // sweep (this run may overwrite LATEST).
-    val (baselineName, baseline) = adjudicationBaseline()
+    // Read BEFORE the sweep: a corrupt anchor fails the run up front.
+    val baseline = adjudicationBaseline(cpus, sfDir)
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // per-query JVM telemetry: (gc_ms during the timed samples,
@@ -246,36 +263,21 @@ object Bench {
           e.printStackTrace()
       }
     }
+    // the re-time blocks run only after a clean sweep
+    val adjudicating = baseline.filter(_ => errors.isEmpty)
 
-    // ---- artifact emission, PHASE 1 (VERDICT r20 task 2) ----
-    // Everything the driver's one-line contract needs is known right
-    // here, before any end-of-sweep adjudication: the canary/re-time
-    // blocks only ADD metadata, they never change the first-pass map.
-    // r20's driver window proved the old order fatal: a timeout mid
-    // re-time (rc=124) left BENCH_r20.json with parsed:null even though
-    // the sweep itself was complete. So the canonical stdout line and
-    // the full-map files are written NOW, and re-written (enriched)
-    // after adjudication; a killed adjudication pass can no longer cost
-    // the round its bench artifact.
-
-    // escape ALL control chars: exception text regularly carries newlines,
-    // which would break the one-line JSON contract exactly on failures
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = times.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    // compact variant (3-decimal seconds): the driver's bench artifact
-    // keeps only the last ~2000 chars of output, so every byte of the
-    // printed line costs visible per-query entries in the record
-    val qsCompact = times.map { case (k, v) => s"${jstr(k)}:${f3(v)}" }
-      .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    // ---- artifact emission, PHASE 1 ----
+    // Everything the one-line stdout contract needs is known right here,
+    // before any end-of-sweep adjudication: the canary/re-time blocks
+    // only ADD metadata, they never change the first-pass map. So the
+    // stdout line and the files are written NOW, and re-written
+    // (enriched) after adjudication; a run killed mid re-time still
+    // leaves its full first-pass artifact.
+    val qs = obj(times)(_.toString)
+    // compact variant (3-decimal seconds): keeps the printed line short
+    // for consumers that only see the tail of the output
+    val qsCompact = obj(times)(f3)
+    val es = obj(errors)(jstr)
     val total = times.values.sum
     val rc = if (errors.nonEmpty) 1 else 0
     println(s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"queries":$qsCompact,"errors":$es,"n_failed":${errors.size},"n_queries":${times.size},"sf":"$sfDir"}""")
@@ -284,101 +286,71 @@ object Bench {
     // Artifact writer, shared by phase 1 (post-sweep, adjudication
     // blocks still empty) and phase 2 (enriched): reads the mutable
     // telemetry state at CALL time. LASTRUN is always written (failure
-    // evidence included); LATEST only on a CLEAN run, so a gate ratio
-    // anchored to it can never seed from a failed/partial bench (the
-    // r12 lesson); round-stamped summary only for clean FULL runs.
-    val round = inferRound()
-    def emitFiles(canaryEnd: collection.Map[String, Double],
-                  canaryRatio: Option[Double],
-                  retimed: collection.Map[String, Double],
-                  drifted: collection.Map[String, Double]): Unit = {
-      // canary block: per query [first-pass median, end-of-sweep median];
-      // ratio is null when the canary never ran. retimed/drifted: same
-      // [first, end] shape for the outlier (>2x) and slow-drift
-      // (1.25-2x) re-time bands.
-      val canaryJs = canaryEnd.map { case (k, v) =>
+    // evidence included); LATEST only on a CLEAN FULL run, so an anchor
+    // copied from it can never come from a failed or partial sweep.
+    def emitFiles(canaryEnd: Times, canaryRatioJs: String, retimed: Times,
+                  drifted: Times): Unit = {
+      // canary/retimed/drifted blocks: per query [first-pass median,
+      // end-of-sweep median]; canary_ratio is null when the canary never
+      // ran
+      def pairs(m: Times) = m.map { case (k, v) =>
         s"${jstr(k)}:[${f3(times(k))},${f3(v)}]" }.mkString("{", ",", "}")
-      val canaryRatioJs = canaryRatio.map(f3).getOrElse("null")
-      val retimedJs = retimed.map { case (k, v) =>
-        s"${jstr(k)}:[${f3(times(k))},${f3(v)}]" }.mkString("{", ",", "}")
-      val driftedJs = drifted.map { case (k, v) =>
-        s"${jstr(k)}:[${f3(times(k))},${f3(v)}]" }.mkString("{", ",", "}")
-      // JVM blocks (VERDICT r19 task 2): "jvm" = first-pass per-query
-      // [gc_ms, heap_mb, storage_mb], "jvm_end" = the same for every
-      // end-of-sweep re-measurement, "jvm_session" = counters at emit
-      // time — a re-time that blows up WITH a gc/heap spike is session
-      // pressure, one that blows up on flat telemetry is the host window
+      // JVM blocks: "jvm" = first-pass per-query [gc_ms, heap_mb,
+      // storage_mb], "jvm_end" = the same for every end-of-sweep
+      // re-measurement, "jvm_session" = counters at emit time — a
+      // re-time that blows up WITH a gc/heap spike is session pressure,
+      // one that blows up on flat telemetry is the host window
       val jvmSessionJs = s"""{"gc_total_ms":${gcTotalMs()},""" +
         s""""heap_used_mb":${heapUsedMb()},""" +
         s""""heap_max_mb":${Runtime.getRuntime.maxMemory() >> 20},""" +
         s""""storage_mb":${storageUsedMb(spark)},""" +
         s""""scratch_mb":${Session.localDirs.map(dirUsedMb).sum}}"""
-      // queries_adjudicated (VERDICT r21 task 6): the first-pass map
-      // with every outlier/drift re-timed query OVERWRITTEN by its
-      // end-of-sweep median — the spike-free per-query map a
-      // round-over-round comparison should read, emitted first-class so
-      // no consumer has to re-derive it from the retimed/drifted blocks.
-      // Additions only: "queries" stays the untouched first-pass map.
-      val adjudicated = adjudicatedMap(times, retimed, drifted)
-      val adjJs = adjudicated.map { case (k, v) =>
-        s"${jstr(k)}:${f3(v)}" }.mkString("{", ",", "}")
-      val canaryFields =
-        s""""canary":$canaryJs,"canary_ratio":$canaryRatioJs,"retimed":$retimedJs,"drifted":$driftedJs,"queries_adjudicated":$adjJs,"jvm":${jvmJson(jvm)},"jvm_end":${jvmJson(jvmEnd)},"jvm_session":$jvmSessionJs"""
-      val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"queries":$qs,"errors":$es,$canaryFields,"n_failed":${errors.size},"n_queries":${times.size},"sf":"$sfDir"}"""
-      def writeLine(path: String, line: String): Unit =
-        try {
-          val out = new java.io.PrintWriter(path, "UTF-8")
-          try out.println(line) finally out.close()
-        } catch { case e: Throwable =>
+      // queries_adjudicated: the first-pass map with every outlier/drift
+      // re-timed query OVERWRITTEN by its end-of-sweep median — the
+      // spike-free per-query map a comparison should read. "queries"
+      // stays the untouched first-pass map.
+      val adjJs = obj(adjudicatedMap(times, retimed, drifted))(f3)
+      val baselineJs = adjudicating.map(_ => jstr(AnchorPath)).getOrElse("null")
+      val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"cpus":$cpus,"baseline":$baselineJs,"queries":$qs,"errors":$es,"canary":${pairs(canaryEnd)},"canary_ratio":$canaryRatioJs,"retimed":${pairs(retimed)},"drifted":${pairs(drifted)},"queries_adjudicated":$adjJs,"jvm":${jvmJson(jvm)},"jvm_end":${jvmJson(jvmEnd)},"jvm_session":$jvmSessionJs,"n_failed":${errors.size},"n_queries":${times.size},"sf":${jstr(sfDir)}}"""
+      def writeLine(path: String): Unit =
+        try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+          (fullJson + "\n").getBytes("UTF-8"))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] could not write $path: $e") }
-      writeLine("BENCH_FULL_LASTRUN.json", fullJson)
-      if (rc == 0 && only.isEmpty) writeLine("BENCH_FULL_LATEST.json", fullJson)
-      val summaryJson =
-        s"""{"metric":"total","value":${f3(total)},"unit":"sec","rc":$rc,"queries":$qsCompact,"errors":$es,$canaryFields,"n_failed":${errors.size},"n_queries":${times.size},"sf":"$sfDir"}"""
-      writeLine("BENCH_SUMMARY_LASTRUN.json", summaryJson)
-      if (rc == 0 && only.isEmpty)
-        writeLine(s"BENCH_SUMMARY_r$round.json", summaryJson)
+      writeLine("BENCH_FULL_LASTRUN.json")
+      if (rc == 0 && only.isEmpty) writeLine("BENCH_FULL_LATEST.json")
     }
     // phase 1: full artifacts on disk BEFORE any adjudication runs
-    emitFiles(Map.empty, None, Map.empty, Map.empty)
+    emitFiles(Map.empty, "null", Map.empty, Map.empty)
 
-    // End-of-sweep adjudication runs under a wall budget (VERDICT r20
-    // task 2): r20's driver window triggered 20 outlier re-times of the
-    // WORST (slowest) queries, each a warmup + 3 timed runs — the pass
-    // alone outlived the driver's timeout. Two caps: a query whose
-    // first-pass median exceeded 10 s is re-timed with ONE run (its
-    // signal is whole seconds; a median of 3 buys noise rejection only
-    // at sub-second scale), and the whole pass stops loudly once the
-    // budget is spent.
-    val retimeBudgetS = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_RETIME_BUDGET_S", "600").toDouble
-    val adjDeadline = System.nanoTime() + (retimeBudgetS * 1e9).toLong
+    // End-of-sweep adjudication runs under a wall budget: a window that
+    // triggers 20 outlier re-times of the slowest queries, each a warmup
+    // + 3 timed runs, could otherwise outlive any caller's timeout. Two
+    // caps: a query whose first-pass median exceeded 10 s is re-timed
+    // with ONE run (its signal is whole seconds; a median of 3 buys noise
+    // rejection only at sub-second scale), and the whole pass stops
+    // loudly once the budget is spent.
+    val adjDeadline = System.nanoTime() + RetimeBudgetS * 1000000000L
     def budgetLeft(): Boolean = System.nanoTime() < adjDeadline
     def adjRuns(first: Double): Int = if (first > 10.0) 1 else runs
 
-    // Canary re-run (r15 verdict task 4): the fuzzy-dedup family twice
-    // inflated 2-3.7x in driver bench windows while same-code local runs
-    // stayed <=1.2x — ambient host contention, but each time it cost a
-    // cross-artifact adjudication. Re-timing a fixed 10-query subset
-    // (dedup/LSH, TPC-H, events, the pipeline) at the END of the sweep
-    // makes the artifact itself carry the window's noise: each canary
-    // records [first-pass, end-of-sweep] medians, and canary_ratio
-    // (sum end / sum first) >> 1 means the WINDOW drifted — same code,
-    // same data, minutes apart — not the queries.
+    // Canary re-run: re-timing a fixed subset (dedup/LSH, TPC-H, events,
+    // the pipeline) at the END of a clean full sweep makes the artifact
+    // itself carry the window's noise: each canary records [first-pass,
+    // end-of-sweep] medians, and canary_ratio (sum end / sum first) >> 1
+    // means the WINDOW drifted — same code, same data, minutes apart —
+    // not the queries.
     val canaryNames = Seq("dedup_fuzzy", "dedup_fuzzy_keep_best",
       "dedup_fuzzy_kept", "dedup_guarded_kept", "dedup_minhash_pairs",
       "tpch_q1_pricing", "tpch_q5_region_volume", "events_funnel",
       "events_asof_join", "pipeline_gold_readback",
-      // pinned after its r19 driver-window anomaly (first-pass 4.6 s,
-      // end-of-sweep re-time 29.2 s — the only unexplained >2x): as a
-      // canary it gets a [first, end] pair in EVERY artifact, with
-      // jvm/jvm_end telemetry, so a recurrence is adjudicable in-file
+      // pinned after a past end-of-sweep anomaly (first-pass 4.6 s,
+      // re-time 29.2 s): as a canary it gets a [first, end] pair in
+      // EVERY artifact, with jvm/jvm_end telemetry, so a recurrence is
+      // adjudicable in-file
       "events_seq_patterns_gap3")
     val canaryEnd = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // SPARK_GRAFT_BENCH_CANARY=force exercises the canary on a filtered
-    // profiling run (normally it only runs after a clean FULL sweep)
-    if (errors.isEmpty &&
-        (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_CANARY"))) {
+    if (errors.isEmpty && only.isEmpty) {
       canaryNames.filter(times.contains).foreach { name =>
         try {
           val m = measureQuery(spark, sfDir, runs, SparkEntry.queries(name))
@@ -394,35 +366,34 @@ object Bench {
         }
       }
     }
-    // canary_ratio is None — emitted as JSON null — when the canary never
-    // ran (filtered run, errors, or every canary threw): "not measured"
-    // must stay distinguishable from a measured clean window (ADVICE r16)
-    val canaryRatio: Option[Double] =
-      if (canaryEnd.isEmpty) None
-      else Some(canaryEnd.values.sum /
+    // canary_ratio is JSON null when the canary never ran (filtered run,
+    // errors, or every canary threw): "not measured" must stay
+    // distinguishable from a measured clean window
+    val canaryRatioJs =
+      if (canaryEnd.isEmpty) "null"
+      else f3(canaryEnd.values.sum /
         math.max(1e-9, canaryEnd.keys.map(times).sum))
 
-    // Shared end-of-sweep re-time for the two adjudicator blocks (the
-    // blocks were near-verbatim copies, ADVICE r18): candidates above
-    // `ratio` x their baseline value, capped at the `cap` worst ratios —
-    // if MANY queries exceed the trigger, the window itself drifted,
-    // which canary_ratio already stamps. Entries already in the canary
-    // set (or, for the drift block, already outlier-re-timed via
-    // `skip`) reuse that end-of-sweep median — same semantics, no
+    // Shared end-of-sweep re-time for the two adjudicator blocks:
+    // candidates above `ratio` x their anchor value, capped at the `cap`
+    // worst ratios — if MANY queries exceed the trigger, the window
+    // itself drifted, which canary_ratio already stamps. Entries already
+    // in the canary set (or, for the drift block, already outlier-re-timed
+    // via `skip`) reuse that end-of-sweep median — same semantics, no
     // duplicate work.
     def retimeWorst(ratio: Double, cap: Int, label: String,
         skip: collection.Set[String])
         : scala.collection.mutable.LinkedHashMap[String, Double] = {
       val out = scala.collection.mutable.LinkedHashMap[String, Double]()
-      if (errors.nonEmpty || baseline.isEmpty) return out
+      val base = adjudicating.getOrElse(return out)
       val cands = times.toSeq
         .filter { case (n, t) =>
-          baseline.get(n).exists(prev => t > ratio * prev) && t >= 0.5 &&
+          base.get(n).exists(prev => t > ratio * prev) && t >= 0.5 &&
             !skip.contains(n) }
-        .sortBy { case (n, t) => -(t / math.max(baseline(n), 1e-9)) }
+        .sortBy { case (n, t) => -(t / math.max(base(n), 1e-9)) }
       if (cands.size > cap)
         System.err.println(s"[bench] ${cands.size} queries read >${ratio}x " +
-          s"$baselineName — $label-re-timing only the $cap worst " +
+          s"$AnchorPath — $label-re-timing only the $cap worst " +
           "(window drift; see canary_ratio)")
       cands.take(cap).foreach { case (name, first) =>
         canaryEnd.get(name) match {
@@ -432,7 +403,7 @@ object Bench {
             // map and phase-1 artifacts already exist; what's lost is
             // only this outlier's in-file exoneration
             System.err.println(s"[bench] $label $name SKIPPED — " +
-              s"adjudication budget (${retimeBudgetS.toLong}s) spent")
+              s"adjudication budget (${RetimeBudgetS}s) spent")
           case None =>
             try {
               val m = measureQuery(spark, sfDir, adjRuns(first),
@@ -440,7 +411,7 @@ object Bench {
               out += name -> m.median
               jvmEnd += name -> ((m.gcMs, m.heapMb, m.storageMb))
               System.err.println(s"[bench] $label $name first=${f3(first)} " +
-                s"end=${f3(m.median)} s (baseline=${f3(baseline(name))}) " +
+                s"end=${f3(m.median)} s (baseline=${f3(base(name))}) " +
                 s"gc=${m.gcMs}ms heap=${m.heapMb}MiB")
             } catch { case e: Throwable =>
               System.err.println(s"[bench] $label retime FAILED $name: $e")
@@ -450,19 +421,16 @@ object Bench {
       out
     }
 
-    // Per-query outlier re-time (r16 verdict task 3): any query whose
-    // first-pass median is > 2x its last-closed-round value gets ONE
-    // end-of-sweep re-time in the SAME artifact, so a ">2x regression?"
-    // question is answered without cross-file adjudication — twice
-    // (r15 fuzzy family, r16 guarded_keep_best) driver-window outliers
-    // were ambient noise that a local re-run had to prove.
+    // Per-query outlier re-time: any query whose first-pass median is
+    // > 2x its anchor value gets ONE end-of-sweep re-time in the SAME
+    // artifact, so a ">2x regression?" question is answered without
+    // cross-file adjudication.
     val retimed = retimeWorst(2.0, 20, "retime", Set.empty)
 
-    // Slow-DRIFT re-time (r17 verdict task 5): the >2x trigger missed
-    // the band where r17's real movement lived (the llm_corpus_prep
-    // family drifted 1.26-1.63x under a clean canary and went
-    // unadjudicated). Any query >1.25x its baseline that the outlier
-    // block did not already re-time gets ONE end-of-sweep re-time.
+    // Slow-DRIFT re-time: the >2x trigger misses the band where real
+    // movement often lives (1.25-2x under a clean canary). Any query
+    // >1.25x its anchor value that the outlier block did not already
+    // re-time gets ONE end-of-sweep re-time.
     val drifted = retimeWorst(1.25, 10, "drift", retimed.keySet)
 
     // phase 2: re-emit the artifacts enriched with the adjudication
@@ -471,8 +439,7 @@ object Bench {
     // deliberately NOT printed again, so consumers see exactly one line
     // with metric "total"; everything adjudication adds rides the files
     // and the trailing total_summary line below.
-    emitFiles(canaryEnd, canaryRatio, retimed, drifted)
-    val canaryRatioJs = canaryRatio.map(f3).getOrElse("null")
+    emitFiles(canaryEnd, canaryRatioJs, retimed, drifted)
     // trailing summary line: short enough to ALWAYS fit the tail window,
     // carries the coverage count and the pointer to the full map. Metric
     // name is DISTINCT from the per-query line's "total" so a consumer

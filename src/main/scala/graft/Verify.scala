@@ -3,6 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import java.nio.file.{Files, Paths}
+import graft.Bench.jstr
 /** Correctness dump: each SparkEntry.declared plan's result → parquet,
   * plus its oracle SQL in oracle_sql.json, for the DuckDB compare. */
 object Verify {
@@ -49,19 +50,6 @@ object Verify {
     finally spark.catalog.clearCache()
   }
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Session.local()
@@ -83,8 +71,8 @@ object Verify {
     // driver and humans can distinguish "all ran" from "some rows are
     // __error artifacts" without parsing every dump.
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    val json = picked.map(d => s"${q(d.name)}: ${q(d.oracleSql)}")
+      errors.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}"))
+    val json = picked.map(d => s"${jstr(d.name)}: ${jstr(d.oracleSql)}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (errors.nonEmpty)

@@ -928,23 +928,26 @@ object Similarity {
                                cellCodes: Option[DataFrame] = None): DataFrame =
     rerankShortlist(ivfPqAdcScores(index, ivfCodebook, pqCb, queries, m,
         dim, nprobe, cellCodes),
-      queryRows(withNorm(queries)), withNorm(store), qsim, "cosine",
-      shortlist, k)
+      queryRows(withNorm(queries)), store, qsim, "cosine", shortlist, k,
+      withNorm)
 
   /** The shared rerank tail: take the ADC top-`shortlist` per query from
     * `scores` (query_id, vec_id, adc_score), re-score that shortlist alone
     * against the point-read `store` with the store's scorer — `score`
-    * over the shortlist joined to the query rows `q` and the store — and
-    * return the top-k as `out`. The shortlist relation is |Q| x shortlist
-    * rows — broadcast into the store join, so the store is point-read,
-    * never shuffled.
+    * over the shortlist joined to the query rows `q` and the store, after
+    * `prep` (the float faces' store norm: computed on shortlisted rows
+    * only, not on every store row) — and return the top-k as `out`. The
+    * shortlist relation is |Q| x shortlist rows — broadcast into the
+    * store join, so the store is point-read, never shuffled.
     */
   private def rerankShortlist(scores: DataFrame, q: DataFrame,
                               store: DataFrame, score: Column, out: String,
-                              shortlist: Int, k: Int): DataFrame = {
+                              shortlist: Int, k: Int,
+                              prep: DataFrame => DataFrame = identity)
+      : DataFrame = {
     val short = topK(scores, "adc_score", shortlist)
-    val rr = broadcast(short.join(broadcast(q), Seq("query_id")))
-      .join(store, Seq("vec_id")).withColumn("score", score)
+    val rr = prep(broadcast(short.join(broadcast(q), Seq("query_id")))
+      .join(store, Seq("vec_id"))).withColumn("score", score)
     topK(rr, "score", k, round(col("score"), 6).as(out))
   }
 
@@ -1071,8 +1074,8 @@ object Similarity {
       : DataFrame =
     rerankShortlist(ivfPqResidualAdcScores(index, ivfCodebook, pqCbRes,
         queries, m, dim, nprobe, cellCodes),
-      queryRows(withNorm(queries)), withNorm(store), qsim, "cosine",
-      shortlist, k)
+      queryRows(withNorm(queries)), store, qsim, "cosine", shortlist, k,
+      withNorm)
 
   /** [[ivfPqResidualTopKIndexedReranked]] with the rerank stage reading
     * a QUANTIZED point-read store (`q8store` = [[quantize]]'s

@@ -2,15 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench harness's drift-adjudication baseline CHOICE (VERDICT
-  * r18 task 2): the outlier/drift re-time blocks must compare against the
-  * last CLOSED round's committed artifact (`BENCH_LOCAL_r{N-1}.json`),
-  * not the rolling `BENCH_FULL_LATEST.json` — a regression written into
-  * LATEST by an earlier same-round sweep reads flat in every later sweep
-  * (exactly how the 2.1x `dedup_quotes_removed` escaped both blocks in
-  * r18). LATEST remains only the fallback for queries new this round.
+/** Pins the bench harness's adjudication baseline: the outlier/drift
+  * re-time blocks compare against the committed same-host anchor
+  * (`BENCH_ANCHOR.json`), never the rolling `BENCH_FULL_LATEST.json` — a
+  * regression written into LATEST by an earlier sweep would read flat in
+  * every later one — and only when the anchor was taken with this run's
+  * cpus and scale factor.
   */
 class BenchSpec extends AnyFunSuite {
+
+  /** The anchor's raw text, from the test JVM's cwd: the repo root. */
+  private def anchorText: String = new String(java.nio.file.Files.readAllBytes(
+    java.nio.file.Paths.get(Bench.AnchorPath)), "UTF-8")
 
   test("readLastRunQueries parses a bench artifact's queries block") {
     val f = java.nio.file.Files.createTempFile("graft_bench_", ".json")
@@ -26,40 +29,34 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.readLastRunQueries("/nonexistent/graft_bench.json").isEmpty)
   }
 
-  test("adjudication baseline is the last CLOSED round, LATEST only as " +
-      "fallback for new queries") {
-    // the test JVM's cwd is the repo root, where the committed round
-    // artifacts live — the same files main() reads
-    val (name, base) = Bench.adjudicationBaseline()
-    val closedPath = s"BENCH_LOCAL_r${Bench.inferRound() - 1}.json"
-    val closed = Bench.readLastRunQueries(closedPath)
-    val latest = Bench.readLastRunQueries("BENCH_FULL_LATEST.json")
-    assume(closed.nonEmpty,
-      s"no $closedPath in cwd — fresh checkout, nothing to pin")
-    assert(name.contains(closedPath))
-    // every closed-round value wins over LATEST (this is the pin: a
-    // revert to LATEST-only fails here whenever the two windows differ,
-    // which real sweeps always do)
-    closed.foreach { case (k, v) => assert(base(k) == v, k) }
-    // queries absent from the closed round (new this round) fall back
-    (latest.keySet -- closed.keySet).foreach { k =>
-      assert(base(k) == latest(k), k)
-    }
-    assert(base.keySet == closed.keySet ++ latest.keySet)
+  test("adjudication baseline is the committed anchor, only on a matching host") {
+    val anchor = Bench.readLastRunQueries(Bench.AnchorPath)
+    val cpus = "\"cpus\":(\\d+)".r.findFirstMatchIn(anchorText).get.group(1).toInt
+    val sf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(anchorText).get.group(1)
+    // the anchor alone, value for value: no LATEST entry can leak in
+    assert(Bench.adjudicationBaseline(cpus, sf) == Some(anchor))
+    // an anchor from another host or scale judges nothing
+    assert(Bench.adjudicationBaseline(cpus + 1, sf).isEmpty)
+    assert(Bench.adjudicationBaseline(cpus, sf + "_other").isEmpty)
+    assert(Bench.adjudicationBaseline(cpus, sf, "/nonexistent/a.json").isEmpty)
+    // a present anchor that does not parse fails instead of reading empty
+    val bad = java.nio.file.Files.createTempFile("graft_bench_", ".json")
+    java.nio.file.Files.write(bad, """{"metric":"total","cpus":4}""".getBytes("UTF-8"))
+    intercept[IllegalArgumentException](
+      Bench.adjudicationBaseline(cpus, sf, bad.toString))
+    java.nio.file.Files.delete(bad)
   }
 
   test("the re-anchored gate file parses and covers the full query surface") {
-    // BASELINE_GATE_r20.json (VERDICT r20 task 7): per-query medians of
-    // 3 clean canary-stamped full sweeps — the anchor the <=2x gate
-    // compares against from r20 on. The pin: the file must stay in the
-    // "queries":{...} shape the bench harness's own parser reads, and
-    // must cover every declared query (a gate that silently lost
-    // entries would exempt them from the regression gate).
-    val gate = Bench.readLastRunQueries("BASELINE_GATE_r20.json")
-    assume(gate.nonEmpty, "no BASELINE_GATE_r20.json in cwd — pre-anchor tree")
-    assert(gate.values.forall(v => v > 0.0 && v < 600.0))
-    val declared = SparkEntry.queries.keySet
-    assert((declared -- gate.keySet).isEmpty,
-      s"queries missing from the gate: ${declared -- gate.keySet}")
+    // BENCH_ANCHOR.json: one clean full sweep on this host. The pin: the
+    // file stays in the "queries":{...} shape the harness's own parser
+    // reads, is a clean run, and covers every declared query (an anchor
+    // that silently lost entries would exempt them from adjudication).
+    val anchor = Bench.readLastRunQueries(Bench.AnchorPath)
+    assert(anchorText.contains("\"rc\":0,"))
+    assert(anchor.values.forall(v => v > 0.0 && v < 600.0))
+    val declared = SparkEntry.declared.map(_.name).toSet
+    assert((declared -- anchor.keySet).isEmpty,
+      s"queries missing from the anchor: ${declared -- anchor.keySet}")
   }
 }

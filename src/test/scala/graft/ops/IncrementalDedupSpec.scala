@@ -51,10 +51,8 @@ class IncrementalDedupSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val batch = Seq(3L).toDF("vec_id") // no embedding: indexing it throws
     def releases(face: String)(call: => DataFrame): Unit = {
-      val before = spark.sparkContext.getPersistentRDDs.size
-      intercept[Exception](call)
-      assert(spark.sparkContext.getPersistentRDDs.size <= before,
-        s"$face: the corpus index stayed cached")
+      val (_, left) = persistedBy(intercept[Exception](call))
+      assert(left == 0, s"$face: the corpus index stayed cached")
     }
     releases("srp")(Similarity.incrementalSrpNearDup(corpus, batch,
       planes = 2, dim = 2, threshold = 0.5))

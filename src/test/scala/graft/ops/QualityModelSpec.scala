@@ -93,9 +93,8 @@ class QualityModelSpec extends SparkSpec {
     val sk = QualityModel.featureSketch(docs, "doc_id", "text", col("y"), 64)
       .persist()
     sk.count()
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val w = QualityModel.trainHashedLogRegWith(sk, "doc_id", iters = 3)
-    val rose = spark.sparkContext.getPersistentRDDs.size - before
+    val (w, rose) = persistedBy(
+      QualityModel.trainHashedLogRegWith(sk, "doc_id", iters = 3))
     assert(rose <= 1, s"persistent RDDs rose by $rose")
     assert(w.count() > 0)
     sk.unpersist()

@@ -17,10 +17,10 @@ class StoresSpec extends SparkSpec {
 
   /** `ingest(dir, out)` runs one batch whose first append goes to `out`.
     * It runs once into a real store, then once with `out` a regular file,
-    * where the append must throw and leave no more persisted RDDs than it
-    * found. The first run holds the caches some batch operators keep of
-    * their own intermediates (keyed by plan, so the second run reuses
-    * them); what the second run adds is what the batch failed to release.
+    * where the append must throw and leave no RDD persisted that it made.
+    * The first run holds the caches some batch operators keep of their
+    * own intermediates (keyed by plan, so the second run reuses them);
+    * what the second run adds is what the batch failed to release.
     */
   private def releasesOnFailure(face: String)
                                (ingest: (String, String) => Unit): Unit = {
@@ -28,10 +28,9 @@ class StoresSpec extends SparkSpec {
     ingest(ok.toString, ok.resolve("out").toString)
     val tmp = java.nio.file.Files.createTempDirectory(s"graft_fail_$face")
     val blocked = java.nio.file.Files.createFile(tmp.resolve("out"))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    intercept[Exception](ingest(tmp.toString, blocked.toString))
-    assert(spark.sparkContext.getPersistentRDDs.size <= before,
-      s"$face: the failed batch stayed cached")
+    val (_, left) = persistedBy(
+      intercept[Exception](ingest(tmp.toString, blocked.toString)))
+    assert(left == 0, s"$face: the failed batch stayed cached")
   }
 
   test("a batch whose append fails releases what it persisted") {
