@@ -31,6 +31,19 @@ object Bench {
     */
   private[graft] val AnchorPath = "BENCH_ANCHOR.json"
 
+  private val LastRunPath = "BENCH_FULL_LASTRUN.json"
+  private val LatestPath = "BENCH_FULL_LATEST.json"
+
+  /** Whether a run writes its full artifact to LATEST as well as to
+    * LASTRUN (every run, failure evidence included): only a CLEAN (rc 0)
+    * FULL (unfiltered) sweep, so an anchor copied from LATEST can never
+    * come from a failed or partial run. The trailing summary line's
+    * `full_queries_in` names LATEST by the same predicate and LASTRUN
+    * otherwise, never a file this run did not write.
+    */
+  private[graft] def writesLatest(rc: Int, filtered: Boolean): Boolean =
+    rc == 0 && !filtered
+
   /** Wall budget of the end-of-sweep re-time pass, seconds. */
   private val RetimeBudgetS = 600
 
@@ -283,11 +296,11 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"queries":$qsCompact,"errors":$es,"n_failed":${errors.size},"n_queries":${times.size},"sf":"$sfDir"}""")
     System.out.flush()
 
+    val latest = writesLatest(rc, only.isDefined)
     // Artifact writer, shared by phase 1 (post-sweep, adjudication
     // blocks still empty) and phase 2 (enriched): reads the mutable
-    // telemetry state at CALL time. LASTRUN is always written (failure
-    // evidence included); LATEST only on a CLEAN FULL run, so an anchor
-    // copied from it can never come from a failed or partial sweep.
+    // telemetry state at CALL time; which files it writes is
+    // [[writesLatest]]'s call.
     def emitFiles(canaryEnd: Times, canaryRatioJs: String, retimed: Times,
                   drifted: Times): Unit = {
       // canary/retimed/drifted blocks: per query [first-pass median,
@@ -317,8 +330,8 @@ object Bench {
           (fullJson + "\n").getBytes("UTF-8"))
         catch { case e: Throwable =>
           System.err.println(s"[bench] could not write $path: $e") }
-      writeLine("BENCH_FULL_LASTRUN.json")
-      if (rc == 0 && only.isEmpty) writeLine("BENCH_FULL_LATEST.json")
+      writeLine(LastRunPath)
+      if (latest) writeLine(LatestPath)
     }
     // phase 1: full artifacts on disk BEFORE any adjudication runs
     emitFiles(Map.empty, "null", Map.empty, Map.empty)
@@ -444,7 +457,7 @@ object Bench {
     // carries the coverage count and the pointer to the full map. Metric
     // name is DISTINCT from the per-query line's "total" so a consumer
     // summing metric lines can never double-count the suite time.
-    println(s"""{"metric":"total_summary","value":${f3(total)},"unit":"sec","n_queries":${times.size},"n_failed":${errors.size},"canary_ratio":$canaryRatioJs,"n_retimed":${retimed.size},"n_drifted":${drifted.size},"sf":"$sfDir","full_queries_in":"BENCH_FULL_LATEST.json"}""")
+    println(s"""{"metric":"total_summary","value":${f3(total)},"unit":"sec","n_queries":${times.size},"n_failed":${errors.size},"canary_ratio":$canaryRatioJs,"n_retimed":${retimed.size},"n_drifted":${drifted.size},"sf":"$sfDir","full_queries_in":"${if (latest) LatestPath else LastRunPath}"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

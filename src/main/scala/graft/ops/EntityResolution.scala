@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** EXACT edit-distance similarity join — the entity-resolution /
   * record-linkage face of dedup: find every pair of strings within
@@ -11,18 +12,10 @@ import org.apache.spark.sql.functions._
   * Algorithm: partition-based segment blocking (the PassJoin family —
   * Li, Deng, Wang, Feng, "PassJoin: A Partition-based Method for
   * Similarity Joins", PVLDB 2011 — implemented from scratch on Spark
-  * relational primitives). The pigeonhole argument: split an indexed
-  * string of length `l` into `d+1` contiguous segments; any string
-  * within edit distance `d` of it must contain AT LEAST ONE of those
-  * segments verbatim, starting within `d` positions of the segment's
-  * home offset (each edit operation shifts downstream characters by at
-  * most one, and at most `d` edits touch the whole string, so some
-  * segment is untouched AND un-shifted beyond `d`). Blocking on
-  * (segment text, segment index, indexed length) therefore has ZERO
-  * false negatives; a final `levenshtein(...) <= d` filter removes the
-  * false positives, so the result is EXACTLY the cross-product
-  * semantics — this is an exact operator with a sub-quadratic plan, not
-  * an approximation.
+  * relational primitives) plus a deletion-neighborhood rescue of the
+  * members of flooded blocking buckets. Every public face is one call
+  * to [[segmentJoin]], whose scaladoc carries both exactness
+  * arguments.
   *
   * Scale posture: both sides reduce to short (segment, i, l) keys — the
   * join is a plain hash equi-join on those keys (PlanSpec pins
@@ -36,12 +29,14 @@ import org.apache.spark.sql.functions._
   * untouched segment IS the flood segment (e.g. d=1 with the edit in
   * the diverse half) loses its one blocking key and goes unreported,
   * while every surviving pair is still levenshtein-verified. Keep the
-  * cap disarmed unless a flood is demonstrated; the loud stderr report
-  * names the dropped buckets so the trade is visible.
+  * cap disarmed unless a flood is demonstrated, or use a `*Rescued`
+  * face; the loud stderr report names the dropped buckets so the trade
+  * is visible.
   */
 object EntityResolution {
 
   private val SegSchema = "array<struct<l:int,i:int,seg:string,pos:int>>"
+  private val Keys = Seq("l", "i", "seg")
 
   /** Segment start offset (0-based) of segment `i` for a string of
     * length `l` split into `k` even segments: floor(i*l/k). Integer
@@ -66,9 +61,7 @@ object EntityResolution {
     })
     df.select(col(idCol).as("__rid"), col(strCol).as("__rstr"),
         explode(segs).as("__s"))
-      .select(col("__rid"), col("__rstr"),
-        col("__s.l").as("l"), col("__s.i").as("i"), col("__s.seg").as("seg"),
-        col("__s.pos").as("pos"))
+      .select(col("__rid"), col("__rstr"), col("__s.*"))
   }
 
   /** Probe-side blocking keys: for each probe string of length `m`,
@@ -98,22 +91,172 @@ object EntityResolution {
         }))))
     df.select(col(idCol).as("__pid"), col(strCol).as("__pstr"),
         explode(subs).as("__s"))
-      .select(col("__pid"), col("__pstr"),
-        col("__s.l").as("l"), col("__s.i").as("i"), col("__s.seg").as("seg"),
-        col("__s.pos").as("pos"))
+      .select(col("__pid"), col("__pstr"), col("__s.*"))
   }
 
+  /** One side of a join: a relation with its id and string columns. */
+  private final case class Side(df: DataFrame, id: String, str: String)
+
+  /** Where [[segmentJoin]]'s index side comes from. */
+  private sealed trait Index
+  /** The probe relation itself: unordered pairs, `__pid < __rid`. */
+  private case object Self extends Index
+  /** Segment keys built from another relation (record linkage). */
+  private final case class Other(side: Side) extends Index
+  /** An [[indexSegments]] relation built earlier (no rescue). */
+  private final case class Prebuilt(rows: DataFrame) extends Index
+
+  /** The segment join every public face delegates to: the verified
+    * pair relation (__pid, __pstr, __rid, __rstr, dist), or with
+    * `rescue` (__pid, __rid, dist) as an eager local checkpoint.
+    *
+    * Pigeonhole (no false negatives): split an indexed string of length
+    * `l` into `d+1` contiguous segments; any string within edit distance
+    * `d` of it contains AT LEAST ONE of those segments verbatim,
+    * starting within `d` positions of the segment's home offset (each
+    * edit shifts downstream characters by at most one, and at most `d`
+    * edits touch the whole string, so some segment is untouched AND
+    * un-shifted beyond `d`). Blocking on (segment text, segment index,
+    * indexed length) therefore misses no pair; the thresholded
+    * `levenshtein(...) <= d` verify (banded O(d*n) DP with early
+    * abandon, -1 past the threshold) removes the false positives, so
+    * the result is EXACTLY the cross-product semantics.
+    *
+    * Rescue (recall under the cap): a pair the cap loses is one whose
+    * only untouched segment IS a dropped (flood) segment. That segment
+    * is the pigeonhole witness: both strings contain it verbatim (index
+    * side at home, probe side within d of home) and the witness
+    * alignment maps it to itself, so ALL d edits live outside it — the
+    * two complements (string with the matched occurrence excised) are
+    * within edit distance d of each other. Two strings within edit
+    * distance d always share a common string reachable by <= d
+    * single-character deletions from each (every substitution deletes
+    * one char on each side, every insert/delete one char on one side —
+    * the FastSS/deletion-neighborhood family, Bocek et al. 2007), so
+    * blocking the dropped members on the <= d-deletion variants of
+    * their complements has zero false negatives. Deletion keys are
+    * POSITION-FREE, which is what the layered-constant corpus
+    * ("Customer#000…", whose prefix would survive one segment excision
+    * as "er#0…" and flood again) needs — one round, no iteration. A
+    * deletion-key bucket can still flood (exact-duplicate complements,
+    * or complements shorter than d, whose empty variant buckets
+    * everything — both truly quadratic pair sets), and then the same
+    * cap drops it LOUDLY. Precision is untouched: every rescued
+    * candidate is levenshtein-verified on the ORIGINAL strings. Cost:
+    * deletion fan-out is C(|complement|, <= d) per hot member, nothing
+    * when no bucket floods; at d = 1 it is linear in the complement
+    * length.
+    *
+    * The rescue reads each key relation three times (the cap's bucket
+    * count, the candidate join, the complement extraction) and each
+    * neighborhood twice, so it persists them — the explode over the
+    * corpus runs once — and releases all of them once the result is
+    * checkpointed. The plain faces read each side once and persist
+    * nothing.
+    */
+  private def segmentJoin(probe: Side, index: Index, d: Int, cap: Int,
+                          what: String, rescue: Boolean = false): DataFrame = {
+    require(d >= 1, s"edit-distance threshold must be >= 1, got $d")
+    require(!rescue || cap > 0,
+      "rescue only makes sense with the cap armed (maxBucketSize > 0)")
+    val self = index == Self
+    // the index side's relation (the probe's when prebuilt: never read)
+    val right = index match { case Other(s) => s; case _ => probe }
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame =
+      if (rescue) { held += df.persist(StorageLevel.MEMORY_AND_DISK); df }
+      else df
+    try {
+      val pk = keep(probeKeys(probe.df, probe.id, probe.str, d))
+      val ik = index match {
+        case Prebuilt(rows) => rows.select(col("index_id").as("__rid"),
+          col("index_str").as("__rstr"), col("l"), col("i"), col("seg"))
+        case _ => keep(segmentKeys(right.df, right.id, right.str, d))
+      }
+      // the rescue's first read of the persisted keys is the cap's
+      // single-threaded checkpoint action: no count() race guard needed
+      val (pc, ic, hot) = Dedup.capBucketsPairedHot(pk, ik, Keys, cap, what)
+      val cand = pc.join(ic, Keys)
+      val base = (if (self) cand.filter(col("__pid") < col("__rid")) else cand)
+        .select(col("__pid"), col("__pstr"), col("__rid"), col("__rstr"))
+        .distinct()
+        .withColumn("dist", levenshtein(col("__pstr"), col("__rstr"), d))
+        .filter(col("dist") >= 0)
+      val pairs = base.select(col("__pid"), col("__rid"), col("dist"))
+      if (!rescue) base else hot.fold(pairs) { hot0 =>
+        val h = broadcast(hot0)
+        // every (member, matched occurrence) of a dropped bucket
+        def occurrences(k: DataFrame, id: String, str: String): DataFrame =
+          k.join(h, Keys).select(col(id).as("mid"), col(str).as("mstr"),
+            col("pos"), length(col("seg")).as("slen"))
+        // complement = the string with the occurrence excised,
+        // materialized eagerly: the 0..d deletion levels each read it
+        // inside ONE job (the rescue cap's checkpoint), whose union
+        // branches would otherwise race to compute the same cache
+        // partitions (the block-lock stall documented at
+        // Dedup.lshCandidatePairs)
+        def complements(occ: DataFrame): DataFrame = {
+          val c = keep(occ.select(col("mid"), concat(
+              col("mstr").substr(lit(1), col("pos")),
+              col("mstr").substr(col("pos") + col("slen") + 1,
+                length(col("mstr")))).as("cstr"))
+            .distinct())
+          c.count()
+          c
+        }
+        // deletion neighborhood U_{<=d}: every string reachable from the
+        // complement by 0..d single-character deletions. sequence(1, 0)
+        // DESCENDS in Spark, so empty strings are guarded explicitly.
+        val delOnce = "CASE WHEN length(v) >= 1 THEN " +
+          "transform(sequence(1, length(v)), " +
+          "p -> concat(substr(v, 1, p - 1), substr(v, p + 1, length(v)))) " +
+          "ELSE array() END"
+        def neighborhood(c: DataFrame): DataFrame = keep(
+          (1 to d).scanLeft(c.select(col("mid"), col("cstr").as("v"))) {
+            (prev, _) => prev.select(col("mid"), explode(expr(delOnce)).as("v"))
+          }.reduce(_ unionByName _).distinct())
+        val po = occurrences(pk, "__pid", "__pstr")
+        val io = occurrences(ik, "__rid", "__rstr")
+        // the second family under the SAME cap: one bucket count over the
+        // self neighborhood, the combined-membership count over a pair
+        val (cl, cr) =
+          if (self) {
+            val c = keep(Dedup.capBuckets(neighborhood(complements(
+              po.unionByName(io))), Seq("v"), cap, s"$what rescue"))
+            c.count()
+            (c, c)
+          } else Dedup.capBucketsPaired(neighborhood(complements(po)),
+            neighborhood(complements(io)), Seq("v"), cap, s"$what rescue")
+        val rc = cl.select(col("v"), col("mid").as("__pid"))
+          .join(cr.select(col("v"), col("mid").as("__rid")), Seq("v"))
+        val rescued = (if (self) rc.filter(col("__pid") < col("__rid")) else rc)
+          .select(col("__pid"), col("__rid")).distinct()
+          .join(probe.df.select(col(probe.id).as("__pid"),
+            col(probe.str).as("__sa")), Seq("__pid"))
+          .join(right.df.select(col(right.id).as("__rid"),
+            col(right.str).as("__sb")), Seq("__rid"))
+          .withColumn("dist", levenshtein(col("__sa"), col("__sb"), d))
+          .filter(col("dist") >= 0)
+          .select(col("__pid"), col("__rid"), col("dist"))
+        pairs.unionByName(rescued).dropDuplicates("__pid", "__rid")
+      }.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    } finally held.foreach(_.unpersist())
+  }
+
+  /** A kernel pair relation under the caller's id column names. */
+  private def ids(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.select(col("__pid").as(a), col("__rid").as(b), col("dist"))
+
   /** All (left, right) pairs with levenshtein(leftStr, rightStr) <= d —
-    * EXACT cross-product semantics via segment blocking + verify.
-    * Output: (leftId, rightId, dist), column names taken from the
-    * id arguments.
+    * EXACT cross-product semantics via [[segmentJoin]]. Output:
+    * (leftId, rightId, dist), column names taken from the id arguments.
     */
   def editDistanceJoin(left: DataFrame, leftId: String, leftStr: String,
                        right: DataFrame, rightId: String, rightStr: String,
                        d: Int, maxBucketSize: Int = 0): DataFrame =
-    editDistanceVerified(left, leftId, leftStr, right, rightId, rightStr,
-      d, maxBucketSize)
-      .select(col("__pid").as(leftId), col("__rid").as(rightId), col("dist"))
+    ids(segmentJoin(Side(left, leftId, leftStr),
+      Other(Side(right, rightId, rightStr)), d, maxBucketSize,
+      "editDistanceJoin"), leftId, rightId)
 
   /** [[editDistanceJoin]] KEEPING the verified strings. The pair
     * relation already carries both strings through the candidate
@@ -129,250 +272,45 @@ object EntityResolution {
       leftStr: String, right: DataFrame, rightId: String, rightStr: String,
       d: Int, leftStrOut: String, rightStrOut: String,
       maxBucketSize: Int = 0): DataFrame =
-    editDistanceVerified(left, leftId, leftStr, right, rightId, rightStr,
-      d, maxBucketSize)
+    segmentJoin(Side(left, leftId, leftStr),
+        Other(Side(right, rightId, rightStr)), d, maxBucketSize,
+        "editDistanceJoin")
       .select(col("__pid").as(leftId), col("__rid").as(rightId),
         col("dist"), col("__pstr").as(leftStrOut),
         col("__rstr").as(rightStrOut))
 
-  /** Shared body of [[editDistanceJoin]] / [[editDistanceJoinWithStrings]]:
-    * the verified pair relation with its internal column names
-    * (__pid, __pstr, __rid, __rstr, dist).
+  /** Self-join face of [[segmentJoin]]: unordered pairs (idA < idB)
+    * within distance d, output (id_a, id_b, dist).
     */
-  private def editDistanceVerified(left: DataFrame, leftId: String,
-      leftStr: String, right: DataFrame, rightId: String, rightStr: String,
-      d: Int, maxBucketSize: Int): DataFrame = {
-    require(d >= 1, s"edit-distance threshold must be >= 1, got $d")
-    val probe = probeKeys(left, leftId, leftStr, d)
-    val index = segmentKeys(right, rightId, rightStr, d)
-    val (pc, ic) =
-      Dedup.capBucketsPaired(probe, index, Seq("l", "i", "seg"),
-        maxBucketSize, "editDistanceJoin")
-    pc.join(ic, Seq("l", "i", "seg"))
-      .select(col("__pid"), col("__pstr"), col("__rid"), col("__rstr"))
-      .distinct()
-      // thresholded levenshtein: banded O(d*n) DP with early abandon
-      // (returns -1 past the threshold) — the verify call is the hot
-      // loop on long strings, and the full O(n*m) matrix is wasted work
-      .withColumn("dist", levenshtein(col("__pstr"), col("__rstr"), d))
-      .filter(col("dist") >= 0)
-  }
-
-  /** Self-join face: unordered pairs (idA < idB) within distance d. */
   def editDistanceSelfJoin(df: DataFrame, idCol: String, strCol: String,
-                           d: Int, maxBucketSize: Int = 0): DataFrame = {
-    require(d >= 1, s"edit-distance threshold must be >= 1, got $d")
-    val probe = probeKeys(df, idCol, strCol, d)
-    val index = segmentKeys(df, idCol, strCol, d)
-    val (pc, ic) =
-      Dedup.capBucketsPaired(probe, index, Seq("l", "i", "seg"),
-        maxBucketSize, "editDistanceSelfJoin")
-    pc.join(ic, Seq("l", "i", "seg"))
-      .filter(col("__pid") < col("__rid"))
-      .select(col("__pid"), col("__pstr"), col("__rid"), col("__rstr"))
-      .distinct()
-      .withColumn("dist", levenshtein(col("__pstr"), col("__rstr"), d))
-      .filter(col("dist") >= 0)
-      .select(col("__pid").as("id_a"), col("__rid").as("id_b"), col("dist"))
-  }
+                           d: Int, maxBucketSize: Int = 0): DataFrame =
+    ids(segmentJoin(Side(df, idCol, strCol), Self, d, maxBucketSize,
+      "editDistanceSelfJoin"), "id_a", "id_b")
 
-  /** [[editDistanceSelfJoin]] with the hot-bucket recall RESTORED by a
-    * second blocking family (r15 verdict task 6). The cap alone trades
-    * recall silently beyond the loud audit: a pair whose only untouched
-    * segment IS the flood segment (the shared-constant-prefix corpus,
-    * d=1 with the edit in the diverse half) loses its one blocking key.
-    *
-    * The rescue re-blocks exactly the dropped members through a SECOND
-    * family: deletion neighborhoods of their COMPLEMENT strings. For a
-    * missed pair, the flood segment is the pigeonhole witness: both
-    * strings contain it verbatim (index side at home, probe side
-    * within d of home) and the witness alignment maps it to itself, so
-    * ALL d edits live outside it — the two complements (string with
-    * the matched occurrence excised) are within edit distance d of
-    * each other. Two strings within edit distance d always share a
-    * common string reachable by <= d single-character deletions from
-    * each (every substitution deletes one char on each side, every
-    * insert/delete one char on one side — the FastSS/deletion-
-    * neighborhood family, Bocek et al. 2007), so blocking on the
-    * <= d-deletion variants of the complements has zero false
-    * negatives. Deletion keys are POSITION-FREE, which is exactly what
-    * the layered-constant corpus ("Customer#000…", where the prefix
-    * would survive one segment excision as "er#0…" and flood again)
-    * needs — no iteration, one round. A deletion-key bucket can still
-    * flood (exact-duplicate complements, or complements shorter than
-    * d, whose empty deletion variant buckets everything — both truly
-    * quadratic pair sets), and then the same cap drops it LOUDLY,
-    * never silently. Precision is untouched: every rescued candidate
-    * is levenshtein-verified on the ORIGINAL strings. Cost: deletion
-    * fan-out is C(|complement|, <= d) per hot member — hot-member-
-    * scoped, nothing is paid when no bucket floods; at d = 1 it is
-    * linear in the complement length.
+  /** [[editDistanceSelfJoin]] with the hot-bucket recall RESTORED by
+    * [[segmentJoin]]'s deletion-neighborhood rescue (r15 verdict task
+    * 6): the cap alone trades recall silently beyond the loud audit.
+    * The result is an eager local checkpoint; nothing else stays
+    * persisted.
     */
   def editDistanceSelfJoinRescued(df: DataFrame, idCol: String,
                                   strCol: String, d: Int,
-                                  maxBucketSize: Int): DataFrame = {
-    require(d >= 1, s"edit-distance threshold must be >= 1, got $d")
-    require(maxBucketSize > 0,
-      "rescue only makes sense with the cap armed (maxBucketSize > 0)")
-    val keys = Seq("l", "i", "seg")
-    // The rescued face reads each fan-out relation three times (the
-    // cap's combined bucket count, the base candidate join, and the
-    // hot-member complement extraction) — persist so the explode over
-    // the corpus scan runs once, not three times (guide §5; the plain
-    // face reads each side once and stays unpersisted). First consumer
-    // is the cap's single-threaded checkpoint action, so no count()
-    // race guard is needed.
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val probe = probeKeys(df, idCol, strCol, d).persist(sl)
-    val index = segmentKeys(df, idCol, strCol, d).persist(sl)
-    val (pc, ic, hotOpt) = Dedup.capBucketsPairedHot(probe, index, keys,
-      maxBucketSize, "editDistanceSelfJoinRescued")
-    val base = pc.join(ic, keys)
-      .filter(col("__pid") < col("__rid"))
-      .select(col("__pid"), col("__pstr"), col("__rid"), col("__rstr"))
-      .distinct()
-      .withColumn("dist", levenshtein(col("__pstr"), col("__rstr"), d))
-      .filter(col("dist") >= 0)
-      .select(col("__pid").as("id_a"), col("__rid").as("id_b"), col("dist"))
-    hotOpt match {
-      case None => base
-      case Some(hot0) =>
-        val h = broadcast(hot0)
-        // every (member, matched occurrence) of a dropped bucket, from
-        // BOTH sides; complement = the string with the occurrence excised
-        // materialized eagerly: the 0..d deletion levels below each read
-        // the complement relation, and they run inside ONE job (the
-        // rescue cap's checkpoint) whose union branches would otherwise
-        // race to compute the same cache partitions (the block-lock
-        // stall documented at lshCandidatePairs)
-        val comp = probe.join(h, keys)
-            .select(col("__pid").as("mid"), col("__pstr").as("mstr"),
-              col("pos"), length(col("seg")).as("slen"))
-          .unionByName(index.join(h, keys)
-            .select(col("__rid").as("mid"), col("__rstr").as("mstr"),
-              col("pos"), length(col("seg")).as("slen")))
-          .select(col("mid"), concat(
-            col("mstr").substr(lit(1), col("pos")),
-            col("mstr").substr(col("pos") + col("slen") + 1,
-              length(col("mstr")))).as("cstr"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        comp.count()
-        // deletion neighborhood U_{<=d}: every string reachable from the
-        // complement by 0..d single-character deletions. sequence(1, 0)
-        // DESCENDS in Spark, so empty strings are guarded explicitly.
-        val delOnce = "CASE WHEN length(v) >= 1 THEN " +
-          "transform(sequence(1, length(v)), " +
-          "p -> concat(substr(v, 1, p - 1), substr(v, p + 1, length(v)))) " +
-          "ELSE array() END"
-        val levels = (1 to d).scanLeft(
-          comp.select(col("mid"), col("cstr").as("v"))) { (prev, _) =>
-          prev.select(col("mid"), explode(expr(delOnce)).as("v"))
-        }
-        // persisted: read twice (the cap's bucket count and the capped
-        // self-join below) — one neighborhood build, not two
-        val nb = levels.reduce(_ unionByName _).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // the second-family candidate join, under the SAME cap: a
-        // deletion-key bucket that floods (exact-duplicate complements)
-        // is a truly quadratic pair set — dropped loudly, never silently
-        val nbc = Dedup.capBuckets(nb, Seq("v"), maxBucketSize,
-          "editDistanceRescue")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        nbc.count()
-        val rcand = nbc.select(col("v"), col("mid").as("id_a"))
-          .join(nbc.select(col("v"), col("mid").as("id_b")), Seq("v"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"))
-          .distinct()
-        val sA = df.select(col(idCol).as("id_a"), col(strCol).as("__sa"))
-        val sB = df.select(col(idCol).as("id_b"), col(strCol).as("__sb"))
-        val rescued = rcand
-          .join(sA, Seq("id_a")).join(sB, Seq("id_b"))
-          .withColumn("dist", levenshtein(col("__sa"), col("__sb"), d))
-          .filter(col("dist") >= 0)
-          .select(col("id_a"), col("id_b"), col("dist"))
-        base.unionByName(rescued).dropDuplicates("id_a", "id_b")
-    }
-  }
+                                  maxBucketSize: Int): DataFrame =
+    ids(segmentJoin(Side(df, idCol, strCol), Self, d, maxBucketSize,
+      "editDistanceSelfJoinRescued", rescue = true), "id_a", "id_b")
 
   /** [[editDistanceJoin]] with the hot-bucket recall restored — the
     * two-relation (record-linkage) face of
-    * [[editDistanceSelfJoinRescued]]: the same deletion-neighborhood
-    * second family over flood-segment complements, with candidates
+    * [[editDistanceSelfJoinRescued]]: the same rescue with candidates
     * oriented left-probe vs right-index.
     */
   def editDistanceJoinRescued(left: DataFrame, leftId: String,
                               leftStr: String, right: DataFrame,
                               rightId: String, rightStr: String, d: Int,
-                              maxBucketSize: Int): DataFrame = {
-    require(d >= 1, s"edit-distance threshold must be >= 1, got $d")
-    require(maxBucketSize > 0,
-      "rescue only makes sense with the cap armed (maxBucketSize > 0)")
-    val keys = Seq("l", "i", "seg")
-    // persisted for the same three-reads shape as the self-join rescue
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val probe = probeKeys(left, leftId, leftStr, d).persist(sl)
-    val index = segmentKeys(right, rightId, rightStr, d).persist(sl)
-    val (pc, ic, hotOpt) = Dedup.capBucketsPairedHot(probe, index, keys,
-      maxBucketSize, "editDistanceJoinRescued")
-    val base = pc.join(ic, keys)
-      .select(col("__pid"), col("__pstr"), col("__rid"), col("__rstr"))
-      .distinct()
-      .withColumn("dist", levenshtein(col("__pstr"), col("__rstr"), d))
-      .filter(col("dist") >= 0)
-      .select(col("__pid").as(leftId), col("__rid").as(rightId), col("dist"))
-    hotOpt match {
-      case None => base
-      case Some(hot0) =>
-        val h = broadcast(hot0)
-        // complements materialized eagerly, neighborhoods persisted —
-        // the same shapes as the self-join rescue: each complement
-        // feeds d+1 deletion levels inside one job (cache-race guard),
-        // each neighborhood is read twice (cap count + candidate join)
-        def comp(rel: DataFrame, id: String, str: String): DataFrame = {
-          val c = rel.join(h, keys)
-            .select(col(id).as("mid"), col(str).as("mstr"),
-              col("pos"), length(col("seg")).as("slen"))
-            .select(col("mid"), concat(
-              col("mstr").substr(lit(1), col("pos")),
-              col("mstr").substr(col("pos") + col("slen") + 1,
-                length(col("mstr")))).as("cstr"))
-            .distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          c.count()
-          c
-        }
-        val delOnce = "CASE WHEN length(v) >= 1 THEN " +
-          "transform(sequence(1, length(v)), " +
-          "p -> concat(substr(v, 1, p - 1), substr(v, p + 1, length(v)))) " +
-          "ELSE array() END"
-        def neighborhood(c: DataFrame): DataFrame =
-          (1 to d).scanLeft(c.select(col("mid"), col("cstr").as("v"))) {
-            (prev, _) =>
-              prev.select(col("mid"), explode(expr(delOnce)).as("v"))
-          }.reduce(_ unionByName _).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (nbL, nbR) = Dedup.capBucketsPaired(
-          neighborhood(comp(probe, "__pid", "__pstr")),
-          neighborhood(comp(index, "__rid", "__rstr")),
-          Seq("v"), maxBucketSize, "editDistanceJoinRescue")
-        val rcand = nbL.select(col("v"), col("mid").as("__la"))
-          .join(nbR.select(col("v"), col("mid").as("__rb")), Seq("v"))
-          .select(col("__la"), col("__rb")).distinct()
-        val sL = left.select(col(leftId).as("__la"),
-          col(leftStr).as("__sa"))
-        val sR = right.select(col(rightId).as("__rb"),
-          col(rightStr).as("__sb"))
-        val rescued = rcand
-          .join(sL, Seq("__la")).join(sR, Seq("__rb"))
-          .withColumn("dist", levenshtein(col("__sa"), col("__sb"), d))
-          .filter(col("dist") >= 0)
-          .select(col("__la").as(leftId), col("__rb").as(rightId),
-            col("dist"))
-        base.unionByName(rescued).dropDuplicates(leftId, rightId)
-    }
-  }
+                              maxBucketSize: Int): DataFrame =
+    ids(segmentJoin(Side(left, leftId, leftStr),
+      Other(Side(right, rightId, rightStr)), d, maxBucketSize,
+      "editDistanceJoinRescued", rescue = true), leftId, rightId)
 
   /** The index relation for [[editDistanceJoinIndexed]] — build once
     * over the reference corpus, persist/append, probe with every new
@@ -385,36 +323,47 @@ object EntityResolution {
       .select(col("__rid").as("index_id"), col("__rstr").as("index_str"),
         col("l"), col("i"), col("seg"))
 
-  /** Probe a PRE-BUILT segment index with a new batch — per-ingest cost
-    * is batch-fanout-sized plus the candidate join, independent of how
-    * the index was accumulated. Output: (leftId, index_id, dist).
+  /** Probe a PRE-BUILT segment index with a new batch through
+    * [[segmentJoin]] — per-ingest cost is batch-fanout-sized plus the
+    * candidate join, independent of how the index was accumulated.
+    * Output: (leftId, index_id, dist).
     */
   def editDistanceJoinIndexed(index: DataFrame, left: DataFrame,
                               leftId: String, leftStr: String, d: Int,
-                              maxBucketSize: Int = 0): DataFrame = {
-    require(d >= 1, s"edit-distance threshold must be >= 1, got $d")
-    val probe = probeKeys(left, leftId, leftStr, d)
-    val (pc, ic) = Dedup.capBucketsPaired(probe, index, Seq("l", "i", "seg"),
-      maxBucketSize, "editDistanceJoinIndexed")
-    pc.join(ic, Seq("l", "i", "seg"))
-      .select(col("__pid"), col("__pstr"), col("index_id"), col("index_str"))
-      .distinct()
-      .withColumn("dist", levenshtein(col("__pstr"), col("index_str"), d))
-      .filter(col("dist") >= 0)
-      .select(col("__pid").as(leftId), col("index_id"), col("dist"))
-  }
+                              maxBucketSize: Int = 0): DataFrame =
+    ids(segmentJoin(Side(left, leftId, leftStr), Prebuilt(index), d,
+      maxBucketSize, "editDistanceJoinIndexed"), leftId, "index_id")
 
   /** Entity clusters: connected components over the distance-<=d pair
-    * graph ([[Dedup.resolveClusters]] label propagation), every record
-    * labeled with its component's minimum id — singletons keep their own
-    * id. The canonical "which rows are the same real-world entity"
-    * output.
+    * graph of [[editDistanceSelfJoin]] ([[Dedup.resolveClusters]] label
+    * propagation), every record labeled with its component's minimum id
+    * — singletons keep their own id. The canonical "which rows are the
+    * same real-world entity" output.
     */
   def clusterIds(df: DataFrame, idCol: String, strCol: String, d: Int,
-                 maxBucketSize: Int = 0): DataFrame = {
-    val pairs = editDistanceSelfJoin(df, idCol, strCol, d, maxBucketSize)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val labels = Dedup.resolveClusters(pairs)
+                 maxBucketSize: Int = 0): DataFrame =
+    clusters(df, idCol,
+      editDistanceSelfJoin(df, idCol, strCol, d, maxBucketSize))
+
+  /** [[clusterIds]] over the RESCUED pair relation
+    * ([[editDistanceSelfJoinRescued]]) — connected components whose
+    * edge set keeps the flood-segment pairs the cap drops (a flood is
+    * precisely where clusters are LARGE, i.e. where losing edges splits
+    * real entities), then the same min-label resolution (r16 verdict
+    * task 5).
+    */
+  def clusterIdsRescued(df: DataFrame, idCol: String, strCol: String,
+                        d: Int, maxBucketSize: Int): DataFrame =
+    clusters(df, idCol,
+      editDistanceSelfJoinRescued(df, idCol, strCol, d, maxBucketSize))
+
+  /** The label join of both cluster faces: each record of `df` with its
+    * component's min id over the (id_a, id_b) pair relation, or its own.
+    */
+  private def clusters(df: DataFrame, idCol: String,
+                       pairs: DataFrame): DataFrame = {
+    val labels = Dedup.resolveClusters(
+      pairs.select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
     df.select(col(idCol))
       .join(labels, df(idCol) === labels("node"), "left")
       .select(col(idCol),
@@ -467,24 +416,5 @@ object EntityResolution {
       .groupBy(col(leftId))
       .agg(mins.head, mins.tail: _*)
       .select(col(leftId), best.as(rightId), dist.as("dist"))
-  }
-
-  /** [[clusterIds]] over the RESCUED pair relation — connected
-    * components whose edge set keeps the flood-segment pairs the cap
-    * drops (a flood is precisely where clusters are LARGE, i.e. where
-    * losing edges splits real entities): exact recall via the
-    * deletion-neighborhood second family, then the same min-label
-    * resolution (r16 verdict task 5).
-    */
-  def clusterIdsRescued(df: DataFrame, idCol: String, strCol: String,
-                        d: Int, maxBucketSize: Int): DataFrame = {
-    val pairs = editDistanceSelfJoinRescued(df, idCol, strCol, d,
-        maxBucketSize)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val labels = Dedup.resolveClusters(pairs)
-    df.select(col(idCol))
-      .join(labels, df(idCol) === labels("node"), "left")
-      .select(col(idCol),
-        coalesce(col("label"), col(idCol)).as("cluster_id"))
   }
 }

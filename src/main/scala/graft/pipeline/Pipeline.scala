@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.metrics.EtlMetrics
-import graft.ops.{Aggregations, Cleaning, Quality}
+import graft.ops.{Aggregations, Cleaning}
 import graft.sources.{BrewerySource, Extractor, IteratorBrewerySource}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
@@ -405,7 +405,6 @@ object Pipeline {
       stage { metrics.timed("bronze_to_silver") {
       graft.metrics.SparkIoMetrics.measure(spark, metrics, "bronze_to_silver") {
       val bronze = spark.read.schema(bronzeSchema).parquet(lay.bronze)
-      Quality.requireColumns(bronze, Breweries.KeyFields)
       val (cleaned, quarantine) = Breweries.silverSplit(bronze)
       // per-run subdir + atomic overwrite: cross-run APPEND semantics via
       // distinct runTags, but a RETRY of this stage rewrites instead of

@@ -47,6 +47,16 @@ class BenchSpec extends AnyFunSuite {
     java.nio.file.Files.delete(bad)
   }
 
+  test("only a clean full sweep writes LATEST, and the summary points there") {
+    // one predicate decides both the LATEST write and the summary's
+    // full_queries_in pointer: a failed or filtered run writes LASTRUN
+    // only, so a LATEST pointer would name an earlier run's file
+    assert(Bench.writesLatest(rc = 0, filtered = false))
+    assert(!Bench.writesLatest(rc = 1, filtered = false))
+    assert(!Bench.writesLatest(rc = 0, filtered = true))
+    assert(!Bench.writesLatest(rc = 1, filtered = true))
+  }
+
   test("the re-anchored gate file parses and covers the full query surface") {
     // BENCH_ANCHOR.json: one clean full sweep on this host. The pin: the
     // file stays in the "queries":{...} shape the harness's own parser

@@ -664,7 +664,8 @@ class PlanSpec extends SparkSpec {
     // predicate NEVER appears as a join condition — it runs as a filter
     // over hash-joined candidates. A nested-loop/cartesian here is the
     // O(n^2) plan the operator exists to avoid.
-    Seq("er_dirty_link", "er_self_pairs", "er_link_best").foreach { n =>
+    Seq("er_dirty_link", "er_self_pairs", "er_link_best", "er_jw_rerank")
+        .foreach { n =>
       val p = planOf(n)
       assert(!p.contains("NestedLoopJoin") && !p.contains("CartesianProduct"),
         s"$n must block via hash join:\n$p")

@@ -278,5 +278,42 @@ class EntityResolutionSpec extends SparkSpec {
         "s", 1, maxBucketSize = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(rescued == plain && plain == bruteSelf(df, 1))
+    // the two-relation faces, on the same no-flood shape
+    val left = Seq((10L, "aaab"), (11L, "bbbd"), (12L, "zzzz"))
+      .toDF("id2", "id2s")
+    val plainJoin = EntityResolution.editDistanceJoin(left, "id2", "id2s",
+        df, "id", "s", d = 1, maxBucketSize = 100)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val rescuedJoin = EntityResolution.editDistanceJoinRescued(left, "id2",
+        "id2s", df, "id", "s", d = 1, maxBucketSize = 100)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(rescuedJoin == plainJoin && plainJoin == bruteJoin(left, df, 1))
+    assert(plainJoin.nonEmpty, "fixture produced no pairs — test is vacuous")
+  }
+
+  test("rescued faces leave only their returned checkpoint persisted") {
+    // the rescue persists its key relations, complements and deletion
+    // neighborhoods; once the pairs are checkpointed all of them must be
+    // released. The caps' own checkpoints are unreachable by then and
+    // free through the ContextCleaner, hence the collections.
+    val df = (0 until 80).map(i => (i.toLong, f"Customer#$i%03d"))
+      .toDF("id", "s").cache()
+    df.count()
+    val dirty = df.select(col("id").plus(1000L).as("did"),
+      regexp_replace(col("s"), "#0", "#z").as("dn"))
+    def settled(pairs: => DataFrame): DataFrame = {
+      val out = pairs
+      assert(out.count() > 0, "fixture produced no pairs — test is vacuous")
+      for (_ <- 1 to 3) { System.gc(); Thread.sleep(300) }
+      out
+    }
+    val (_, self) = persistedBy(settled(EntityResolution
+      .editDistanceSelfJoinRescued(df, "id", "s", 1, maxBucketSize = 40)))
+    assert(self <= 1, s"self face left $self RDDs persisted")
+    val (_, pair) = persistedBy(settled(EntityResolution
+      .editDistanceJoinRescued(dirty, "did", "dn", df, "id", "s", 1,
+        maxBucketSize = 40)))
+    assert(pair <= 1, s"two-relation face left $pair RDDs persisted")
+    df.unpersist()
   }
 }

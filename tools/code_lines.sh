@@ -1,6 +1,9 @@
 #!/bin/sh
-# Prints the code-line count of src/main: every .scala line that is not
-# blank, a // comment or a scaladoc/block-comment line.
-# Usage: tools/code_lines.sh
+# Prints the code-line count of the given .scala files and directories
+# (default: src/main): every .scala line that is not blank, a // comment
+# or a scaladoc/block-comment line. Relative paths are taken from the
+# repo root.
+# Usage: tools/code_lines.sh [file-or-dir...]
 cd "$(dirname "$0")/.." || exit 1
-find src/main -name '*.scala' | xargs cat | grep -v '^\s*\*\|^\s*/\*\*\|^\s*//\|^\s*$' | wc -l
+[ $# -gt 0 ] || set -- src/main
+find "$@" -name '*.scala' | xargs cat | grep -v '^\s*\*\|^\s*/\*\*\|^\s*//\|^\s*$' | wc -l
